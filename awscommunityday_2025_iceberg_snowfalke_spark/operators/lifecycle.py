@@ -35,13 +35,13 @@ import shutil
 import tempfile
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import det_sum, det_sum_sql
 from ..sources.registry import CUTOFF_7D, load
-from ..stage import stage
 
 
 def _aware_utc(v):
@@ -121,6 +121,19 @@ _MAX_COMMIT_RETRIES = 1000
 class CommitConflict(RuntimeError):
     """A rewrite commit was invalidated by a concurrent rewrite (Iceberg:
     ValidationException from rewrite_data_files / MERGE conflict)."""
+
+
+class DeletionVectorLayoutError(RuntimeError):
+    """The partitioned deletion-vector write did not leave exactly one
+    vector file per target data file (the v3 one-vector-per-file
+    invariant the commit relies on)."""
+
+
+# Positional tombstone kinds (v2 position deletes, v3 deletion vectors)
+# and the declared schema of their files: reading with it costs no
+# schema-inference job.
+_POSITIONAL = ("pos", "dv")
+_POS_SCHEMA = "file string, pos bigint"
 
 
 # Bloom file-index hash family (exact integer arithmetic — the SQL oracle
@@ -742,12 +755,6 @@ class SnapshotTable:
                 lo, hi = lo.isoformat(), hi.isoformat()
             out[col] = [lo, hi, st4[2], st4[3]]
         return out
-
-    def _entry_minmax(self, file: str):
-        """[min, max] of the PRIMARY stats column (legacy single-column
-        surface; delegates to :meth:`_entry_stats`)."""
-        st = self._entry_stats(file).get(self.stats_col)
-        return None if st is None else st[:2]
 
     def _write_manifest_file(self, version: int, entries: list[str]) -> str:
         name = f"m{version}-{uuid.uuid4().hex[:8]}.json"
@@ -1719,70 +1726,78 @@ class SnapshotTable:
     def _read_scoped(
         self, m: dict, files: list[str], keep_meta: bool = False
     ) -> DataFrame:
-        """Live rows of snapshot-manifest ``m`` restricted to ``files``,
-        with sequence-scoped tombstone application (see ``read``).
+        """Live rows of snapshot-manifest ``m`` restricted to ``files``:
+        the merge-on-read funnel under every table read. Tombstones apply
+        by kind:
+
+        - EQUALITY deletes are SEQUENCE-scoped (Iceberg v2): one applies
+          only to data files whose seq <= its own, so a key re-inserted
+          after the delete survives. Files are grouped by the set of
+          equality deletes that apply to them; each group anti-joins its
+          deletes by key, and the groups union back together.
+        - POSITIONAL tombstones (v2 position deletes, v3 deletion
+          vectors) are FILE-scoped: a ``(file, pos)`` pair names one row
+          of one data file by its unique name, and that file was live
+          when the position was resolved, so sequence scoping can never
+          exclude it. All of them are read in ONE scan with the declared
+          :data:`_POS_SCHEMA` (no schema-inference job) and applied with
+          ONE anti-join on ``(file, row_index)`` over the whole file set
+          — a read costs the same jobs whether the snapshot carries one
+          tombstone file or hundreds.
+
         ``keep_meta=True`` retains the ``(_df_file, _df_pos)`` provenance
         columns (file name + row index) on the output — the position-
-        delete writer and the changelog's positional pre-image pass need
+        delete writers and the changelog's positional pre-image pass need
         them."""
-        paths = [os.path.join(self.path, "data", f) for f in files]
         dels = m.get("delete_files", [])
-
-        if not dels:
-            return self._read_paths(paths, with_meta=keep_meta)
-        # merge-on-read with SEQUENCE SCOPING (Iceberg v2): a delete
-        # applies only to data files whose seq <= the delete's seq — rows
-        # re-inserted AFTER the delete survive. Files are grouped by
-        # their applicable-delete signature (bounded by 2^|deletes|, in
-        # practice a handful); each group applies its deletes — EQUALITY
-        # tombstones anti-join by key, POSITION tombstones anti-join on
-        # (file, row_index) via the parquet _metadata columns (positions
-        # are stable because data files are immutable) — and the groups
-        # union back together.
+        positional = [
+            os.path.join(self.path, "data", d["file"])
+            for d in dels
+            if d.get("kind") in _POSITIONAL
+        ]
+        equality = [d for d in dels if d.get("kind") not in _POSITIONAL]
+        with_meta = keep_meta or bool(positional)
         seqs = m.get("file_seqs", {})
         groups: dict[tuple, list[str]] = {}
         for f in files:
             sig = tuple(
                 i
-                for i, d in enumerate(dels)
+                for i, d in enumerate(equality)
                 if seqs.get(f, 0) <= d.get("seq", 1 << 62)
             )
             groups.setdefault(sig, []).append(f)
         out = None
         for sig, fs in groups.items():
-            needs_pos = keep_meta or any(
-                dels[i].get("kind") in ("pos", "dv") for i in sig
-            )
             part = self._read_paths(
                 [os.path.join(self.path, "data", f) for f in fs],
-                with_meta=needs_pos,
+                with_meta=with_meta,
             )
             for i in sig:
                 keys = self.spark.read.parquet(
-                    os.path.join(self.path, "data", dels[i]["file"])
+                    os.path.join(self.path, "data", equality[i]["file"])
                 )
-                if dels[i].get("kind") in ("pos", "dv"):
-                    # deletion vectors carry the same (file, pos) schema;
-                    # their invariant (ONE vector per data file, REPLACED
-                    # on new deletes) lives in the writer, not the reader
-                    tomb = keys.select(
-                        F.col("file").alias("_t_file"),
-                        F.col("pos").alias("_t_pos"),
-                    )
-                    part = part.join(
-                        tomb,
-                        (part["_df_file"] == tomb["_t_file"])
-                        & (part["_df_pos"] == tomb["_t_pos"]),
-                        "left_anti",
-                    )
-                else:
-                    part = part.join(keys, dels[i]["key_cols"], "left_anti")
-            if needs_pos and not keep_meta:
-                part = part.drop("_df_file", "_df_pos")
+                part = part.join(keys, equality[i]["key_cols"], "left_anti")
             out = part if out is None else out.unionByName(
                 part, allowMissingColumns=True
             )
+        if positional:
+            out = self._join_positions(out, positional, "left_anti")
+            if not keep_meta:
+                out = out.drop("_df_file", "_df_pos")
         return out
+
+    def _join_positions(
+        self, df: DataFrame, tomb_paths: list[str], how: str
+    ) -> DataFrame:
+        """``df`` (with provenance columns) joined on ``(file, pos)`` to
+        the positional tombstone files ``tomb_paths``, read in ONE scan
+        with the declared :data:`_POS_SCHEMA`."""
+        tomb = self.spark.read.schema(_POS_SCHEMA).parquet(*tomb_paths)
+        return df.join(
+            tomb,
+            (df["_df_file"] == tomb["file"]) & (df["_df_pos"] == tomb["pos"]),
+            how,
+        )
 
     def delete_where_mor(self, keys: DataFrame, key_cols: list[str]) -> int:
         """MERGE-ON-READ DELETE (Iceberg v2 equality deletes): write the
@@ -1868,8 +1883,8 @@ class SnapshotTable:
         delete encoding, replacing v2's accumulating position-delete
         files): at most ONE vector per data file, and a writer adding
         deletes to a file must MERGE the file's previous vector — so the
-        read-side cost is one bitmap per file forever, instead of an
-        anti-join against every tombstone file ever committed (the v2
+        read-side cost is one bitmap per file forever, instead of a
+        scan of every tombstone file ever committed (the v2
         pathology this encoding was designed away from: a hot table
         taking frequent row-level deletes accretes one delete file per
         commit per touched data file until compaction). Positions are
@@ -1878,40 +1893,76 @@ class SnapshotTable:
         gets ONE new vector file = previous vector ∪ new positions
         (stored here as a (file, pos) parquet — the stand-in for the v3
         Puffin roaring bitmap; same information, same read-side join),
-        and the commit REPLACES that file's old vector entry. Conflict
-        semantics are Iceberg's: a concurrent rewrite of a resolved file
-        or a concurrent vector write against the same data file raises
+        and the commit REPLACES that file's old vector entry.
+
+        All vectors land in ONE partitioned write: new positions ∪ the
+        touched targets' previous vectors (semi-joined on ``file``),
+        hash-repartitioned and ``partitionBy``-written on a copy of the
+        target name, so each ``_dv=<target>/`` directory holds that
+        target's single vector file (AQE may coalesce a column
+        repartition, never split it). The job count is independent of
+        how many data files the predicate touches. Conflict semantics
+        are Iceberg's: a concurrent rewrite of a resolved file or a
+        concurrent vector write against the same data file raises
         :class:`CommitConflict` (our merged vector was computed from a
         stale one) — the caller re-reads and retries. ``compact()``
         materializes and clears vectors like every other tombstone."""
         base = self.current_version
         m = self._manifest(base)
         live = self._read_scoped(m, m["files"], keep_meta=True)
-        positions = stage(
-            live.filter(predicate).select(
-                F.col("_df_file").alias("file"),
-                F.col("_df_pos").alias("pos"),
-            )
+        vectors = live.filter(predicate).select(
+            F.col("_df_file").alias("file"), F.col("_df_pos").alias("pos")
         )
-        targets = sorted(
-            r["file"] for r in positions.select("file").distinct().collect()
-        )
-        if not targets:
-            return base  # nothing matched: no commit (Iceberg no-ops too)
         old_dv = {
             d["target"]: d
             for d in m.get("delete_files", [])
             if d.get("kind") == "dv"
         }
+        if old_dv:
+            # v3 invariant: a touched file's new vector carries its
+            # previous one. The live scan already excluded the old
+            # positions, so the union is disjoint.
+            prev = self.spark.read.schema(_POS_SCHEMA).parquet(
+                *[
+                    os.path.join(self.path, "data", d["file"])
+                    for d in old_dv.values()
+                ]
+            )
+            vectors = vectors.unionByName(
+                prev.join(vectors.select("file"), "file", "left_semi")
+            )
+        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:8]}")
+        (
+            vectors.withColumn("_dv", F.col("file"))
+            .repartition("_dv")
+            .write.option("maxRecordsPerFile", 0)
+            .partitionBy("_dv")
+            .parquet(staging)
+        )
         new_files: dict[str, str] = {}
-        for t in targets:
-            dv = positions.filter(F.col("file") == t)
-            if t in old_dv:  # v3 invariant: merge the previous vector
-                prev = self.spark.read.parquet(
-                    os.path.join(self.path, "data", old_dv[t]["file"])
-                )
-                dv = dv.unionByName(prev).distinct()
-            new_files[t] = self._write_files(dv, 1)[0]
+        try:
+            for d in os.listdir(staging):
+                if not d.startswith("_dv="):
+                    continue  # _SUCCESS and its checksum
+                target = unquote(d[len("_dv="):])
+                parts = [
+                    os.path.join(staging, d, f)
+                    for f in os.listdir(os.path.join(staging, d))
+                    if f.endswith(".parquet")
+                ]
+                if len(parts) != 1:
+                    raise DeletionVectorLayoutError(
+                        f"delete_where_dv: {len(parts)} vector files for "
+                        f"{target!r}; expected exactly one"
+                    )
+                new = f"{uuid.uuid4().hex[:12]}.parquet"
+                shutil.move(parts[0], os.path.join(self.path, "data", new))
+                new_files[target] = new
+        finally:
+            shutil.rmtree(staging)
+        if not new_files:
+            return base  # nothing matched: no commit (Iceberg no-ops too)
+        targets = sorted(new_files)
         resolve_files = set(m["files"])
         for _ in range(_MAX_COMMIT_RETRIES):
             cur = self.current_version
@@ -2023,52 +2074,51 @@ class SnapshotTable:
         # interval is already classified as a delete by the full-outer join
         # below (it's in r but, with v_to's tombstone applied, not in a) —
         # emitting it here too would double-count. Sequence scoping applies
-        # on the kept side as well: a kept file with seq > the delete's seq
-        # is untouched by that tombstone.
+        # to equality deletes on the kept side as well: a kept file with
+        # seq > the delete's seq is untouched by that tombstone.
         known = {d["file"] for d in mf.get("delete_files", [])}
         new_dels = [
             d for d in mt.get("delete_files", []) if d["file"] not in known
         ]
         mor_rows = None
-        if new_dels:
-            kept = [f for f in mf["files"] if f in to_set]
-            to_seqs = mt.get("file_seqs", {})
-            for d in new_dels:
-                src = [
-                    f
-                    for f in kept
-                    if to_seqs.get(f, 0) <= d.get("seq", 1 << 62)
-                ]
-                if not src:
-                    continue
+        kept = [f for f in mf["files"] if f in to_set]
+        hits = []
+        new_pos = [
+            os.path.join(self.path, "data", d["file"])
+            for d in new_dels
+            if d.get("kind") in _POSITIONAL
+        ]
+        if new_pos and kept:
+            # positional tombstones are file-scoped (see _read_scoped):
+            # all of them apply in ONE semi-join. For a REPLACED deletion
+            # vector the carried-over old positions are already dead in
+            # v_from's live view, so the join yields rows for the NET-NEW
+            # positions only — the diff falls out for free
+            live = self._read_scoped(mf, kept, keep_meta=True)
+            hits.append(
+                self._join_positions(live, new_pos, "left_semi").drop(
+                    "_df_file", "_df_pos"
+                )
+            )
+        to_seqs = mt.get("file_seqs", {})
+        for d in new_dels:
+            if d.get("kind") in _POSITIONAL:
+                continue
+            src = [
+                f for f in kept if to_seqs.get(f, 0) <= d.get("seq", 1 << 62)
+            ]
+            if src:
                 kdf = self.spark.read.parquet(
                     os.path.join(self.path, "data", d["file"])
                 )
-                if d.get("kind") in ("pos", "dv"):
-                    # for a REPLACED deletion vector the carried-over old
-                    # positions are already dead in v_from's live view, so
-                    # the pre-image join below yields rows for the NET-NEW
-                    # positions only — the diff falls out for free
-                    live = self._read_scoped(mf, src, keep_meta=True)
-                    tomb = kdf.select(
-                        F.col("file").alias("_t_file"),
-                        F.col("pos").alias("_t_pos"),
-                    )
-                    hit = (
-                        live.join(
-                            tomb,
-                            (live["_df_file"] == tomb["_t_file"])
-                            & (live["_df_pos"] == tomb["_t_pos"]),
-                            "left_semi",
-                        )
-                        .drop("_df_file", "_df_pos")
-                        .select(ct("delete").alias("change_type"), "*")
-                    )
-                else:
-                    hit = self._read_scoped(mf, src).join(
+                hits.append(
+                    self._read_scoped(mf, src).join(
                         kdf, d["key_cols"], "left_semi"
-                    ).select(ct("delete").alias("change_type"), "*")
-                mor_rows = hit if mor_rows is None else mor_rows.unionByName(hit)
+                    )
+                )
+        for hit in hits:
+            hit = hit.select(ct("delete").alias("change_type"), "*")
+            mor_rows = hit if mor_rows is None else mor_rows.unionByName(hit)
 
         def _with_mor(df: DataFrame) -> DataFrame:
             if mor_rows is None:

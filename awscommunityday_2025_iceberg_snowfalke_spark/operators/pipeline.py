@@ -1073,11 +1073,10 @@ def curation_pipeline_v2(
 
     # -- the attrition report --
     def row(rank, name, src, tok_expr, detail_df):
+        # SQL semantics: an emptied stage's token SUM is NULL, not 0
         agg = src.agg(
             F.count(F.lit(1)).cast("long").alias("docs_out"),
-            F.coalesce(F.sum(tok_expr), F.lit(0))
-            .cast("long")
-            .alias("tokens_out"),
+            F.sum(tok_expr).cast("long").alias("tokens_out"),
         )
         return agg.crossJoin(detail_df).select(
             F.lit(rank).cast("int").alias("stage_rank"),

@@ -1656,6 +1656,39 @@ def test_curation_pipeline_v2_attrition_invariants(spark):
     assert by["classifier_gate"]["detail"] == by["lsh_neardup"]["docs_out"]
 
 
+def test_curation_pipeline_v2_empty_gate_matches_oracle(spark, tmp_path):
+    """A corpus the classifier gate rejects whole: documents of random
+    synthetic words (``tools/scale_smoke.py``'s generator) score no
+    positive quality weight, so stages 4-7 are empty and their
+    ``tokens_out`` is SQL's SUM over no rows — NULL, as in the DuckDB
+    oracle, not 0."""
+    import duckdb
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.pipeline import (
+        ORACLE,
+        curation_pipeline_v2,
+    )
+    from tools.scale_smoke import synth_documents
+
+    d = str(tmp_path)
+    synth_documents(spark, 200, d)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{d}/documents.parquet/*.parquet')"
+    )
+    want = con.execute(ORACLE["curation_pipeline_v2"]).fetchdf()
+    gate = want[want["stage"] == "classifier_gate"].iloc[0]
+    assert gate["docs_out"] == 0, "doctored corpus must empty the gate"
+    assert_matches_oracle(
+        curation_pipeline_v2(spark, d),
+        con,
+        ORACLE["curation_pipeline_v2"],
+        "curation_pipeline_v2",
+    )
+    con.close()
+
+
 def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
     """The r14 banding screen leaves the attrition values unchanged at
     test scale: over the pipeline's own rebuilt-then-exact-deduped text,

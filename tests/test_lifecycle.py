@@ -771,7 +771,8 @@ def test_rollback_restores_and_keeps_history(spark, events, tmp_path):
 def test_changelog_replay_reproduces_final_state(spark, events, tmp_path):
     """THE changelog contract, end to end: for a randomized (seeded)
     sequence of commits — appends, re-inserts, equality MOR deletes,
-    position deletes, copy-on-write merges, compactions — replaying
+    position deletes, deletion vectors, copy-on-write merges,
+    compactions — replaying
     changelog(v1, vN) onto the v1 state must land EXACTLY read(vN).
     An incremental consumer is precisely this replay; any
     classification bug (the r9 ADVICE item) breaks it."""
@@ -788,7 +789,8 @@ def test_changelog_replay_reproduces_final_state(spark, events, tmp_path):
     def mk(rows):
         return spark.createDataFrame(rows, schema)
 
-    for seed in (7, 23):
+    # seed 3 draws DVs on both sides of a copy-on-write merge
+    for seed in (7, 23, 3):
         rng = random.Random(seed)
         t = SnapshotTable(spark, str(tmp_path / f"t{seed}"))
         state = {k: (k, et, v) for k, et, v in base_rows}
@@ -797,7 +799,7 @@ def test_changelog_replay_reproduces_final_state(spark, events, tmp_path):
         next_id = 1000
         for _ in range(6):
             op = rng.choice(["append", "reinsert", "del_eq", "del_pos",
-                             "merge", "compact"])
+                             "del_dv", "merge", "compact"])
             if op == "append":
                 rows = [(next_id + i, "new", float(i)) for i in range(5)]
                 next_id += 5
@@ -824,6 +826,15 @@ def test_changelog_replay_reproduces_final_state(spark, events, tmp_path):
                 ks = set(rng.sample(live, min(5, len(live))))
                 dead |= ks
                 t.delete_where_positional(
+                    F.col("event_id").isin(*ks) if ks else F.lit(False)
+                )
+            elif op == "del_dv":
+                live = sorted(
+                    r["event_id"] for r in t.read().select("event_id").collect()
+                )
+                ks = set(rng.sample(live, min(5, len(live))))
+                dead |= ks
+                t.delete_where_dv(
                     F.col("event_id").isin(*ks) if ks else F.lit(False)
                 )
             elif op == "merge":
@@ -1495,6 +1506,91 @@ def test_deletion_vector_merge_and_conflicts(spark, events, tmp_path):
     t2.compact(target_files=1)
     assert t2.delete_vectors() == []
     assert t2.read().count() == n_all - n_err - n_clk - n_view - n_pur
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
+    """Merge-on-read job counts do not grow with the tombstones: a read
+    applies every position delete / deletion vector in one anti-join, so
+    a snapshot carrying 8 positional tombstone files reads with the same
+    jobs as one carrying 1; a deletion-vector commit writes all vectors
+    in one partitioned write, so touching 1 data file costs the same
+    jobs as touching all of them."""
+    ids = sorted(r["event_id"] for r in events.select("event_id").collect())
+    one = SnapshotTable(spark, str(tmp_path / "one"))
+    one.append(events, n_files=4)
+    one.delete_where_positional(F.col("event_id") == ids[0])
+    many = SnapshotTable(spark, str(tmp_path / "many"))
+    many.append(events, n_files=4)
+    for k in ids[:8]:
+        many.delete_where_positional(F.col("event_id") == k)
+    n_tomb = len(many._manifest(many.current_version)["delete_files"])
+    assert n_tomb == 8
+    rows_one = _jobs_of(spark, lambda: one.read().collect())
+    rows_many = _jobs_of(spark, lambda: many.read().collect())
+    assert rows_one == rows_many, (rows_one, rows_many)
+    assert many.read().count() == events.count() - 8
+
+    # both tables carry a previous vector on every file, so both commits
+    # below take the merge-the-previous-vector path
+    narrow = SnapshotTable(spark, str(tmp_path / "narrow"))
+    wide = SnapshotTable(spark, str(tmp_path / "wide"))
+    for t in (narrow, wide):
+        t.append(events, n_files=4)
+        t.delete_where_dv(F.col("event_type") == "error")
+    n_files = len(narrow._manifest(narrow.current_version)["files"])
+    k = max(
+        r["event_id"]
+        for r in events.filter(F.col("event_type") == "view")
+        .select("event_id")
+        .collect()
+    )
+    jobs_narrow = _jobs_of(
+        spark, lambda: narrow.delete_where_dv(F.col("event_id") == k)
+    )
+    jobs_wide = _jobs_of(
+        spark, lambda: wide.delete_where_dv(F.col("event_type") == "click")
+    )
+    touched = {d["target"] for d in wide.delete_vectors()}
+    assert len(touched) == n_files > 1
+    assert jobs_narrow == jobs_wide, (jobs_narrow, jobs_wide)
+
+
+def test_deletion_vector_layout_error_is_named(
+    spark, events, tmp_path, monkeypatch
+):
+    """A vector write that leaves more than one file for a target data
+    file raises the named error and commits nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
+        DeletionVectorLayoutError,
+    )
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(events, n_files=1)
+    orig = DataFrameWriter.option
+
+    def one_record_per_file(self, key, value):
+        return orig(self, key, 1 if key == "maxRecordsPerFile" else value)
+
+    monkeypatch.setattr(DataFrameWriter, "option", one_record_per_file)
+    with pytest.raises(DeletionVectorLayoutError):
+        t.delete_where_dv(F.col("event_type") == "error")
+    assert t.current_version == 1
 
 
 def test_bloom_index_no_false_negatives_and_prunes(spark, events, tmp_path):
