@@ -30,13 +30,12 @@ Embedding-cosine / semantic (SemDeDup) near-dup lives in :mod:`similarity`.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load
-from ..stage import discard, stage
+from ..sources.registry import load, table_path
+from ..stage import discard, memo, stage
 
 JACCARD_THRESHOLD = 0.10
 # Exact rational twin of JACCARD_THRESHOLD for keep predicates:
@@ -69,15 +68,6 @@ HOT_SHINGLE_DF_CAP: int | None = 1000
 from .hashing import _DUCK_H, _SPARK_H  # canonical 60-bit hash device
 
 
-# (session, sf_dir) → checkpointed shingle-set DataFrame. The shingle index
-# is the shared intermediate of the whole dedup family (Jaccard, MinHash/LSH
-# both consume it); memoizing makes it a session-lifetime materialized view
-# — computed once, reused by every dedup query against the same data.
-_SHINGLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-shingles per doc (docs with ≥3 tokens), each shingle
     reduced to its portable 60-bit hash at the source: every downstream
@@ -86,19 +76,17 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen-friendly comparisons. The duckdb oracle applies the identical
     md5-prefix hash, so results remain bit-for-bit reproducible.
 
-    Memoized per (session, sf_dir); :func:`_shingles_of` is the
-    un-memoized core over any (doc_id, text) relation (the fused
-    curation pipeline shingles paragraph-rebuilt text through it)."""
-    try:
-        per_session = _SHINGLE_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        return cached
-    sh = _shingles_of(spark, load(spark, sf_dir, "documents"))
-    per_session[sf_dir] = sh
-    return sh
+    The shared intermediate of the whole dedup family (Jaccard and
+    MinHash/LSH both consume it), memoized per (session, sf_dir);
+    :func:`_shingles_of` is the un-memoized core over any (doc_id, text)
+    relation (the fused curation pipeline shingles paragraph-rebuilt text
+    through it)."""
+    return memo(
+        spark,
+        ("shingles", sf_dir),
+        [table_path(sf_dir, "documents")],
+        lambda: _shingles_of(spark, load(spark, sf_dir, "documents")),
+    )
 
 
 def _shingles_of(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -1321,27 +1309,19 @@ def _minhash_signatures(sh: DataFrame) -> DataFrame:
     )
 
 
-_LSH_CAND_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged MinHash/LSH candidate pairs (doc_a < doc_b sharing ≥1 band),
     memoized per (session, corpus) — the shared blocking front for every
     verify layer (exact Jaccard in :func:`minhash_lsh_pairs`, edit
     distance in :func:`dedup_editdist_verify`). At scale the band join
     shuffles only (band_idx, 32-byte hash, doc_id) tuples."""
-    try:
-        per_session = _LSH_CAND_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        return cached
-    cand = stage(  # consumed repeatedly: pruning + verify joins
-        _lsh_candidates_of(_shingles(spark, sf_dir))
+    return memo(
+        spark,
+        ("lsh_candidates", sf_dir),
+        [table_path(sf_dir, "documents")],
+        # staged: consumed repeatedly by the pruning + verify joins
+        lambda: stage(_lsh_candidates_of(_shingles(spark, sf_dir))),
     )
-    per_session[sf_dir] = cand
-    return cand
 
 
 def _lsh_candidates_of(sh: DataFrame) -> DataFrame:
@@ -2007,9 +1987,6 @@ def connected_components_star(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-_CC_LABELS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components labels over the verified near-dup pair graph,
     memoized per (session, corpus) — four registry entries (clusters,
@@ -2017,22 +1994,19 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME labels, and re-running the iterative propagation per entry was
     the dominant cost of each (measured ~3 s at sf0.01 per re-run, one
     label pass shared instead)."""
-    try:
-        per_session = _CC_LABELS_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        return cached
-    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # r17: connected_components' driver fast path returns a LAZY
-    # broadcast-join plan; this memo serves FOUR registry entries, so
-    # stage it once here — each consumer then rescans cheap parquet
-    # instead of re-running the nodes scan + join per entry
-    labels = stage(connected_components(docs, pairs))
-    per_session[sf_dir] = labels
-    return labels
+
+    def build() -> DataFrame:
+        docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
+        pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        # connected_components' driver fast path returns a LAZY
+        # broadcast-join plan; this memo serves FOUR registry entries, so
+        # stage it once here — each consumer then rescans cheap parquet
+        # instead of re-running the nodes scan + join per entry
+        return stage(connected_components(docs, pairs))
+
+    return memo(
+        spark, ("cc_labels", sf_dir), [table_path(sf_dir, "documents")], build
+    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2191,28 +2165,18 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("method", "split_name")
 
 
-# (session, sf_dir, width) → staged SimHash signature table. Like the
-# shingle index, the signature table is the shared intermediate of the
-# pairing family (both band layouts consume it, and both self-join sides
-# read it); memoizing makes it a session-lifetime materialized view —
-# the 64 vote aggregates run once per corpus, not once per pairing call.
-_SIMHASH_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _staged_simhash(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
-    try:
-        per_session = _SIMHASH_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    key = (sf_dir, width)
-    cached = per_session.get(key)
-    if cached is None:
-        fn = simhash64 if width == 64 else simhash32
-        cached = stage(fn(spark, sf_dir))
-        per_session[key] = cached
-    return cached
+    """Staged SimHash signature table, memoized per (session, sf_dir,
+    width): the shared intermediate of the pairing family (both band
+    layouts and both self-join sides read it), so the vote aggregates run
+    once per corpus, not once per pairing call."""
+    fn = simhash64 if width == 64 else simhash32
+    return memo(
+        spark,
+        ("simhash", sf_dir, width),
+        [table_path(sf_dir, "documents")],
+        lambda: stage(fn(spark, sf_dir)),
+    )
 
 
 # --- SimHash (32-bit) -------------------------------------------------------

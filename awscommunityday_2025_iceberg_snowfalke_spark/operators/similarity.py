@@ -17,13 +17,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load
-from ..stage import _session_root, stage
+from ..sources.registry import load, table_path
+from ..stage import _session_root, fingerprint, memo, stage
 
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -1044,35 +1043,30 @@ N_PROBE = 2  # cells probed per query (defined before its first consumer)
 
 
 # --- cell-partitioned IVF store (probe = partition pruning) ------------------
-# (session, sf_dir) → path of the corpus written PARTITIONED BY CELL.
-_IVF_STORE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def _ivf_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the corpus partitioned by its IVF cell (hive layout
-    under the session staging root), once per (session, sf_dir) — the
-    write a real vector store amortizes over every subsequent probe."""
-    try:
-        per_session = _IVF_STORE_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    path = per_session.get(sf_dir)
-    if path is None:
-        # stable digest, NOT str hash: Python str hash is PYTHONHASHSEED-
-        # randomized, so the store path would differ across driver runs and
-        # defeat any cross-run reuse of the staging root. The cache assumes
-        # the parquet under sf_dir is immutable for the session (true for
-        # the read-only testdata; a mutable deployment would fingerprint
-        # the input files into the digest).
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    """Path of the corpus materialized partitioned by its IVF cell (hive
+    layout under the session staging root), memoized per (session,
+    sf_dir) — the write a real vector store amortizes over every
+    subsequent probe."""
+    key = ("ivf_store", sf_dir)
+    inputs = [table_path(sf_dir, "embeddings")]
+
+    def build() -> str:
+        # named from the key and the input fingerprint, so a rebuild after
+        # the embeddings changed never overwrites files an earlier plan
+        # still scans; stable digest, NOT str hash (PYTHONHASHSEED-salted)
+        digest = hashlib.md5(
+            repr((key, fingerprint(spark, inputs))).encode()
+        ).hexdigest()[:12]
         path = os.path.join(_session_root(spark), f"ivf_store_{digest}")
         _assigned_cells(spark, sf_dir).write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(path)
-        per_session[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, key, inputs, build)
 
 
 def ann_ivf_partitioned_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3526,12 +3520,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Gram-matrix accumulation (whitening / PCA preparation) ------------------
-# (session, sf_dir) → staged gram artifact: consumed by its own registry
-# entry AND the PCA spectrum below; session-lifetime materialized view like
-# the shingle/simhash caches (the accumulation pass runs once per corpus).
-_GRAM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3553,16 +3541,17 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the twin of this plan with per-batch float dgemm partials, EᵀE, is
     the raw-throughput deployment shape but reassociates float adds and
     loses cross-engine bit-parity; at 100 TB you run the dgemm form and
-    accept engine-level tolerance, here the gate demands exactness)."""
-    try:
-        per_session = _GRAM_CACHE.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    cached = per_session.get(sf_dir)
-    if cached is None:
-        cached = stage(_gram_plan(spark, sf_dir))
-        per_session[sf_dir] = cached
-    return cached
+    accept engine-level tolerance, here the gate demands exactness).
+
+    Staged and memoized per (session, sf_dir): its own registry entry
+    and the PCA spectrum both consume it, so the accumulation pass runs
+    once per corpus."""
+    return memo(
+        spark,
+        ("gram", sf_dir),
+        [table_path(sf_dir, "embeddings")],
+        lambda: stage(_gram_plan(spark, sf_dir)),
+    )
 
 
 def _gram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,11 +19,11 @@ and keeps Catalyst free to push filters/projections into the scan.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from ..stage import memo
 
 TABLES = (
     "region",
@@ -47,15 +47,9 @@ CUTOFF_30D = "2024-01-01 00:00:00"  # CURRENT_DATE - 30
 CUTOFF_HOT = CUTOFF_7D  # hot/cold tier split (demo-setup/README.md:197-209)
 
 
-# Memoized session → {(sf_dir, table): DataFrame}. A DataFrame is an
-# immutable logical plan, so reuse is safe; this is the catalog-metadata
-# cache every real engine keeps (Snowflake's metadata cache, P:591) — it
-# avoids repeated footer reads + schema inference when a session runs many
-# queries. Keyed weakly by the session so a stopped session's plans are
-# dropped rather than resurrected for an unrelated new session.
-_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+def table_path(sf_dir: str, name: str) -> str:
+    """Path of registry table ``name`` under ``sf_dir``."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -75,30 +69,30 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``tests/test_sources_streaming.py::test_load_normalizes_events_ts_repr``
     pins all three paths to identical instants.
+
+    The DataFrame is memoized per session (``stage.memo``) until
+    the table's files change: it is an immutable logical plan, so reuse
+    is safe, and this is the catalog-metadata cache every real engine
+    keeps (Snowflake's metadata cache, P:591) — a session running many
+    queries pays the footer reads and schema inference once per table.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    try:
-        per_session = _LOAD_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable (mocks in tests)
-        per_session = {}
-    key = (sf_dir, name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_field = df.schema["ts"]
-        if isinstance(ts_field.dataType, LongType):
-            # integer DIV, not `/`: ns-since-epoch overflows double's mantissa
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    else:
-        df = spark.read.parquet(path)
-    df = _normalize_ntz(df)
-    per_session[key] = df
-    return df
+    path = table_path(sf_dir, name)
+
+    def build() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(path)
+            ts_field = df.schema["ts"]
+            if isinstance(ts_field.dataType, LongType):
+                # integer DIV, not `/`: ns-since-epoch overflows double's mantissa
+                df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+        else:
+            df = spark.read.parquet(path)
+        return _normalize_ntz(df)
+
+    return memo(spark, ("load", sf_dir, name), [path], build)
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:

@@ -43,6 +43,24 @@ the natural choice.
 The write is eager by construction (an action runs before ``stage``
 returns), which keeps the round-2 property that concurrent consumers never
 race to materialize a shared plan.
+
+Shared intermediates that several queries of one session reuse (table
+scans, the shingle index, LSH candidates, connected-components labels,
+SimHash signatures, the IVF store, the Gram table) go through
+:func:`memo`, the stand-in for an engine's metadata and result caches:
+
+- **Key.** The caller's key (e.g. ``("shingles", sf_dir)``) plus a
+  fingerprint of the input tables the build reads: the sorted
+  ``(file, length, mtime)`` list of one recursive listing through
+  Hadoop's ``FileSystem`` API, which ``spark.read.parquet`` lists
+  through, so any path Spark can read works. A lookup whose fingerprint
+  differs from the stored one rebuilds the entry and replaces it, so a
+  memoized value is never served after its input changed.
+- **Lifetime.** Entries live per session, weakly keyed: a stopped
+  session's entries are dropped, and ``spark.newSession()`` starts empty.
+- **Reclamation.** A rebuild leaves the replaced value's staged files in
+  place (a plan taken earlier may still scan them); the session staging
+  root, and with it every staged output, is removed at exit.
 """
 
 from __future__ import annotations
@@ -55,8 +73,11 @@ import tempfile
 import threading
 import uuid
 import weakref
+from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 _LOCK = threading.Lock()
 _COUNTER = itertools.count()
@@ -64,7 +85,8 @@ _COUNTER = itertools.count()
 # session → its staging root. Weak keys so a garbage-collected session
 # doesn't pin the mapping; the atexit hook removes the directory itself.
 _DIRS: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDictionary()
-_DIRS_STRONG: dict = {}  # fallback when SparkSession isn't weakref-able
+# session → {key: (input fingerprint, value)}, see :func:`memo`
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def _configured_root(spark: SparkSession) -> str | None:
@@ -80,10 +102,7 @@ def _configured_root(spark: SparkSession) -> str | None:
 
 def _session_root(spark: SparkSession) -> str:
     with _LOCK:
-        try:
-            root = _DIRS.get(spark)
-        except TypeError:
-            root = _DIRS_STRONG.get(id(spark))
+        root = _DIRS.get(spark)
         if root is None:
             configured = _configured_root(spark)
             if configured:
@@ -96,11 +115,60 @@ def _session_root(spark: SparkSession) -> str:
             else:
                 root = tempfile.mkdtemp(prefix="sparkgraft-stage-")
             atexit.register(shutil.rmtree, root, ignore_errors=True)
-            try:
-                _DIRS[spark] = root
-            except TypeError:
-                _DIRS_STRONG[id(spark)] = root
+            _DIRS[spark] = root
         return root
+
+
+def fingerprint(spark: SparkSession, paths: Iterable[str]) -> tuple:
+    """Sorted ``(file, length, mtime)`` of every file under ``paths``, from
+    one recursive listing per path through Hadoop's ``FileSystem``. A
+    missing path lists as empty, leaving the error to the read that
+    needs it."""
+    # one py4j round trip for the class, not one per package component
+    hadoop_path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
+    # the context's shared conf: the session's newHadoopConf() copies it
+    # on every call, which costs more than the listing itself
+    conf = spark._jsc.hadoopConfiguration()
+    files = []
+    for p in paths:
+        path = hadoop_path(p)
+        fs = path.getFileSystem(conf)
+        if not fs.exists(path):
+            continue
+        # listStatus, not listFiles: the latter also fetches block locations
+        pending = [path]
+        while pending:
+            for st in fs.listStatus(pending.pop()):
+                if st.isDirectory():
+                    pending.append(st.getPath())
+                else:
+                    files.append(
+                        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                    )
+    return tuple(sorted(files))
+
+
+def memo(
+    spark: SparkSession,
+    key: tuple,
+    inputs: Iterable[str],
+    build: Callable[[], T],
+) -> T:
+    """``build()``, reused for every later call in this session with the
+    same ``key`` while the files under ``inputs`` (the table paths the
+    build reads) are unchanged; a changed fingerprint rebuilds and
+    replaces the entry. Concurrent misses may each build; the last one
+    stored wins (the lock guards the dict, not the build, which may call
+    :func:`memo` and :func:`stage` itself)."""
+    fp = fingerprint(spark, inputs)
+    with _LOCK:
+        hit = _MEMO.setdefault(spark, {}).get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    with _LOCK:
+        _MEMO.setdefault(spark, {})[key] = (fp, value)
+    return value
 
 
 def stage(df: DataFrame, name: str | None = None) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -35,6 +36,18 @@ def oracle():
         )
     yield con
     con.close()
+
+
+def jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _norm(v):

@@ -16,7 +16,7 @@ from awscommunityday_2025_iceberg_snowfalke_spark.operators.relational import (
 )
 from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import load
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_of
 
 
 @pytest.fixture
@@ -1508,20 +1508,6 @@ def test_deletion_vector_merge_and_conflicts(spark, events, tmp_path):
     assert t2.read().count() == n_all - n_err - n_clk - n_view - n_pur
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs ``fn()`` launches, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobpin-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
     """Merge-on-read job counts do not grow with the tombstones: a read
     applies every position delete / deletion vector in one anti-join, so
@@ -1539,8 +1525,8 @@ def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
         many.delete_where_positional(F.col("event_id") == k)
     n_tomb = len(many._manifest(many.current_version)["delete_files"])
     assert n_tomb == 8
-    rows_one = _jobs_of(spark, lambda: one.read().collect())
-    rows_many = _jobs_of(spark, lambda: many.read().collect())
+    rows_one = jobs_of(spark, lambda: one.read().collect())
+    rows_many = jobs_of(spark, lambda: many.read().collect())
     assert rows_one == rows_many, (rows_one, rows_many)
     assert many.read().count() == events.count() - 8
 
@@ -1558,10 +1544,10 @@ def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
         .select("event_id")
         .collect()
     )
-    jobs_narrow = _jobs_of(
+    jobs_narrow = jobs_of(
         spark, lambda: narrow.delete_where_dv(F.col("event_id") == k)
     )
-    jobs_wide = _jobs_of(
+    jobs_wide = jobs_of(
         spark, lambda: wide.delete_where_dv(F.col("event_type") == "click")
     )
     touched = {d["target"] for d in wide.delete_vectors()}

@@ -1,6 +1,18 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the headline queries,
-annotated with the plan property each one is graded on (see SCALE.md)."""
+"""Dump formatted physical plans (``df.explain("formatted")``).
+
+Usage:
+    python tools/dump_plans.py
+        Regenerate PLANS.md: the headline queries, annotated with the plan
+        property each one is graded on (see SCALE.md).
+    python tools/dump_plans.py OUT_DIR SUFFIX name1 name2 ...
+        Write OUT_DIR/<name>_<SUFFIX>.txt for each named query (e.g.
+        ``plans/r17 before``). A query whose plan fails to build records
+        the error and the dump goes on. Driver-loop trainers explain only
+        their final frame.
+
+SPARK_GRAFT_PLAN_SF_DIR selects the data directory (default sf0.01).
+"""
 
 from __future__ import annotations
 
@@ -83,8 +95,28 @@ PICK = [
 ]
 
 
-def main() -> None:
-    spark = get_spark(app_name="dump_plans")
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().strip()
+
+
+def dump_named(spark, outdir: str, suffix: str, names: list[str]) -> None:
+    qs = all_queries()
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        try:
+            text = _explain(qs[name](spark, SF))
+        except Exception as exc:  # noqa: BLE001 — record, keep dumping
+            text = f"ERROR building plan: {type(exc).__name__}: {exc}"
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — {suffix} ({SF})\n\n{text}\n")
+        print("wrote", path)
+
+
+def dump_headline(spark) -> None:
     qs = all_queries()
     out = [
         "# PLANS — formatted physical plans of headline queries "
@@ -97,17 +129,25 @@ def main() -> None:
         "",
     ]
     for name, note in PICK:
-        df = qs[name](spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n*{note}*\n\n```\n{buf.getvalue().strip()}\n```\n")
+        text = _explain(qs[name](spark, SF))
+        out.append(f"## {name}\n\n*{note}*\n\n```\n{text}\n```\n")
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
     )
     with open(path, "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote {path}")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if args and len(args) < 3:
+        sys.exit(__doc__)
+    spark = get_spark(app_name="dump_plans")
+    if args:
+        dump_named(spark, args[0], args[1], args[2:])
+    else:
+        dump_headline(spark)
 
 
 if __name__ == "__main__":
