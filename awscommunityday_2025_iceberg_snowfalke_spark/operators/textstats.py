@@ -12,6 +12,8 @@ regexes, portable md5-based token hash for the fingerprint).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -900,7 +902,7 @@ BPE_MERGES = (
 )
 
 # The production-depth artifact: bpe_train_merges_deep's own sf0.01
-# output (64 merges, checkpointed trainer) — test-pinned to the trainer
+# output (64 merges) — test-pinned to the trainer
 # exactly like BPE_MERGES. Contains NO a==b merge (asserted in tests),
 # so the two-pass-replace encoder device is exact for it.
 BPE_MERGES_64 = (
@@ -951,7 +953,7 @@ def bpe_encode_fixed_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_encode_merges64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE encoding under the PRODUCTION-DEPTH frozen artifact
-    (``BPE_MERGES_64`` — the checkpointed 64-round trainer's own sf0.01
+    (``BPE_MERGES_64`` — the 64-round trainer's own sf0.01
     output): same two-pass-replace device, 64 merges in priority order
     (exact: the artifact contains no a==b merge), pinned against the
     symbol-level Python greedy reference in tests. Re-certifies the
@@ -2170,26 +2172,16 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, argmax with (count DESC, a, b) lexical tiebreak, apply the
     merge, repeat.
 
-    Scale shape: ONE corpus pass builds the (word, freq) dictionary —
-    Sennrich's trick: all subsequent rounds run over the DISTINCT-word
-    relation, Heaps-sublinear in corpus size (at 100 TB the word table
-    is millions of rows, not trillions of tokens). The dictionary is
-    persisted once; round k's pair count is a map-side explode over it +
-    one bounded agg, and the argmax is LIMIT 1 (TakeOrderedAndProject,
-    never a global sort). The merge application is a
-    TOKENWISE greedy left-to-right array fold (``F.aggregate`` with a
-    (out, pending) struct accumulator) — NOT the encoder's two-pass
-    string-replace device: that device is exact for every a≠b merge
-    (the frozen artifact's case) but mis-pairs a==b merges over runs of
-    ≥4 tokens (in ' x x x x x x ' the second replace match's leading
-    space was consumed by the first, stranding tokens 3 and 6 where
-    greedy pairs (1,2)(3,4)(5,6) — caught by the r11 self-review; a
-    trainer must select such merges correctly on run-heavy text like
-    'soooo'). Round k's expression chain carries k folds — no
-    re-materialization between rounds at this depth (the deep trainer
-    below checkpoints; equality of the two forms is test-pinned).
-    Per-round driver traffic is ONE row (the argmax),
-    the kmeans-centroid precedent. Output: the bounded N-row merge
+    Scale shape: ONE Spark aggregation builds the (word, freq)
+    dictionary — Sennrich's trick: every round runs over the DISTINCT
+    words, Heaps-sublinear in corpus size — and the rounds run on the
+    driver over the collected dictionary (see ``_bpe_train``), so the
+    entry costs the same Spark jobs at any round count. Merges apply
+    TOKENWISE, greedy left to right (``_apply_merge``) — NOT the
+    encoder's two-pass string-replace device, which is exact for every
+    a≠b merge (the frozen artifact's case) but mis-pairs a==b merges
+    over runs of ≥4 tokens; a trainer must select such merges correctly
+    on run-heavy text like 'soooo'. Output: the bounded N-row merge
     table (rank, a, b, pair_count) — integers and strings only."""
     merges = _bpe_train(spark, sf_dir, BPE_TRAIN_ROUNDS)
     return spark.createDataFrame(
@@ -2198,176 +2190,94 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BPE_TRAIN_ROUNDS_DEEP = 64  # production-depth trainer (r12 verdict task 3)
-BPE_CHECKPOINT_EVERY = 8  # re-materialize the token arrays every K rounds
 
 
 def bpe_train_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-DEPTH BPE trainer: ``BPE_TRAIN_ROUNDS_DEEP`` (64)
-    merge rounds with the token arrays CHECKPOINTED to parquet every
-    ``BPE_CHECKPOINT_EVERY`` rounds — the expression-chain-depth
-    trade-off named in :func:`bpe_train_merges`'s design, resolved: an
-    unbroken 64-fold chain re-evaluates up to 64 nested array folds per
-    pair-count pass (quadratic total work in rounds, and an
-    ever-deepening codegen tree); the checkpoint caps the live chain at
-    K folds, so per-round cost is flat and total work is linear in
-    rounds. Checkpoints also DROP exhausted words (arrays already
-    merged to < 2 tokens can never contribute a pair again — merging
-    only shrinks arrays), so the relation monotonically shrinks.
-    Checkpointed == chained is pinned by
-    ``tests/test_corpus.py::test_bpe_train_checkpoint_equals_chained``;
-    the DuckDB oracle unrolls the same 64 rounds. At 100 TB the
-    checkpointed relation is the Heaps-sublinear word dictionary, and
-    'checkpoint' is the same shared-filesystem staging every multi-day
-    trainer uses."""
-    merges = _bpe_train(
-        spark,
-        sf_dir,
-        BPE_TRAIN_ROUNDS_DEEP,
-        checkpoint_every=BPE_CHECKPOINT_EVERY,
-    )
+    """The PRODUCTION-DEPTH BPE trainer: :func:`bpe_train_merges` run
+    for ``BPE_TRAIN_ROUNDS_DEEP`` (64) rounds. Its sf0.01 output is
+    frozen as ``BPE_MERGES_64``, the artifact the deep encoder applies;
+    the DuckDB oracle unrolls the same 64 rounds."""
+    merges = _bpe_train(spark, sf_dir, BPE_TRAIN_ROUNDS_DEEP)
     return spark.createDataFrame(
         merges, "merge_rank int, a string, b string, pair_count bigint"
     )
 
 
-def _bpe_train(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int,
-    checkpoint_every: int = 0,
-) -> list[tuple[int, str, str, int]]:
-    """Shared Sennrich trainer loop: ``rounds`` argmax-merge rounds over
-    the distinct-word frequency relation; ``checkpoint_every`` > 0
-    stages the folded token arrays to parquet every K rounds (resetting
-    the expression chain and dropping pair-exhausted words) — output
-    PROVABLY identical to the unbroken chain (test-pinned)."""
+def _word_freqs(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """The corpus's [a-z] word dictionary ``{word: freq}``: one
+    normalize → explode → groupBy aggregation, collected to the driver
+    (the trainers' only Spark work)."""
     docs = load(spark, sf_dir, "documents")
     norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z ]", " ")
     words = F.filter(F.split(norm, " "), lambda w: w != F.lit(""))
-    wf = (
+    rows = (
         docs.select(F.explode(words).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
+        .collect()
     )
+    return {r["w"]: int(r["freq"]) for r in rows}
 
-    def _merge_fold(arr, a: str, b: str):
-        """Tokenwise greedy application of one merge (a, b): exact BPE
-        semantics for every pair incl. a == b over repeated runs."""
-        ab, la, lb = F.lit(a + b), F.lit(a), F.lit(b)
-        init = F.struct(
-            F.expr("CAST(array() AS ARRAY<STRING>)").alias("out"),
-            F.lit("").alias("prev"),
-        )
 
-        def step(acc, x):
-            return (
-                F.when(
-                    (acc["prev"] == la) & (x == lb),
-                    F.struct(
-                        F.concat(acc["out"], F.array(ab)).alias("out"),
-                        F.lit("").alias("prev"),
-                    ),
-                )
-                .when(
-                    acc["prev"] == F.lit(""),
-                    F.struct(acc["out"].alias("out"), x.alias("prev")),
-                )
-                .otherwise(
-                    F.struct(
-                        F.concat(
-                            acc["out"], F.array(acc["prev"])
-                        ).alias("out"),
-                        x.alias("prev"),
-                    )
-                )
-            )
+def _apply_merge(toks: list[str], a: str, b: str, merged: str) -> list[str]:
+    """One merge (a, b) → ``merged`` applied greedily left to right: an
+    ``a`` followed by ``b`` becomes ``merged`` and both are consumed, so
+    an a == b run pairs (1,2)(3,4)... and strands an odd last token."""
+    out, i = [], 0
+    while i < len(toks):
+        if i + 1 < len(toks) and toks[i] == a and toks[i + 1] == b:
+            out.append(merged)
+            i += 2
+        else:
+            out.append(toks[i])
+            i += 1
+    return out
 
-        def finish(acc):
-            return F.when(
-                acc["prev"] == F.lit(""), acc["out"]
-            ).otherwise(F.concat(acc["out"], F.array(acc["prev"])))
 
-        return F.aggregate(arr, init, step, finish)
+def _bpe_train(
+    spark: SparkSession, sf_dir: str, rounds: int
+) -> list[tuple[int, str, str, int]]:
+    """Shared Sennrich trainer loop: ``rounds`` argmax-merge rounds over
+    the word dictionary from ``_word_freqs``, each round a full pair
+    recount over the current tokenization of every distinct word.
 
-    # r16 NOTE — deliberately the r15 shape, kept after an A/B (numbers
-    # in OPTIMIZATION_r16.md). Two rewrites were measured and DISCARDED
-    # on this trainer: (a) per-round persist of the folded arrays
-    # (17.3 s → 34.9 s on the 16-round wordpiece twin: InMemoryRelation
-    # store/scan of string arrays per round costs more than the fold
-    # re-evaluation it saves); (b) the let-bound single-agg +
-    # driver-argmax shape that DID win for `_wp_train` (BPE isolated:
-    # 4.1-4.4 s r15 vs 7.5 s rewritten — BPE's round is already ONE agg
-    # + a LIMIT-1 collect, so the fused-agg saving that paid for the
-    # wordpiece trainer does not exist here and the wrapper only adds
-    # per-round plan analysis). The word dictionary is Heaps-sublinear
-    # (31 distinct types on this testdata!), so per-round cost is job
-    # overhead, not row work — the r15 expression chain is at the floor.
-    wf = wf.persist()
+    Precondition: the dictionary fits on the driver. It is
+    Heaps-sublinear (31 types at sf0.01 and sf0.1); a synthetic
+    1M-type dictionary (``tools/scale_smoke.py::synth_dictionary``)
+    trained 8 rounds at 542 MB peak driver Python RSS (WordPiece:
+    958 MB). A dictionary too large to collect fails with Spark's own
+    ``spark.driver.maxResultSize`` error."""
+    words = [(list(w), f) for w, f in _word_freqs(spark, sf_dir).items()]
     merges: list[tuple[int, str, str, int]] = []
-    try:
-        # char symbolization via the spaced device, split to an array
-        arr = F.split(
-            F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")), " "
-        )
-        rel = wf
-        for k in range(rounds):
-            pair = F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(arr) - 1),
-                    lambda i: F.struct(
-                        F.element_at(arr, i).alias("a"),
-                        F.element_at(arr, i + 1).alias("b"),
-                    ),
-                )
-            )
-            best = (
-                rel.filter(F.size(arr) >= 2)
-                .select("freq", pair.alias("p"))
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
-            merges.append((len(merges) + 1, a, b, cnt))
-            arr = _merge_fold(arr, a, b)
-            if (
-                checkpoint_every
-                and (k + 1) % checkpoint_every == 0
-                and k + 1 < rounds
-            ):
-                # materialize the folded arrays, reset the chain; words
-                # already below 2 tokens can never pair again — drop
-                rel = stage(
-                    rel.filter(F.size(arr) >= 2).select(
-                        arr.alias("toks"), "freq"
-                    )
-                )
-                arr = F.col("toks")
-    finally:
-        wf.unpersist()
+    for _ in range(rounds):
+        pairs: Counter = Counter()
+        for toks, f in words:
+            for p in zip(toks, toks[1:]):
+                pairs[p] += f
+        if not pairs:
+            break
+        (a, b), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((len(merges) + 1, a, b, cnt))
+        words = [(_apply_merge(toks, a, b, a + b), f) for toks, f in words]
     return merges
 
 
 def _duck_bpe_train_oracle(rounds: int = BPE_TRAIN_ROUNDS) -> str:
-    """DuckDB twin of ``bpe_train_merges`` (and, at rounds=64, of the
-    checkpointed ``bpe_train_merges_deep`` — checkpointing is a pure
-    execution detail, the answer is the chain's): the N-round trainer unrolled
-    into nested CTEs — each round is (pair count over the word-frequency
+    """DuckDB twin of ``bpe_train_merges`` (and, at rounds=64, of
+    ``bpe_train_merges_deep``): the N-round trainer unrolled into
+    nested CTEs — each round is (pair count over the word-frequency
     relation) → (1-row argmax) → (merge applied TOKENWISE via a
     ``list_reduce`` fold whose accumulator encodes (emitted tokens,
     pending token) as '<out>|<prev>' — symbols are [a-z] so '|' is
     free), generated from the SAME round count so the engines can never
-    drift. The fold is the exact greedy semantics incl. a == b merges
-    over repeated runs (the case the string-replace device mis-pairs)."""
+    drift. The fold is the greedy left-to-right semantics of
+    ``_apply_merge``, incl. a == b merges over repeated runs (the case
+    the string-replace device mis-pairs)."""
     # fold step over acc='<out>|<prev>' (out = space-terminated tokens):
     #   merge:   out + 'ab '      and prev := ''
     #   no prev: prev := x
     #   else:    out + prev + ' ' and prev := x
-    # finish: drop '|' and split — identical to the Spark struct fold
+    # finish: drop '|' and split — the tokens ``_apply_merge`` returns
     fold = (
         "list_filter(string_split(replace("
         "list_reduce(['|'] || arr, (acc, x) -> "
@@ -3187,64 +3097,11 @@ WP_TRAIN_ROUNDS = 16
 # The likelihood score is a RATIONAL cnt/(fa·fb); ranking doubles across
 # engines is the r7 driver-red class, so the FROZEN SPEC is the exact
 # integer quantization floor(cnt·10¹⁸/(fa·fb)) with (a, b) lexical
-# tiebreak — both engines compute the identical integer (Spark in
-# DECIMAL(38,0) via the exact floor-division device, DuckDB in HUGEINT),
-# so the argmax can never drift (the QC_BAND_CUTS micro-unit precedent).
+# tiebreak — both engines compute the identical integer (the trainer in
+# Python ints, DuckDB in HUGEINT), so the argmax can never drift (the
+# QC_BAND_CUTS micro-unit precedent).
 WP_SCORE_SCALE = 10**18
 WP_TRAIN_ROUNDS_DEEP = 32  # production-depth trainer (r14 verdict task 6)
-WP_CHECKPOINT_EVERY = 8  # re-materialize the token arrays every K rounds
-
-
-def _wp_init_arr(w):
-    """Initial WordPiece symbolization of a word column: first char
-    plain, every later char '##'-prefixed (['h','##e','##l','##l','##o'])."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(w)),
-        lambda i: F.when(i == 1, w.substr(i, F.lit(1))).otherwise(
-            F.concat(F.lit("##"), w.substr(i, F.lit(1)))
-        ),
-    )
-
-
-def _wp_fold(arr, a: str, b: str, merged: str):
-    """Tokenwise greedy application of one WordPiece merge (a, b) →
-    ``merged``: the exact left-to-right semantics of ``_bpe_train``'s
-    fold (incl. a == b over runs, reachable here for continuation
-    symbols like ('##l','##l')), emitting the '##'-folded merged symbol
-    instead of plain concatenation."""
-    la, lb, lm = F.lit(a), F.lit(b), F.lit(merged)
-    init = F.struct(
-        F.expr("CAST(array() AS ARRAY<STRING>)").alias("out"),
-        F.lit("").alias("prev"),
-    )
-
-    def step(acc, x):
-        return (
-            F.when(
-                (acc["prev"] == la) & (x == lb),
-                F.struct(
-                    F.concat(acc["out"], F.array(lm)).alias("out"),
-                    F.lit("").alias("prev"),
-                ),
-            )
-            .when(
-                acc["prev"] == F.lit(""),
-                F.struct(acc["out"].alias("out"), x.alias("prev")),
-            )
-            .otherwise(
-                F.struct(
-                    F.concat(acc["out"], F.array(acc["prev"])).alias("out"),
-                    x.alias("prev"),
-                )
-            )
-        )
-
-    def finish(acc):
-        return F.when(acc["prev"] == F.lit(""), acc["out"]).otherwise(
-            F.concat(acc["out"], F.array(acc["prev"]))
-        )
-
-    return F.aggregate(arr, init, step, finish)
 
 
 def _wp_merged_symbol(a: str, b: str) -> str:
@@ -3253,165 +3110,63 @@ def _wp_merged_symbol(a: str, b: str) -> str:
     return a + (b[2:] if b.startswith("##") else b)
 
 
-def _wp_train(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int,
-    checkpoint_every: int = 0,
-) -> list[tuple]:
-    """WordPiece trainer loop: per round, corpus-wide adjacent-pair
-    counts AND per-symbol frequencies over the current tokenization of
-    the distinct-word relation; argmax of the exact quantized likelihood
-    score; apply the merge via the greedy fold; repeat.
-    ``checkpoint_every`` > 0 stages the folded token arrays to parquet
-    every K rounds, resetting the expression chain (the ``_bpe_train``
-    device) — output PROVABLY identical to the unbroken chain
-    (test-pinned). One deliberate divergence from the BPE checkpoint:
-    words already merged below 2 tokens are NOT dropped, because the
-    likelihood denominator fa·fb counts a symbol's occurrences in
-    EVERY word including pair-exhausted ones — dropping them would
-    change scores and flip argmaxes. The relation therefore stays the
-    full word dictionary (Heaps-sublinear, still bounded); only the
-    fold-chain depth is capped.
-
-    Scale shape: identical to ``_bpe_train`` (reference
-    run_performance_tests.py has no tokenizer — public Sennrich/Wu
-    semantics) — ONE corpus pass builds the Heaps-sublinear (word, freq)
-    dictionary; each round is ONE bounded map-side-combinable agg (pair
-    counts AND symbol counts fused into a single explode, the symbol
-    rows tagged ``b IS NULL``) and the argmax is solved driver-side on
-    the collected ≤|symbols|²-row count table with exact Python integers
-    (floor-division == the decimal device; (a, b) tiebreak == the old
-    TakeOrdered's binary string order for this ASCII symbol set).
-
-    r16 optimization (guide §1.2/§4; A/B numbers in
-    OPTIMIZATION_r16.md): the r15 round ran TWO corpus-dictionary aggs
-    (pair counts, symbol counts) plus a broadcast join and a LIMIT-1
-    sort; now ONE fused agg (symbol occurrences tagged ``b IS NULL``
-    riding the pair explode) feeds a driver-side exact argmax —
-    measured 17.3 s → 7.5 s isolated at sf0.1. Two supporting details:
-    the fold chain is LET-BOUND once per row (higher-order functions
-    are CodegenFallback — every extra reference to the round-k chain
-    re-evaluates it, which matters once the Heaps-sublinear dictionary
-    is millions of rows at 100 TB), and a persist-per-round variant
-    (fold applied once per generation) was measured 2× WORSE
-    uncheckpointed (17.3 s → 34.9 s: InMemoryRelation store/scan of
-    string arrays per round beats the work it saves) and discarded.
-    Output bit-identical — pinned by the existing WORDPIECE_MERGES /
-    checkpointed==chained tests."""
-    docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z ]", " ")
-    words = F.filter(F.split(norm, " "), lambda w: w != F.lit(""))
-    wf = (
-        docs.select(F.explode(words).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .persist()
-    )
+def _wp_train(spark: SparkSession, sf_dir: str, rounds: int) -> list[tuple]:
+    """WordPiece trainer loop: per round, adjacent-pair counts AND
+    per-symbol frequencies over the current tokenization of every word
+    in the ``_word_freqs`` dictionary; argmax of the exact quantized
+    likelihood score with (a, b) tiebreak; apply the merge with
+    ``_apply_merge``; repeat. Words initialize as first char plain,
+    every later char '##'-prefixed (['h','##e','##l','##l','##o']).
+    Words merged below 2 tokens still count toward the symbol
+    frequencies: the likelihood denominator fa·fb counts a symbol's
+    occurrences in EVERY word. Exact Python integers give the frozen
+    spec's floor(cnt·10¹⁸/(fa·fb)). Same Spark cost and driver
+    precondition as ``_bpe_train``."""
+    words = [
+        ([w[0]] + ["##" + c for c in w[1:]], f)
+        for w, f in _word_freqs(spark, sf_dir).items()
+    ]
     merges: list[tuple] = []
-    try:
-        empty_pairs = F.expr(
-            "CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>)"
+    for _ in range(rounds):
+        syms: Counter = Counter()
+        pairs: Counter = Counter()
+        for toks, f in words:
+            for s in toks:
+                syms[s] += f
+            for p in zip(toks, toks[1:]):
+                pairs[p] += f
+        if not pairs:
+            break
+        neg_score, a, b = min(
+            (-((cnt * WP_SCORE_SCALE) // (syms[a] * syms[b])), a, b)
+            for (a, b), cnt in pairs.items()
         )
-
-        def _items(arr):
-            """Symbol occurrences (b IS NULL) + adjacent pairs of the
-            folded array, chain let-bound to evaluate once per row."""
-            return F.flatten(
-                F.transform(
-                    F.array(arr),
-                    lambda toks: F.concat(
-                        F.transform(
-                            toks,
-                            lambda s: F.struct(
-                                s.alias("a"),
-                                F.lit(None).cast("string").alias("b"),
-                            ),
-                        ),
-                        F.when(
-                            F.size(toks) >= 2,
-                            F.transform(
-                                F.sequence(F.lit(1), F.size(toks) - 1),
-                                lambda i: F.struct(
-                                    F.element_at(toks, i).alias("a"),
-                                    F.element_at(toks, i + 1).alias("b"),
-                                ),
-                            ),
-                        ).otherwise(empty_pairs),
-                    ),
-                )
+        merged = _wp_merged_symbol(a, b)
+        merges.append(
+            (
+                len(merges) + 1,
+                a,
+                b,
+                merged,
+                pairs[(a, b)],
+                syms[a],
+                syms[b],
+                -neg_score,
             )
-
-        arr = _wp_init_arr(F.col("w"))
-        for k in range(rounds):
-            counts = (
-                wf.select("freq", F.explode(_items(arr)).alias("p"))
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("freq").alias("cnt"))
-                .collect()  # bounded by |symbols|² + |symbols|
-            )
-            syms: dict[str, int] = {}
-            pairs: list[tuple[str, str, int]] = []
-            for r in counts:
-                if r["b"] is None:
-                    syms[r["a"]] = int(r["cnt"])
-                else:
-                    pairs.append((r["a"], r["b"], int(r["cnt"])))
-            if not pairs:
-                break
-            # exact integer score — Python // on non-negative ints is
-            # the same floor the decimal remainder-subtraction computed
-            best = min(
-                (
-                    (
-                        -((cnt * WP_SCORE_SCALE) // (syms[a] * syms[b])),
-                        a,
-                        b,
-                        cnt,
-                    )
-                    for a, b, cnt in pairs
-                ),
-            )
-            neg_score, a, b, cnt = best
-            merged = _wp_merged_symbol(a, b)
-            merges.append(
-                (
-                    len(merges) + 1,
-                    a,
-                    b,
-                    merged,
-                    cnt,
-                    syms[a],
-                    syms[b],
-                    -neg_score,
-                )
-            )
-            arr = _wp_fold(arr, a, b, merged)
-            if (
-                checkpoint_every
-                and (k + 1) % checkpoint_every == 0
-                and k + 1 < rounds
-            ):
-                # parquet barrier: materialize the folded arrays, reset
-                # the chain — keep ALL words (see the docstring's fa·fb
-                # note)
-                wf_next = stage(wf.select(arr.alias("toks"), "freq"))
-                wf.unpersist()
-                wf = wf_next
-                arr = F.col("toks")
-    finally:
-        wf.unpersist()
+        )
+        words = [(_apply_merge(toks, a, b, merged), f) for toks, f in words]
     return merges
 
 
 def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece tokenizer TRAINING — ``WP_TRAIN_ROUNDS`` likelihood-
-    scored merge rounds (see the family note above). Output: the bounded
-    merge table with the full audit trail per round — the pair, its
-    count, BOTH symbol frequencies, and the exact quantized score — so
-    the oracle re-derives every argmax from first principles; a single
-    wrong pair count, symbol frequency, or fold anywhere changes some
-    round's winner and the tables diverge.
+    scored merge rounds (see the family note above), run on the driver
+    over the collected word dictionary (``_wp_train``). Output: the
+    bounded merge table with the full audit trail per round — the pair,
+    its count, BOTH symbol frequencies, and the exact quantized score —
+    so the oracle re-derives every argmax from first principles; a
+    single wrong pair count, symbol frequency, or merge anywhere changes
+    some round's winner and the tables diverge.
 
     Trained at sf0.01 this equals ``WORDPIECE_MERGES`` exactly
     (test-pinned, the ``BPE_MERGES`` convention)."""
@@ -3424,26 +3179,15 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def wordpiece_train_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-DEPTH WordPiece trainer: ``WP_TRAIN_ROUNDS_DEEP``
-    (32) likelihood-scored merge rounds with the token arrays
-    CHECKPOINTED to parquet every ``WP_CHECKPOINT_EVERY`` rounds — the
-    :func:`bpe_train_merges_deep` device brought to the third tokenizer
-    family (the r14-verdict artifact-parity task). The checkpoint caps
-    the live fold chain at K nested ``F.aggregate`` folds so per-round
-    cost stays flat and total work is linear in rounds; unlike the BPE
-    checkpoint it keeps pair-exhausted words (their symbols still feed
-    the likelihood denominator — see ``_wp_train``). Checkpointed ==
-    chained is test-pinned; greedy training is prefix-stable, so rounds
-    1..16 equal ``WORDPIECE_MERGES`` exactly (also test-pinned). The
-    sf0.01 output is FROZEN as ``WORDPIECE_MERGES_DEEP`` — the artifact
-    the encode / decode-roundtrip / fertility entries consume. The
-    DuckDB oracle unrolls the same 32 rounds."""
-    merges = _wp_train(
-        spark,
-        sf_dir,
-        WP_TRAIN_ROUNDS_DEEP,
-        checkpoint_every=WP_CHECKPOINT_EVERY,
-    )
+    """The PRODUCTION-DEPTH WordPiece trainer: :func:`wordpiece_train_merges`
+    run for ``WP_TRAIN_ROUNDS_DEEP`` (32) rounds (the
+    :func:`bpe_train_merges_deep` counterpart). Greedy training is
+    prefix-stable, so rounds 1..16 equal ``WORDPIECE_MERGES`` exactly
+    (test-pinned). The sf0.01 output is FROZEN as
+    ``WORDPIECE_MERGES_DEEP`` — the artifact the encode /
+    decode-roundtrip / fertility entries consume. The DuckDB oracle
+    unrolls the same 32 rounds."""
+    merges = _wp_train(spark, sf_dir, WP_TRAIN_ROUNDS_DEEP)
     return spark.createDataFrame(
         merges,
         "merge_rank int, a string, b string, merged string, "
@@ -3553,13 +3297,12 @@ WORDPIECE_MERGES = (
     (16, "##b", "##l", "##bl", 908, 908, 6446, 155134967421656),
 )
 
-# Production-depth frozen artifact: `_wp_train(spark, sf0.01, 32,
-# checkpoint_every=8)`'s own output (test-pinned, the BPE_MERGES_64
-# convention). Greedy training is prefix-stable, so rows 1..16 ARE
-# WORDPIECE_MERGES (test-pinned); the deeper tail is where the vocab
-# grows real multi-char pieces ('cust', 'filt', 'join', 'column') — this
-# is the artifact the greedy encoder / decode roundtrip / fertility
-# entries consume.
+# Production-depth frozen artifact: `_wp_train(spark, sf0.01, 32)`'s own
+# output (test-pinned, the BPE_MERGES_64 convention). Greedy training is
+# prefix-stable, so rows 1..16 ARE WORDPIECE_MERGES (test-pinned); the
+# deeper tail is where the vocab grows real multi-char pieces ('cust',
+# 'filt', 'join', 'column') — this is the artifact the greedy encoder /
+# decode roundtrip / fertility entries consume.
 WORDPIECE_MERGES_DEEP = WORDPIECE_MERGES + (
     (17, "fi", "##l", "fil", 933, 933, 5538, 180570603105814),
     (18, "##u", "##s", "##us", 934, 3669, 1788, 142374315795378),

@@ -249,10 +249,10 @@ HEADLINE_ADDITIONS = [
     "contamination_span_removal",   # leak-span surgery: cut + rebuild affected docs
 ]
 # wordpiece_train_merges_deep stays OFF the headline (the
-# bpe_train_merges_deep precedent): 32 driver-iterated likelihood rounds
-# are inherently ~2x the 16-round wordpiece_train_merges already benched;
-# the encode/decode/fertility entries bench the frozen deep artifact's
-# map-only consumers instead.
+# bpe_train_merges_deep precedent): it is wordpiece_train_merges at 32
+# rounds, the same two Spark jobs plus more driver rounds, so it adds no
+# plan signal; the encode/decode/fertility entries bench the frozen deep
+# artifact's map-only consumers instead.
 
 HEADLINE = HEADLINE_TREND + HEADLINE_ADDITIONS
 # dv_delete_events stays registered + oracle-gated but OFF the headline:
@@ -265,10 +265,10 @@ HEADLINE = HEADLINE_TREND + HEADLINE_ADDITIONS
 # the Arrow-dgemm primary; its story lives in SCALE.md, its 4.7 s
 # (contended) was a third of the headline tail for zero added signal.
 # bpe_train_merges_deep stays OFF the headline (the dv_delete_events
-# precedent): 64 driver-iterated merge rounds are inherently ~8× the
-# 8-round bpe_train_merges already benched (~22 s at sf0.1, all of it
-# the round loop, not a plan property); bpe_encode_merges64 benches the
-# deep artifact's map-only consumer instead.
+# precedent): it is bpe_train_merges at 64 rounds, the same two Spark
+# jobs plus more driver rounds, so it adds no plan signal;
+# bpe_encode_merges64 benches the deep artifact's map-only consumer
+# instead.
 
 
 def _calibrate() -> float:

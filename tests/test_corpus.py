@@ -10,7 +10,7 @@ from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
     all_queries,
 )
 
-from conftest import SF_DIR, assert_matches_oracle
+from conftest import SF_DIR, assert_matches_oracle, jobs_of
 
 _QUERIES = all_queries()
 _ORACLE = all_oracle()
@@ -1492,51 +1492,53 @@ def test_bpe_train_handles_same_symbol_runs(spark, tmp_path):
     """r11 self-review regression: a merge with a == b over a run of ≥4
     tokens must pair tokens greedily left-to-right — the two-pass
     string-replace device mis-paired (1,2)(4,5) in 'x x x x x x',
-    stranding tokens 3 and 6; the tokenwise fold must match the plain
-    Python greedy reference on corpora that FORCE such merges, and the
-    DuckDB oracle must agree."""
+    stranding tokens 3 and 6; both trainers (BPE and WordPiece) must
+    match their plain Python greedy reference on corpora that FORCE such
+    merges, and the DuckDB oracle must agree. Edge corpora: no [a-z]
+    word at all, and one-letter words only (no pair exists), give an
+    empty merge table on both engines."""
     import duckdb
 
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats import (
         BPE_TRAIN_ROUNDS,
         ORACLE,
+        WP_TRAIN_ROUNDS,
         bpe_train_merges,
+        wordpiece_train_merges,
     )
 
-    for i, texts in enumerate(
-        [
-            ["xxxxxx xxxx xx", "xxxxx"],
-            ["aaaaaaa baab", "abab ababab"],
-            ["soooo wellll", "sooo so ooo"],
-        ]
-    ):
+    trainers = [
+        ("bpe_train_merges", bpe_train_merges, _python_bpe_train,
+         BPE_TRAIN_ROUNDS),
+        ("wordpiece_train_merges", wordpiece_train_merges, _python_wp_train,
+         WP_TRAIN_ROUNDS),
+    ]
+    corpora = [
+        ["xxxxxx xxxx xx", "xxxxx"],
+        ["aaaaaaa baab", "abab ababab"],
+        ["soooo wellll", "sooo so ooo"],
+        ["123 456", "!!! ??", ""],  # no [a-z] word
+        ["a b c", "x y z a"],  # one-letter words: no pair
+    ]
+    for i, texts in enumerate(corpora):
         d = str(tmp_path / f"corpus{i}")
         spark.createDataFrame(
             [(j, t, "en", "t", len(t)) for j, t in enumerate(texts)],
             "doc_id long, text string, lang string, source string,"
             " n_chars int",
         ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        expect = _python_bpe_train(texts, BPE_TRAIN_ROUNDS)
-        got = [
-            (r["merge_rank"], r["a"], r["b"], r["pair_count"])
-            for r in sorted(
-                bpe_train_merges(spark, d).collect(),
-                key=lambda r: r["merge_rank"],
-            )
-        ]
-        assert got == expect, (i, got, expect)
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW documents AS SELECT * FROM "
             f"read_parquet('{d}/documents.parquet/*.parquet')"
         )
-        duck = [
-            (int(r[0]), r[1], r[2], int(r[3]))
-            for r in sorted(
-                con.execute(ORACLE["bpe_train_merges"]).fetchall()
-            )
-        ]
-        assert duck == expect, (i, duck, expect)
+        for name, entry, reference, rounds in trainers:
+            expect = reference(texts, rounds)
+            assert bool(expect) == (i < 3), (name, i, expect)
+            got = sorted(tuple(r) for r in entry(spark, d).collect())
+            assert got == expect, (name, i, got, expect)
+            duck = sorted(con.execute(ORACLE[name]).fetchall())
+            assert duck == expect, (name, i, duck, expect)
 
 
 def test_ppjoin_lossless_and_prunes_candidates(spark, oracle):
@@ -1742,24 +1744,28 @@ def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
     assert banded  # non-degenerate: the corpus plants near-dup pairs
 
 
-def test_bpe_train_checkpoint_equals_chained(spark):
-    """The deep trainer's parquet checkpoint every K rounds is a pure
-    execution detail: 16 rounds checkpointed every 4 must produce the
-    IDENTICAL merge table (ranks, pairs, selection-time counts) as the
-    unbroken 16-fold expression chain."""
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats import (
-        _bpe_train,
-    )
+@pytest.mark.parametrize(
+    "trainer, shallow, deep", [("_bpe_train", 8, 64), ("_wp_train", 16, 32)]
+)
+def test_trainer_jobs_flat_in_rounds(spark, trainer, shallow, deep):
+    """Each tokenizer trainer runs its Spark work once (the word
+    dictionary) and every merge round on the driver: at most 3 jobs,
+    and the same count at the shallow and the deep round count."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import textstats
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import load
 
-    chained = _bpe_train(spark, SF_DIR, 16, checkpoint_every=0)
-    ckpt = _bpe_train(spark, SF_DIR, 16, checkpoint_every=4)
-    assert ckpt == chained
+    train = getattr(textstats, trainer)
+    load(spark, SF_DIR, "documents")  # memoized input, built outside the count
+    counts = [
+        jobs_of(spark, lambda r=r: train(spark, SF_DIR, r))
+        for r in (shallow, deep)
+    ]
+    assert counts[0] == counts[1] <= 3, counts
 
 
 def test_bpe_deep_trainer_matches_python_greedy_replay(spark):
-    """The 64-round checkpointed trainer replays the Python greedy
-    reference exactly — the r12-verdict 'Done' criterion for trainer
-    depth."""
+    """The 64-round trainer replays the Python greedy reference
+    exactly — the r12-verdict 'Done' criterion for trainer depth."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats import (
         BPE_TRAIN_ROUNDS_DEEP,
         bpe_train_merges_deep,
@@ -1791,9 +1797,7 @@ def test_bpe_merges64_artifact_is_deep_trainer_output(spark):
     assert all(a != b for a, b in BPE_MERGES_64)
     assert len(BPE_MERGES_64) == BPE_TRAIN_ROUNDS_DEEP
     sf01 = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
-    got = _bpe_train(
-        spark, sf01, BPE_TRAIN_ROUNDS_DEEP, checkpoint_every=8
-    )
+    got = _bpe_train(spark, sf01, BPE_TRAIN_ROUNDS_DEEP)
     assert tuple((a, b) for _, a, b, _ in got) == BPE_MERGES_64
 
 
@@ -2154,42 +2158,23 @@ def test_wordpiece_frozen_artifact_is_trainer_output(spark):
     assert tuple(got) == WORDPIECE_MERGES
 
 
-def test_wp_train_checkpoint_equals_chained(spark):
-    """The deep WordPiece trainer's parquet checkpoint every K rounds is
-    a pure execution detail (the bpe_train precedent): 16 rounds
-    checkpointed every 4 must produce the IDENTICAL merge table —
-    including the selection-time counts, frequencies, and scores, which
-    is where the WP-specific keep-exhausted-words rule matters (dropping
-    them would shift fa/fb and flip argmaxes)."""
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats import (
-        _wp_train,
-    )
-
-    chained = _wp_train(spark, SF_DIR, 16, checkpoint_every=0)
-    ckpt = _wp_train(spark, SF_DIR, 16, checkpoint_every=4)
-    assert ckpt == chained
-
-
 def test_wordpiece_deep_artifact_is_trainer_output(spark):
     """The production-depth frozen artifact (the BPE_MERGES_64
     convention): WORDPIECE_MERGES_DEEP — the vocab the greedy encoder,
     decode roundtrip, and fertility compare consume — must be EXACTLY
-    the 32-round checkpointed trainer's sf0.01 output, and greedy
-    training is prefix-stable so its first 16 rows ARE the shallow
-    WORDPIECE_MERGES artifact."""
+    the 32-round trainer's sf0.01 output, and greedy training is
+    prefix-stable so its first 16 rows ARE the shallow WORDPIECE_MERGES
+    artifact."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats import (
         WORDPIECE_MERGES,
         WORDPIECE_MERGES_DEEP,
-        WP_CHECKPOINT_EVERY,
         WP_TRAIN_ROUNDS_DEEP,
         _wp_train,
     )
 
     assert WORDPIECE_MERGES_DEEP[:16] == WORDPIECE_MERGES
     sf01 = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
-    got = _wp_train(
-        spark, sf01, WP_TRAIN_ROUNDS_DEEP, checkpoint_every=WP_CHECKPOINT_EVERY
-    )
+    got = _wp_train(spark, sf01, WP_TRAIN_ROUNDS_DEEP)
     assert tuple(got) == WORDPIECE_MERGES_DEEP
 
 

@@ -117,3 +117,43 @@ def test_bench_settle_start_branches():
         load_fn=lambda: next(seq), sleep_fn=lambda s: None
     )
     assert raw == 24.0 and settled == 0.9
+
+
+def test_bench_main_propagates_contended_start(monkeypatch, tmp_path, capsys):
+    """A start that never settles reaches the printed bench line: the
+    contended record rides as ``contended_start`` and the tail
+    ``zz_summary`` says ``contended: true``. Session, queries and host
+    probes are stubbed, so no query runs."""
+    import json
+    import types
+
+    import bench
+
+    record = {"load_1m_raw": 9.9, "calibration_sec_raw": 0.42,
+              "settle_wait_sec": 600.0}
+    monkeypatch.setattr(
+        bench, "_settle_start", lambda: (9.9, 0.41, record, [0.42, 0.41])
+    )
+    monkeypatch.setattr(bench, "_settle_end", lambda: (0.5, 0.5))
+    monkeypatch.setattr(bench, "_calibrate_stable", lambda: [0.40])
+    monkeypatch.setattr(
+        bench,
+        "get_spark",
+        lambda app_name: types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(defaultParallelism=4)
+        ),
+    )
+    stub_df = types.SimpleNamespace(collect=lambda: [])
+    monkeypatch.setattr(
+        bench, "all_queries", lambda: {"stub_query": lambda spark, sf: stub_df}
+    )
+    monkeypatch.setattr(bench, "execution_metrics", lambda df, executed: {})
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ALL", "1")
+
+    bench.main()
+
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["zz_summary"]["contended"] is True
+    assert line["contended_start"] == record
+    assert set(line["queries"]) == {"stub_query"}

@@ -10,7 +10,7 @@ on each size. Near-linear (or better) growth is the evidence that the
 plans are scan/shuffle-bound with no hidden superlinear step; a query
 that grows faster than rows is a red flag long before a real cluster run.
 
-Two families:
+Three families:
 - ``--family events`` (default): the relational/window/streaming-shape
   headliners over a synthesized ``events`` table.
 - ``--family docs``: the LLM-curation headliners (exact/fuzzy dedup,
@@ -21,8 +21,14 @@ Two families:
   embeddings carry a 10-cell label signal so IVF cells are non-trivial.
   ``--sizes`` counts documents; embeddings scale at the testdata's
   2:5 ratio.
+- ``--family dict``: the tokenizer trainers (``bpe_train_merges``,
+  ``wordpiece_train_merges``) over synthesized ``documents`` whose
+  normalized word dictionary holds ~N distinct types (``--sizes``
+  counts types). The testdata's dictionary is 31 types at every scale
+  factor, so this is the only sweep where the trainers' driver-side
+  merge rounds do real work.
 
-Usage:  python tools/scale_smoke.py [--family docs] [--sizes 5000,50000,500000]
+Usage:  python tools/scale_smoke.py [--family docs|dict] [--sizes 5000,50000,500000]
 Writes parquet under .scale_smoke/ (gitignored) and prints one JSON line.
 """
 
@@ -127,7 +133,7 @@ DOC_QUERIES = [
     "token_budget_mixture_plan",     # per-source agg + |sources|-row plan
     # round-11 additions
     "quality_classifier_score",  # feature explode → (doc,bkt) agg + b-join
-    "bpe_train_merges",          # 8 argmax rounds over the word-freq dict
+    "bpe_train_merges",          # one dictionary agg + 8 driver rounds
     "ann_ivf_opq_rot_cosine",    # gram + eigh + two PQ probes (invariants)
     "dedup_jaccard_prefix_filter",  # PPJoin prefix/size/positional filters
     # round-12 additions
@@ -135,9 +141,8 @@ DOC_QUERIES = [
     "dedup_paragraphs_removed_text",  # survivor collect_list rebuild
     "ann_ivf_incremental_assign",  # two map-only assigns + bounded drift join
     "ann_ivf_opq_np_cosine",     # per-round encode + ≤5120-group decimal agg
-    # round-13 additions (bpe_train_merges_deep is excluded like the
-    # 8-round trainer's row covers it: per-round cost scales with data,
-    # round count is a constant 64 — the 8-round smoke row is the signal)
+    # round-13 additions (bpe_train_merges_deep is excluded: it is the
+    # 8-round trainer at 64 rounds; --family dict sweeps the rounds)
     "ann_ivf_append_probe",      # 2 store writes + 2 pruned probes + rebuild
     "bpe_encode_merges64",       # map-only frozen-merge encode, 64 merges
     "curation_pipeline_v2",      # 6-stage fused curation chain
@@ -169,6 +174,10 @@ DOC_QUERIES = [
     "jsonl_roundtrip_documents", # full-corpus JSONL write + schema'd re-read
     "bpe_vocab_size_frontier",   # five prefix encodes, one type-relation pass
 ]
+
+
+# tokenizer trainers: per-round cost scales with the word dictionary
+DICT_QUERIES = ["bpe_train_merges", "wordpiece_train_merges"]
 
 
 def synth_events(spark, n: int, out_dir: str) -> None:
@@ -313,6 +322,36 @@ def synth_embeddings(spark, n: int, out_dir: str, dim: int = 64) -> None:
     df.write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
 
 
+def synth_dictionary(spark, n_types: int, out_dir: str) -> None:
+    """Driver-schema documents whose normalized word dictionary holds
+    ~n_types distinct words: type t is the first 8 md5 hex chars of t
+    mapped to a-p; n_types/2 docs of 20 words, each word a uniform
+    md5-derived type pick, so every type is drawn ~10 times and all but
+    a ~e^-10 share of them appear."""
+    i = F.col("id")
+    words = [
+        F.translate(
+            F.substring(
+                F.md5((u_col(f"w{j}_", i) * n_types).cast("long").cast("string")),
+                1,
+                8,
+            ),
+            "0123456789abcdef",
+            "abcdefghijklmnop",
+        )
+        for j in range(20)
+    ]
+    text = F.concat_ws(" ", *words)
+    df = spark.range(0, max(n_types // 2, 1), 1, 32).select(
+        i.alias("doc_id"),
+        text.alias("text"),
+        F.lit("en").alias("lang"),
+        F.lit("synth").alias("source"),
+        F.length(text).alias("n_chars"),
+    )
+    df.write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
+
+
 def u_col(salt: str, i):
     """Uniform [0,1) from md5 — module-level twin of synth_events' u()."""
     h = F.conv(F.substring(F.md5(F.concat(F.lit(salt), i.cast("string"))), 1, 8), 16, 10)
@@ -321,10 +360,11 @@ def u_col(salt: str, i):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--family", default="events", choices=["events", "docs"])
+    ap.add_argument("--family", default="events",
+                    choices=["events", "docs", "dict"])
     ap.add_argument("--sizes", default=None,
                     help="comma row counts (events; for docs = document rows, "
-                         "embeddings follow at 2:5)")
+                         "embeddings follow at 2:5; for dict = word types)")
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset of the family's query list "
                          "(targeted re-measurement without paying the full "
@@ -334,10 +374,12 @@ def main() -> None:
                     help="timed attempts per query; min is reported "
                          "(single-attempt local[32] numbers are JIT/GC noise)")
     args = ap.parse_args()
-    default_sizes = ("100000,1000000,10000000" if args.family == "events"
-                     else "5000,50000,500000")
+    default_sizes = {"events": "100000,1000000,10000000",
+                     "docs": "5000,50000,500000",
+                     "dict": "10000,100000"}[args.family]
     sizes = [int(s) for s in (args.sizes or default_sizes).split(",")]
-    queries = QUERIES if args.family == "events" else DOC_QUERIES
+    queries = {"events": QUERIES, "docs": DOC_QUERIES,
+               "dict": DICT_QUERIES}[args.family]
     if args.queries:
         want = [q.strip() for q in args.queries.split(",") if q.strip()]
         unknown = [q for q in want if q not in queries]
@@ -366,6 +408,8 @@ def main() -> None:
         d = os.path.join(root, f"{args.family}_n{n}")
         if args.family == "events":
             synth_events(spark, n, d)
+        elif args.family == "dict":
+            synth_dictionary(spark, n, d)
         else:
             synth_documents(spark, n, d)
             synth_embeddings(spark, max(100, n * 2 // 5), d)
