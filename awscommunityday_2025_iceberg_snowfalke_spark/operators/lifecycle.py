@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import tempfile
 import time
@@ -40,6 +39,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import snaplog
 from ..functions import det_sum, det_sum_sql
 from ..sources.registry import CUTOFF_7D, load
 
@@ -111,13 +111,6 @@ def _agg_col_stats(vals: list) -> list:
     return out
 
 
-# CAS loops retry until they win a version; bound them so a pathological
-# filesystem (e.g. link() failing spuriously) surfaces as an error instead
-# of a hang. Far above any plausible contention (writers make progress:
-# every retry means someone else committed).
-_MAX_COMMIT_RETRIES = 1000
-
-
 class CommitConflict(RuntimeError):
     """A rewrite commit was invalidated by a concurrent rewrite (Iceberg:
     ValidationException from rewrite_data_files / MERGE conflict)."""
@@ -177,9 +170,9 @@ def make_table(
 
 class SnapshotTable:
     """Versioned Parquet table: ``<path>/data/*.parquet`` immutable files +
-    ``<path>/snapshots/v<N>.json`` manifests. The manifest write is the
-    atomic commit point (os.rename), mirroring Iceberg's pointer swap
-    (P:205-224)."""
+    ``<path>/snapshots/v<N>.json`` manifests. The exclusive create of
+    the next manifest (tmp + ``os.link``, see ``snaplog``) is the
+    atomic commit point, mirroring Iceberg's pointer swap (P:205-224)."""
 
     def __init__(
         self,
@@ -209,8 +202,9 @@ class SnapshotTable:
         rewritten — first writer fixes the table's stats schema)."""
         self.spark = spark
         self.path = path
+        self._snaps = os.path.join(path, "snapshots")
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
+        os.makedirs(self._snaps, exist_ok=True)
         cols: tuple[str, ...] = tuple(
             stats_cols if stats_cols else ((stats_col,) if stats_col else ())
         )
@@ -234,25 +228,17 @@ class SnapshotTable:
             )
 
     # -- metadata ------------------------------------------------------------
-    def _snapshot_files(self) -> list[str]:
-        d = os.path.join(self.path, "snapshots")
-        return sorted(
-            (f for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")),
-            key=lambda f: int(f[1:-5]),
-        )
-
     @property
     def current_version(self) -> int:
-        snaps = self._snapshot_files()
-        return int(snaps[-1][1:-5]) if snaps else 0
+        return snaplog.current(self._snaps)
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self.path, "snapshots", f"v{version}.json")) as fh:
-            return json.load(fh)
+        """Snapshot ``version``'s manifest; version 0 is the empty table."""
+        return snaplog.read(self._snaps, version)
 
     def history(self) -> list[dict]:
         """T10/S12: snapshot history (Iceberg: ``<tbl>.history``)."""
-        return [self._manifest(int(f[1:-5])) for f in self._snapshot_files()]
+        return [self._manifest(v) for v in snaplog.versions(self._snaps)]
 
     # -- partition-spec evolution (Iceberg ALTER TABLE ADD PARTITION FIELD) --
     @property
@@ -289,10 +275,7 @@ class SnapshotTable:
 
     def files(self, version: int | None = None) -> list[dict]:
         """T10: data-file inventory (Iceberg: ``<tbl>.files``)."""
-        version = version or self.current_version
-        if version == 0:
-            return []
-        m = self._manifest(version)
+        m = self._manifest(version or self.current_version)
         out = []
         for rel in m["files"]:
             p = os.path.join(self.path, "data", rel)
@@ -533,16 +516,16 @@ class SnapshotTable:
             json.dump({"enabled": True}, fh)
         os.replace(tmp, self._lineage_path())
 
-    def _assign_row_lineage(self, version: int, files: list[str]) -> tuple:
-        """(first_row_ids, next_row_id) for a commit: carried files keep
-        their recorded range; new files containing a physical ``_row_id``
-        column are marked materialized (null range); other new files get
-        the next contiguous range, sized by their footer row count."""
+    def _assign_row_lineage(self, head: dict, files: list[str]) -> tuple:
+        """(first_row_ids, next_row_id) for a commit over ``head``: carried
+        files keep their recorded range; new files containing a physical
+        ``_row_id`` column are marked materialized (null range); other new
+        files get the next contiguous range, sized by their footer row
+        count."""
         import pyarrow.parquet as pq
 
-        prev = self._manifest(version - 1) if version > 1 else {}
-        fri = dict(prev.get("first_row_ids", {}))
-        next_id = prev.get("next_row_id", 0)
+        fri = dict(head.get("first_row_ids", {}))
+        next_id = head.get("next_row_id", 0)
         for f in sorted(f for f in files if f not in fri):
             md = pq.ParquetFile(os.path.join(self.path, "data", f)).metadata
             if "_row_id" in md.schema.names:
@@ -816,11 +799,9 @@ class SnapshotTable:
     def manifest_list(self, version: int | None = None) -> list[dict]:
         """The snapshot's manifest list (Iceberg: ``<tbl>.manifests``):
         one row per physical manifest file with entry count and bytes."""
-        version = version or self.current_version
-        if version == 0:  # empty table: no snapshot yet (files() parity)
-            return []
         out = []
-        for name in self._manifest(version).get("manifests", []):
+        m = self._manifest(version or self.current_version)
+        for name in m.get("manifests", []):
             p = os.path.join(self._manifest_dir(), name)
             out.append(
                 {
@@ -836,30 +817,26 @@ class SnapshotTable:
         data read: 1 for the snapshot/manifest-list + 1 per manifest file
         — the reference's planning-I/O pathology metric
         (aws-community-builders-presentation.md:247-258: 43,203 GETs)."""
-        version = version or self.current_version
-        if version == 0:  # empty table: the one pointer read
-            return 1
-        return 1 + len(self._manifest(version).get("manifests", []))
+        m = self._manifest(version or self.current_version)
+        return 1 + len(m.get("manifests", []))
 
     def _carry_manifests(
-        self, version: int, files: list[str]
+        self, version: int, head: dict, files: list[str]
     ) -> list[str]:
-        """Manifest refs for a commit of ``files`` at ``version``: prior
-        manifests carry forward pruned of fully-dead refs (every entry
-        rewritten away), plus ONE new manifest file for the entries this
-        commit introduces — Iceberg's append behavior, and exactly the
-        mechanism that accrues 525,600 manifests/yr under 10-min
-        micro-batch commits (P:233-243) until ``rewrite_manifests``."""
-        prev = (
-            self._manifest(version - 1) if version > 1 else {"files": []}
-        )
+        """Manifest refs for a commit of ``files`` at ``version`` over
+        ``head``: the head's manifests carry forward pruned of fully-dead
+        refs (every entry rewritten away), plus ONE new manifest file for
+        the entries this commit introduces — Iceberg's append behavior,
+        and exactly the mechanism that accrues 525,600 manifests/yr under
+        10-min micro-batch commits (P:233-243) until
+        ``rewrite_manifests``."""
         live = set(files)
         carried = [
             name
-            for name in prev.get("manifests", [])
+            for name in head.get("manifests", [])
             if any(e in live for e in self.manifest_entries(name))
         ]
-        prev_files = set(prev["files"])
+        prev_files = set(head["files"])
         new_files = [f for f in files if f not in prev_files]
         if new_files:
             carried = carried + [
@@ -872,38 +849,33 @@ class SnapshotTable:
         version: int,
         files: list[str],
         operation: str,
+        head: dict,
         delete_files: list[dict] | None = None,
         prev_seqs: dict[str, int] | None = None,
         manifests: list[str] | None = None,
     ) -> bool:
-        """Compare-and-swap commit attempt: exclusively create
-        ``v<version>.json``. ``os.link`` (unlike ``os.rename``) fails with
-        FileExistsError when the target exists, so of two writers racing to
-        commit the same version exactly one wins — the filesystem is the
-        arbiter, same role as Iceberg's atomic catalog pointer swap
-        (P:205-224). The loser re-bases and retries (see ``append``).
-        ``manifests`` overrides the derived manifest-file refs (the
-        ``rewrite_manifests`` path); a losing attempt's freshly written
-        manifest file is unlinked immediately (Iceberg leaves such
-        orphans to GC; we know the attempt lost, so clean up inline)."""
-        prev_seqs = prev_seqs or {}
+        """One compare-and-swap attempt: exclusively create
+        ``v<version>.json`` over ``head``, the manifest of ``version - 1``
+        (``snaplog.create``; the loop around it is ``snaplog.commit``).
+        ``delete_files`` and ``prev_seqs`` default to the head's (see
+        ``snaplog.snapshot``). ``manifests`` overrides the derived
+        manifest-file refs (the ``rewrite_manifests`` path); a losing
+        attempt's freshly written manifest file is unlinked immediately
+        (Iceberg leaves such orphans to GC; we know the attempt lost, so
+        clean up inline)."""
         own_manifest: str | None = None
         if manifests is None:
-            manifests = self._carry_manifests(version, files)
+            manifests = self._carry_manifests(version, head, files)
             own_manifest = next(
                 (n for n in manifests if n.startswith(f"m{version}-")), None
             )
         # manifest-LIST summaries (Iceberg's partition/column summaries):
-        # carried refs copy the previous snapshot's summary; only NEW
-        # manifest files are opened — the planner then skips whole
-        # manifests from the snapshot read alone, zero manifest GETs
+        # carried refs copy the head's summary; only NEW manifest files
+        # are opened — the planner then skips whole manifests from the
+        # snapshot read alone, zero manifest GETs
         summaries: dict = {}
         if self.stats_col and manifests:
-            prev_sum = (
-                self._manifest(version - 1).get("manifest_summaries", {})
-                if version > 1
-                else {}
-            )
+            prev_sum = head.get("manifest_summaries", {})
             for nm in manifests:
                 # the None verdict is cached too (stored as null): a
                 # stats-less manifest is summarized once, not re-opened
@@ -918,45 +890,29 @@ class SnapshotTable:
         # it was written under — old data is never rewritten on an ALTER
         # TABLE ... ADD PARTITION FIELD; the planner evaluates each file
         # against its own spec (here: uniformly via its stats/bounds)
-        prev_specs = (
-            self._manifest(version - 1).get("file_specs", {})
-            if version > 1
-            else {}
+        prev_specs = head.get("file_specs", {})
+        manifest = snaplog.snapshot(
+            version, operation, files, head, delete_files, prev_seqs
         )
-        manifest = {
-            "version": version,
-            "operation": operation,
-            "timestamp": time.time(),
-            "files": files,
-            # data SEQUENCE numbers (Iceberg v2): a file keeps the seq of
-            # the commit that introduced it; equality deletes apply only
-            # to files with seq <= the delete's seq
-            "file_seqs": {f: prev_seqs.get(f, version) for f in files},
-            "spec": self.partition_spec,
-            "file_specs": {
+        manifest.update(
+            spec=self.partition_spec,
+            file_specs={
                 f: prev_specs.get(f, self.partition_spec) for f in files
             },
-            "delete_files": delete_files or [],
-            "manifests": manifests,
-            "manifest_summaries": summaries,
-        }
+            manifests=manifests,
+            manifest_summaries=summaries,
+        )
         if self.lineage_enabled():
-            fri, next_id = self._assign_row_lineage(version, files)
+            fri, next_id = self._assign_row_lineage(head, files)
             manifest["first_row_ids"] = fri
             manifest["next_row_id"] = next_id
-        snap_dir = os.path.join(self.path, "snapshots")
-        tmp = os.path.join(snap_dir, f".commit-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        try:
-            os.link(tmp, os.path.join(snap_dir, f"v{version}.json"))
+        if snaplog.create(
+            os.path.join(self._snaps, f"v{version}.json"), manifest
+        ):
             return True
-        except FileExistsError:
-            if own_manifest is not None:
-                os.unlink(os.path.join(self._manifest_dir(), own_manifest))
-            return False
-        finally:
-            os.unlink(tmp)
+        if own_manifest is not None:
+            os.unlink(os.path.join(self._manifest_dir(), own_manifest))
+        return False
 
     def plan_scan_manifests(
         self,
@@ -1043,19 +999,7 @@ class SnapshotTable:
                 )
             return st[1] < pred[0] or st[0] > pred[1]
 
-        version = version or self.current_version
-        if version == 0:  # empty table (files() parity)
-            return {
-                "files_total": 0,
-                "files_read": [],
-                "manifests_total": 0,
-                "manifests_skipped": 0,
-                "skipped_by_summary": 0,
-                "planning_gets": 1,
-                "gets_without_summaries": 1,
-                "footer_path_gets": 1,
-            }
-        m = self._manifest(version)
+        m = self._manifest(version or self.current_version)
         live = set(m["files"])
         gets = 1
         read: list[str] = []
@@ -1136,40 +1080,38 @@ class SnapshotTable:
         reads are unchanged (test-pinned); only planning I/O shrinks.
         CAS loop: a concurrent append re-bases and regroups (its new
         files are included on retry), never lost."""
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base)
-            files = m["files"]
+
+        def attempt(base: int, head: dict) -> bool:
+            files = head["files"]
             n = max(1, min(target_manifests, len(files) or 1))
             groups = [files[i::n] for i in range(n) if files[i::n]]
             refs = [
                 self._write_manifest_file(base + 1, g) for g in groups
             ]
             if self._try_commit(
-                base + 1,
-                files,
-                "rewrite_manifests",
-                delete_files=m.get("delete_files", []),
-                prev_seqs=m.get("file_seqs", {}),
-                manifests=refs,
+                base + 1, files, "rewrite_manifests", head=head, manifests=refs
             ):
-                return base + 1
+                return True
             for r in refs:  # lost the race: clean our orphaned manifests
                 os.unlink(os.path.join(self._manifest_dir(), r))
-        raise RuntimeError("rewrite_manifests: commit retries exhausted")
+            return False
 
-    def _commit(self, files: list[str], operation: str) -> int:
-        """Commit a complete file list (the overwrite path, whose result
-        genuinely replaces the table): retry on version collision with the
-        next version number — last writer wins, the correct semantic for a
-        full replace (real Iceberg's overwrite would conflict-fail
-        instead). Appends use ``append``'s re-base loop; rewrites of an
-        existing snapshot (compact/merge) use ``_commit_rewrite``."""
-        for _ in range(_MAX_COMMIT_RETRIES):
-            version = self.current_version + 1
-            if self._try_commit(version, files, operation):
-                return version
-        raise RuntimeError(f"{operation}: commit retries exhausted")
+        return snaplog.commit(self._snaps, "rewrite_manifests", attempt)
+
+    @staticmethod
+    def _check_live(name: str, base: int, files, head: dict) -> None:
+        """Raise :class:`CommitConflict` unless every data file ``name``
+        resolved against snapshot ``base`` is still live in ``head``: a
+        concurrent rewrite replaced them, so the positions (or rows) the
+        commit was computed from are gone — committing would silently
+        miss or clobber the moved rows (Iceberg's rewrite / MERGE /
+        position-delete validation failure)."""
+        if not set(files) <= set(head["files"]):
+            raise CommitConflict(
+                f"{name} based on v{base} conflicts with a concurrent "
+                "rewrite (the current snapshot no longer contains all its "
+                "resolved files); re-read and retry"
+            )
 
     def _commit_rewrite(self, base: int, files: list[str], operation: str) -> int:
         """Commit a rewrite of snapshot ``base`` (compact / merge):
@@ -1190,20 +1132,13 @@ class SnapshotTable:
           concurrently deleted keys. Real Iceberg's rewrite validation
           fails on new delete files the same way.
         """
-        base_m = self._manifest(base) if base else {"files": []}
+        base_m = self._manifest(base)
         base_files = set(base_m["files"])
         base_dels = {d["file"] for d in base_m.get("delete_files", [])}
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version
-            cur_m = self._manifest(cur) if cur else {"files": []}
-            cur_files = cur_m["files"]
-            if base and not base_files <= set(cur_files):
-                raise CommitConflict(
-                    f"{operation} based on v{base} conflicts with a "
-                    f"concurrent rewrite (current v{cur} no longer contains "
-                    "all base files); re-read and retry"
-                )
-            cur_dels = {d["file"] for d in cur_m.get("delete_files", [])}
+
+        def attempt(cur: int, head: dict) -> bool:
+            self._check_live(operation, base, base_files, head)
+            cur_dels = {d["file"] for d in head.get("delete_files", [])}
             if cur_dels - base_dels:
                 raise CommitConflict(
                     f"{operation} based on v{base} conflicts with a "
@@ -1211,13 +1146,12 @@ class SnapshotTable:
                     "carries delete files not in the base); committing "
                     "would resurrect the deleted rows — re-read and retry"
                 )
-            delta = [f for f in cur_files if f not in base_files]
-            cur_seqs = cur_m.get("file_seqs", {})
-            if self._try_commit(
-                cur + 1, files + delta, operation, prev_seqs=cur_seqs
-            ):
-                return cur + 1
-        raise RuntimeError(f"{operation}: commit retries exhausted")
+            delta = [f for f in head["files"] if f not in base_files]
+            return self._try_commit(
+                cur + 1, files + delta, operation, head=head, delete_files=[]
+            )
+
+        return snaplog.commit(self._snaps, operation, attempt)
 
     def _write_files(self, df: DataFrame, n_files: int | None) -> list[str]:
         staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:8]}")
@@ -1245,18 +1179,20 @@ class SnapshotTable:
             new = f"{uuid.uuid4().hex[:12]}.parquet"
             shutil.move(p, os.path.join(self.path, "data", new))
             added.append(new)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base) if base else {"files": []}
-            if self._try_commit(
-                base + 1,
-                m["files"] + added,
-                operation,
-                delete_files=m.get("delete_files", []),
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return base + 1
-        raise RuntimeError(f"{operation}: commit retries exhausted")
+        return self._append_files(added, operation)
+
+    def _append_files(self, added: list[str], operation: str) -> int:
+        """Commit ``added`` (finished files under ``data/``) on top of
+        the head, whatever it is by then: the CAS loop re-bases on every
+        lost race, so no concurrently committed file or tombstone is ever
+        dropped (the lost-update hazard of a plain read-modify-write)."""
+        return snaplog.commit(
+            self._snaps,
+            operation,
+            lambda base, head: self._try_commit(
+                base + 1, head["files"] + added, operation, head=head
+            ),
+        )
 
     # -- write-audit-publish (staged snapshots / WAP) ------------------------
     def _staged_path(self, wap_id: str) -> str:
@@ -1290,8 +1226,7 @@ class SnapshotTable:
         anything; the validation query surface."""
         with open(self._staged_path(wap_id)) as fh:
             staged = json.load(fh)
-        base = self.current_version
-        files = (self._manifest(base)["files"] if base else []) + staged["files"]
+        files = self._manifest(self.current_version)["files"] + staged["files"]
         paths = [os.path.join(self.path, "data", f) for f in files]
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
@@ -1301,20 +1236,9 @@ class SnapshotTable:
         ``cherrypick_snapshot``); the staged manifest is retired."""
         with open(self._staged_path(wap_id)) as fh:
             staged = json.load(fh)
-        added = staged["files"]
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base) if base else {"files": []}
-            if self._try_commit(
-                base + 1,
-                m["files"] + added,
-                "wap.publish",
-                delete_files=m.get("delete_files", []),
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                os.remove(self._staged_path(wap_id))
-                return base + 1
-        raise RuntimeError("publish_staged: commit retries exhausted")
+        version = self._append_files(staged["files"], "wap.publish")
+        os.remove(self._staged_path(wap_id))
+        return version
 
     def abort_staged(self, wap_id: str) -> None:
         """Audit failed: drop the staged manifest; the batch's data files
@@ -1333,19 +1257,13 @@ class SnapshotTable:
         audit/repro primitive ('what exactly did the Q3 model train
         on?'). Metadata-only: one tiny JSON, zero data I/O."""
         v = version if version is not None else self.current_version
-        self._manifest(v)  # must exist
-        tmp = self._tag_path(name) + f".{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "version": v, "timestamp": time.time()}, fh)
-        try:
-            # exclusive create: a tag is IMMUTABLE — re-tagging an existing
-            # name must refuse (Iceberg: CREATE TAG fails on a live name),
-            # same os.link discipline as the commit CAS
-            os.link(tmp, self._tag_path(name))
-        except FileExistsError:
-            raise ValueError(f"tag {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
+        if v not in snaplog.versions(self._snaps):
+            raise ValueError(f"no snapshot v{v} to tag")
+        # exclusive create: a tag is IMMUTABLE — re-tagging an existing
+        # name must refuse (Iceberg: CREATE TAG fails on a live name)
+        doc = {"name": name, "version": v, "timestamp": time.time()}
+        if not snaplog.create(self._tag_path(name), doc):
+            raise ValueError(f"tag {name!r} already exists")
         return v
 
     def read_tag(self, name: str) -> DataFrame:
@@ -1354,31 +1272,14 @@ class SnapshotTable:
         with open(self._tag_path(name)) as fh:
             return self.read(version=json.load(fh)["version"])
 
-    def _branch_files(self, name: str) -> list[str]:
-        # anchored match, not a raw startswith prefix: with branches 'rel'
-        # and 'rel-v2', the prefix scan for 'rel' would pick up
-        # 'branch-rel-v2-v1.json' and int('2-v1') would raise
-        d = os.path.join(self.path, "snapshots")
-        pat = re.compile(rf"branch-{re.escape(name)}-v(\d+)\.json")
-        hits = [
-            (int(m.group(1)), f)
-            for f in os.listdir(d)
-            if (m := pat.fullmatch(f))
-        ]
-        return [f for _, f in sorted(hits)]
-
     def branch_version(self, name: str) -> int:
-        snaps = self._branch_files(name)
-        if not snaps:
+        v = snaplog.current(self._snaps, f"branch-{name}-v")
+        if not v:
             raise ValueError(f"no branch {name!r}")
-        return int(snaps[-1][len(f"branch-{name}-v") : -5])
+        return v
 
     def _branch_manifest(self, name: str, version: int) -> dict:
-        p = os.path.join(
-            self.path, "snapshots", f"branch-{name}-v{version}.json"
-        )
-        with open(p) as fh:
-            return json.load(fh)
+        return snaplog.read(self._snaps, version, f"branch-{name}-v")
 
     def create_branch(self, name: str, version: int | None = None) -> None:
         """BRANCH: a named, independently-writable snapshot lineage
@@ -1389,11 +1290,7 @@ class SnapshotTable:
         row until :meth:`fast_forward`. Creation is metadata-only (the
         branch's v1 manifest references the seed snapshot's files)."""
         v = version if version is not None else self.current_version
-        m = (
-            self._manifest(v)
-            if v
-            else {"files": [], "file_seqs": {}, "delete_files": []}
-        )
+        m = self._manifest(v)
         bm = {
             "version": 1,
             "operation": "branch.create",
@@ -1403,16 +1300,10 @@ class SnapshotTable:
             "file_seqs": m.get("file_seqs", {}),
             "delete_files": m.get("delete_files", []),
         }
-        snap_dir = os.path.join(self.path, "snapshots")
-        tmp = os.path.join(snap_dir, f".branch-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(bm, fh)
-        try:
-            os.link(tmp, os.path.join(snap_dir, f"branch-{name}-v1.json"))
-        except FileExistsError:
-            raise ValueError(f"branch {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
+        if not snaplog.create(
+            os.path.join(self._snaps, f"branch-{name}-v1.json"), bm
+        ):
+            raise ValueError(f"branch {name!r} already exists")
 
     def append_to_branch(
         self, name: str, df: DataFrame, n_files: int | None = None
@@ -1420,11 +1311,11 @@ class SnapshotTable:
         """Append to a branch (Iceberg: ``writeTo(t).append()`` with the
         session's write branch set): same CAS re-base loop as ``append``,
         against the branch's own manifest chain — main is untouched."""
+        self.branch_version(name)  # the branch must exist
         added = self._write_files(df, n_files)
-        snap_dir = os.path.join(self.path, "snapshots")
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.branch_version(name)
-            m = self._branch_manifest(name, base)
+        prefix = f"branch-{name}-v"
+
+        def attempt(base: int, m: dict) -> bool:
             # branch-appended files take sequence number base_main + k for
             # the branch's k-th append — strictly ABOVE every tombstone
             # inherited from the seed snapshot (seq <= base_main), so a
@@ -1444,20 +1335,11 @@ class SnapshotTable:
                 },
                 "delete_files": m.get("delete_files", []),
             }
-            tmp = os.path.join(snap_dir, f".branch-{uuid.uuid4().hex[:8]}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(bm, fh)
-            try:
-                os.link(
-                    tmp,
-                    os.path.join(snap_dir, f"branch-{name}-v{base + 1}.json"),
-                )
-                return base + 1
-            except FileExistsError:
-                continue  # another branch writer won; re-base
-            finally:
-                os.unlink(tmp)
-        raise RuntimeError("append_to_branch: commit retries exhausted")
+            return snaplog.create(
+                os.path.join(self._snaps, f"{prefix}{base + 1}.json"), bm
+            )
+
+        return snaplog.commit(self._snaps, "append_to_branch", attempt, prefix)
 
     def read_branch(self, name: str) -> DataFrame:
         """Read a branch head (Iceberg: ``VERSION AS OF 'name'`` /
@@ -1477,8 +1359,8 @@ class SnapshotTable:
         branch or merges explicitly. Net-new branch files take the new
         main version as their data sequence number (they are committed
         to main BY this commit), so later MOR deletes scope correctly."""
-        head = self._branch_manifest(name, self.branch_version(name))
-        base = head["base_main_version"]
+        tip = self._branch_manifest(name, self.branch_version(name))
+        base = tip["base_main_version"]
         cur = self.current_version
         if cur != base:
             raise CommitConflict(
@@ -1488,10 +1370,11 @@ class SnapshotTable:
             )
         if self._try_commit(
             cur + 1,
-            head["files"],
+            tip["files"],
             f"fast_forward.{name}",
-            delete_files=head.get("delete_files", []),
-            prev_seqs=head.get("file_seqs", {}),
+            head=self._manifest(cur),
+            delete_files=tip.get("delete_files", []),
+            prev_seqs=tip.get("file_seqs", {}),
         ):
             return cur + 1
         raise CommitConflict(
@@ -1507,23 +1390,22 @@ class SnapshotTable:
         the new base and retry with its file list — no committed file is
         ever dropped (the lost-update hazard of a plain read-modify-write).
         Exercised by the two-writer test in tests/test_lifecycle.py."""
-        added = self._write_files(df, n_files)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base) if base else {"files": []}
-            if self._try_commit(
-                base + 1,
-                m["files"] + added,
-                "append",
-                delete_files=m.get("delete_files", []),
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return base + 1
-        raise RuntimeError("append: commit retries exhausted")
+        return self._append_files(self._write_files(df, n_files), "append")
 
     def overwrite(self, df: DataFrame, n_files: int | None = None) -> int:
-        """Full-table replace (Iceberg: ``writeTo(t).overwritePartitions()``)."""
-        return self._commit(self._write_files(df, n_files), "overwrite")
+        """Full-table replace (Iceberg: ``writeTo(t).overwritePartitions()``):
+        the new snapshot holds exactly the written files and no
+        tombstones. A lost version race retries at the next version —
+        last writer wins, the correct semantic for a full replace (real
+        Iceberg's overwrite would conflict-fail instead)."""
+        files = self._write_files(df, n_files)
+        return snaplog.commit(
+            self._snaps,
+            "overwrite",
+            lambda base, head: self._try_commit(
+                base + 1, files, "overwrite", head=head, delete_files=[]
+            ),
+        )
 
     def merge(self, source: DataFrame, keys: list[str], n_files: int | None = None) -> int:
         """MERGE INTO upsert (Iceberg ``MERGE INTO t USING s ON ... WHEN
@@ -1539,7 +1421,7 @@ class SnapshotTable:
         is exact but O(|table|) per merge. The merge-on-read alternative
         (append + latest-wins read view) is ``cdc_latest_events``."""
         base = self.current_version
-        target = self.read(version=base) if base else self.read()
+        target = self.read(version=base)
         kept = target.join(source.select(*keys).distinct(), keys, "left_anti")
         merged = kept.unionByName(source)
         return self._commit_rewrite(
@@ -1608,40 +1490,44 @@ class SnapshotTable:
         the new row versions are untouched by the delete by position
         construction alone. Semantics are identical to :meth:`merge`
         (oracle hash-equal, test-pinned)."""
-        base = self.current_version
-        m = self._manifest(base)
-        live = self._read_scoped(m, m["files"], keep_meta=True)
-        doomed = live.join(
-            F.broadcast(source.select(*keys).distinct()), keys, "left_semi"
-        ).select(
-            F.col("_df_file").alias("file"), F.col("_df_pos").alias("pos")
+        base, m, doomed = self._positions(
+            lambda live: live.join(
+                F.broadcast(source.select(*keys).distinct()), keys, "left_semi"
+            )
         )
         tomb = self._write_files(doomed, 1)
         added = self._write_files(source, n_files)
-        resolve_files = set(m["files"])
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version
-            m = self._manifest(cur) if cur else {"files": []}
-            if not resolve_files <= set(m["files"]):
-                # a concurrent rewrite replaced files our position
-                # tombstone references — committing would silently miss
-                # the moved rows (Iceberg: MERGE validation failure)
-                raise CommitConflict(
-                    "merge_mor: concurrent rewrite invalidated the resolved "
-                    "positions; re-read and retry"
-                )
-            dels = list(m.get("delete_files", [])) + [
+
+        def attempt(cur: int, head: dict) -> bool:
+            self._check_live("merge_mor", base, m["files"], head)
+            dels = head.get("delete_files", []) + [
                 {"file": f, "kind": "pos", "seq": cur + 1} for f in tomb
             ]
-            if self._try_commit(
+            return self._try_commit(
                 cur + 1,
-                m["files"] + added,
+                head["files"] + added,
                 "merge.mor",
+                head=head,
                 delete_files=dels,
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return cur + 1
-        raise RuntimeError("merge_mor: commit retries exhausted")
+            )
+
+        return snaplog.commit(self._snaps, "merge_mor", attempt)
+
+    def _positions(self, match) -> tuple[int, dict, DataFrame]:
+        """``(base, manifest, positions)``: the head snapshot and the
+        ``(file, pos)`` pairs of its live rows that ``match(live)`` keeps,
+        resolved in one scan — Spark's ``_metadata.file_path`` /
+        ``_metadata.row_index`` columns ARE the position vocabulary, stable
+        because data files are immutable. Raises ``ValueError("empty
+        table")`` before any write when the head holds no data file."""
+        base = self.current_version
+        m = self._manifest(base)
+        if not m["files"]:
+            raise ValueError("empty table")
+        live = self._read_scoped(m, m["files"], keep_meta=True)
+        return base, m, match(live).select(
+            F.col("_df_file").alias("file"), F.col("_df_pos").alias("pos")
+        )
 
     # -- reads ---------------------------------------------------------------
     def rename_column(self, old: str, new: str) -> None:
@@ -1716,10 +1602,8 @@ class SnapshotTable:
             if not versions:
                 raise ValueError(f"no snapshot at or before {as_of}")
             version = max(versions)
-        version = version or self.current_version
-        m = self._manifest(version)
-        paths = [os.path.join(self.path, "data", f) for f in m["files"]]
-        if not paths:
+        m = self._manifest(version or self.current_version)
+        if not m["files"]:
             raise ValueError("empty table")
         return self._apply_renames(self._read_scoped(m, m["files"]))
 
@@ -1811,30 +1695,23 @@ class SnapshotTable:
         semantics, test-pinned); the next ``compact()`` materializes the
         deletes and clears them."""
         added = self._write_files(keys.select(*key_cols).distinct(), 1)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base) if base else {"files": []}
-            dels = list(m.get("delete_files", [])) + [
+
+        def attempt(base: int, head: dict) -> bool:
+            dels = head.get("delete_files", []) + [
                 {"file": f, "key_cols": key_cols, "seq": base + 1}
                 for f in added
             ]
-            if self._try_commit(
-                base + 1,
-                m["files"],
-                "delete.mor",
-                delete_files=dels,
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return base + 1
-        raise RuntimeError("delete_where_mor: commit retries exhausted")
+            return self._try_commit(
+                base + 1, head["files"], "delete.mor", head=head, delete_files=dels
+            )
+
+        return snaplog.commit(self._snaps, "delete_where_mor", attempt)
 
     def delete_where_positional(self, predicate) -> int:
         """MERGE-ON-READ POSITION DELETE (Iceberg v2's second delete
         encoding, the one copy-on-write MERGE/UPDATE rewrites produce):
         resolve the doomed rows' (data file, row index) pairs with ONE
-        scan of the live table — Spark's ``_metadata.file_path`` /
-        ``_metadata.row_index`` columns ARE the position vocabulary,
-        stable because data files are immutable — write them as a
+        scan of the live table (:meth:`_positions`), write them as a
         position-delete file, and commit a manifest that keeps every
         data file. Readers anti-join on (file, pos) instead of keys
         (``_read_scoped``), which is why engines prefer position deletes
@@ -1844,39 +1721,21 @@ class SnapshotTable:
         sequence scoping). ``compact()`` materializes and clears them
         exactly like equality deletes. Cost: O(|matches|) tombstone I/O,
         zero data rewrite."""
-        base = self.current_version
-        m = self._manifest(base)
-        live = self._read_scoped(m, m["files"], keep_meta=True)
-        positions = live.filter(predicate).select(
-            F.col("_df_file").alias("file"), F.col("_df_pos").alias("pos")
-        )
+        base, m, positions = self._positions(lambda live: live.filter(predicate))
         added = self._write_files(positions, 1)
-        # capture the file set the positions were resolved against: a
-        # concurrent compact()/merge that rewrites any of these files
-        # makes the (file,pos) tombstones dangle — every doomed row would
-        # silently survive. Iceberg's position-delete commit validation
-        # fails on rewritten files; merge_mor raises in the same race.
-        resolve_files = set(m["files"])
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.current_version
-            m = self._manifest(base) if base else {"files": []}
-            if not resolve_files <= set(m["files"]):
-                raise CommitConflict(
-                    "delete_where_positional: concurrent rewrite invalidated "
-                    "the resolved positions; re-read and retry"
-                )
-            dels = list(m.get("delete_files", [])) + [
-                {"file": f, "kind": "pos", "seq": base + 1} for f in added
+
+        def attempt(cur: int, head: dict) -> bool:
+            # a concurrent compact()/merge that rewrote a resolved file
+            # would leave the (file, pos) tombstones dangling
+            self._check_live("delete_where_positional", base, m["files"], head)
+            dels = head.get("delete_files", []) + [
+                {"file": f, "kind": "pos", "seq": cur + 1} for f in added
             ]
-            if self._try_commit(
-                base + 1,
-                m["files"],
-                "delete.pos",
-                delete_files=dels,
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return base + 1
-        raise RuntimeError("delete_where_positional: commit retries exhausted")
+            return self._try_commit(
+                cur + 1, head["files"], "delete.pos", head=head, delete_files=dels
+            )
+
+        return snaplog.commit(self._snaps, "delete_where_positional", attempt)
 
     def delete_where_dv(self, predicate) -> int:
         """MERGE-ON-READ delete with DELETION VECTORS (Iceberg **v3**'s
@@ -1907,12 +1766,7 @@ class SnapshotTable:
         :class:`CommitConflict` (our merged vector was computed from a
         stale one) — the caller re-reads and retries. ``compact()``
         materializes and clears vectors like every other tombstone."""
-        base = self.current_version
-        m = self._manifest(base)
-        live = self._read_scoped(m, m["files"], keep_meta=True)
-        vectors = live.filter(predicate).select(
-            F.col("_df_file").alias("file"), F.col("_df_pos").alias("pos")
-        )
+        base, m, vectors = self._positions(lambda live: live.filter(predicate))
         old_dv = {
             d["target"]: d
             for d in m.get("delete_files", [])
@@ -1963,10 +1817,9 @@ class SnapshotTable:
         if not new_files:
             return base  # nothing matched: no commit (Iceberg no-ops too)
         targets = sorted(new_files)
-        resolve_files = set(m["files"])
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version
-            m = self._manifest(cur) if cur else {"files": []}
+
+        def attempt(cur: int, head: dict) -> bool:
+            self._check_live("delete_where_dv", base, m["files"], head)
             # seq follows the ATTEMPTED commit version (recomputed per
             # retry like every other tombstone writer): after a benign
             # concurrent append the vector must carry the version that
@@ -1976,23 +1829,13 @@ class SnapshotTable:
                 t: {"file": f, "kind": "dv", "target": t, "seq": cur + 1}
                 for t, f in new_files.items()
             }
-            if not resolve_files <= set(m["files"]):
-                raise CommitConflict(
-                    "delete_where_dv: concurrent rewrite invalidated the "
-                    "resolved positions; re-read and retry"
-                )
+            cur_dv = {
+                d["target"]: d["file"]
+                for d in head.get("delete_files", [])
+                if d.get("kind") == "dv"
+            }
             for t in targets:  # concurrent DV write on the same file?
-                cur_dv = next(
-                    (
-                        d
-                        for d in m.get("delete_files", [])
-                        if d.get("kind") == "dv" and d.get("target") == t
-                    ),
-                    None,
-                )
-                if (cur_dv or {}).get("file") != (
-                    old_dv.get(t) or {}
-                ).get("file"):
+                if cur_dv.get(t) != (old_dv.get(t) or {}).get("file"):
                     raise CommitConflict(
                         f"delete_where_dv: concurrent deletion vector on "
                         f"{t!r}; our merged vector is stale — re-read and "
@@ -2000,38 +1843,42 @@ class SnapshotTable:
                     )
             dels = [
                 d
-                for d in m.get("delete_files", [])
+                for d in head.get("delete_files", [])
                 if not (
                     d.get("kind") == "dv" and d.get("target") in new_entries
                 )
             ] + [new_entries[t] for t in targets]
-            if self._try_commit(
-                cur + 1,
-                m["files"],
-                "delete.dv",
-                delete_files=dels,
-                prev_seqs=m.get("file_seqs", {}),
-            ):
-                return cur + 1
-        raise RuntimeError("delete_where_dv: commit retries exhausted")
+            return self._try_commit(
+                cur + 1, head["files"], "delete.dv", head=head, delete_files=dels
+            )
+
+        return snaplog.commit(self._snaps, "delete_where_dv", attempt)
 
     def delete_vectors(self, version: int | None = None) -> list[dict]:
         """The snapshot's deletion-vector inventory: one row per vectored
         data file with the vector's cardinality — the v3 invariant made
-        inspectable (``len == len({targets})``, never stacking)."""
-        version = version or self.current_version
-        m = self._manifest(version)
-        out = []
-        for d in m.get("delete_files", []):
-            if d.get("kind") != "dv":
-                continue
-            n = self.spark.read.parquet(
-                os.path.join(self.path, "data", d["file"])
-            ).count()
-            out.append(
-                {"target": d["target"], "vector": d["file"], "positions": n}
-            )
-        return out
+        inspectable (``len == len({targets})``, never stacking). Every
+        vector is counted in ONE scan with the declared
+        :data:`_POS_SCHEMA`, grouped by vector file name."""
+        m = self._manifest(version or self.current_version)
+        dvs = [d for d in m.get("delete_files", []) if d.get("kind") == "dv"]
+        if not dvs:
+            return []
+        counts = dict(
+            self.spark.read.schema(_POS_SCHEMA)
+            .parquet(*[os.path.join(self.path, "data", d["file"]) for d in dvs])
+            .groupBy(F.col("_metadata.file_name"))
+            .count()
+            .collect()
+        )
+        return [
+            {
+                "target": d["target"],
+                "vector": d["file"],
+                "positions": counts.get(d["file"], 0),
+            }
+            for d in dvs
+        ]
 
     def changelog(self, v_from: int, v_to: int, keys: list[str]) -> DataFrame:
         """Row-level CHANGELOG between two snapshots (Iceberg's changelog
@@ -2192,17 +2039,18 @@ class SnapshotTable:
         instantly. Metadata-only: zero data I/O, the incident-response
         primitive after a bad write lands."""
         m = self._manifest(version)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version
-            if self._try_commit(
-                cur + 1,
+        return snaplog.commit(
+            self._snaps,
+            "rollback_to",
+            lambda base, head: self._try_commit(
+                base + 1,
                 m["files"],
                 f"rollback.v{version}",
+                head=head,
                 delete_files=m.get("delete_files", []),
                 prev_seqs=m.get("file_seqs", {}),
-            ):
-                return cur + 1
-        raise RuntimeError("rollback_to: commit retries exhausted")
+            ),
+        )
 
     # -- maintenance ---------------------------------------------------------
     def compact(
@@ -2214,7 +2062,7 @@ class SnapshotTable:
         better compression + min/max pruning on the sort keys). New
         snapshot; old files stay referenced by old snapshots until expiry."""
         base = self.current_version
-        df = self.read(version=base) if base else self.read()
+        df = self.read(version=base)
         if sort_by:
             # range partitioning (not hash) on the sort keys: each rewritten
             # file owns a DISJOINT key range, so footer min/max stats can
@@ -2248,13 +2096,13 @@ class SnapshotTable:
             elif f.startswith("branch-") and f.endswith("-v1.json"):
                 with open(os.path.join(snap_dir, f)) as fh:
                     protected.add(json.load(fh)["base_main_version"])
-        snaps = self._snapshot_files()
+        vs = snaplog.versions(snap_dir)
         expired = []
-        for f in snaps[:-keep_last] if keep_last else snaps:
-            if int(f[1:-5]) in protected:
+        for v in vs[:-keep_last] if keep_last else vs:
+            if v in protected:
                 continue
-            os.remove(os.path.join(self.path, "snapshots", f))
-            expired.append(int(f[1:-5]))
+            os.remove(os.path.join(snap_dir, f"v{v}.json"))
+            expired.append(v)
         return expired
 
     def remove_orphan_files(self) -> list[str]:

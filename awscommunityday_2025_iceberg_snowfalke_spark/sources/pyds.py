@@ -45,6 +45,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .. import snaplog
+
 FORMAT_NAME = "snapshot"
 
 
@@ -54,19 +56,21 @@ def register(spark) -> None:
     - Enables Python-datasource filter pushdown (runtime SQL conf,
       default-off in Spark 4.1) — without it Spark refuses a reader that
       implements ``pushFilters``.
-    - Registers THIS module for cloudpickle by-value serialization: the
-      DataSource class is unpickled in Spark's plan-time Python runner and
-      in executor workers, which do not inherit the driver's sys.path —
-      by-value shipping makes the source work from any session (the
-      external driver's vanilla session included) with no PYTHONPATH
-      arrangement. Everything the shipped code touches is stdlib/
-      pyarrow/pyspark, importable everywhere.
+    - Registers THIS module and the ``snaplog`` commit protocol it uses
+      for cloudpickle by-value serialization: the DataSource class is
+      unpickled in Spark's plan-time Python runner and in executor
+      workers, which do not inherit the driver's sys.path — by-value
+      shipping makes the source work from any session (a vanilla one
+      included) with no PYTHONPATH arrangement.
+      Everything else the shipped code touches is stdlib/pyarrow/pyspark,
+      importable everywhere.
     """
     import sys
 
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(snaplog)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SnapshotDataSource)
 
@@ -77,17 +81,9 @@ def _resolve_version(path: str, options) -> int:
     import json
 
     snap_dir = os.path.join(path, "snapshots")
-    snaps = sorted(
-        (f for f in os.listdir(snap_dir) if f.startswith("v") and f.endswith(".json")),
-        key=lambda f: int(f[1:-5]),
-    )
-    if not snaps:
+    versions = snaplog.versions(snap_dir)
+    if not versions:
         raise ValueError(f"no snapshots under {path}")
-
-    def manifest(v: int) -> dict:
-        with open(os.path.join(snap_dir, f"v{v}.json")) as fh:
-            return json.load(fh)
-
     if options.get("tag") is not None:
         # named immutable ref (Iceberg: VERSION AS OF 'tagname' resolves
         # through the refs table) — written by SnapshotTable.create_tag
@@ -100,27 +96,29 @@ def _resolve_version(path: str, options) -> int:
         return int(options["version"])
     if options.get("asof") is not None:
         as_of = float(options["asof"])
-        versions = [
-            m["version"]
-            for m in (manifest(int(f[1:-5])) for f in snaps)
-            if m["timestamp"] <= as_of
+        at = [
+            v for v in versions if snaplog.read(snap_dir, v)["timestamp"] <= as_of
         ]
-        if not versions:
+        if not at:
             raise ValueError(f"no snapshot at or before {as_of}")
-        return max(versions)
-    return int(snaps[-1][1:-5])
+        return max(at)
+    return versions[-1]
 
 
 def _resolve_files(path: str, options) -> list[str]:
-    """Manifest walk (inline — the serialized planner code must not import
-    this package): pick the snapshot version from ``version``/``asof``
-    options, return its data-file paths. Mirrors
-    ``operators.lifecycle.SnapshotTable`` exactly."""
-    import json
-
+    """The data-file paths of the snapshot the ``version``/``asof``/``tag``
+    options pick. This source reads data files only, so a snapshot that
+    carries tombstones (merge-on-read deletes, deletion vectors) is
+    refused rather than read with its deleted rows resurrected."""
     version = _resolve_version(path, options)
-    with open(os.path.join(path, "snapshots", f"v{version}.json")) as fh:
-        manifest = json.load(fh)
+    manifest = snaplog.read(os.path.join(path, "snapshots"), version)
+    dels = [d["file"] for d in manifest.get("delete_files", [])]
+    if dels:
+        raise ValueError(
+            f"snapshot v{version} of {path} carries delete files {dels}; "
+            'format("snapshot") reads data files only — read it with '
+            "SnapshotTable.read, or compact() the table first"
+        )
     return [os.path.join(path, "data", f) for f in manifest["files"]]
 
 
@@ -258,17 +256,8 @@ class SnapshotReader(DataSourceReader):
 
 def _all_commits(path: str) -> list[dict]:
     """Every commit manifest, oldest first."""
-    import json
-
     snap_dir = os.path.join(path, "snapshots")
-    out = []
-    for f in sorted(
-        (f for f in os.listdir(snap_dir) if f.startswith("v") and f.endswith(".json")),
-        key=lambda f: int(f[1:-5]),
-    ):
-        with open(os.path.join(snap_dir, f)) as fh:
-            out.append(json.load(fh))
-    return out
+    return [snaplog.read(snap_dir, v) for v in snaplog.versions(snap_dir)]
 
 
 class SnapshotStreamReader(DataSourceStreamReader):
@@ -326,11 +315,11 @@ class _FilesWritten(WriterCommitMessage):
 class SnapshotArrowWriter(DataSourceArrowWriter):
     """``df.write.format("snapshot")`` — each task streams its Arrow
     batches into one data file (named with a uuid, invisible until
-    commit); the driver-side ``commit()`` writes the manifest in one
-    atomic rename. Exactly the two-phase Iceberg commit protocol
-    (P:205-224): data files first, metadata pointer swap last, so a
-    failed job leaves only unreferenced files for orphan GC. ``abort()``
-    deletes the task outputs eagerly."""
+    commit); the driver-side ``commit()`` creates the next manifest
+    exclusively (tmp + ``os.link``, ``snaplog``). Exactly the two-phase
+    Iceberg commit protocol (P:205-224): data files first, metadata
+    pointer swap last, so a failed job leaves only unreferenced files for
+    orphan GC. ``abort()`` deletes the task outputs eagerly."""
 
     def __init__(self, path: str, overwrite: bool):
         self._path = path
@@ -353,44 +342,22 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
         return _FilesWritten(files=[name])
 
     def commit(self, messages):
-        # CAS commit loop, same protocol as SnapshotTable._try_commit
-        # (implemented inline: this module is cloudpickle-shipped by value
-        # and must stay free of package imports). os.link fails with
-        # FileExistsError when the version was taken — re-read, re-base
-        # the file list, retry; no concurrent append is ever dropped.
-        import json
-        import time as _time
-        import uuid as _uuid
-
+        # the CAS loop SnapshotTable commits through: a lost race re-bases
+        # on the winner, so no concurrent append is ever dropped. An append
+        # carries the head's tombstones and sequence numbers; an overwrite
+        # replaces files and tombstones alike.
         added = [f for m in messages if m is not None for f in m.files]
         snap_dir = os.path.join(self._path, "snapshots")
-        for _ in range(1000):
-            commits = _all_commits(self._path)
-            version = (commits[-1]["version"] + 1) if commits else 1
-            prev = (
-                []
-                if (self._overwrite or not commits)
-                else commits[-1]["files"]
-            )
-            manifest = {
-                "version": version,
-                "operation": "overwrite" if self._overwrite else "append",
-                "timestamp": _time.time(),
-                "files": prev + added,
-            }
-            tmp = os.path.join(
-                snap_dir, f".commit-{_uuid.uuid4().hex[:8]}.tmp"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            try:
-                os.link(tmp, os.path.join(snap_dir, f"v{version}.json"))
-                return
-            except FileExistsError:
-                continue  # lost the race: re-base on the winner
-            finally:
-                os.unlink(tmp)
-        raise RuntimeError("snapshot write: commit retries exhausted")
+        op = "overwrite" if self._overwrite else "append"
+
+        def attempt(base: int, head: dict) -> bool:
+            if self._overwrite:
+                doc = snaplog.snapshot(base + 1, op, added, head, delete_files=[])
+            else:
+                doc = snaplog.snapshot(base + 1, op, head["files"] + added, head)
+            return snaplog.create(os.path.join(snap_dir, f"v{base + 1}.json"), doc)
+
+        snaplog.commit(snap_dir, op, attempt)
 
     def abort(self, messages):
         for m in messages:

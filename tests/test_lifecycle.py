@@ -1555,6 +1555,31 @@ def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
     assert jobs_narrow == jobs_wide, (jobs_narrow, jobs_wide)
 
 
+def test_delete_vectors_counts_in_constant_jobs(spark, events, tmp_path):
+    """delete_vectors() counts every vector in one scan: the same jobs at
+    one vector as at one per data file, with the right cardinalities."""
+    ids = sorted(r["event_id"] for r in events.select("event_id").collect())
+    one = SnapshotTable(spark, str(tmp_path / "one"))
+    wide = SnapshotTable(spark, str(tmp_path / "wide"))
+    for t in (one, wide):
+        t.append(events, n_files=4)
+    one.delete_where_dv(F.col("event_id") == ids[0])
+    wide.delete_where_dv(F.col("event_type") == "click")
+    jobs_one = jobs_of(spark, one.delete_vectors)
+    jobs_wide = jobs_of(spark, wide.delete_vectors)
+    assert [d["positions"] for d in one.delete_vectors()] == [1]
+    vecs = wide.delete_vectors()
+    assert len(vecs) >= 3
+    assert sum(d["positions"] for d in vecs) == (
+        events.filter(F.col("event_type") == "click").count()
+    )
+    for d in vecs:
+        assert d["positions"] == spark.read.parquet(
+            os.path.join(wide.path, "data", d["vector"])
+        ).count()
+    assert jobs_one == jobs_wide, (jobs_one, jobs_wide)
+
+
 def test_deletion_vector_layout_error_is_named(
     spark, events, tmp_path, monkeypatch
 ):
@@ -1943,3 +1968,65 @@ def test_snapshots_summary_diff_identities(spark):
     last = rows[-1]
     assert last["added_rows"] == last["removed_rows"] == last["total_rows"]
     assert last["n_files"] == 1
+
+
+_EMPTY_TABLE_CALLS = {
+    "read": lambda t, df: t.read(),
+    "merge": lambda t, df: t.merge(df, ["event_id"]),
+    "merge_mor": lambda t, df: t.merge_mor(df, ["event_id"]),
+    "delete_where_positional": lambda t, df: t.delete_where_positional(
+        F.col("event_id") < 3
+    ),
+    "delete_where_dv": lambda t, df: t.delete_where_dv(F.col("event_id") < 3),
+    "compact": lambda t, df: t.compact(),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_EMPTY_TABLE_CALLS))
+def test_uncommitted_table_raises_empty_table(spark, events, tmp_path, call):
+    """Reads and rewrites of a table with no commit yet raise the named
+    ``empty table`` error before writing any file."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    with pytest.raises(ValueError, match="empty table"):
+        _EMPTY_TABLE_CALLS[call](t, events.limit(5))
+    assert t.current_version == 0
+    assert [f for _, _, fs in os.walk(t.path) for f in fs] == []
+
+
+@pytest.mark.parametrize(
+    "name, commit",
+    [
+        ("append", lambda t, df: t.append(df)),
+        ("overwrite", lambda t, df: t.overwrite(df)),
+        ("rollback_to", lambda t, df: t.rollback_to(1)),
+        ("rewrite_manifests", lambda t, df: t.rewrite_manifests()),
+    ],
+)
+def test_commit_retries_exhausted_names_operation(
+    spark, events, tmp_path, name, commit
+):
+    """A commit that loses every CAS attempt gives up with a RuntimeError
+    naming the operation, and commits nothing."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(events.limit(10), n_files=1)
+    t._try_commit = lambda version, files, operation, **kw: False
+    with pytest.raises(RuntimeError, match=f"{name}: commit retries exhausted"):
+        commit(t, events.limit(5))
+    assert t.current_version == 1
+
+
+def test_overwrite_replaces_rows_and_tombstones(spark, events, tmp_path):
+    """overwrite() after a merge-on-read delete leaves exactly the new
+    rows, carries no delete files, and records an ``overwrite`` commit."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(events.filter(F.col("event_id") < 20), n_files=2)
+    t.delete_where_mor(
+        events.filter(F.col("event_id") < 5).select("event_id"), ["event_id"]
+    )
+    new = events.filter(F.col("event_id").between(5, 9))
+    v = t.overwrite(new, n_files=1)
+    assert v == 3
+    m = t._manifest(v)
+    assert m["delete_files"] == []
+    assert t.history()[-1]["operation"] == "overwrite"
+    assert sorted(r["event_id"] for r in t.read().collect()) == list(range(5, 10))

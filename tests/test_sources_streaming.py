@@ -299,6 +299,60 @@ def test_pyds_write_append_roundtrip(spark, tmp_path):
     )
 
 
+def _dv_table(spark, path):
+    """100 rows of ``k``, then a deletion vector over ``k < 10``."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
+        SnapshotTable,
+    )
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    pyds.register(spark)
+    t = SnapshotTable(spark, path)
+    t.append(spark.range(100).withColumnRenamed("id", "k"), n_files=2)
+    t.delete_where_dv(F.col("k") < 10)
+    assert t.read().count() == 90
+    return t
+
+
+def test_pyds_write_append_keeps_tombstones(spark, tmp_path):
+    """A format("snapshot") append on a table with a deletion vector
+    carries the head's tombstones and stamps the new files' sequence
+    numbers: the deleted rows stay deleted."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
+        SnapshotTable,
+    )
+
+    path = str(tmp_path / "t")
+    t = _dv_table(spark, path)
+    before = t._manifest(t.current_version)
+    spark.range(200, 205).withColumnRenamed("id", "k").write.format(
+        "snapshot"
+    ).option("path", path).mode("append").save()
+    t = SnapshotTable(spark, path)
+    assert t.read().count() == 95
+    m = t._manifest(t.current_version)
+    assert m["operation"] == "append"
+    assert m["delete_files"] == before["delete_files"]
+    new = [f for f in m["files"] if f not in before["files"]]
+    assert new and all(m["file_seqs"][f] == m["version"] for f in new)
+    assert all(m["file_seqs"][f] == before["file_seqs"][f] for f in before["files"])
+
+
+def test_pyds_read_refuses_tombstoned_snapshot(spark, tmp_path):
+    """format("snapshot") reads data files only: on a snapshot carrying
+    delete files it raises, naming them, instead of returning the deleted
+    rows; after compact() it reads the live rows."""
+    import pytest
+
+    path = str(tmp_path / "t")
+    t = _dv_table(spark, path)
+    vector = t._manifest(t.current_version)["delete_files"][0]["file"]
+    with pytest.raises(Exception, match=vector):
+        spark.read.format("snapshot").option("path", path).load().count()
+    t.compact()
+    assert spark.read.format("snapshot").option("path", path).load().count() == 90
+
+
 def test_load_normalizes_events_ts_repr(spark, tmp_path):
     """The driver has regenerated events.parquet with three different ts
     physical types across rounds (TIMESTAMP(NANOS) -> long shim;
