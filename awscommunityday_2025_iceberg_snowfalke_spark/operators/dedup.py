@@ -29,8 +29,6 @@ Embedding-cosine / semantic (SemDeDup) near-dup lives in :mod:`similarity`.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1780,9 +1778,7 @@ _CC_MAX_ITERS = 25
 # overhead, far under driver headroom while covering any plausible
 # verified near-dup graph of the benched corpora; a 100 TB run whose
 # verified pair graph exceeds it falls back to the distributed rounds.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "2000000")
-)
+_CC_DRIVER_MAX_EDGES = 2_000_000
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -1808,8 +1804,7 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     multimodal task): the edge set of a verified near-dup graph is
     SUB-corpus (banded + verified pairs), and each edge is two longs.
     When the staged edge list fits the driver comfortably
-    (≤ ``_CC_DRIVER_MAX_EDGES``, conf-able via
-    ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``), collect it once and solve the
+    (≤ ``_CC_DRIVER_MAX_EDGES``), collect it once and solve the
     components with an exact union-find, then attach labels to the node
     relation by a broadcast join of ONLY the non-singleton mapping —
     replacing diameter-many (join + groupBy + stage + convergence-agg)

@@ -236,6 +236,18 @@ class SnapshotTable:
         """Snapshot ``version``'s manifest; version 0 is the empty table."""
         return snaplog.read(self._snaps, version)
 
+    def _snapshot(self, version: int | None) -> dict:
+        """The manifest a read-side ``version`` argument names: None is
+        the head, 0 the empty table (no files); a version the log does
+        not hold — never committed, or expired — raises a ValueError
+        naming it."""
+        if version is None:
+            version = self.current_version
+        try:
+            return self._manifest(version)
+        except FileNotFoundError:
+            raise ValueError(f"no snapshot v{version} in {self.path}") from None
+
     def history(self) -> list[dict]:
         """T10/S12: snapshot history (Iceberg: ``<tbl>.history``)."""
         return [self._manifest(v) for v in snaplog.versions(self._snaps)]
@@ -269,13 +281,12 @@ class SnapshotTable:
     def files_for_spec(self, spec: str, version: int | None = None) -> list[str]:
         """Data files written under ``spec`` as of ``version`` (the
         per-generation view of an evolved table)."""
-        version = version or self.current_version
-        fs = self._manifest(version).get("file_specs", {})
+        fs = self._snapshot(version).get("file_specs", {})
         return sorted(f for f, s in fs.items() if s == spec)
 
     def files(self, version: int | None = None) -> list[dict]:
         """T10: data-file inventory (Iceberg: ``<tbl>.files``)."""
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
         out = []
         for rel in m["files"]:
             p = os.path.join(self.path, "data", rel)
@@ -542,8 +553,9 @@ class SnapshotTable:
         map-side expression over scan metadata — a bounded
         file→first_row_id literal map here; a deployment with millions
         of files broadcast-joins the manifest instead (same plan)."""
-        version = version or self.current_version
-        m = self._manifest(version)
+        m = self._snapshot(version)
+        if not m["files"]:
+            raise ValueError("empty table")
         fri = m.get("first_row_ids", {})
         derived = [f for f in m["files"] if fri.get(f) is not None]
         phys = [f for f in m["files"] if fri.get(f) is None]
@@ -613,7 +625,7 @@ class SnapshotTable:
         """The snapshot-pinned NDV statistics (raises if ANALYZE never
         ran for that snapshot — stats never silently go stale across
         snapshots, Iceberg's statistics-file versioning rule)."""
-        version = version or self.current_version
+        version = self._snapshot(version).get("version", 0)
         with open(self._ndv_stats_path(version)) as fh:
             return json.load(fh)
 
@@ -800,7 +812,7 @@ class SnapshotTable:
         """The snapshot's manifest list (Iceberg: ``<tbl>.manifests``):
         one row per physical manifest file with entry count and bytes."""
         out = []
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
         for name in m.get("manifests", []):
             p = os.path.join(self._manifest_dir(), name)
             out.append(
@@ -817,7 +829,7 @@ class SnapshotTable:
         data read: 1 for the snapshot/manifest-list + 1 per manifest file
         — the reference's planning-I/O pathology metric
         (aws-community-builders-presentation.md:247-258: 43,203 GETs)."""
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
         return 1 + len(m.get("manifests", []))
 
     def _carry_manifests(
@@ -826,22 +838,23 @@ class SnapshotTable:
         """Manifest refs for a commit of ``files`` at ``version`` over
         ``head``: the head's manifests carry forward pruned of fully-dead
         refs (every entry rewritten away), plus ONE new manifest file for
-        the entries this commit introduces — Iceberg's append behavior,
-        and exactly the mechanism that accrues 525,600 manifests/yr under
-        10-min micro-batch commits (P:233-243) until
-        ``rewrite_manifests``."""
+        the live files no carried manifest lists — the entries this
+        commit introduces (Iceberg's append behavior, and exactly the
+        mechanism that accrues 525,600 manifests/yr under 10-min
+        micro-batch commits (P:233-243) until ``rewrite_manifests``), and
+        any file a commit without the manifest layer (the
+        ``format("snapshot")`` writer) left unlisted."""
         live = set(files)
-        carried = [
-            name
-            for name in head.get("manifests", [])
-            if any(e in live for e in self.manifest_entries(name))
-        ]
-        prev_files = set(head["files"])
-        new_files = [f for f in files if f not in prev_files]
-        if new_files:
-            carried = carried + [
-                self._write_manifest_file(version, new_files)
-            ]
+        carried: list[str] = []
+        covered: set[str] = set()
+        for name in head.get("manifests", []):
+            entries = self.manifest_entries(name)
+            if any(e in live for e in entries):
+                carried.append(name)
+                covered.update(entries)
+        uncovered = [f for f in files if f not in covered]
+        if uncovered:
+            carried.append(self._write_manifest_file(version, uncovered))
         return carried
 
     def _try_commit(
@@ -999,7 +1012,15 @@ class SnapshotTable:
                 )
             return st[1] < pred[0] or st[0] > pred[1]
 
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
+        if m["files"] and "manifests" not in m:
+            # a commit path without the manifest layer (the
+            # format("snapshot") writer): no manifest lists its files,
+            # so a manifest plan would silently skip them
+            raise ValueError(
+                f"snapshot v{m.get('version')} of {self.path} has no"
+                " manifests record; manifest planning would miss files"
+            )
         live = set(m["files"])
         gets = 1
         read: list[str] = []
@@ -1602,7 +1623,7 @@ class SnapshotTable:
             if not versions:
                 raise ValueError(f"no snapshot at or before {as_of}")
             version = max(versions)
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
         if not m["files"]:
             raise ValueError("empty table")
         return self._apply_renames(self._read_scoped(m, m["files"]))
@@ -1860,7 +1881,7 @@ class SnapshotTable:
         inspectable (``len == len({targets})``, never stacking). Every
         vector is counted in ONE scan with the declared
         :data:`_POS_SCHEMA`, grouped by vector file name."""
-        m = self._manifest(version or self.current_version)
+        m = self._snapshot(version)
         dvs = [d for d in m.get("delete_files", []) if d.get("kind") == "dv"]
         if not dvs:
             return []

@@ -745,9 +745,7 @@ QC_TRAIN_MOD = 8  # classifier trains on the doc_id % 8 == 0 slice (12.5%)
 # survivor at sf0.01/sf0.1 and leave the quota window untested)
 
 
-def curation_pipeline_v2(
-    spark: SparkSession, sf_dir: str, _stage_survivor_sets: bool = True
-) -> DataFrame:
+def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION curation chain as ONE fused run with a per-stage
     attrition report — the artifact a real training-data run ships
     (r12 verdict tasks 2 + 7). Stages, in CCNet's actual order
@@ -829,16 +827,11 @@ def curation_pipeline_v2(
     member operators' documented budgets, each over a strictly smaller
     survivor set than the last.
 
-    ``_stage_survivor_sets`` (r17, the r16-verdict barrier A/B): False
-    drops the s3/s4/s5 survivor-set barriers — those frames are cheap
-    joins of the STAGED s2 against the STAGED decision artifacts
-    (pairs/scored/contam), so their consumers re-derive them as extra
-    map-side scans instead of paying three full-text parquet writes.
-    Semantics identical either way (same plans re-rooted); the measured
-    A/B lives in tools/ab_curation_barriers.py and OPTIMIZATION_r17.md.
-    The r16-verdict profile finding stands either way: the pipeline's
-    wall is member COMPUTE (LSH banding, classifier training, paragraph
-    rebuild), not the barrier writes."""
+    The s3/s4/s5 survivor sets are staged barriers; dropping them (their
+    consumers re-derive the cheap joins as extra map-side scans) was
+    measured in an interleaved A/B (OPTIMIZATION_r17.md) and not taken.
+    The pipeline's wall is member COMPUTE (LSH banding, classifier
+    training, paragraph rebuild), not the barrier writes."""
     from .dedup import (
         INCREMENTAL_SPLIT_FRAC,
         PPJOIN_X,
@@ -937,8 +930,7 @@ def curation_pipeline_v2(
             "doc_a", "doc_b"
         )
     )
-    survivors = stage if _stage_survivor_sets else (lambda df: df)
-    s3 = survivors(
+    s3 = stage(
         s2.join(
             pairs.select(F.col("doc_b").alias("doc_id")).distinct(),
             "doc_id",
@@ -985,7 +977,7 @@ def curation_pipeline_v2(
             _arrays=w6p,
         )
     )
-    s4 = survivors(
+    s4 = stage(
         s3.join(
             scored.filter(F.col("ws") > 0).select("doc_id"),
             "doc_id",
@@ -1040,7 +1032,7 @@ def curation_pipeline_v2(
         .select("doc_id")
         .distinct()
     )
-    s5 = survivors(cand5.join(contam, "doc_id", "left_anti"))
+    s5 = stage(cand5.join(contam, "doc_id", "left_anti"))
     detail5 = contam.agg(F.count(F.lit(1)).alias("detail"))
 
     # -- stage 6: token-budget mixture admission --

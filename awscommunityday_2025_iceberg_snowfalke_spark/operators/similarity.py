@@ -17,12 +17,20 @@ from __future__ import annotations
 
 import hashlib
 import os
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.registry import load, table_path
 from ..stage import _session_root, fingerprint, memo, stage
+
+# The Arrow closures here call this module's shared IVF/PQ kernels on
+# Python workers, which do not inherit the driver's sys.path: ship the
+# module's functions by value so any session (a vanilla one included)
+# runs them without a PYTHONPATH arrangement.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -784,38 +792,81 @@ def semantic_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assigned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cell, embedding): every corpus vector tagged with its
-    nearest-centroid cell — ONE map-only Arrow pass (centroid matrix in
-    the UDF closure, one numpy matmul per batch; argmax takes the
-    first/lowest cell on ties = the oracle's cos DESC, cell ASC). Shared
-    by the SemDeDup dgemm twin and the cell-partitioned IVF store."""
-    import numpy as np
-    import pandas as pd
+# --- the IVF coarse quantizer: each decision in one place --------------------
+# FAISS-style IVF (Jégou, Douze, Schmid 2011): label-mean centroids, cell
+# assignment by (cos DESC, cell ASC), probing each query's top cells. Every
+# ANN entry calls these; the Arrow closures call the two kernels per batch.
 
-    emb = load(spark, sf_dir, "embeddings")
-    cent_rows = _centroids(emb).orderBy("label").collect()
+
+def _quantizer(cent_rows: list, rot=None) -> tuple:
+    """``(cells, C, Cn)`` of a label-ascending centroid table (collected
+    Rows or ``{label, centroid}`` dicts): the cell ids, the k×d centroid
+    matrix — times the caller's ``rot`` when given — and its row norms."""
+    import numpy as np
+
     cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
     C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
+    if rot is not None:
+        C = C @ rot
+    return cells, C, np.linalg.norm(C, axis=1)
 
-    def assign(batches):
-        for pdf in batches:
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            En = np.linalg.norm(E, axis=1)
-            S = (E @ C.T) / (En[:, None] * Cn[None, :])
-            idx = np.argmax(S, axis=1)  # first max = lowest cell id
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cell": cells[idx],
-                    "embedding": pdf["embedding"],
-                }
-            )
 
-    return emb.select(
-        "vec_id", _as_double("embedding").alias("embedding")
-    ).mapInPandas(assign, "vec_id long, cell int, embedding array<double>")
+def _query_batch(emb: DataFrame, rot=None) -> tuple:
+    """``(q_ids, Q, Qn)``: the ``N_QUERIES`` query vectors collected to
+    the driver (bounded: the queries, not the corpus) — times the
+    caller's ``rot`` when given — and their norms."""
+    import numpy as np
+
+    q_rows = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
+    if rot is not None:
+        Q = Q @ rot
+    return q_ids, Q, np.linalg.norm(Q, axis=1)
+
+
+def _nearest_cells(E, quant: tuple) -> tuple:
+    """``(cell, En)`` per row of ``E``: the argmax of E·Cᵀ/(‖E‖‖C‖) over
+    the quantizer's cells — numpy's argmax takes the FIRST max, so a
+    cosine tie goes to the lower cell, the oracle's (cos DESC, cell ASC)
+    — and the row norms, which the scoring closures reuse."""
+    import numpy as np
+
+    cells, C, Cn = quant
+    En = np.linalg.norm(E, axis=1)
+    A = (E @ C.T) / (En[:, None] * Cn[None, :])
+    return cells[np.argmax(A, axis=1)], En
+
+
+def _probe_cells(quant: tuple, Q, Qn, n_probe: int) -> dict:
+    """``{cell: [(query index, probe rank), ...]}``: each query's
+    top-``n_probe`` cells by cosine — ``lexsort`` on (−cos, cell), so a
+    tie lists the lower cell first — with 1-based ranks. Under each cell
+    the queries keep batch order, so per-cell query matrices built from
+    this are row-for-row the batch's."""
+    import numpy as np
+
+    cells, C, Cn = quant
+    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
+    by_cell: dict = {}
+    for qi in range(len(Q)):
+        for rank0, ci in enumerate(np.lexsort((cells, -qc[qi]))[:n_probe]):
+            by_cell.setdefault(int(cells[ci]), []).append((qi, rank0 + 1))
+    return by_cell
+
+
+def _assigned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, embedding): every corpus vector tagged with its
+    nearest-centroid cell — :func:`_assign_frozen` against the corpus's
+    own centroids. Shared by the SemDeDup dgemm twin and the
+    cell-partitioned IVF store."""
+    emb = load(spark, sf_dir, "embeddings")
+    cent_rows = _centroids(emb).orderBy("label").collect()
+    return _assign_frozen(emb, cent_rows, with_embedding=True)
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,30 +1148,17 @@ def _probe_batch(
     list) — the selection half of :func:`_probe_store`, exposed so the
     snapshot-store probe can plan its manifest-pruned scan from the
     probed cells BEFORE touching any data file."""
-    import numpy as np
-
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
-    probe_rows = []
-    for qi in range(len(q_ids)):
-        for ci in np.lexsort((cells, -qc[qi]))[:n_probe]:
-            probe_rows.append(
-                (int(q_ids[qi]), int(cells[ci]), [float(x) for x in Q[qi]])
-            )
+    q_ids, Q, Qn = _query_batch(emb)
+    by_cell = _probe_cells(_quantizer(cent_rows), Q, Qn, n_probe)
     probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, q array<double>"
+        [
+            (int(q_ids[qi]), c, [float(x) for x in Q[qi]])
+            for c, pairs in by_cell.items()
+            for qi, _ in pairs
+        ],
+        "query_id long, cell int, q array<double>",
     )
-    return probes, sorted({c for _, c, _ in probe_rows})
+    return probes, sorted(by_cell)
 
 
 def _probe_store(
@@ -1287,47 +1325,20 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int) -> DataFrame:
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    # coarse quantizer: k x dim -- tiny, rides the UDF closure
-    cent_rows = _centroids(emb).orderBy("label").collect()
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-
-    # query batch: bounded (it's the queries, not the corpus)
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    # probe selection, driver-side: top-N_PROBE cells per query by
-    # cell-cosine (ties: lower cell id first -- argsort on (-cos, cell))
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])  # (n_queries, k)
-    probes_by_cell: dict = {}
-    for qi in range(len(q_ids)):
-        order = np.lexsort((cells, -qc[qi]))[:n_probe]
-        for ci in order:
-            probes_by_cell.setdefault(int(cells[ci]), []).append(qi)
+    # coarse quantizer (k x dim) and query batch: tiny, ride the closure
+    quant = _quantizer(_centroids(emb).orderBy("label").collect())
+    q_ids, Q, Qn = _query_batch(emb)
     # per-cell probing-query matrices for the executor-side dgemm
-    cell_mats = {
-        c: (q_ids[idx], Q[idx], Qn[idx])
-        for c, idx in (
-            (c, np.array(v, dtype=np.int64)) for c, v in probes_by_cell.items()
-        )
-    }
+    cell_mats = {}
+    for c, pairs in _probe_cells(quant, Q, Qn, n_probe).items():
+        idx = np.array([qi for qi, _ in pairs], dtype=np.int64)
+        cell_mats[c] = (q_ids[idx], Q[idx], Qn[idx])
 
     def score(batches):
         for pdf in batches:
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            En = np.linalg.norm(E, axis=1)
-            # cell assignment: argmax cosine vs centroids; numpy argmax
-            # takes the first (lowest-index = lowest cell id) max -- the
-            # same tie-break as the oracle's (cos DESC, cell ASC)
-            A = (E @ C.T) / (En[:, None] * Cn[None, :])
-            acell = cells[np.argmax(A, axis=1)]
+            acell, En = _nearest_cells(E, quant)
             for c, mats in cell_mats.items():
                 sel = acell == c
                 if not sel.any():
@@ -1483,29 +1494,10 @@ def ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    cent_rows = _centroids(emb).orderBy("label").collect()
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
-    max_p = max(RECALL_PROBES)
-    probes_by_cell: dict = {}
-    for qi in range(len(q_ids)):
-        order = np.lexsort((cells, -qc[qi]))[:max_p]
-        for rank0, ci in enumerate(order):
-            probes_by_cell.setdefault(int(cells[ci]), []).append(
-                (qi, rank0 + 1)
-            )
+    quant = _quantizer(_centroids(emb).orderBy("label").collect())
+    q_ids, Q, Qn = _query_batch(emb)
     cell_mats = {}
-    for c, pairs in probes_by_cell.items():
+    for c, pairs in _probe_cells(quant, Q, Qn, max(RECALL_PROBES)).items():
         idx = np.array([qi for qi, _ in pairs], dtype=np.int64)
         rks = np.array([rk for _, rk in pairs], dtype=np.int64)
         cell_mats[c] = (q_ids[idx], Q[idx], Qn[idx], rks)
@@ -1514,9 +1506,7 @@ def ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            En = np.linalg.norm(E, axis=1)
-            A = (E @ C.T) / (En[:, None] * Cn[None, :])
-            acell = cells[np.argmax(A, axis=1)]
+            acell, En = _nearest_cells(E, quant)
             for c, mats in cell_mats.items():
                 sel = acell == c
                 if not sel.any():
@@ -1567,6 +1557,50 @@ PQ_M = 8  # subspaces
 PQ_SUB = DIM // PQ_M  # dims per subspace
 PQ_REFINE = 10 * TOP_K  # ADC shortlist size fed to the exact re-rank
 
+# the contiguous split as slices: E[:, slice] is a strided VIEW, while the
+# default index arrays of _pq_books GATHER a copy in another memory order,
+# and numpy sums and multiplies the two layouts in different float orders.
+# Each entry keeps the layout its oracle parity was certified with.
+_PQ_SLICES = [slice(m * PQ_SUB, (m + 1) * PQ_SUB) for m in range(PQ_M)]
+
+
+def _pq_books(C, subidx=None, codebooks=None) -> tuple:
+    """``(split, cb)``: the PQ subspace split — ``subidx``, else the
+    contiguous split as index arrays — and the per-subspace codebooks —
+    ``codebooks``, else the centroid matrix ``C`` cut by that split."""
+    import numpy as np
+
+    if subidx is None:
+        subidx = [
+            np.arange(m * PQ_SUB, (m + 1) * PQ_SUB) for m in range(PQ_M)
+        ]
+    if codebooks is None:
+        cb = [C[:, subidx[m]].copy() for m in range(PQ_M)]
+    else:
+        cb = [np.asarray(c, dtype=np.float64) for c in codebooks]
+    return subidx, cb
+
+
+def _pq_codes(E, split: list, cb: list) -> tuple:
+    """``(codes, rn2)`` per row of ``E``: per subspace the argmin of
+    ‖x − c‖² expanded as x·x − 2x·c + c·c (the oracle's expansion;
+    numpy's argmin takes the FIRST min, so a distance tie goes to the
+    lower code, the oracle's (dist ASC, code ASC)), and the
+    reconstruction's squared norm summed over subspaces m-ascending."""
+    import numpy as np
+
+    codes = np.empty((len(E), PQ_M), dtype=np.int32)
+    rn2 = np.zeros(len(E))
+    for m in range(PQ_M):
+        Em = E[:, split[m]]
+        cn2 = (cb[m] * cb[m]).sum(axis=1)
+        D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (Em @ cb[m].T)
+        D = D + cn2[None, :]
+        cm = np.argmin(D, axis=1)
+        codes[:, m] = cm
+        rn2 = rn2 + cn2[cm]
+    return codes, rn2
+
 
 def _pq_topk(
     spark: SparkSession,
@@ -1607,26 +1641,26 @@ def _pq_topk(
     ENTIRE encode→ADC→shortlist→re-rank pipeline full-value, not
     rows-only.
 
-    Plan shape — the ADC pass is identical to :func:`_ivf_topk`:
-    centroids, codebooks, ADC tables and the query batch are all bounded
-    driver artifacts riding the UDF closure; the corpus makes ONE
-    map-only Arrow pass (cell-assign, PQ-encode, ADC-score per probing
-    query); the shuffles are the per-query shortlist top-PQ_REFINE and
-    the final top-k over the (bounded, broadcast) refined candidates.
-    Encode ties take the lowest code id (numpy argmin = first min)
-    matching the oracle's (dist ASC, code ASC); candidates sharing all
-    codes reconstruct identically, so ADC ties are exact on both engines
-    and break on neighbor_id ASC; the exact re-rank reuses the
-    parity-proven ``_dot``/``_norm`` fold devices. numpy reassociates
-    float adds vs the oracle's folds (the ``knn_pandas_cosine`` stance);
-    parity verified on the fixed testdata at all three SFs.
+    Plan shape: centroids, codebooks, ADC tables and the query batch
+    are all bounded driver artifacts riding the UDF closures; the corpus
+    is encoded by :func:`_pq_encode` (cell-assign + PQ-encode, one
+    map-only Arrow pass) and the ADC scan scores the code store per
+    probing query; the shuffles are the per-query shortlist
+    top-PQ_REFINE and the final top-k over the (bounded, broadcast)
+    refined candidates. Encode ties take the lowest code id (numpy
+    argmin = first min) matching the oracle's (dist ASC, code ASC);
+    candidates sharing all codes reconstruct identically, so ADC ties
+    are exact on both engines and break on neighbor_id ASC; the exact
+    re-rank reuses the parity-proven ``_dot``/``_norm`` fold devices.
+    numpy reassociates float adds vs the oracle's folds (the
+    ``knn_pandas_cosine`` stance); parity verified on the fixed testdata
+    at all three SFs.
 
     ``subidx`` (optional): per-subspace dimension-index arrays replacing
-    the contiguous slices — the OPQ hook (:func:`ann_ivf_opq_cosine`):
+    the contiguous split — the OPQ hook (:func:`ann_ivf_opq_cosine`):
     the subspace split becomes an arbitrary permutation of dimensions,
     everything downstream (encode, ADC, refine) is permutation-agnostic.
-    Default None keeps the contiguous split (the plain-PQ entries'
-    behavior, bit-unchanged).
+    Default None keeps the contiguous split (:func:`_pq_books`).
 
     ``rot`` (optional): a d×d orthonormal rotation applied to centroids,
     queries, and each corpus batch before the contiguous split — the
@@ -1640,74 +1674,54 @@ def _pq_topk(
     ``codebooks`` (optional): per-subspace codeword matrices replacing
     the rotated-coarse-centroid-slice default — the OPQ-NP hook
     (:func:`ann_ivf_opq_np_cosine`): trained sub-codebooks are free
-    parameters living in the rotated space. Default None keeps every
-    existing entry bit-unchanged.
+    parameters living in the rotated space.
 
-    ``_enc`` (optional, r16 — guide §1.2/§8 "decide with small rows"):
-    a staged encode table from :func:`_pq_encode` under the SAME
-    (rot, subidx, codebooks). The cell/code/norm encode is
-    probe-count-independent, so the recall reports' per-probe-point
-    calls were re-encoding the full embedding corpus once per p; with
-    ``_enc`` the ADC scan reads the 8-byte-code store instead — the
-    production vector-store shape (:func:`embedding_pq_codes` is that
-    artifact) — and the heavy embedding pass runs ONCE per report.
-    Scores are identical: same codes, same float lookup-table sums in
-    the same order; doubles roundtrip parquet exactly."""
+    ``_enc`` (optional): the code store — (vec_id, cell, codes, rn2)
+    from :func:`_pq_encode` under the SAME (rot, subidx, codebooks). The
+    encode does not depend on the probe count, so the recall reports
+    stage it once and sweep probe counts against the 8-byte-code table
+    (the production vector-store shape; :func:`embedding_pq_codes` is
+    that artifact). Without it the scan reads an unstaged
+    :func:`_pq_encode` built from this call's hooks. Either way there is
+    one ADC scan: same codes, same float lookup-table sums in the same
+    order; doubles roundtrip Arrow and parquet exactly."""
     import numpy as np
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    # _cent_rows (r16, guide §1.2): callers that already collected the
-    # bounded centroid table (the OPQ entries probe twice per report)
-    # pass it in instead of re-running the corpus centroid pass
+    # _cent_rows: callers that already collected the bounded centroid
+    # table (the OPQ entries probe twice per report) pass it in instead
+    # of re-running the corpus centroid pass
     cent_rows = (
         _cent_rows
         if _cent_rows is not None
         else _centroids(emb).orderBy("label").collect()
     )
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    if rot is not None:
-        C = C @ rot
-    Cn = np.linalg.norm(C, axis=1)
-    if subidx is None:  # contiguous split: plain PQ
-        subidx = [
-            np.arange(m * PQ_SUB, (m + 1) * PQ_SUB) for m in range(PQ_M)
-        ]
-    # per-subspace codebooks (k codes × PQ_SUB dims) + code squared norms
-    if codebooks is None:
-        cb = [C[:, subidx[m]].copy() for m in range(PQ_M)]
-    else:
-        cb = [np.asarray(c, dtype=np.float64) for c in codebooks]
-    cn2 = [(cb[m] * cb[m]).sum(axis=1) for m in range(PQ_M)]
-
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    if rot is not None:
-        Q = Q @ rot
-    Qn = np.linalg.norm(Q, axis=1)
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
-    probes_by_cell: dict = {}
-    for qi in range(len(q_ids)):
-        order = np.lexsort((cells, -qc[qi]))[:n_probe]
-        for ci in order:
-            probes_by_cell.setdefault(int(cells[ci]), []).append(qi)
+    quant = _quantizer(cent_rows, rot)
+    split, cb = _pq_books(quant[1], subidx, codebooks)
+    q_ids, Q, Qn = _query_batch(emb, rot)
+    probes_by_cell = {
+        c: np.array([qi for qi, _ in pairs], dtype=np.int64)
+        for c, pairs in _probe_cells(quant, Q, Qn, n_probe).items()
+    }
     # ADC lookup tables: T[m][qi, code] = dot(q_sub_m, codeword)
-    T = [Q[:, subidx[m]] @ cb[m].T for m in range(PQ_M)]
+    T = [Q[:, split[m]] @ cb[m].T for m in range(PQ_M)]
+    if _enc is None:
+        _enc = _pq_encode(
+            spark, sf_dir, subidx, rot, codebooks, _cent_rows=cent_rows
+        )
 
-    def _adc_batches(pieces):
-        """Shared ADC scan over (ids, acell, codes, rnorm) batches."""
-        for ids, acell, codes, rnorm in pieces:
-            for c, qidx in probes_by_cell.items():
+    def score(batches):
+        for pdf in batches:
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            acell = pdf["cell"].to_numpy(dtype=np.int64)
+            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            # |reconstruction| from code norms alone
+            rnorm = np.sqrt(pdf["rn2"].to_numpy(dtype=np.float64))
+            for c, qi in probes_by_cell.items():
                 sel = acell == c
                 if not sel.any():
                     continue
-                qi = np.array(qidx, dtype=np.int64)
                 b = int(sel.sum())
                 S = np.zeros((len(qi), b))
                 for m in range(PQ_M):
@@ -1721,54 +1735,9 @@ def _pq_topk(
                     }
                 )
 
-    def score(batches):
-        def encode_then(batches):
-            for pdf in batches:
-                E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                if rot is not None:
-                    E = E @ rot
-                En = np.linalg.norm(E, axis=1)
-                A = (E @ C.T) / (En[:, None] * Cn[None, :])
-                acell = cells[np.argmax(A, axis=1)]
-                # PQ encode: per subspace argmin of ||x − c||² expanded
-                # as x·x − 2x·c + c·c (the oracle's expansion)
-                codes = np.empty((len(ids), PQ_M), dtype=np.int64)
-                rn2 = np.zeros(len(ids))
-                for m in range(PQ_M):
-                    Em = E[:, subidx[m]]
-                    D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (
-                        Em @ cb[m].T
-                    )
-                    D = D + cn2[m][None, :]
-                    cm = np.argmin(D, axis=1)  # first min = lowest code
-                    codes[:, m] = cm
-                    rn2 = rn2 + cn2[m][cm]
-                # |reconstruction| from code norms alone
-                yield ids, acell, codes, np.sqrt(rn2)
-
-        yield from _adc_batches(encode_then(batches))
-
-    def score_enc(batches):
-        def decode_then(batches):
-            for pdf in batches:
-                yield (
-                    pdf["vec_id"].to_numpy(dtype=np.int64),
-                    pdf["cell"].to_numpy(dtype=np.int64),
-                    np.array(pdf["codes"].tolist(), dtype=np.int64),
-                    np.sqrt(pdf["rn2"].to_numpy(dtype=np.float64)),
-                )
-
-        yield from _adc_batches(decode_then(batches))
-
-    if _enc is None:
-        scored = emb.select("vec_id", "embedding").mapInPandas(
-            score, "query_id long, neighbor_id long, adc_raw double"
-        )
-    else:
-        scored = _enc.mapInPandas(
-            score_enc, "query_id long, neighbor_id long, adc_raw double"
-        )
+    scored = _enc.mapInPandas(
+        score, "query_id long, neighbor_id long, adc_raw double"
+    )
     scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("adc_raw"), F.asc("neighbor_id")
@@ -1830,14 +1799,11 @@ def _pq_encode(
     codebooks: "list | None" = None,
     _cent_rows: "list | None" = None,
 ) -> DataFrame:
-    """The probe-count-INDEPENDENT half of :func:`_pq_topk` (r16, guide
-    §1.2/§8): one map-only Arrow pass producing the PQ store —
-    (vec_id, cell, codes, ‖reconstruction‖²) — under the same
-    (rot, subidx, codebooks) hooks. The recall reports stage this once
-    and sweep probe counts against the 8-byte-code table instead of
-    re-encoding the full embedding corpus per probe point. Same encode
-    arithmetic as the fused pass (argmin ties to lowest code, rn2
-    accumulated m-ascending), so downstream ADC scores are identical."""
+    """The probe-count-INDEPENDENT half of :func:`_pq_topk`: one map-only
+    Arrow pass producing the PQ store — (vec_id, cell, codes,
+    ‖reconstruction‖²) — under the (rot, subidx, codebooks) hooks. The
+    recall reports stage it once and sweep probe counts against the
+    8-byte-code table; a single probe reads it unstaged."""
     import numpy as np
     import pandas as pd
 
@@ -1847,42 +1813,19 @@ def _pq_encode(
         if _cent_rows is not None
         else _centroids(emb).orderBy("label").collect()
     )
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    if rot is not None:
-        C = C @ rot
-    Cn = np.linalg.norm(C, axis=1)
-    if subidx is None:
-        subidx = [
-            np.arange(m * PQ_SUB, (m + 1) * PQ_SUB) for m in range(PQ_M)
-        ]
-    if codebooks is None:
-        cb = [C[:, subidx[m]].copy() for m in range(PQ_M)]
-    else:
-        cb = [np.asarray(c, dtype=np.float64) for c in codebooks]
-    cn2 = [(cb[m] * cb[m]).sum(axis=1) for m in range(PQ_M)]
+    quant = _quantizer(cent_rows, rot)
+    split, cb = _pq_books(quant[1], subidx, codebooks)
 
     def encode(batches):
         for pdf in batches:
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             if rot is not None:
                 E = E @ rot
-            En = np.linalg.norm(E, axis=1)
-            A = (E @ C.T) / (En[:, None] * Cn[None, :])
-            acell = cells[np.argmax(A, axis=1)]
-            codes = np.empty((len(ids), PQ_M), dtype=np.int32)
-            rn2 = np.zeros(len(ids))
-            for m in range(PQ_M):
-                Em = E[:, subidx[m]]
-                D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (Em @ cb[m].T)
-                D = D + cn2[m][None, :]
-                cm = np.argmin(D, axis=1)  # first min = lowest code id
-                codes[:, m] = cm
-                rn2 = rn2 + cn2[m][cm]
+            acell, _ = _nearest_cells(E, quant)
+            codes, rn2 = _pq_codes(E, split, cb)
             yield pd.DataFrame(
                 {
-                    "vec_id": ids,
+                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
                     "cell": acell,
                     "codes": list(codes),
                     "rn2": rn2,
@@ -1920,31 +1863,19 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    cent_rows = _centroids(emb).orderBy("label").collect()
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    cb = [C[:, m * PQ_SUB : (m + 1) * PQ_SUB].copy() for m in range(PQ_M)]
-    cn2 = [(cb[m] * cb[m]).sum(axis=1) for m in range(PQ_M)]
+    quant = _quantizer(_centroids(emb).orderBy("label").collect())
+    _, cb = _pq_books(quant[1], _PQ_SLICES)
 
     def encode(batches):
         for pdf in batches:
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            En = np.linalg.norm(E, axis=1)
-            A = (E @ C.T) / (En[:, None] * Cn[None, :])
-            acell = cells[np.argmax(A, axis=1)]
-            codes = np.empty((len(ids), PQ_M), dtype=np.int64)
-            rn2 = np.zeros(len(ids))
+            acell, _ = _nearest_cells(E, quant)
+            codes, rn2 = _pq_codes(E, _PQ_SLICES, cb)
             xr = np.zeros(len(ids))
             for m in range(PQ_M):
-                Em = E[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-                D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (Em @ cb[m].T)
-                D = D + cn2[m][None, :]
-                cm = np.argmin(D, axis=1)
-                codes[:, m] = cm
-                rn2 = rn2 + cn2[m][cm]
-                xr = xr + (Em * cb[m][cm]).sum(axis=1)
+                Em = E[:, _PQ_SLICES[m]]
+                xr = xr + (Em * cb[m][codes[:, m]]).sum(axis=1)
             xx = (E * E).sum(axis=1)
             err2 = xx - 2.0 * xr + rn2
             En = np.sqrt(xx)
@@ -2123,8 +2054,8 @@ def ann_ivf_sq8_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully in-engine like the flat SQ8 path: the per-vector cell
     assignment is a k-row broadcast cross join + one rank window (the
     oracle's own assign CTE shape — no Arrow batch, no Python), probe
-    cells are the bounded driver-side |queries|×k selection shared with
-    :func:`_probe_store`, and the probed candidates score cos(q,
+    cells are the bounded driver-side |queries|×k selection of
+    :func:`_probe_batch`, and the probed candidates score cos(q,
     reconstruct(x)) through the fold devices. Shuffles: the rank window
     over (vec_id)-keyed n·k rows and the per-query top-k. At 100 TB the
     assignment is done ONCE at ingest (the cell-partitioned store), so
@@ -2153,29 +2084,8 @@ def ann_ivf_sq8_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cell", "e")
     )
 
-    import numpy as np
-
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
-    probe_rows = []
-    for qi in range(len(q_ids)):
-        for ci in np.lexsort((cells, -qc[qi]))[:N_PROBE]:
-            probe_rows.append(
-                (int(q_ids[qi]), int(cells[ci]), [float(x) for x in Q[qi]])
-            )
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, q array<double>"
-    ).withColumn("nq", _norm(F.col("q")))
+    probes, _ = _probe_batch(spark, emb, cent_rows)
+    probes = probes.withColumn("nq", _norm(F.col("q")))
 
     cand = (
         assign.join(F.broadcast(probes), "cell")
@@ -2619,7 +2529,7 @@ def _opq_np_train(
         if _cent_rows is not None
         else _centroids(emb).orderBy("label").collect()
     )
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+    C = _quantizer(cent_rows)[1]
     k = C.shape[0]
     # Σ‖x‖² (decimal-exact scalar; rotation-invariant). _sq (r16): the
     # caller derives it exactly from its own per-dim decimal sums —
@@ -2636,7 +2546,7 @@ def _opq_np_train(
         )
         .collect()[0]["s"]
     )
-    cb = [(C @ R)[:, m * PQ_SUB : (m + 1) * PQ_SUB].copy() for m in range(PQ_M)]
+    _, cb = _pq_books(C @ R, _PQ_SLICES)
     distortions = []
     for _ in range(OPQ_NP_ROUNDS):
         Rc, cbc = R.copy(), [b.copy() for b in cb]
@@ -2652,15 +2562,7 @@ def _opq_np_train(
         def encode_emit(batches, _R=Rc, _cb=cbc):
             for pdf in batches:
                 E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                Ep = E @ _R
-                codes = np.empty((len(E), PQ_M), dtype=np.int32)
-                for m in range(PQ_M):
-                    Em = Ep[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-                    D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (
-                        Em @ _cb[m].T
-                    )
-                    D = D + (_cb[m] * _cb[m]).sum(axis=1)[None, :]
-                    codes[:, m] = np.argmin(D, axis=1)  # first-min code
+                codes, _ = _pq_codes(E @ _R, _PQ_SLICES, _cb)
                 yield pd.DataFrame(
                     {"codes": list(codes), "embedding": pdf["embedding"]}
                 )
@@ -2883,27 +2785,21 @@ def _assign_frozen(
 ) -> DataFrame:
     """(vec_id, cell[, embedding]): map-only Arrow assignment of
     ``vectors`` against a FROZEN centroid list (collected bounded k×d
-    artifact) — the :func:`_assigned_cells` kernel generalized to an
-    explicit centroid set, so an index can score vectors it was NOT
-    trained on. Argmax takes the first/lowest cell on ties (= the
-    oracle's cos DESC, cell ASC). ``with_embedding`` carries the vector
-    through for store writes (no join-back needed)."""
+    artifact, riding the closure; one :func:`_nearest_cells` matmul per
+    batch), so an index can score vectors it was NOT trained on.
+    ``with_embedding`` carries the vector through for store writes (no
+    join-back needed)."""
     import numpy as np
     import pandas as pd
 
-    cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
+    quant = _quantizer(cent_rows)
 
     def assign(batches):
         for pdf in batches:
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            En = np.linalg.norm(E, axis=1)
-            S = (E @ C.T) / (En[:, None] * Cn[None, :])
-            idx = np.argmax(S, axis=1)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                "cell": cells[idx],
+                "cell": _nearest_cells(E, quant)[0],
             }
             if with_embedding:
                 out["embedding"] = pdf["embedding"]
@@ -3670,14 +3566,7 @@ def knn_pandas_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )  # k×dim — driver-side, broadcast via the UDF closure
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
+    q_ids, Q, Qn = _query_batch(emb)  # broadcast via the UDF closure
 
     def score(batches):
         for pdf in batches:

@@ -2030,3 +2030,54 @@ def test_overwrite_replaces_rows_and_tombstones(spark, events, tmp_path):
     assert m["delete_files"] == []
     assert t.history()[-1]["operation"] == "overwrite"
     assert sorted(r["event_id"] for r in t.read().collect()) == list(range(5, 10))
+
+
+def test_time_travel_to_version_zero_is_the_empty_table(spark, tmp_path):
+    """Version 0 names the empty table, not the head: ``read`` raises the
+    named ``empty table`` error and the listing calls return nothing. A
+    version the log does not hold raises a ValueError naming it."""
+    t = SnapshotTable(spark, str(tmp_path / "t"), stats_col="k")
+    for lo, hi in ((0, 20), (20, 50), (50, 70)):
+        t.append(spark.range(lo, hi).withColumnRenamed("id", "k"), n_files=1)
+    assert t.read().count() == 70
+    with pytest.raises(ValueError, match="empty table"):
+        t.read(version=0)
+    with pytest.raises(ValueError, match="empty table"):
+        t.read_lineage(version=0)
+    assert t.files(version=0) == []
+    assert t.files_for_spec("unpartitioned", version=0) == []
+    assert t.manifest_list(version=0) == []
+    assert t.delete_vectors(version=0) == []
+    assert t.plan_scan_manifests(0, 10**9, version=0)["files_read"] == []
+    assert t.read(version=1).count() == 20
+    with pytest.raises(ValueError, match="v9"):
+        t.read(version=9)
+    with pytest.raises(ValueError, match="v9"):
+        t.files(version=9)
+
+
+def test_manifest_plan_covers_files_of_a_snapshot_writer_commit(spark, tmp_path):
+    """A ``format("snapshot")`` commit writes no manifest. The next
+    SnapshotTable commit lists every live file that no carried manifest
+    covers, so a full-range manifest plan reads all five files; planning
+    the writer's own snapshot raises instead of planning a partial set."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    pyds.register(spark)
+    path = str(tmp_path / "t")
+    t = SnapshotTable(spark, path, stats_col="k")
+    t.append(spark.range(0, 40).withColumnRenamed("id", "k"), n_files=2)
+    spark.range(40, 60, numPartitions=1).withColumnRenamed(
+        "id", "k"
+    ).write.format("snapshot").option("path", path).mode("append").save()
+    t = SnapshotTable(spark, path)
+    with pytest.raises(ValueError, match="no manifests record"):
+        t.plan_scan_manifests(0, 100)
+    t.append(spark.range(60, 70).withColumnRenamed("id", "k"), n_files=2)
+    live = t.files()
+    assert len(live) == 5
+    assert t.read().count() == 70
+    plan = t.plan_scan_manifests(0, 100)
+    assert sorted(plan["files_read"]) == sorted(f["file"] for f in live)
+    covered = {e for m in t.manifest_list() for e in t.manifest_entries(m["manifest"])}
+    assert covered == {f["file"] for f in live}

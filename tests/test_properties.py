@@ -567,6 +567,102 @@ def test_ann_ivf_recall_sweep_equals_report(spark):
     assert len(sweep) == len(similarity.RECALL_PROBES)
 
 
+def test_ivf_quantizer_ties_go_to_the_lower_cell_and_code():
+    """The tie rule the DuckDB oracles encode as (cos DESC, cell ASC) and
+    (dist ASC, code ASC). Cells 3 and 5 share one centroid, so every
+    vector ties on cosine between them: assignment takes cell 3 and the
+    probe order lists cell 3 before cell 5. Codes 1 and 2 share one
+    codeword in every subspace: encoding takes code 1. Vectors are small
+    integers, so every dot product is exact and the duplicate rows tie
+    exactly whatever order BLAS sums in."""
+    import numpy as np
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
+        similarity as S,
+    )
+
+    rng = np.random.default_rng(7)
+    a = rng.choice([-3.0, -2.0, 2.0, 3.0], S.DIM)
+    near_a = a + rng.integers(-1, 2, (6, S.DIM))
+    near_b = -a + rng.integers(-1, 2, (2, S.DIM))
+    quant = S._quantizer(
+        [
+            {"label": 1, "centroid": list(-a)},
+            {"label": 3, "centroid": list(a)},
+            {"label": 5, "centroid": list(a)},
+        ]
+    )
+    E = np.vstack([near_a, near_b])
+    cells, En = S._nearest_cells(E, quant)
+    assert cells.tolist() == [3] * 6 + [1] * 2
+    assert np.array_equal(En, np.linalg.norm(E, axis=1))
+
+    Qn = np.linalg.norm(near_a, axis=1)
+    by_cell = S._probe_cells(quant, near_a, Qn, 2)
+    assert by_cell == {
+        3: [(qi, 1) for qi in range(6)],
+        5: [(qi, 2) for qi in range(6)],
+    }
+    assert sorted(S._probe_cells(quant, near_a, Qn, 1)) == [3]
+
+    # PQ: the codebook rows are (-a, a, a) cut per subspace, under both
+    # the gathered default split and the sliced one
+    for split in (None, S._PQ_SLICES):
+        split, cb = S._pq_books(quant[1], split)
+        codes, rn2 = S._pq_codes(near_a, split, cb)
+        assert codes.tolist() == [[1] * S.PQ_M] * 6
+        expect = np.zeros(6)
+        for m in range(S.PQ_M):
+            expect = expect + (cb[m] * cb[m]).sum(axis=1)[codes[:, m]]
+        assert np.array_equal(rn2, expect)
+
+
+def test_ivf_kernels_ship_by_value(tmp_path):
+    """Spark's Python workers do not inherit the driver's sys.path, so an
+    Arrow closure calling the shared IVF/PQ kernels must carry them by
+    value: the pickled closure runs in an interpreter that cannot import
+    the package."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
+        similarity as S,
+    )
+
+    quant = S._quantizer(
+        [{"label": c, "centroid": [float(c)] * S.DIM} for c in (1, 2)]
+    )
+    split, cb = S._pq_books(quant[1])
+    nearest_cells, pq_codes = S._nearest_cells, S._pq_codes
+
+    def closure(E):  # references the kernels, as the Arrow closures do
+        return nearest_cells(E, quant)[0], pq_codes(E, split, cb)[0]
+
+    code = (
+        "import json, pickle, sys\n"
+        "import numpy as np\n"
+        "f = pickle.loads(sys.stdin.buffer.read())\n"
+        f"cells, codes = f(np.ones((2, {S.DIM})))\n"
+        "print(json.dumps([cells.tolist(), codes.tolist()]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(closure),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        check=False,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    # both centroids point along the ones vector: a tie, lower cell wins
+    assert json.loads(out.stdout) == [[1, 1], [[0] * S.PQ_M] * 2]
+
+
 @settings(
     max_examples=8,
     deadline=None,
