@@ -9,7 +9,7 @@ files, exactly Iceberg's metadata→manifest→data layering in miniature:
 
 - append/overwrite  → new snapshot (atomic manifest write)  [T1/T2]
 - read(version=… / as_of=…)  → time travel                  [T4]
-- schema evolution via mergeSchema reads                     [T3]
+- schema evolution: footer-merged read schemas              [T3]
 - compact()  → rewrite_data_files equivalent                 [T5]
 - expire_snapshots / remove_orphan_files (ref-aware)         [T6/T7]
 - files()/history()/refs()  → metadata tables                [T9/T10]
@@ -38,6 +38,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .. import snaplog
 from ..functions import det_sum, det_sum_sql
@@ -127,6 +128,69 @@ class DeletionVectorLayoutError(RuntimeError):
 # schema-inference job.
 _POSITIONAL = ("pos", "dv")
 _POS_SCHEMA = "file string, pos bigint"
+
+# The footer key under which Spark's parquet writer records the file's
+# exact Spark schema; Spark's own schema inference prefers it over the
+# parquet schema (``ParquetFileFormat.readSchemaFromFooter``).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(md) -> StructType | None:
+    """The Spark schema recorded in a parquet footer (pyarrow
+    ``FileMetaData``), or None when the file was not written by Spark
+    (pyarrow, DuckDB) or the recorded value does not parse."""
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError):
+        return None
+
+
+def _merged_schema(schemas) -> StructType | None:
+    """``schemas`` merged as Spark's schema inference merges files: fields
+    in order of first appearance. None when one is None (no recorded
+    schema), two disagree on a field's type or metadata, or two names
+    differ only in case (one field to a case-insensitive merge)."""
+    merged: dict[str, StructField] = {}
+    for schema in schemas:
+        if schema is None:
+            return None
+        for f in schema.fields:
+            seen = merged.setdefault(f.name, f)
+            if (seen.dataType, seen.metadata) != (f.dataType, f.metadata):
+                return None
+    if len({n.lower() for n in merged}) < len(merged):
+        return None
+    return StructType(list(merged.values()))
+
+
+def _read_parquet(
+    spark: SparkSession, paths: list[str], footers: list | None = None
+) -> DataFrame:
+    """Read the parquet files ``paths`` under the schema a ``mergeSchema``
+    read would infer, merged on the driver from their footers
+    (``footers``: their pyarrow ``FileMetaData``, when the caller already
+    opened them): no schema-inference Spark job. Spark's inference merges
+    the files in path order; its reader marks every field nullable
+    either way.
+
+    Falls back to the ``mergeSchema`` read (one Spark job) when a footer
+    lacks the Spark schema (files written by pyarrow or DuckDB and adopted
+    through ``ingest_files``, or by the ``format("snapshot")`` writer) —
+    only Spark's inference reads those — or when the files disagree on a
+    field: Spark then merges what it can and raises
+    ``CANNOT_MERGE_SCHEMAS`` on the rest."""
+    import pyarrow.parquet as pq
+
+    if footers is None:
+        footers = [pq.read_metadata(p) for p in paths]
+    order = sorted(range(len(paths)), key=paths.__getitem__)
+    schema = _merged_schema(_footer_schema(footers[i]) for i in order)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 # Bloom file-index hash family (exact integer arithmetic — the SQL oracle
@@ -450,41 +514,43 @@ class SnapshotTable:
         )
 
     def _read_paths(self, paths: list[str], with_meta: bool = False) -> DataFrame:
-        """The one parquet-read funnel under all table reads. Without
-        widenings or defaults it is a plain mergeSchema scan (added
-        columns NULL over old files — T3). With them, files are GROUPED
-        by the physical type/presence of each evolved column (Spark's
-        schema merge refuses int32-vs-int64 conflicts — correctly: that
-        is table-format territory), each group is cast up to the table
-        type and filled with the initial default where the column is
-        physically absent, and the groups union back. ``_metadata``
-        provenance must be captured per-group (scan columns do not
-        survive a union), so the meta projection happens here, not on
-        the merged result.
+        """The one parquet-read funnel under all table reads: one driver
+        footer walk, then one scan per file group under the schema merged
+        from the group's footers (:func:`_read_parquet`; added columns
+        read NULL over old files — T3). Files are GROUPED by the physical
+        type/presence of each widened or defaulted column (Spark's schema
+        merge refuses int32-vs-int64 conflicts — correctly: that is
+        table-format territory); a table with neither is one group. Each
+        group is cast up to the table type and filled with the initial
+        default where the column is physically absent, and the groups
+        union back. ``_metadata`` provenance must be captured per-group
+        (scan columns do not survive a union), so the meta projection
+        happens here, not on the merged result.
 
-        Scale: the grouping is a footer walk the planner already pays
-        (plan_scan's 1 + |files| GETs); groups are bounded by the number
-        of schema changes the table has seen (a handful over its life),
-        and each group stays one ordinary vectorized scan."""
-        wid = self._type_widenings()
-        dfl = self._column_defaults()
-        if not wid and not dfl:
-            raw = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            return self._with_meta_cols(raw) if with_meta else raw
+        Scale: the walk reads each footer once on the driver, the same
+        footers a ``mergeSchema`` read reads in a Spark job; groups are
+        bounded by the number of schema changes the table has seen (a
+        handful over its life), and each group stays one ordinary
+        vectorized scan."""
         import pyarrow.parquet as pq
 
+        wid = self._type_widenings()
+        dfl = self._column_defaults()
         cols = sorted(set(wid) | set(dfl))
-        groups: dict[tuple, list[str]] = {}
+        groups: dict[tuple, tuple[list, list]] = {}
         for p in paths:
-            sch = pq.ParquetFile(p).schema_arrow
+            with pq.ParquetFile(p) as pf:
+                md, sch = pf.metadata, pf.schema_arrow
             sig = tuple(
                 str(sch.field(c).type) if c in sch.names else None
                 for c in cols
             )
-            groups.setdefault(sig, []).append(p)
+            fs, mds = groups.setdefault(sig, ([], []))
+            fs.append(p)
+            mds.append(md)
         out = None
-        for fs in groups.values():
-            df = self.spark.read.option("mergeSchema", "true").parquet(*fs)
+        for fs, mds in groups.values():
+            df = _read_parquet(self.spark, fs, mds)
             if with_meta:
                 df = self._with_meta_cols(df)
             for c, t in wid.items():
@@ -1243,13 +1309,19 @@ class SnapshotTable:
 
     def read_staged(self, wap_id: str) -> DataFrame:
         """WAP step 2 — AUDIT: read main AS IF the staged batch were
-        published (current files + staged files) without committing
-        anything; the validation query surface."""
+        published, without committing anything; the validation query
+        surface. It reads the manifest :meth:`publish_staged` would commit
+        over the current head: the head's tombstones, widenings, defaults
+        and renames apply, and the staged files take the next sequence
+        number, so no equality delete of the head applies to them."""
         with open(self._staged_path(wap_id)) as fh:
             staged = json.load(fh)
-        files = self._manifest(self.current_version)["files"] + staged["files"]
-        paths = [os.path.join(self.path, "data", f) for f in files]
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        cur = self.current_version
+        head = self._manifest(cur)
+        m = snaplog.snapshot(
+            cur + 1, "wap.audit", head["files"] + staged["files"], head
+        )
+        return self._apply_renames(self._read_scoped(m, m["files"]))
 
     def publish_staged(self, wap_id: str) -> int:
         """WAP step 3 — PUBLISH: fast-forward main to include the audited
@@ -1615,8 +1687,10 @@ class SnapshotTable:
         self, version: int | None = None, as_of: float | None = None
     ) -> DataFrame:
         """T4 time travel (Iceberg: ``VERSION AS OF`` / ``TIMESTAMP AS OF``).
-        ``mergeSchema`` makes added columns readable over old files (T3);
-        recorded column renames map old-name files at scan time (see
+        The scan schema is merged from the data files' footers on the
+        driver, so building the read runs no Spark job and added columns
+        read NULL over old files (T3, :func:`_read_parquet`); recorded
+        column renames map old-name files at scan time (see
         :meth:`rename_column`)."""
         if as_of is not None:
             versions = [m["version"] for m in self.history() if m["timestamp"] <= as_of]
@@ -1678,8 +1752,9 @@ class SnapshotTable:
                 with_meta=with_meta,
             )
             for i in sig:
-                keys = self.spark.read.parquet(
-                    os.path.join(self.path, "data", equality[i]["file"])
+                keys = _read_parquet(
+                    self.spark,
+                    [os.path.join(self.path, "data", equality[i]["file"])],
                 )
                 part = part.join(keys, equality[i]["key_cols"], "left_anti")
             out = part if out is None else out.unionByName(
@@ -1976,8 +2051,8 @@ class SnapshotTable:
                 f for f in kept if to_seqs.get(f, 0) <= d.get("seq", 1 << 62)
             ]
             if src:
-                kdf = self.spark.read.parquet(
-                    os.path.join(self.path, "data", d["file"])
+                kdf = _read_parquet(
+                    self.spark, [os.path.join(self.path, "data", d["file"])]
                 )
                 hits.append(
                     self._read_scoped(mf, src).join(

@@ -2081,3 +2081,109 @@ def test_manifest_plan_covers_files_of_a_snapshot_writer_commit(spark, tmp_path)
     assert sorted(plan["files_read"]) == sorted(f["file"] for f in live)
     covered = {e for m in t.manifest_list() for e in t.manifest_entries(m["manifest"])}
     assert covered == {f["file"] for f in live}
+
+
+def _build_shape(spark, t, shape):
+    """Two commits of 40 rows each (``k`` unique, ``v`` int) with one
+    schema change or tombstone kind between or after them."""
+    v = (F.col("id") % 7).cast("int")
+    t.append(spark.range(0, 40).select(F.col("id").alias("k"), v.alias("v")), n_files=2)
+    later = spark.range(40, 80).select(F.col("id").alias("k"), v.alias("v"))
+    if shape == "added":
+        later = later.withColumn("extra", F.col("k").cast("string"))
+    elif shape == "widened":
+        t.widen_column_type("v", "bigint")
+        later = later.withColumn("v", F.col("v") + F.lit(3_000_000_000))
+    elif shape == "defaulted":
+        t.add_column_default("tier", "string", "std")
+        later = later.withColumn("tier", F.when(F.col("k") % 2 == 0, "x"))
+    elif shape == "renamed":
+        t.rename_column("v", "v2")
+        later = later.withColumnRenamed("v", "v2")
+    t.append(later, n_files=2)
+    if shape == "dv":
+        t.delete_where_dv(F.col("k") < 10)
+    elif shape == "equality":
+        t.delete_where_mor(spark.range(5).withColumnRenamed("id", "k"), ["k"])
+
+
+@pytest.mark.parametrize(
+    "shape",
+    ["plain", "added", "widened", "defaulted", "renamed", "dv", "equality"],
+)
+def test_table_reads_take_the_footer_schema_without_a_job(
+    spark, tmp_path, monkeypatch, shape
+):
+    """Building a read of a Spark-written table runs no Spark job: the
+    scan schema, and that of every equality-delete key file, is merged
+    from the footers on the driver. Forcing every footer lookup to
+    "missing" takes the mergeSchema fallback (at least one inference
+    job), which must give the identical schema and rows — of the table
+    read and of the provenance-carrying scan under it."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import lifecycle
+
+    t = SnapshotTable(spark, str(tmp_path / shape))
+    _build_shape(spark, t, shape)
+    m = t._manifest(t.current_version)
+
+    def reads():
+        return [t.read(), t._read_scoped(m, m["files"], keep_meta=True)]
+
+    assert jobs_of(spark, reads) == 0
+    footer = reads()
+    monkeypatch.setattr(lifecycle, "_footer_schema", lambda md: None)
+    assert jobs_of(spark, reads) > 0
+    for a, b in zip(footer, reads()):
+        assert a.schema == b.schema
+        assert sorted(a.collect()) == sorted(b.collect())
+
+
+def test_reads_fall_back_to_inference_without_a_spark_schema(spark, tmp_path):
+    """A file written by pyarrow carries no Spark schema in its footer:
+    the read infers it with mergeSchema (one job) and still returns every
+    row. Two Spark-written generations that disagree on a column's type
+    take the same fallback, and Spark refuses the merge."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(0, 10).withColumnRenamed("id", "k"), n_files=1)
+    src = str(tmp_path / "pa.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array(range(10, 15), pa.int64()), "note": ["x"] * 5}),
+        src,
+    )
+    t.ingest_files([src])
+    assert jobs_of(spark, t.read) == 1
+    df = t.read()
+    assert df.columns == ["k", "note"]
+    assert sorted(r["k"] for r in df.collect()) == list(range(15))
+    assert df.filter(F.col("note") == "x").count() == 5
+
+    c = SnapshotTable(spark, str(tmp_path / "c"))
+    c.append(spark.range(3).withColumnRenamed("id", "k"), n_files=1)
+    c.append(spark.range(3).select(F.col("id").cast("int").alias("k")), n_files=1)
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        c.read()
+
+
+def test_read_staged_reads_what_publish_commits(spark, tmp_path):
+    """The WAP audit read is the read of the manifest publish will commit:
+    the head's deletion vectors apply (95 rows, not the 105 of a raw file
+    scan), and on a widened table the staged generation reads under the
+    table type instead of failing the schema merge."""
+    t = SnapshotTable(spark, str(tmp_path / "dv"))
+    t.append(spark.range(100).withColumnRenamed("id", "k"), n_files=2)
+    t.delete_where_dv(F.col("k") < 10)
+    t.stage_append(spark.range(100, 105).withColumnRenamed("id", "k"), "w1")
+    assert t.read_staged("w1").count() == 95
+    t.publish_staged("w1")
+    assert t.read().count() == 95
+
+    w = SnapshotTable(spark, str(tmp_path / "wide"))
+    w.append(spark.range(10).select(F.col("id").cast("int").alias("k")), n_files=1)
+    w.widen_column_type("k", "bigint")
+    w.stage_append(spark.range(10, 15).withColumnRenamed("id", "k"), "w2")
+    staged = w.read_staged("w2")
+    assert dict(staged.dtypes)["k"] == "bigint"
+    assert sorted(r["k"] for r in staged.collect()) == list(range(15))
