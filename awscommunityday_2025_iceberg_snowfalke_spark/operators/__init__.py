@@ -63,95 +63,13 @@ def _modules():
 
 
 # The driver's correctness gate samples the FIRST 50 entries of
-# all_queries() each round; this list is rotated per round so every entry
-# eventually gets a driver CORRECTNESS row. History: r1-r4 sampled
-# relational/snowsql/tpch; r5 sampled the extension families; r6 sampled
-# the 27 never-sampled entries + fixes + the r1-r3 relational tail (50/50
-# green); r7 sampled the 16 post-r6 additions + the entire r4-vintage
-# relational/snowsql/tpch tail (47/50 — the three driver-reds were
-# cross-engine numeric fragility, root-caused and re-proofed in r8);
-# r8/r9/r10/r11 each sampled that round's additions + changed entries +
-# the stalest vintage (50/50 green each; COVERAGE.md has the full
-# lists). r12 did NOT rotate — the r11 list re-ran (50/50 green again,
-# flagged by the r12 judge as the round's headline miss).
-# r13 (this rotation), per the r12 verdict's task 1 — two rounds of
-# rotation debt paid at once:
-# (a) the FOUR r13 additions (curation_pipeline_v2, the 64-round
-#     checkpointed BPE trainer + its deep encoder, the incremental-ANN
-#     append→probe loop closure);
-# (b) the FOUR r12 additions that missed the un-rotated r12 gate
-#     (paragraph dedup report + removal transform, incremental IVF
-#     assignment, OPQ non-parametric training);
-# (c) the TWO post-rotation r11 additions (streaming_quality_gate,
-#     dedup_bloom_screen — the latter also refactored this round);
-# (d) the EIGHT r6 rows displaced since r11 (five twins whose primaries
-#     carried r11/r12 rows, plus daily_counts /
-#     grouping_sets_type_or_day / event_minmax);
-# (e) ELEVEN entries whose code changed in r13 while their driver rows
-#     predate the change: gopher_quality_rules + doc_repetition_stats
-#     (map-only in-row n-gram rewrite), dedup_jaccard_prefix_filter +
-#     minhash_lsh_pairs (PPJoin/shingle helper extraction for the v2
-#     pipeline), ann_ivf_partitioned_probe (probe half extracted as
-#     _probe_store), quality_classifier_score + bpe_encode_fixed_merges
-#     (oracle CTE parameterization), token_budget_mixture_plan +
-#     pack_docs_sequences (quota/bin helpers extracted),
-#     manifest_lifecycle_report + manifest_pruning_report (null-count
-#     guard + unbounded-plan ValueError from the r12 ADVICE);
-# (f) TWELVE entries added late in r13 itself (the r10 precedent: new
-#     work outranks stale-but-green vintage rows): the SQ8 family ×3,
-#     the Hilbert layout report, delta-join MV maintenance, the
-#     leakage-safe split, the stream-static dim join, the metadata-only
-#     rename read, the BPE decode round-trip, pHash clusters, the
-#     CCNet perplexity terciles, and the SemDeDup epsilon sweep;
-# (g) NINE of the 46 r7-vintage rows — the extension entries still
-#     carrying r7 evidence (semantic_dedup — its fold twin joins the
-#     r14 queue, the r11 twin precedent — dedup_clusters_star,
-#     knn_hard_negatives, embedding_dim_stats, simhash family ×3 — the
-#     64-bit pair twin joins the queue, its family keeps simhash64 +
-#     the wide layout — multimodal_dedup_bytes, ann_ivf_recall_report);
-#     TPC-H q1-q22 + the snowsql/props/misc relational tail (~37 rows)
-#     queue for r14, after which every driver row is ≤5 rounds old.
-# 4 + 4 + 2 + 8 + 11 + 12 + 9 = 50 exactly (test_registry pins it).
-# r14 sampled the 36 remaining r7-vintage rows (TPC-H q1-q22, the r7
-# snowsql/relational tail, the two r13-queued twins), the 5 r14
-# additions, and 9 r14-changed entries (50/50 green — the staleness
-# ledger closed: every pre-rotation driver row ≤5 rounds old;
-# COVERAGE.md has the full list).
-# r15 (this rotation), per the r14 verdict's task 1:
-# (a) the TWENTY-SEVEN post-rotation r14 additions that have never had
-#     a driver row (the r15 queue COVERAGE.md named): the WordPiece
-#     trio + trainer, the unigram trio, the sketch pair, the v3
-#     metadata family, the Bloom pair, the metadata-table pair,
-#     JSONL/ORC, merge_full_sync / snapshot_expiry, the VARIANT pair,
-#     minhash_banding_calibration, benchmark_contamination_semantic,
-#     bpe_vocab_size_frontier;
-# (b) benchmark_contamination — the TWICE-displaced r8 backfill (r8,
-#     r14), this time placed FIRST so nothing can displace it again;
-#     also r15-changed (the LEX_BENCH_ID_CAP freeze — answer unchanged
-#     at the gate SF, cap covers every sf0.01 doc id);
-# (c) the FIVE entries whose code or oracle changed in r15 while their
-#     driver rows predate the change: benchmark_contamination_substrings
-#     + curation_pipeline_v2 + corpus_datasheet (the LEX_BENCH_ID_CAP
-#     freeze, oracles in lockstep), ann_ivf_partitioned_probe +
-#     ann_ivf_append_probe (the _probe_batch/_score_probes split for
-#     the snapshot-store probe — answer-identical, the r13/r14
-#     helper-extraction precedent);
-# (d) the FIVE r15 additions: wordpiece_train_merges_deep (32-round
-#     checkpointed trainer, frozen artifact), ann_store_snapshot_probe
-#     (the snapshot-backed IVF store), contamination_report_card
-#     (3-layer overlap matrix), ccnet_pipeline (lang-id → KN terciles →
-#     keep-rule end-to-end), avro_roundtrip_events (format matrix);
-# (e) TWELVE of the 46 remaining r8-vintage rows (alphabetical head of
-#     the ledger; the other 34 queue for r16): ann_ivf_cell_stats,
-#     ann_ivf_cosine, ann_lsh_cosine, curation_pipeline,
-#     dedup_cluster_size_histogram, dedup_clusters,
-#     dedup_corpus_summary, dedup_embedding_cosine, dedup_exact,
-#     dedup_exact_hash, dedup_incremental, dedup_lines_report.
-# 27 + 1 + 5 + 5 + 12 = 50 exactly (test_registry pins it).
+# all_queries(); _GATE_FRONT pins those 50 by name. Each change rotates it:
+# entries whose code or oracle the change touched and entries that never
+# had a driver row go in, the longest-sampled untouched entries make room,
+# and the list stays exactly 50 (test_registry pins it). The per-round
+# rotation history is in COVERAGE.md.
 _GATE_FRONT = (
-    # (b) the twice-displaced r8 backfill goes FIRST
     "benchmark_contamination",
-    # (a) the 27 never-sampled r14 additions
     "wordpiece_train_merges",
     "wordpiece_encode_greedy",
     "wordpiece_decode_roundtrip",
@@ -160,8 +78,6 @@ _GATE_FRONT = (
     "unigram_fertility_by_lang",
     "unigram_prune_report",
     "bpe_vocab_size_frontier",
-    "quantile_sketch_rollup",
-    "streaming_quantile_sketch",
     "pyds_bloom_point_scan",
     "bloom_point_lookup_report",
     "spec_evolution_skipping_report",
@@ -173,37 +89,36 @@ _GATE_FRONT = (
     "snapshot_expiry_report",
     "partitions_metadata_report",
     "snapshots_summary_report",
-    "jsonl_roundtrip_documents",
     "orc_roundtrip_events",
     "props_variant_stats",
     "snowsql_variant_path",
     "minhash_banding_calibration",
     "benchmark_contamination_semantic",
-    # (c) changed in r15 — driver rows predate the change
     "benchmark_contamination_substrings",
     "curation_pipeline_v2",
     "corpus_datasheet",
     "ann_ivf_partitioned_probe",
     "ann_ivf_append_probe",
-    # (d) r15 additions
     "wordpiece_train_merges_deep",
     "ann_store_snapshot_probe",
     "contamination_report_card",
     "ccnet_pipeline",
     "avro_roundtrip_events",
-    # (e) the 12 stalest r8-vintage rows
+    "simhash32",
+    "simhash64",
+    "simhash_hamming_pairs",
+    "simhash64_hamming_pairs_wide",
+    "semantic_dedup",
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "dedup_cluster_size_histogram",
+    "dedup_corpus_summary",
+    "multimodal_phash_clusters",
+    "quantile_sketch_rollup",
+    "streaming_quantile_sketch",
     "ann_ivf_cell_stats",
     "ann_ivf_cosine",
-    "ann_lsh_cosine",
     "curation_pipeline",
-    "dedup_cluster_size_histogram",
-    "dedup_clusters",
-    "dedup_corpus_summary",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_exact_hash",
-    "dedup_incremental",
-    "dedup_lines_report",
 )
 
 

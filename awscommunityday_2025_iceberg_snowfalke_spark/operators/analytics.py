@@ -500,6 +500,45 @@ QSK_BIN_CAP = 1023  # frozen spec: bin = min(floor(value), CAP) — 1024 counter
 QSK_QUANTILES = (0.5, 0.9, 0.99)
 
 
+def _merged_histogram(
+    store: DataFrame, values: DataFrame, part_col: str, what: str
+) -> tuple[list, int]:
+    """``(bins, n_parts)`` of a mergeable fixed-bin histogram sketch:
+    ``store`` holds per-part (``part_col``, ``bin``, ``c``) histograms,
+    ``values`` the raw ``bin`` column they summarize. The mergeability
+    contract — the stored parts summed per bin equal a direct one-pass
+    histogram of ``values`` — is checked on the driver: one tagged union
+    collects both bounded histograms (≤ 1024 rows each) plus the number
+    of distinct parts in a single job, and the two dicts must be equal
+    (identical to exceptAll-empty both ways on unique bin keys). Returns
+    the merged histogram as ascending (bin, count) pairs."""
+
+    def _tag(df, t):
+        return df.select(
+            F.lit(t).alias("t"),
+            F.col("bin").cast("long").alias("k"),
+            F.col("c").cast("long").alias("v"),
+        )
+
+    merged = store.groupBy("bin").agg(F.sum("c").alias("c"))
+    direct = values.groupBy("bin").agg(F.count(F.lit(1)).alias("c"))
+    parts = store.agg(F.countDistinct(part_col).cast("long").alias("v")).select(
+        F.lit("n").alias("t"), F.lit(-1).cast("long").alias("k"), "v"
+    )
+    hist: dict = {"m": {}, "d": {}}
+    n_parts = 0
+    for r in (
+        _tag(merged, "m").unionByName(_tag(direct, "d")).unionByName(parts)
+    ).collect():
+        if r["t"] == "n":
+            n_parts = int(r["v"])
+        else:
+            hist[r["t"]][int(r["k"])] = int(r["v"])
+    if hist["m"] != hist["d"]:
+        raise RuntimeError(f"{what} diverges from the direct histogram")
+    return sorted(hist["m"].items()), n_parts
+
+
 def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable QUANTILE layer — the fourth member of the sketch family
     (``hll_user_rollup`` = distinct, ``approx_topk_users`` = frequency,
@@ -538,39 +577,9 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_date", "bin")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    merged = daily.groupBy("bin").agg(F.sum("c").alias("c"))
-    direct = ev.select(b).groupBy("bin").agg(F.count(F.lit(1)).alias("c"))
-    # the mergeability contract (sum of stored daily sketches == direct
-    # one-pass histogram) — both sides ≤ 1024 rows. r17 (guide §1.2):
-    # the two exceptAll probes each re-ran the DIRECT events scan and
-    # the bins/n_days reads were two more sequential jobs; one tagged
-    # union collects both bounded histograms plus the day count in a
-    # single job (one events scan instead of two) and the equality
-    # check — identical on unique bin keys — runs on the driver.
-    def _tag(df, t):
-        return df.select(
-            F.lit(t).alias("t"),
-            F.col("bin").cast("long").alias("k"),
-            F.col("c").cast("long").alias("v"),
-        )
-
-    days_row = daily.agg(
-        F.countDistinct("event_date").cast("long").alias("v")
-    ).select(F.lit("days").alias("t"), F.lit(-1).cast("long").alias("k"), "v")
-    mm: dict = {}
-    dd: dict = {}
-    n_days = 0
-    for r in _tag(merged, "m").unionByName(_tag(direct, "d")).unionByName(
-        days_row
-    ).collect():
-        if r["t"] == "m":
-            mm[int(r["k"])] = int(r["v"])
-        elif r["t"] == "d":
-            dd[int(r["k"])] = int(r["v"])
-        else:
-            n_days = int(r["v"])
-    assert mm == dd, "daily merge diverges from the direct histogram"
-    bins = sorted(mm.items())
+    bins, n_days = _merged_histogram(
+        daily, ev.select(b), "event_date", "daily merge"
+    )
     n = sum(c for _, c in bins)
 
     def ranks(m: int) -> list[int]:

@@ -19,10 +19,9 @@ The dedup families, each shuffle-aware for 100 TB:
   verified. Hashing is md5-prefix→int64 so the duckdb oracle reproduces it
   bit-for-bit (engine-neutral, unlike xxhash64).
 - SimHash (32- and 64-bit) — near-dup fingerprints with pigeonhole-banded
-  Hamming pairing; band WIDTH (8- vs 16-bit) is the candidate-volume
-  scale knob.
-- duplicate clustering — label propagation + large/small-star contraction
-  over the verified pair graph.
+  Hamming pairing (4 bands of 8 or 16 bits).
+- duplicate clustering — driver union-find, or large/small-star
+  contraction past the driver bound, over the verified pair graph.
 
 Embedding-cosine / semantic (SemDeDup) near-dup lives in :mod:`similarity`.
 """
@@ -1771,121 +1770,57 @@ def dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- duplicate clustering (connected components over the near-dup graph) ----
-_CC_MAX_ITERS = 25
-# driver fast-path bound for connected_components (r17): doubled-edge
-# rows the driver may collect and solve with exact union-find — two
-# longs each, so the default caps the collect at ~32 MB plus dict
-# overhead, far under driver headroom while covering any plausible
-# verified near-dup graph of the benched corpora; a 100 TB run whose
-# verified pair graph exceeds it falls back to the distributed rounds.
-_CC_DRIVER_MAX_EDGES = 2_000_000
+# Driver fast-path bound for connected_components: undirected pairs the
+# driver may collect and solve with exact union-find — two longs each, so
+# the cap holds the collect near 32 MB plus dict overhead, far under
+# driver headroom while covering any plausible verified near-dup graph of
+# the benched corpora. A larger pair graph goes to star contraction.
+_CC_DRIVER_MAX_PAIRS = 1_000_000
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Distributed connected components by iterative min-label propagation.
+    """Connected components of the graph ``nodes`` (one ``id`` column)
+    with undirected edges ``pairs`` (``doc_a``, ``doc_b``). Returns
+    (``id``, ``label``) with label = min id of the component.
 
-    ``nodes``: one ``id`` column; ``pairs``: undirected edges as
-    (``doc_a``, ``doc_b``). Every node starts labeled with its own id; each
-    round every node takes the min of its own label and its neighbors'
-    labels, until a fixpoint. Rounds are pure DataFrame join+groupBy
-    (shuffle keyed on id), disk-staged per round to cut lineage (bounded
-    at two rounds of files on disk — each round's staging is discarded
-    once the next is materialized); convergence is detected from the
-    strictly decreasing global label sum (one cheap agg per round, no
-    join-back). Iterations needed = graph diameter; a pathological chain
-    would call for the large-star/small-star variant (Kiveris et al.,
-    "Connected Components in MapReduce"), same join shape. Raises if the
-    fixpoint is not reached within ``_CC_MAX_ITERS`` rounds — exhausting
-    the budget without converging would silently split components whose
-    diameter exceeds it, corrupting every downstream dedup cluster.
-    Returns (``id``, ``label``) with label = min id of the component.
+    The pair graph of a verified near-dup pass is sub-corpus (banded +
+    verified pairs), so the pairs are staged once and one bounded collect
+    both answers "does it fit the driver?" and fetches it when it does:
+    ``limit(cap + 1)`` returns every pair iff there are at most
+    ``_CC_DRIVER_MAX_PAIRS``. A graph that fits is solved by an exact
+    union-find on the driver and the labels attach to the nodes by a
+    broadcast join of ONLY the non-singleton mapping. A larger graph goes
+    to :func:`connected_components_star` over the same staged pairs, so
+    the pair plan runs once on either path. Both paths return the same
+    labels (the property tests pin each against a sequential
+    union-find)."""
+    staged = stage(pairs.select("doc_a", "doc_b"))
+    probe = staged.limit(_CC_DRIVER_MAX_PAIRS + 1).collect()
+    if len(probe) > _CC_DRIVER_MAX_PAIRS:
+        labels = connected_components_star(nodes, staged)
+        discard(staged)  # star's result scans only its own staged edges
+        return labels
+    discard(staged)
+    parent: dict = {}
 
-    r17 fast path (guide §8 "decide with small rows" — the r16-verdict
-    multimodal task): the edge set of a verified near-dup graph is
-    SUB-corpus (banded + verified pairs), and each edge is two longs.
-    When the staged edge list fits the driver comfortably
-    (≤ ``_CC_DRIVER_MAX_EDGES``), collect it once and solve the
-    components with an exact union-find, then attach labels to the node
-    relation by a broadcast join of ONLY the non-singleton mapping —
-    replacing diameter-many (join + groupBy + stage + convergence-agg)
-    rounds with one bounded collect and one map-only join. Identical
-    labels (min id per component — the property tests pin both paths
-    against the same sequential union-find). Beyond the threshold the
-    diameter-bounded propagation below runs unchanged; at that scale
-    the driver must not hold the graph, exactly as before."""
-    edges = stage(  # reused every round (distributed path)
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for row in probe:
+        a, b = find(row["doc_a"]), find(row["doc_b"])
+        if a != b:
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    mapping = [(int(v), int(find(v))) for v in parent if v != find(v)]
+    mdf = nodes.sparkSession.createDataFrame(mapping, "id long, label long")
+    return nodes.select("id").join(F.broadcast(mdf), "id", "left").select(
+        "id", F.coalesce(F.col("label"), F.col("id")).alias("label")
     )
-    # one job answers "is it small?" AND fetches it when it is: limit
-    # T+1 returns the complete doubled-edge list iff its size ≤ T
-    probe = edges.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
-    if len(probe) <= _CC_DRIVER_MAX_EDGES:
-        discard(edges)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in probe:
-            a, b = find(row["src"]), find(row["dst"])
-            if a != b:
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        mapping = [
-            (int(v), int(find(v))) for v in parent if v != find(v)
-        ]
-        mdf = nodes.sparkSession.createDataFrame(
-            mapping, "id long, label long"
-        )
-        return nodes.select("id").join(
-            F.broadcast(mdf), "id", "left"
-        ).select(
-            "id", F.coalesce(F.col("label"), F.col("id")).alias("label")
-        )
-    labels = stage(nodes.select("id", F.col("id").alias("label")))
-    prev_sum = None
-    converged = False
-    for _ in range(_CC_MAX_ITERS):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = stage(
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        discard(labels)  # round N-1 staging; nothing references it anymore
-        labels = new_labels
-        # min-label is monotonically non-increasing → the global sum strictly
-        # decreases until the fixpoint; equal sums ⇒ converged
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no fixpoint within {_CC_MAX_ITERS} "
-            "rounds (graph diameter exceeds the budget); labels would be "
-            "silently split. Raise _CC_MAX_ITERS or use the "
-            "large-star/small-star formulation for this graph."
-        )
-    discard(edges)
-    return labels
 
 
 _STAR_MAX_ROUNDS = 20
@@ -1894,11 +1829,11 @@ _STAR_MAX_ROUNDS = 20
 def connected_components_star(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the escalation :func:`connected_components` documents for
-    pathological graphs: label propagation needs diameter-many rounds (a
-    100 M-node chain would need 100 M), while star contraction converges
-    in O(log n) rounds on ANY graph shape, each round the same
-    groupBy-min + keyed-join shuffle budget.
+    SoCC 2014) — the distributed path of :func:`connected_components`.
+    Min-label propagation would need diameter-many rounds (a 100 M-node
+    chain would need 100 M), while star contraction converges in
+    O(log n) rounds on ANY graph shape, each round the same groupBy-min +
+    keyed-join shuffle budget.
 
     - large-star: every node links its LARGER neighbors to the minimum of
       its neighborhood (incl. itself) — long tails fold toward minima.
@@ -1910,9 +1845,9 @@ def connected_components_star(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     exact set-equality check (count match + one-sided exceptAll — an extra
     exchange per round, but rounds are logarithmic, and a fingerprint
     check could false-positive). Per-round staging is disk-backed and
-    bounded to two rounds of files, like label propagation. Returns
-    (``id``, ``label``), label = min id of the component — bit-identical
-    to :func:`connected_components` (equivalence is pinned by a property
+    bounded to two rounds of files. Returns (``id``, ``label``), label =
+    min id of the component — bit-identical to the driver union-find of
+    :func:`connected_components` (equivalence is pinned by a property
     test and by ``dedup_clusters_star`` sharing the recursive-CTE
     oracle)."""
     edges = stage(
@@ -1970,8 +1905,7 @@ def connected_components_star(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             "graph is far larger than the round budget anticipates."
         )
     # NOTE: the returned plan still scans the final staged edge set, so it
-    # is NOT discarded here (label propagation stages labels separately and
-    # can drop its edges; doing that here served FILE_NOT_EXIST to the
+    # is NOT discarded here (doing that served FILE_NOT_EXIST to the
     # caller's collect). Session temp-dir cleanup reclaims it at exit.
     return nodes.join(
         edges.groupBy("u").agg(F.min("v").alias("nbr")),
@@ -1986,8 +1920,8 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components labels over the verified near-dup pair graph,
     memoized per (session, corpus) — four registry entries (clusters,
     size histogram, corpus summary, quality survivorship) consume the
-    SAME labels, and re-running the iterative propagation per entry was
-    the dominant cost of each (measured ~3 s at sf0.01 per re-run, one
+    SAME labels, and re-running the component pass per entry was the
+    dominant cost of each (measured ~3 s at sf0.01 per re-run, one
     label pass shared instead)."""
 
     def build() -> DataFrame:
@@ -2031,11 +1965,12 @@ def _cluster_report(labels: DataFrame) -> DataFrame:
 
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`dedup_clusters` computed by the O(log n)-round
-    large-star/small-star contraction instead of diameter-bounded label
-    propagation — the variant a 100 TB corpus with long duplicate chains
-    (mirror farms, boilerplate families) actually needs. Same verified
-    LSH pair graph, same output, same recursive-CTE oracle: the driver
-    gate itself certifies the two algorithms agree."""
+    large-star/small-star contraction instead of the driver union-find —
+    the path :func:`connected_components` takes once a 100 TB corpus's
+    pair graph outgrows the driver. Same verified LSH pair graph, same
+    output, same recursive-CTE oracle: the driver gate itself certifies
+    that star contraction agrees on the real pair graph, which the
+    benched corpora never push past the driver bound."""
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return _cluster_report(connected_components_star(docs, pairs))
@@ -2098,7 +2033,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_safe rows carry 0, test-pinned).
 
     Scale shape: reuses the memoized component labels
-    (:func:`_cluster_labels` — one label-propagation pass per corpus,
+    (:func:`_cluster_labels` — one component pass per corpus,
     shared with the cluster family), the split assignment is a map-side
     hash expression, the leak audit joins the bounded verified-pair list
     (already sub-corpus after LSH banding + verify) against the 2-column
@@ -2162,23 +2097,37 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_simhash(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
     """Staged SimHash signature table, memoized per (session, sf_dir,
-    width): the shared intermediate of the pairing family (both band
-    layouts and both self-join sides read it), so the vote aggregates run
-    once per corpus, not once per pairing call."""
-    fn = simhash64 if width == 64 else simhash32
+    width): the shared intermediate of the pairing entries (both self-join
+    sides read it), so the vote aggregates run once per corpus, not once
+    per pairing call."""
     return memo(
         spark,
         ("simhash", sf_dir, width),
         [table_path(sf_dir, "documents")],
-        lambda: stage(fn(spark, sf_dir)),
+        lambda: stage(_simhash(spark, sf_dir, width)),
     )
 
 
-# --- SimHash (32-bit) -------------------------------------------------------
-def simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 32-bit SimHash over distinct tokens: portable token hash →
-    per-bit ±1 vote sums → sign bits reassembled. One groupBy(doc_id) with
-    32 conditional-sum aggregates — a single map-side-combinable pass."""
+# --- SimHash signatures -------------------------------------------------------
+# Token hash words, 32 signature bits each. Width 32 votes on the low bits of
+# the canonical ``_SPARK_H``; width 64 on two independent 32-bit halves of
+# the md5 (bits 0-31 on hex chars 1-8, bits 32-63 on chars 9-16) —
+# bit-identical in duckdb, same portability recipe as ``_SPARK_H``.
+_SPARK_H32A = "cast(conv(substr(md5({expr}), 1, 8), 16, 10) as bigint)"
+_SPARK_H32B = "cast(conv(substr(md5({expr}), 9, 8), 16, 10) as bigint)"
+_DUCK_H32A = "CAST(concat('0x', substr(md5({expr}), 1, 8)) AS BIGINT)"
+_DUCK_H32B = "CAST(concat('0x', substr(md5({expr}), 9, 8)) AS BIGINT)"
+_SIMHASH_WORDS = {32: [_SPARK_H], 64: [_SPARK_H32A, _SPARK_H32B]}
+_DUCK_SIMHASH_WORDS = {32: [_DUCK_H], 64: [_DUCK_H32A, _DUCK_H32B]}
+
+
+def _simhash(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
+    """Per-doc ``width``-bit SimHash over distinct tokens: token hash words
+    → per-bit ±1 vote sums → sign bits reassembled. One distinct-token
+    explode and one groupBy(doc_id) with ``width`` conditional-sum
+    aggregates — a single map-side-combinable pass; doubling the width
+    costs more long sum buffers in the same pass, no extra shuffle."""
+    words = _SIMHASH_WORDS[width]
     docs = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
@@ -2189,58 +2138,78 @@ def simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("tok") != "")
         .distinct()
-        .withColumn("h", F.expr(_SPARK_H.format(expr="tok")))
+        .select(
+            "doc_id",
+            *[
+                F.expr(h.format(expr="tok")).alias(f"h{w}")
+                for w, h in enumerate(words)
+            ],
+        )
     )
     votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
-                F.when(F.expr(f"(h >> {b}) & 1") == 1, 1).otherwise(-1)
+                F.when(F.expr(f"(h{b // 32} >> {b % 32}) & 1") == 1, 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(32)
+            for b in range(width)
         ]
     )
-    bits = [
-        F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(32)
-    ]
-    acc = bits[0]
-    for bit in bits[1:]:
-        acc = acc + bit
+    acc = None
+    for b in range(width):
+        # bit 63 lands in the sign bit (two's complement); xor/popcount
+        # downstream is sign-agnostic
+        value = -(1 << 63) if b == 63 else 1 << b
+        bit = F.when(F.col(f"v{b}") > 0, F.lit(value).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        acc = bit if acc is None else acc + bit
     return votes.select("doc_id", acc.cast("bigint").alias("simhash"))
 
 
+def simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc 32-bit SimHash (:func:`_simhash` at width 32)."""
+    return _simhash(spark, sf_dir, 32)
+
+
+def simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """64-bit SimHash — the production width (Manku-Jain-Sarma use 64-bit
+    signatures for 8 B pages); :func:`_simhash` at width 64. The point,
+    measured at sf0.01 (see :func:`simhash64_hamming_pairs_wide`): the
+    narrow shared vocabulary that saturates 32 bits (hamming=0 collisions
+    across >1 K distinct docs) de-saturates at 64."""
+    return _simhash(spark, sf_dir, 64)
+
+
 # --- SimHash near-dup pairs (Hamming-banded blocking) ------------------------
-SIMHASH_MAX_HAMMING = 3  # ≤3 differing bits of 32 counts as near-dup
-_SIMHASH_BANDS = 4  # 4 bands × 8 bits: pigeonhole guarantees recall
+SIMHASH_MAX_HAMMING = 3  # ≤3 differing bits counts as near-dup
+# Both layouts cut the signature into 4 disjoint bands: pigeonhole
+# guarantees that a pair within Hamming ≤ 3 matches one band exactly.
+_SIMHASH_BANDS = 4
 
 
-def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance — the pairing step
-    that makes :func:`simhash32` a dedup pipeline rather than a
-    fingerprint column. Pigeonhole blocking: a 32-bit signature splits
-    into 4 disjoint 8-bit bands; any pair within Hamming ≤ 3 differs in
-    at most 3 bands, so at least one band matches EXACTLY — candidate
-    generation is therefore an equi-join on (band_idx, band_value), the
+def _simhash_pairs(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
+    """Near-duplicate pairs by ``width``-bit SimHash Hamming distance.
+    Pigeonhole blocking: the signature splits into ``_SIMHASH_BANDS``
+    disjoint bands of ``width / 4`` bits; any pair within Hamming ≤ 3
+    differs in at most 3 bands, so at least one band matches EXACTLY —
+    candidate generation is an equi-join on (band_idx, band_value), the
     Charikar/Manku-Jain-Sarma web-dedup shape, never an all-pairs scan.
-    Verification is one xor+popcount per candidate (codegen). At 100 TB
-    the band join shuffles 4 rows of (8-bit key, doc_id, signature) per
-    doc — band-value hot spots (e.g. the all-zeros band from boilerplate)
-    are the same skew class as hot shingles, handled by AQE skew split.
-    Output: (doc_a, doc_b, hamming) for candidate pairs at fingerprint
-    granularity. Note the honest limit, measured on this corpus: a
-    narrow shared vocabulary saturates 32 bits (at sf0.01 the hamming=0
-    class alone is 1,192 pairs across 194 distinct-text docs), so
-    32-bit simhash pairs are a RECALL-oriented candidate feed for an
-    exact verifier (the Jaccard stage); the de-saturated production
-    width is :func:`simhash64_hamming_pairs` — same plan, 8 bands,
-    13× fewer candidates on this corpus."""
-    sh = _staged_simhash(spark, sf_dir, 32)  # both join sides read one file
+    Verification is one xor+popcount per candidate (codegen). Band-value
+    hot spots (e.g. the all-zeros band from boilerplate) are the same
+    skew class as hot shingles, handled by AQE skew split. Output:
+    (doc_a, doc_b, hamming) for candidate pairs at fingerprint
+    granularity."""
+    sh = _staged_simhash(spark, sf_dir, width)  # both join sides read one file
+    bits = width // _SIMHASH_BANDS
     bands = None
     for b in range(_SIMHASH_BANDS):
         part = sh.select(
             "doc_id",
             "simhash",
             F.lit(b).alias("band_idx"),
-            F.expr(f"shiftright(simhash, {8 * b}) & 255").alias("band_val"),
+            F.expr(f"shiftright(simhash, {bits * b}) & {(1 << bits) - 1}").alias(
+                "band_val"
+            ),
         )
         bands = part if bands is None else bands.unionByName(part)
     a, b_ = bands.alias("a"), bands.alias("b")
@@ -2269,174 +2238,42 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- SimHash (64-bit; the de-saturated production variant) -------------------
-# 64-bit token hash from the md5's first 16 hex chars: two independent
-# 32-bit halves (signature bits 0-31 vote on hex chars 1-8, bits 32-63 on
-# chars 9-16) — bit-identical in duckdb, same portability recipe as
-# ``_SPARK_H``.
-_SPARK_H32A = "cast(conv(substr(md5({expr}), 1, 8), 16, 10) as bigint)"
-_SPARK_H32B = "cast(conv(substr(md5({expr}), 9, 8), 16, 10) as bigint)"
-_DUCK_H32A = "CAST(concat('0x', substr(md5({expr}), 1, 8)) AS BIGINT)"
-_DUCK_H32B = "CAST(concat('0x', substr(md5({expr}), 9, 8)) AS BIGINT)"
-
-_SIMHASH64_BANDS = 8  # 8 bands × 8 bits: pigeonhole recall for hamming ≤ 7
-
-_I64_MIN = -(1 << 63)  # bit 63's contribution in two's complement
-
-
-def simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash — the production width (Manku-Jain-Sarma use 64-bit
-    signatures for 8 B pages). Identical plan to :func:`simhash32` (one
-    distinct-token explode, one groupBy(doc_id) with per-bit ±1 vote sums,
-    all map-side-combinable); doubling the width costs 32 more long sum
-    buffers in the same pass, no extra shuffle. The point, measured at
-    sf0.01 (see :func:`simhash64_hamming_pairs`): the narrow shared
-    vocabulary that saturates 32 bits (hamming=0 collisions across >1 K
-    distinct docs) de-saturates at 64. Bit 63 lands in the sign bit
-    (two's complement); xor/popcount downstream is sign-agnostic."""
-    docs = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .distinct()
-        .withColumn("ha", F.expr(_SPARK_H32A.format(expr="tok")))
-        .withColumn("hb", F.expr(_SPARK_H32B.format(expr="tok")))
-    )
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.expr(
-                        f"(ha >> {b}) & 1" if b < 32 else f"(hb >> {b - 32}) & 1"
-                    )
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    acc = None
-    for b in range(63):
-        bit = (
-            F.when(F.col(f"v{b}") > 0, F.lit(1 << b).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-        acc = bit if acc is None else acc + bit
-    acc = acc + (
-        F.when(F.col("v63") > 0, F.lit(_I64_MIN)).otherwise(F.lit(0).cast("long"))
-    )
-    return votes.select("doc_id", acc.cast("bigint").alias("simhash"))
-
-
-def simhash64_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`simhash_hamming_pairs` at 64-bit width: the same pigeonhole
-    blocking (8 disjoint 8-bit bands — any pair within Hamming ≤ 7
-    matches some band exactly, a superset of the ≤ 3 verify threshold)
-    with the same equi-join + xor/popcount verify plan; only the
-    band count changes (8 shuffle rows per doc instead of 4, still
-    signature-granularity — never content). De-saturation, measured at
-    sf0.01 (500 all-distinct-text docs): 32-bit emits 21,223 pairs at
-    hamming ≤ 3 with a hamming=0 class of 1,192 pairs chaining 194
-    distinct docs — saturation cliques, not duplicates; 64-bit cuts the
-    ≤ 3 output 13× to 1,597 pairs and the hamming=0 class to 451 pairs /
-    78 docs (the residue is the corpus's genuinely templated
-    near-identical token sets, which IS what SimHash should pair). Same
-    numbers recorded in SCALE.md."""
-    sh = _staged_simhash(spark, sf_dir, 64)  # both join sides read one file
-    bands = None
-    for b in range(_SIMHASH64_BANDS):
-        part = sh.select(
-            "doc_id",
-            "simhash",
-            F.lit(b).alias("band_idx"),
-            F.expr(f"shiftright(simhash, {8 * b}) & 255").alias("band_val"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.expr("ha ^ hb")).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-    )
+def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate pairs by 32-bit SimHash (4 × 8-bit bands) — the
+    pairing step that makes :func:`simhash32` a dedup pipeline rather
+    than a fingerprint column. The honest limit, measured on this corpus:
+    a narrow shared vocabulary saturates 32 bits (at sf0.01 the
+    hamming=0 class alone is 1,192 pairs across 194 distinct-text docs),
+    so 32-bit pairs are a RECALL-oriented candidate feed for an exact
+    verifier (the Jaccard stage); the de-saturated production width is
+    :func:`simhash64_hamming_pairs_wide`."""
+    return _simhash_pairs(spark, sf_dir, 32)
 
 
 def simhash64_hamming_pairs_wide(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """:func:`simhash64_hamming_pairs` with 4 × 16-BIT bands — the
-    100 TB-shape variant. Pigeonhole is exact for the verify threshold:
-    a pair within Hamming ≤ 3 damages at most 3 of the 4 disjoint
-    16-bit bands, so at least one matches exactly — identical OUTPUT to
-    the 8-band form (both verify at ≤ 3; one oracle certifies both).
-    What changes is candidate volume: an 8-bit band has only 256
-    values, so a random corpus puts ~n/256 docs in every bucket and the
-    equi-join generates Θ(n²/256) candidates per band — measured on the
-    scale smoke's 50 K-doc corpus: 43.8 M candidate pairs under 8×8-bit
-    banding vs 102 K under 4×16-bit (430×). 16-bit bands give 65,536
-    buckets —
+    """Near-duplicate pairs by 64-bit SimHash with 4 × 16-bit bands.
+
+    De-saturation, measured at sf0.01 (500 all-distinct-text docs):
+    32-bit emits 21,223 pairs at hamming ≤ 3 with a hamming=0 class of
+    1,192 pairs chaining 194 distinct docs — saturation cliques, not
+    duplicates; 64-bit cuts the ≤ 3 output 13× to 1,597 pairs and the
+    hamming=0 class to 451 pairs / 78 docs (the residue is the corpus's
+    genuinely templated near-identical token sets, which IS what SimHash
+    should pair). Same numbers recorded in SCALE.md.
+
+    Why 16-bit bands: an 8-bit band has only 256 values, so a random
+    corpus puts ~n/256 docs in every bucket and the equi-join generates
+    Θ(n²/256) candidates per band — measured on the scale smoke's
+    50 K-doc corpus: 43.8 M candidate pairs under 8×8-bit banding vs
+    102 K under 4×16-bit (430×), for identical output (both are exact at
+    the ≤ 3 verify threshold). 16-bit bands give 65,536 buckets —
     Manku-Jain-Sarma's wider-key table design — pushing the quadratic
     wall out 256×; at genuinely web-scale n the next step is the same
     trick again (fewer, wider bands per extra Hamming bit of slack, or
-    signature-sorted prefix tables). Shuffle rows per doc: 4, same as
-    32-bit banding."""
-    sh = _staged_simhash(spark, sf_dir, 64)
-    bands = None
-    for b in range(4):
-        part = sh.select(
-            "doc_id",
-            "simhash",
-            F.lit(b).alias("band_idx"),
-            F.expr(f"shiftright(simhash, {16 * b}) & 65535").alias("band_val"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.expr("ha ^ hb")).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-    )
+    signature-sorted prefix tables). Shuffle rows per doc: 4."""
+    return _simhash_pairs(spark, sf_dir, 64)
 
 
 QUERIES = {
@@ -2474,7 +2311,6 @@ QUERIES = {
     "simhash32": simhash32,
     "simhash_hamming_pairs": simhash_hamming_pairs,
     "simhash64": simhash64,
-    "simhash64_hamming_pairs": simhash64_hamming_pairs,
     "simhash64_hamming_pairs_wide": simhash64_hamming_pairs_wide,
 }
 
@@ -2483,7 +2319,8 @@ def _duck_clusters_sql() -> str:
     """Recursive-CTE twin of :func:`dedup_clusters`: transitive closure over
     the same verified LSH pair graph, cluster id = MIN(reachable doc_id).
     Exact for the oracle's small graphs; the Spark side scales instead via
-    iterative label propagation (closure tables are |C|² per component)."""
+    union-find or star contraction (closure tables are |C|² per
+    component)."""
     return f"""
         WITH RECURSIVE
         mh AS ({_duck_minhash_sql()}),
@@ -2583,13 +2420,23 @@ def _duck_minhash_sql() -> str:
     """
 
 
-def _duck_simhash_sql() -> str:
-    h = _DUCK_H.format(expr="tok")
-    votes = ",\n               ".join(
-        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(32)
+def _duck_simhash_sql(width: int) -> str:
+    """DuckDB twin of :func:`_simhash` at ``width`` bits."""
+    words = _DUCK_SIMHASH_WORDS[width]
+    hashed = ", ".join(
+        f"{h.format(expr='tok')} AS h{w}" for w, h in enumerate(words)
     )
-    acc = " + ".join(f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(32))
+    votes = ",\n               ".join(
+        f"SUM(CASE WHEN (h{b // 32} >> {b % 32}) & 1 = 1 THEN 1 ELSE -1 END)"
+        f" AS v{b}"
+        for b in range(width)
+    )
+    # bit 63 is the sign bit; its literal is spelled as a BIGINT expression
+    acc = " + ".join(
+        f"(CASE WHEN v{b} > 0 THEN "
+        f"{'(-9223372036854775807 - 1)' if b == 63 else 1 << b} ELSE 0 END)"
+        for b in range(width)
+    )
     return rf"""
         WITH toks AS (
             SELECT DISTINCT doc_id, tok FROM (
@@ -2597,7 +2444,7 @@ def _duck_simhash_sql() -> str:
                 FROM documents
             ) WHERE tok <> ''
         ),
-        hashed AS (SELECT doc_id, {h} AS h FROM toks),
+        hashed AS (SELECT doc_id, {hashed} FROM toks),
         votes AS (
             SELECT doc_id,
                {votes}
@@ -2605,6 +2452,33 @@ def _duck_simhash_sql() -> str:
         )
         SELECT doc_id, CAST({acc} AS BIGINT) AS simhash FROM votes
     """
+
+
+def _duck_simhash_pairs_sql(width: int, n_bands: int) -> str:
+    """DuckDB twin of :func:`_simhash_pairs`: ``n_bands`` disjoint bands
+    of the ``width``-bit signature, band equi-join, xor/popcount verify."""
+    bits = width // n_bands
+    band_rows = " UNION ALL ".join(
+        f"SELECT doc_id, simhash, {b} AS band_idx,"
+        f" (simhash >> {bits * b}) & {(1 << bits) - 1} AS band_val FROM sh"
+        for b in range(n_bands)
+    )
+    return f"""
+    WITH sh AS ({_duck_simhash_sql(width)}),
+    bands AS ({band_rows}),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               a.simhash AS ha, b.simhash AS hb
+        FROM bands a JOIN bands b
+          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
+         AND a.doc_id < b.doc_id
+    )
+    SELECT doc_a, doc_b, hamming FROM (
+        SELECT doc_a, doc_b,
+               CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
+        FROM cand
+    ) WHERE hamming <= {SIMHASH_MAX_HAMMING}
+"""
 
 
 _DUCK_LINE_EXPR = (
@@ -2780,7 +2654,7 @@ ORACLE = {
     """,
     "minhash_lsh_pairs": _duck_minhash_sql(),
     "dedup_clusters": _duck_clusters_sql(),
-    # the star variant must agree with label propagation bit-for-bit, so it
+    # the star variant must agree with the union-find bit-for-bit, so it
     # shares the recursive-CTE transitive-closure oracle verbatim
     "dedup_clusters_star": _duck_clusters_sql(),
     "dedup_corpus_summary": f"""
@@ -2796,7 +2670,7 @@ ORACLE = {
         JOIN documents d ON c.doc_id = d.doc_id
         GROUP BY d.lang
     """,
-    "simhash32": _duck_simhash_sql(),
+    "simhash32": _duck_simhash_sql(32),
     # split buckets from the canonical portable hash; leak audit over the
     # same verified pair list the clusters are built from
     "leakage_safe_split": f"""
@@ -2843,12 +2717,6 @@ ORACLE = {
         ORDER BY c.method, c.split_name
     """,
 }
-
-_SIMHASH_BAND_ROWS = " UNION ALL ".join(
-    f"SELECT doc_id, simhash, {b} AS band_idx,"
-    f" (simhash >> {8 * b}) & 255 AS band_val FROM sh"
-    for b in range(_SIMHASH_BANDS)
-)
 
 _EQ16 = " + ".join(
     f"(CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END)" for i in range(N_HASHES)
@@ -2997,85 +2865,12 @@ ORACLE["dedup_editdist_verify"] = f"""
           <= GREATEST(length(ta.t), length(tb.t))
 """
 
-ORACLE["simhash_hamming_pairs"] = f"""
-    WITH sh AS ({_duck_simhash_sql()}),
-    bands AS ({_SIMHASH_BAND_ROWS}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.simhash AS ha, b.simhash AS hb
-        FROM bands a JOIN bands b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, hamming FROM (
-        SELECT doc_a, doc_b,
-               CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-        FROM cand
-    ) WHERE hamming <= {SIMHASH_MAX_HAMMING}
-"""
-
-
-def _duck_simhash64_sql() -> str:
-    ha = _DUCK_H32A.format(expr="tok")
-    hb = _DUCK_H32B.format(expr="tok")
-    votes = ",\n               ".join(
-        (
-            f"SUM(CASE WHEN (ha >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-            if b < 32
-            else f"SUM(CASE WHEN (hb >> {b - 32}) & 1 = 1 THEN 1 ELSE -1 END)"
-            f" AS v{b}"
-        )
-        for b in range(64)
-    )
-    acc = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(63)
-    )
-    acc += " + (CASE WHEN v63 > 0 THEN (-9223372036854775807 - 1) ELSE 0 END)"
-    return rf"""
-        WITH toks AS (
-            SELECT DISTINCT doc_id, tok FROM (
-                SELECT doc_id, UNNEST(string_split_regex(lower(text), '\s+')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
-        hashed AS (SELECT doc_id, {ha} AS ha, {hb} AS hb FROM toks),
-        votes AS (
-            SELECT doc_id,
-               {votes}
-            FROM hashed GROUP BY doc_id
-        )
-        SELECT doc_id, CAST({acc} AS BIGINT) AS simhash FROM votes
-    """
-
-
-ORACLE["simhash64"] = _duck_simhash64_sql()
-
-_SIMHASH64_BAND_ROWS = " UNION ALL ".join(
-    f"SELECT doc_id, simhash, {b} AS band_idx,"
-    f" (simhash >> {8 * b}) & 255 AS band_val FROM sh"
-    for b in range(_SIMHASH64_BANDS)
-)
-
-ORACLE["simhash64_hamming_pairs"] = f"""
-    WITH sh AS ({_duck_simhash64_sql()}),
-    bands AS ({_SIMHASH64_BAND_ROWS}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.simhash AS ha, b.simhash AS hb
-        FROM bands a JOIN bands b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, hamming FROM (
-        SELECT doc_a, doc_b,
-               CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-        FROM cand
-    ) WHERE hamming <= {SIMHASH_MAX_HAMMING}
-"""
-
-# 4×16-bit banding finds exactly the same ≤3-Hamming pairs (pigeonhole is
-# exact at the verify threshold) — one oracle certifies both band layouts
-ORACLE["simhash64_hamming_pairs_wide"] = ORACLE["simhash64_hamming_pairs"]
+ORACLE["simhash_hamming_pairs"] = _duck_simhash_pairs_sql(32, _SIMHASH_BANDS)
+ORACLE["simhash64"] = _duck_simhash_sql(64)
+# the oracle bands 64 bits as 8 × 8 bits, not the entry's 4 × 16: both
+# layouts are exact at the ≤ 3 verify threshold, so equal rows also
+# certify the entry's pigeonhole recall
+ORACLE["simhash64_hamming_pairs_wide"] = _duck_simhash_pairs_sql(64, 8)
 
 # shared (doc_id, pos, wh) window CTE — the oracle twin of _substr_windows
 _DUCK_SUBSTR_WINS = rf"""base AS (

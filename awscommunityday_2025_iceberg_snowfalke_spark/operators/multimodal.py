@@ -498,7 +498,7 @@ def multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one canonical survivor — the text side's
     ``dedup_clusters`` argument, applied to the media layer). Connected
     components over the verified pHash pair graph via the same
-    diameter-bounded label propagation the text clusters use; output is
+    ``connected_components`` the text clusters use; output is
     one row per ASSET (originals and planted re-encode variants alike):
     component id = min reachable asset_id, component size, the
     canonical-survivor flag, and an ``is_variant`` marker so the row set
@@ -506,9 +506,9 @@ def multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its cluster_id is the original's id — never its own).
 
     Scale: the pair graph is already sub-corpus (banded, verified); the
-    component pass is the shared O(diameter)-round propagation; the
-    report window partitions by cluster id. Same budgets as the text
-    cluster family."""
+    component pass is a driver union-find, or O(log n) star-contraction
+    rounds past the driver bound; the report window partitions by
+    cluster id. Same budgets as the text cluster family."""
     from .dedup import connected_components
 
     docs = load(spark, sf_dir, "documents").select("doc_id")

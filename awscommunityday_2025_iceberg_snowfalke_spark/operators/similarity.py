@@ -703,112 +703,41 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_THRESHOLD = 0.4  # same scale as NEAR_DUP_THRESHOLD for this corpus
 
 
-def semantic_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expression-fold CONTRAST VARIANT of :func:`semantic_dedup` (the
-    registered primary is the per-cell Arrow dgemm below — measured 3.5×
-    faster at sf0.1, 1.09 s vs 4.37 s, because the interpreted
-    ``aggregate``-fold cosine inside the cell self-join is the HOF hazard
-    SCALE.md documents; the shuffle SHAPE of the two is identical). Kept
-    because its pair join is the declarative plan-shape witness (the
-    cell-keyed equi-join plan test runs against this form) and both
-    variants share one oracle, so the A/B stays certified.
-
-    SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication"): cluster the embedding
-    space coarsely, then call a vector a *semantic duplicate* if some
-    lower-id member of its own cell has cosine ≥ threshold — semantically
-    redundant docs whose text-level shingles never collide (paraphrases,
-    re-renderings) that MinHash can't see. Keep-lowest-id survivors.
-
-    Spark shape: cell assignment reuses the IVF coarse quantizer
-    (:func:`_centroids` — k×dim, broadcast) with a max_by aggregation
-    (map-side combinable; no per-vector window), the staged assignment
-    self-equi-joins ON CELL ONLY — shuffle keyed by cell, AQE-splittable —
-    never a corpus cross-join. Pairwise work is per-cell quadratic by
-    design; SemDeDup's contract at 100 TB is growing k with the corpus so
-    |cell| stays bounded (the paper uses k = O(√n); our k tracks the
-    label/centroid count). Ties and floats follow the proven
-    cross-engine cosine recipe, so the duckdb twin is exact."""
-    emb = load(spark, sf_dir, "embeddings")
-    cent = _centroids(emb)
-    v = (
-        emb.select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("ne", _norm(F.col("e")))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    c = cent.select(
-        F.col("label").alias("cell"), F.col("centroid").alias("ce")
-    ).withColumn("nc", _norm(F.col("ce")))
-    scored = v.crossJoin(F.broadcast(c)).select(
-        "vec_id",
-        "e",
-        "ne",
-        "cell",
-        (_dot(F.col("e"), F.col("ce")) / (F.col("ne") * F.col("nc"))).alias(
-            "cell_cos"
-        ),
-    )
-    # nearest cell per vector: max_by on (cos, -cell) == the oracle's
-    # ROW_NUMBER() ... ORDER BY cos DESC, cell ASC — as one hash agg
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell", "e", "ne"),
-                F.struct(
-                    F.col("cell_cos").alias("s"), (-F.col("cell")).alias("t")
-                ),
-            ).alias("a")
-        )
-        .select(
-            "vec_id",
-            F.col("a.cell").alias("cell"),
-            F.col("a.e").alias("e"),
-            F.col("a.ne").alias("ne"),
-        )
-    )
-    assign = stage(assign)  # consumed twice: self-join sides + final flags
-    a = assign.alias("a")
-    b = assign.alias("b")
-    dup_ids = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("b.vec_id") < F.col("a.vec_id")),
-        )
-        .filter(
-            _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.ne") * F.col("b.ne"))
-            >= SEMDEDUP_THRESHOLD
-        )
-        .select(F.col("a.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    return assign.join(
-        dup_ids.withColumn("d", F.lit(True)), "vec_id", "left"
-    ).select(
-        "vec_id",
-        "cell",
-        F.coalesce(F.col("d"), F.lit(False)).alias("is_semdup"),
-    )
-
-
 # --- the IVF coarse quantizer: each decision in one place --------------------
 # FAISS-style IVF (Jégou, Douze, Schmid 2011): label-mean centroids, cell
 # assignment by (cos DESC, cell ASC), probing each query's top cells. Every
 # ANN entry calls these; the Arrow closures call the two kernels per batch.
 
 
+def _first_copy(rows):
+    """Index of each row's first identical row in the matrix ``rows``.
+    BLAS may round the columns of ``X @ rows.T`` that belong to two
+    identical rows differently, so the kernels read a duplicate's score
+    column from its first copy: identical centroids or codewords then tie
+    exactly and the lower one wins, as in the oracle's per-pair fold."""
+    import numpy as np
+
+    _, first, inverse = np.unique(
+        rows, axis=0, return_index=True, return_inverse=True
+    )
+    return first[inverse.reshape(-1)]
+
+
 def _quantizer(cent_rows: list, rot=None) -> tuple:
-    """``(cells, C, Cn)`` of a label-ascending centroid table (collected
-    Rows or ``{label, centroid}`` dicts): the cell ids, the k×d centroid
-    matrix — times the caller's ``rot`` when given — and its row norms."""
+    """``(cells, C, Cn, first)`` of a label-ascending centroid table
+    (collected Rows or ``{label, centroid}`` dicts): the cell ids, the
+    k×d centroid matrix — times the caller's ``rot`` when given — its row
+    norms, and :func:`_first_copy` of the unrotated rows. A duplicate
+    row of the rotated matrix is its first copy's row, so codebooks cut
+    from it keep identical codewords identical."""
     import numpy as np
 
     cells = np.array([int(r["label"]) for r in cent_rows], dtype=np.int64)
     C = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+    first = _first_copy(C)
     if rot is not None:
-        C = C @ rot
-    return cells, C, np.linalg.norm(C, axis=1)
+        C = (C @ rot)[first]
+    return cells, C, np.linalg.norm(C, axis=1), first
 
 
 def _query_batch(emb: DataFrame, rot=None) -> tuple:
@@ -832,26 +761,28 @@ def _query_batch(emb: DataFrame, rot=None) -> tuple:
 def _nearest_cells(E, quant: tuple) -> tuple:
     """``(cell, En)`` per row of ``E``: the argmax of E·Cᵀ/(‖E‖‖C‖) over
     the quantizer's cells — numpy's argmax takes the FIRST max, so a
-    cosine tie goes to the lower cell, the oracle's (cos DESC, cell ASC)
-    — and the row norms, which the scoring closures reuse."""
+    cosine tie goes to the lower cell, the oracle's (cos DESC, cell ASC);
+    a duplicate centroid reads its first copy's column — and the row
+    norms, which the scoring closures reuse."""
     import numpy as np
 
-    cells, C, Cn = quant
+    cells, C, Cn, first = quant
     En = np.linalg.norm(E, axis=1)
-    A = (E @ C.T) / (En[:, None] * Cn[None, :])
+    A = ((E @ C.T) / (En[:, None] * Cn[None, :]))[:, first]
     return cells[np.argmax(A, axis=1)], En
 
 
 def _probe_cells(quant: tuple, Q, Qn, n_probe: int) -> dict:
     """``{cell: [(query index, probe rank), ...]}``: each query's
     top-``n_probe`` cells by cosine — ``lexsort`` on (−cos, cell), so a
-    tie lists the lower cell first — with 1-based ranks. Under each cell
+    tie, duplicate centroids included, lists the lower cell first — with
+    1-based ranks. Under each cell
     the queries keep batch order, so per-cell query matrices built from
     this are row-for-row the batch's."""
     import numpy as np
 
-    cells, C, Cn = quant
-    qc = (Q @ C.T) / (Qn[:, None] * Cn[None, :])
+    cells, C, Cn, first = quant
+    qc = ((Q @ C.T) / (Qn[:, None] * Cn[None, :]))[:, first]
     by_cell: dict = {}
     for qi in range(len(Q)):
         for rank0, ci in enumerate(np.lexsort((cells, -qc[qi]))[:n_probe]):
@@ -862,7 +793,7 @@ def _probe_cells(quant: tuple, Q, Qn, n_probe: int) -> dict:
 def _assigned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cell, embedding): every corpus vector tagged with its
     nearest-centroid cell — :func:`_assign_frozen` against the corpus's
-    own centroids. Shared by the SemDeDup dgemm twin and the
+    own centroids. Shared by :func:`semantic_dedup` and the
     cell-partitioned IVF store."""
     emb = load(spark, sf_dir, "embeddings")
     cent_rows = _centroids(emb).orderBy("label").collect()
@@ -870,24 +801,30 @@ def _assigned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup, registered primary (Arrow/numpy formulation; the
-    expression-fold twin :func:`semantic_dedup_fold` is the documented
-    contrast variant — same shuffle shape, measured 3.5× slower at sf0.1,
-    pure HOF-interpretation overhead at 100×) — the execution shape a
-    real 100 TB SemDeDup pass uses: cell assignment is ONE map-only
-    ``mapInPandas`` pass (centroid matrix in the UDF closure, one numpy
-    matmul per Arrow batch; argmax takes the first/lowest cell on ties,
-    matching the oracle's cos DESC, cell ASC), and the within-cell
-    pairwise check is one dgemm per cell via ``applyInPandas`` — no
-    expression-fold interpretation, no pair-row explosion (the m×m score
-    matrix never leaves the executor). At real scale a huge cell is
-    processed in blocked row-strips against the same cell matrix (bounded
-    memory), and cells shard across executors by the groupBy key.
+    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
+    web-scale through semantic deduplication"): cluster the embedding
+    space coarsely, then call a vector a *semantic duplicate* if some
+    lower-id member of its own cell has cosine ≥ threshold — semantically
+    redundant docs whose text-level shingles never collide (paraphrases,
+    re-renderings) that MinHash can't see. Keep-lowest-id survivors.
+
+    Execution shape: cell assignment is ONE map-only ``mapInPandas`` pass
+    (centroid matrix in the UDF closure, one numpy matmul per Arrow
+    batch; argmax takes the first/lowest cell on ties, matching the
+    oracle's cos DESC, cell ASC), and the within-cell pairwise check is
+    one dgemm per cell via ``applyInPandas``, shuffled by cell — never a
+    corpus cross-join, and no pair-row explosion (the m×m score matrix
+    never leaves the executor). Pairwise work is per-cell quadratic by
+    design; SemDeDup's contract at 100 TB is growing k with the corpus so
+    |cell| stays bounded (the paper uses k = O(√n)). At real scale a huge
+    cell is processed in blocked row-strips against the same cell matrix
+    (bounded memory). An expression-fold formulation of the same pair
+    join measured 3.5× slower at sf0.1 (4.37 s vs 1.09 s): the
+    interpreted ``aggregate`` fold is the HOF hazard SCALE.md documents.
 
     numpy matmul reassociates float adds vs the oracle's sequential fold;
-    parity of the thresholded booleans is verified against the same
-    duckdb oracle as the expression twin on the fixed testdata (the
-    ``knn_pandas_cosine`` stance)."""
+    parity of the thresholded booleans is verified against the duckdb
+    oracle on the fixed testdata (the ``knn_pandas_cosine`` stance)."""
     import numpy as np
     import pandas as pd
 
@@ -1585,7 +1522,8 @@ def _pq_codes(E, split: list, cb: list) -> tuple:
     """``(codes, rn2)`` per row of ``E``: per subspace the argmin of
     ‖x − c‖² expanded as x·x − 2x·c + c·c (the oracle's expansion;
     numpy's argmin takes the FIRST min, so a distance tie goes to the
-    lower code, the oracle's (dist ASC, code ASC)), and the
+    lower code, the oracle's (dist ASC, code ASC); a duplicate codeword
+    reads its first copy's distances, see :func:`_first_copy`), and the
     reconstruction's squared norm summed over subspaces m-ascending."""
     import numpy as np
 
@@ -1595,7 +1533,7 @@ def _pq_codes(E, split: list, cb: list) -> tuple:
         Em = E[:, split[m]]
         cn2 = (cb[m] * cb[m]).sum(axis=1)
         D = (Em * Em).sum(axis=1)[:, None] - 2.0 * (Em @ cb[m].T)
-        D = D + cn2[None, :]
+        D = (D + cn2[None, :])[:, _first_copy(cb[m])]
         cm = np.argmin(D, axis=1)
         codes[:, m] = cm
         rn2 = rn2 + cn2[cm]
@@ -3615,7 +3553,6 @@ QUERIES = {
     "ann_lsh_cosine": ann_lsh_cosine,
     "dedup_embedding_cosine": dedup_embedding_cosine,
     "semantic_dedup": semantic_dedup,
-    "semantic_dedup_fold": semantic_dedup_fold,
     "semantic_dedup_threshold_sweep": semantic_dedup_threshold_sweep,
     "semantic_dedup_incremental": semantic_dedup_incremental,
     "ann_ivf_cosine": ann_ivf_cosine,
@@ -4387,10 +4324,6 @@ ORACLE["semantic_dedup"] = f"""
     SELECT s.vec_id, s.cell, d.vec_id IS NOT NULL AS is_semdup
     FROM assign s LEFT JOIN dup d ON s.vec_id = d.vec_id
 """
-
-# the expression-fold contrast variant must produce the same thresholded
-# flags as the registered dgemm primary — one oracle certifies the A/B
-ORACLE["semantic_dedup_fold"] = ORACLE["semantic_dedup"]
 
 _SWEEP_VALUES = ", ".join(f"({e!r})" for e in SEMDEDUP_SWEEP)
 ORACLE["semantic_dedup_threshold_sweep"] = f"""

@@ -1049,7 +1049,11 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    from ..operators.analytics import QSK_BIN_CAP, QSK_QUANTILES
+    from ..operators.analytics import (
+        QSK_BIN_CAP,
+        QSK_QUANTILES,
+        _merged_histogram,
+    )
 
     b = F.least(F.floor("value").cast("int"), F.lit(QSK_BIN_CAP)).alias(
         "bin"
@@ -1075,45 +1079,10 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    store = spark.read.parquet(store_dir)
-    merged = store.groupBy("bin").agg(F.sum("c").alias("c"))
-    direct = ev.select(b).groupBy("bin").agg(F.count(F.lit(1)).alias("c"))
-    # r17 (guide §1.2, the quantile_sketch_rollup device): the batch
-    # count, the two exceptAll mergeability probes (each re-running the
-    # direct events scan) and the bins read were four sequential jobs;
-    # one tagged union collects both bounded histograms plus the batch
-    # count in a single job, and the equality check — identical on
-    # unique bin keys — runs on the driver. Trigger machinery above is
-    # untouched (it IS the operator's subject).
-    def _tag(df, t):
-        return df.select(
-            F.lit(t).alias("t"),
-            F.col("bin").cast("long").alias("k"),
-            F.col("c").cast("long").alias("v"),
-        )
-
-    batches_row = store.agg(
-        F.countDistinct("batch_id").cast("long").alias("v")
-    ).select(
-        F.lit("nb").alias("t"), F.lit(-1).cast("long").alias("k"), "v"
+    bins, n_batches = _merged_histogram(
+        spark.read.parquet(store_dir), ev.select(b), "batch_id", "stream merge"
     )
-    mm: dict = {}
-    dd: dict = {}
-    n_batches = 0
-    for r in (
-        _tag(merged, "m").unionByName(_tag(direct, "d")).unionByName(
-            batches_row
-        )
-    ).collect():
-        if r["t"] == "m":
-            mm[int(r["k"])] = int(r["v"])
-        elif r["t"] == "d":
-            dd[int(r["k"])] = int(r["v"])
-        else:
-            n_batches = int(r["v"])
     assert n_batches == 4, f"expected 4 micro-batches, got {n_batches}"
-    assert mm == dd, "stream merge diverges from the direct histogram"
-    bins = sorted(mm.items())
     n = sum(c for _, c in bins)
     rows = []
     for qv in QSK_QUANTILES:

@@ -68,7 +68,6 @@ SUITES: dict[str, list[str]] = {
         "training_export_manifest",
         "dedup_clusters_star",
         "semantic_dedup",
-        "semantic_dedup_fold",
         "dsir_importance_weights",
         "knn_hard_negatives",
         "quota_sample_tokens_budget",
@@ -79,7 +78,6 @@ SUITES: dict[str, list[str]] = {
         "embedding_dim_stats",
         "quota_sample_tokens_budget_skewsafe",
         "ann_ivf_recall_report",
-        "simhash64_hamming_pairs",
         "simhash64_hamming_pairs_wide",
         "dedup_ngram_containment",
         "embedding_gram_matrix",
@@ -259,11 +257,7 @@ HEADLINE = HEADLINE_TREND + HEADLINE_ADDITIONS
 # it is a 4-commit write-path fixture (two DV waves with per-target vector
 # writes + changelog + 4 versioned reads ≈ 20 s) whose wall-clock is
 # commit I/O, not a plan property — mor_delete_events already represents
-# the lifecycle-write class at ~1.5 s (the semantic_dedup_fold precedent).
-# retired from the headline in r11 (kept registered + oracle-gated):
-# semantic_dedup_fold — the intentional 4× HOF-interpretation contrast of
-# the Arrow-dgemm primary; its story lives in SCALE.md, its 4.7 s
-# (contended) was a third of the headline tail for zero added signal.
+# the lifecycle-write class at ~1.5 s.
 # bpe_train_merges_deep stays OFF the headline (the dv_delete_events
 # precedent): it is bpe_train_merges at 64 rounds, the same two Spark
 # jobs plus more driver rounds, so it adds no plan signal;

@@ -197,18 +197,24 @@ def test_kmeans_ivf_train_matches_python_replay(spark):
         ), cell
 
 
-def test_simhash_banding_loses_no_pairs(oracle):
-    """Pigeonhole recall proof by enumeration: the 4×8-bit band blocking
-    must return EXACTLY the pairs a brute-force all-pairs Hamming scan
-    finds (≤ SIMHASH_MAX_HAMMING bits differ ⇒ ≥ 1 band matches exactly,
-    so banding can only ever be lossless) — checked against a DuckDB
-    all-pairs twin the Spark/oracle pipeline never uses."""
+@pytest.mark.parametrize(
+    "entry, width",
+    [("simhash_hamming_pairs", 32), ("simhash64_hamming_pairs_wide", 64)],
+    ids=["w32", "w64"],
+)
+def test_simhash_banding_loses_no_pairs(spark, oracle, entry, width):
+    """Pigeonhole recall proof by enumeration: the 4-band blocking (4×8
+    bits at width 32, 4×16 at width 64) must return EXACTLY the pairs a
+    brute-force all-pairs Hamming scan finds (≤ SIMHASH_MAX_HAMMING bits
+    differ ⇒ ≥ 1 band matches exactly, so banding can only ever be
+    lossless) — checked against a DuckDB all-pairs twin the Spark/oracle
+    pipeline never uses."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
 
-    banded = oracle.sql(dedup.ORACLE["simhash_hamming_pairs"]).df()
+    banded = dedup.QUERIES[entry](spark, SF_DIR).collect()
     brute = oracle.sql(
         f"""
-        WITH sh AS ({dedup._duck_simhash_sql()})
+        WITH sh AS ({dedup._duck_simhash_sql(width)})
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -216,9 +222,7 @@ def test_simhash_banding_loses_no_pairs(oracle):
               <= {dedup.SIMHASH_MAX_HAMMING}
         """
     ).df()
-    assert set(map(tuple, banded.values.tolist())) == set(
-        map(tuple, brute.values.tolist())
-    )
+    assert set(map(tuple, banded)) == set(map(tuple, brute.values.tolist()))
 
 
 def test_hot_shingle_cap_noop_below_threshold(spark, oracle):

@@ -234,21 +234,22 @@ def test_shingle_expression_stays_behind_checkpoint(spark):
 
 
 def test_semantic_dedup_pair_join_is_cell_keyed(spark):
-    """SemDeDup's within-cell pair join must be an equi join on the cell
-    key — a nested-loop over the staged assignment would be the corpus
-    cross-join the cell bucketing exists to avoid. (The one allowed
-    nested-loop is the k-row centroid broadcast during assignment, which
-    lives BEHIND the staging barrier and so never appears in this plan.)"""
+    """SemDeDup's within-cell pair work must be keyed by cell — a
+    nested-loop or cartesian product over the assignment would be the
+    corpus cross-join the cell bucketing exists to avoid. The per-cell
+    dgemm runs after one exchange on the cell key."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators import similarity
 
     plan = (
-        similarity.semantic_dedup_fold(spark, SF_DIR)
+        similarity.semantic_dedup(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "FlatMapGroupsInPandas [cell" in plan
+    assert "hashpartitioning(cell" in plan
 
 
 def test_dsir_weights_broadcast_and_bounded_shuffles(spark):

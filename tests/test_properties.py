@@ -254,9 +254,9 @@ def test_hourly_gapfill_spine_complete(spark):
     n_nodes=st.integers(min_value=1, max_value=25),
 )
 def test_connected_components_equals_union_find(spark, edges, n_nodes):
-    """Min-label propagation must match a sequential union-find on random
-    graphs — including chains near the iteration bound, self-loops, and
-    edges referencing only a subset of nodes."""
+    """Connected components must match a sequential union-find on random
+    graphs — including long chains, self-loops, and edges referencing
+    only a subset of nodes — on both paths."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
         connected_components,
     )
@@ -288,9 +288,9 @@ def test_connected_components_equals_union_find(spark, edges, n_nodes):
     pairs_df = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], "doc_a long, doc_b long"
     )
-    # r17: exercise BOTH paths — the driver union-find fast path (the
-    # default at this size) and the distributed propagation rounds
-    # (fast path forced off) must produce identical labels
+    # exercise BOTH paths — the driver union-find fast path (the default
+    # at this size) and star contraction (fast path forced off) must
+    # produce identical labels
     from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
 
     got = {
@@ -298,15 +298,15 @@ def test_connected_components_equals_union_find(spark, edges, n_nodes):
         for r in connected_components(nodes_df, pairs_df).collect()
     }
     assert got == expect
-    saved = dedup._CC_DRIVER_MAX_EDGES
-    dedup._CC_DRIVER_MAX_EDGES = 0
+    saved = dedup._CC_DRIVER_MAX_PAIRS
+    dedup._CC_DRIVER_MAX_PAIRS = 0
     try:
         got_dist = {
             r["id"]: r["label"]
             for r in connected_components(nodes_df, pairs_df).collect()
         }
     finally:
-        dedup._CC_DRIVER_MAX_EDGES = saved
+        dedup._CC_DRIVER_MAX_PAIRS = saved
     assert got_dist == expect
 
 
@@ -365,24 +365,18 @@ def test_connected_components_star_equals_union_find(spark, edges, n_nodes):
 
 
 def test_star_handles_chain_beyond_labelprop_budget(spark, monkeypatch):
-    """A 60-node chain has diameter 59 > _CC_MAX_ITERS: the DISTRIBUTED
-    label propagation (driver fast path disabled) must refuse (silently
-    split labels are worse than an error) while the star contraction
-    converges in O(log n) rounds — the documented escalation, now
-    executable. With the r17 driver union-find fast path ON (its default
-    covers this graph), the same chain must instead just solve — the
-    fast path has no diameter budget."""
-    import pytest
-
+    """A 60-node chain has diameter 59, past any small round budget of
+    min-label propagation. Star contraction converges in O(log n)
+    rounds; the driver union-find fast path has no diameter budget; and
+    with the fast path forced off, ``connected_components`` escalates to
+    star contraction and solves the chain too."""
     from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
-        _CC_MAX_ITERS,
         connected_components,
         connected_components_star,
     )
 
     n = 60
-    assert n - 1 > _CC_MAX_ITERS
     nodes = spark.createDataFrame([(v,) for v in range(n)], "id long")
     chain = spark.createDataFrame(
         [(v, v + 1) for v in range(n - 1)], "doc_a long, doc_b long"
@@ -392,16 +386,46 @@ def test_star_handles_chain_beyond_labelprop_budget(spark, monkeypatch):
         for r in connected_components_star(nodes, chain).collect()
     }
     assert got == {v: 0 for v in range(n)}
-    # r17 fast path: the chain is tiny, so union-find solves it exactly
     got_fast = {
         r["id"]: r["label"]
         for r in connected_components(nodes, chain).collect()
     }
     assert got_fast == {v: 0 for v in range(n)}
-    # distributed path (fast path forced off): the refusal contract holds
-    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
-    with pytest.raises(RuntimeError, match="large-star"):
-        connected_components(nodes, chain).collect()
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
+    got_dist = {
+        r["id"]: r["label"]
+        for r in connected_components(nodes, chain).collect()
+    }
+    assert got_dist == {v: 0 for v in range(n)}
+
+
+def test_connected_components_fast_path_stages_pairs_once(spark, monkeypatch):
+    """The driver fast path writes exactly one ``stage()`` barrier — the
+    undirected pairs, not a doubled edge list — and runs no job beyond
+    that barrier's and the bounded probe collect's."""
+    from conftest import jobs_of
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
+
+    nodes = spark.createDataFrame([(v,) for v in range(10)], "id long")
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (5, 6), (7, 7)], "doc_a long, doc_b long"
+    )
+    stage, staged = dedup.stage, []
+
+    def counting_stage(df, name=None):
+        staged.append(df.columns)
+        return stage(df, name)
+
+    out = []
+    barrier = jobs_of(spark, lambda: out.append(stage(pairs)))
+    probe = jobs_of(
+        spark, lambda: out[0].limit(dedup._CC_DRIVER_MAX_PAIRS + 1).collect()
+    )
+    monkeypatch.setattr(dedup, "stage", counting_stage)
+    jobs = jobs_of(spark, lambda: dedup.connected_components(nodes, pairs))
+    assert staged == [["doc_a", "doc_b"]]
+    assert jobs == barrier + probe
 
 
 @settings(
@@ -615,6 +639,38 @@ def test_ivf_quantizer_ties_go_to_the_lower_cell_and_code():
         for m in range(S.PQ_M):
             expect = expect + (cb[m] * cb[m]).sum(axis=1)[codes[:, m]]
         assert np.array_equal(rn2, expect)
+
+
+def test_ivf_quantizer_duplicate_float_rows_tie_exactly():
+    """The same tie rule on random floats: centroid rows (b, a, a), with
+    and without a rotation. BLAS rounds the two identical columns of
+    E·Cᵀ differently, and rotating the two identical rows gives two
+    slightly different rows, so without the first-copy rule some vectors
+    go to cell 2, probe it first, or take code 2."""
+    import numpy as np
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
+        similarity as S,
+    )
+
+    rng = np.random.default_rng(11)
+    a, b = rng.standard_normal(S.DIM), rng.standard_normal(S.DIM)
+    rows = [
+        {"label": c, "centroid": list(v)} for c, v in enumerate((b, a, a))
+    ]
+    E = a + 0.5 * rng.standard_normal((2000, S.DIM))
+    rot, _ = np.linalg.qr(rng.standard_normal((S.DIM, S.DIM)))
+    for R in (None, rot):
+        X = E if R is None else E @ R
+        quant = S._quantizer(rows, R)
+        cells, _ = S._nearest_cells(X, quant)
+        assert cells.tolist() == [1] * len(X)
+        by_cell = S._probe_cells(quant, X, np.linalg.norm(X, axis=1), 2)
+        assert by_cell[1] == [(qi, 1) for qi in range(len(X))]
+        assert by_cell[2] == [(qi, 2) for qi in range(len(X))]
+        split, cb = S._pq_books(quant[1])
+        codes, _ = S._pq_codes(X, split, cb)
+        assert not (codes == 2).any()
 
 
 def test_ivf_kernels_ship_by_value(tmp_path):

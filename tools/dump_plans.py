@@ -48,13 +48,6 @@ PICK = [
         "on cell — non-probed cells are never listed",
     ),
     (
-        "semantic_dedup_fold",
-        "SemDeDup (declarative contrast variant): broadcast centroid "
-        "assignment (one max_by hash agg), cell-keyed self-join — no "
-        "corpus cross-join; the registered primary computes the same "
-        "flags per-cell via applyInPandas dgemm",
-    ),
-    (
         "quota_sample_tokens_budget_skewsafe",
         "skew-safe quota fill: hash-bucket prefix filter sits below the "
         "lang-keyed window, so a dominant stratum sorts ~budget-sized "
