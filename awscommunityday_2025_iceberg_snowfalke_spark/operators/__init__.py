@@ -69,15 +69,20 @@ def _modules():
 # and the list stays exactly 50 (test_registry pins it). The per-round
 # rotation history is in COVERAGE.md.
 _GATE_FRONT = (
-    "benchmark_contamination",
-    "wordpiece_train_merges",
-    "wordpiece_encode_greedy",
-    "wordpiece_decode_roundtrip",
     "tokenizer_fertility_compare",
     "unigram_viterbi_segment",
     "unigram_fertility_by_lang",
     "unigram_prune_report",
-    "bpe_vocab_size_frontier",
+    "file_skipping_report",
+    "clustering_skipping_report",
+    "zorder_clustering_report",
+    "hilbert_clustering_report",
+    "manifest_pruning_report",
+    "manifest_lifecycle_report",
+    "snapshot_branch_tag",
+    "pyds_snapshot_scan",
+    "quality_classifier_score",
+    "streaming_quality_gate",
     "pyds_bloom_point_scan",
     "bloom_point_lookup_report",
     "spec_evolution_skipping_report",
@@ -89,11 +94,6 @@ _GATE_FRONT = (
     "snapshot_expiry_report",
     "partitions_metadata_report",
     "snapshots_summary_report",
-    "orc_roundtrip_events",
-    "props_variant_stats",
-    "snowsql_variant_path",
-    "minhash_banding_calibration",
-    "benchmark_contamination_semantic",
     "benchmark_contamination_substrings",
     "curation_pipeline_v2",
     "corpus_datasheet",

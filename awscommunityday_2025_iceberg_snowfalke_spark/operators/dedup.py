@@ -1787,7 +1787,9 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     verified pairs), so the pairs are staged once and one bounded collect
     both answers "does it fit the driver?" and fetches it when it does:
     ``limit(cap + 1)`` returns every pair iff there are at most
-    ``_CC_DRIVER_MAX_PAIRS``. A graph that fits is solved by an exact
+    ``_CC_DRIVER_MAX_PAIRS``. It reads the staged files as one partition,
+    so the take is one Spark job whatever the file count (over many
+    partitions Spark's take scans one, then more, one job each). A graph that fits is solved by an exact
     union-find on the driver and the labels attach to the nodes by a
     broadcast join of ONLY the non-singleton mapping. A larger graph goes
     to :func:`connected_components_star` over the same staged pairs, so
@@ -1795,7 +1797,7 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     labels (the property tests pin each against a sequential
     union-find)."""
     staged = stage(pairs.select("doc_a", "doc_b"))
-    probe = staged.limit(_CC_DRIVER_MAX_PAIRS + 1).collect()
+    probe = staged.coalesce(1).limit(_CC_DRIVER_MAX_PAIRS + 1).collect()
     if len(probe) > _CC_DRIVER_MAX_PAIRS:
         labels = connected_components_star(nodes, staged)
         discard(staged)  # star's result scans only its own staged edges

@@ -41,75 +41,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .. import snaplog
+from ..snaplog import BLOOM_A, BLOOM_B, BLOOM_M, BLOOM_P
 from ..functions import det_sum, det_sum_sql
 from ..sources.registry import CUTOFF_7D, load
 
 
-def _aware_utc(v):
-    """Normalize footer-stat timestamps to tz-aware UTC for comparisons.
-
-    Parquet written from LTZ data yields aware stats; NTZ-sourced data (the
-    driver's regenerated testdata before sources.registry normalization)
-    yields naive stats. Session TZ is pinned UTC, so naive == UTC — relabel
-    rather than convert. Non-datetime stats pass through untouched.
-    """
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime) and v.tzinfo is None:
-        return v.replace(tzinfo=_dt.timezone.utc)
-    return v
-
-
-def _footer_col_stats(md, idx):
-    """``[min, max, null_count, rows]`` of one column from a parquet
-    footer's row-group statistics — None when any row group lacks usable
-    stats (missing statistics object or writer-omitted null counts) or
-    the file is empty. All-NULL row groups (null_count == rows, no
-    min/max) are EXACT, not stat-less; a column all-NULL across the file
-    yields ``[None, None, n, n]`` — Iceberg's contains-only-null metrics
-    shape, prunable under IS NOT NULL and under any range predicate
-    (range predicates never match NULL rows). Timestamp bounds come back
-    tz-normalized via :func:`_aware_utc`, NOT ISO-serialized — callers
-    that persist them (manifest commit) serialize; callers that compare
-    them (the footer planners) compare instants."""
-    mins, maxs, nulls = [], [], 0
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        st = rgm.column(idx).statistics
-        if st is None or st.null_count is None:
-            return None  # stat-less / null counts omitted: conservative
-        if not st.has_min_max:
-            if st.null_count == rgm.num_rows:  # all-NULL row group: exact
-                nulls += st.null_count
-                continue
-            return None
-        mins.append(st.min)
-        maxs.append(st.max)
-        nulls += st.null_count
-    if md.num_rows == 0:
-        return None  # zero-row file: nothing a predicate could prune on
-    if not mins:
-        return [None, None, nulls, md.num_rows]  # all-NULL column
-    return [_aware_utc(min(mins)), _aware_utc(max(maxs)), nulls, md.num_rows]
-
-
 def _agg_col_stats(vals: list) -> list:
-    """Aggregate per-entry column stats into one manifest-level stat of
-    the same shape. Bounds aggregate over entries that HAVE bounds
-    (all-NULL entries carry ``[None, None, …]`` and contribute no
-    bounds); null/row counts sum only when every entry carries them
-    (3- / 4-element shape), so a mixed legacy manifest degrades the
-    summary conservatively instead of fabricating counts."""
+    """Aggregate per-entry ``[min, max, null_count, rows]`` column stats
+    into one manifest-level stat of the same shape. Bounds aggregate over
+    the entries that HAVE bounds: an all-NULL entry carries ``[None, None,
+    n, n]`` and contributes none."""
     bounds = [v for v in vals if v[0] is not None]
-    out = [
+    return [
         min(v[0] for v in bounds) if bounds else None,
         max(v[1] for v in bounds) if bounds else None,
+        sum(v[2] for v in vals),
+        sum(v[3] for v in vals),
     ]
-    if all(len(v) >= 3 and v[2] is not None for v in vals):
-        out.append(sum(v[2] for v in vals))
-        if all(len(v) >= 4 and v[3] is not None for v in vals):
-            out.append(sum(v[3] for v in vals))
-    return out
 
 
 class CommitConflict(RuntimeError):
@@ -191,17 +139,6 @@ def _read_parquet(
     if schema is None:
         return spark.read.option("mergeSchema", "true").parquet(*paths)
     return spark.read.schema(schema).parquet(*paths)
-
-
-# Bloom file-index hash family (exact integer arithmetic — the SQL oracle
-# recomputes the identical bitsets): h_i(x) = ((a_i*x + b_i) mod P) mod m.
-# At test scale a_i*x stays well inside int64; a deployment with 64-bit keys
-# swaps in a modmul/xxhash64 step — the planning logic is unchanged.
-BLOOM_M = 65536  # bits per file
-BLOOM_K = 4  # hash count
-BLOOM_P = 1_000_000_007
-BLOOM_A = (2654435761, 2246822519, 3266489917, 668265263)
-BLOOM_B = (1, 7, 31, 127)
 
 
 def make_table(
@@ -300,17 +237,17 @@ class SnapshotTable:
         """Snapshot ``version``'s manifest; version 0 is the empty table."""
         return snaplog.read(self._snaps, version)
 
-    def _snapshot(self, version: int | None) -> dict:
-        """The manifest a read-side ``version`` argument names: None is
-        the head, 0 the empty table (no files); a version the log does
-        not hold — never committed, or expired — raises a ValueError
-        naming it."""
-        if version is None:
-            version = self.current_version
-        try:
-            return self._manifest(version)
-        except FileNotFoundError:
-            raise ValueError(f"no snapshot v{version} in {self.path}") from None
+    def _snapshot(
+        self,
+        version: int | None = None,
+        as_of: float | None = None,
+        tag: str | None = None,
+    ) -> dict:
+        """The manifest a read names (``snaplog.resolve``): a tag, a
+        version (0 is the empty table), the newest snapshot at or before
+        ``as_of``, or the head; an unknown one raises a ValueError naming
+        it."""
+        return snaplog.resolve(self._snaps, version, as_of, tag)
 
     def history(self) -> list[dict]:
         """T10/S12: snapshot history (Iceberg: ``<tbl>.history``)."""
@@ -361,78 +298,41 @@ class SnapshotTable:
         """Per-file min/max/null-count for ``column`` from the Parquet
         footers — the manifest column-stats layer Iceberg keeps per data
         file (aws-community-builders-presentation.md:180-188). Metadata-only
-        I/O: one footer read per file, no data pages."""
-        import pyarrow.parquet as pq
-
+        I/O: one footer read per file, no data pages. Unknown stats are
+        None (see ``snaplog.footer_stats``)."""
         out = []
-        for f in self.files():
-            p = os.path.join(self.path, "data", f["file"])
-            md = pq.ParquetFile(p).metadata
-            idx = md.schema.names.index(column)
-            st4 = _footer_col_stats(md, idx)
+        for f in self._snapshot()["files"]:
+            p = os.path.join(self.path, "data", f)
+            lo, hi, nulls, rows = snaplog.footer_stats(p, [column])[column]
             out.append(
-                {
-                    "file": f["file"],
-                    # stat-less files (e.g. INT96 legacy data) must be read;
-                    # all-NULL columns have no bounds but a KNOWN null count
-                    "min": None if st4 is None else st4[0],
-                    "max": None if st4 is None else st4[1],
-                    "null_count": None if st4 is None else st4[2],
-                    "rows": md.num_rows,
-                }
+                {"file": f, "min": lo, "max": hi, "null_count": nulls, "rows": rows}
             )
         return out
 
-    def plan_scan(self, column: str, lo, hi) -> dict:
+    def plan_scan(self, predicates: dict) -> dict:
         """Iceberg-style scan planning (aws-community-builders-
-        presentation.md:247-258): walk file stats, keep files whose
-        [min,max] overlaps [lo,hi], skip the rest — before any data read.
-        A file whose stats PROVE every value is NULL is skipped too:
-        range predicates never match NULL rows (exact, like Iceberg's
-        contains-only-null metrics evaluator)."""
-        stats = self.file_stats(column)
-
-        def _may_match(s) -> bool:
-            if (
-                s["null_count"] is not None
-                and s["rows"]
-                and s["null_count"] == s["rows"]
-            ):
-                return False  # provably all-NULL: no row can be in range
-            if s["min"] is None:
-                return True  # stat-less: must read
-            return s["max"] >= lo and s["min"] <= hi
-
-        read = [s["file"] for s in stats if _may_match(s)]
+        presentation.md:247-258) from the data-file footers: keep the
+        files whose stats may match every predicate, skip the rest before
+        any data read. ``predicates`` is :meth:`plan_scan_manifests`' own
+        mapping — ``{column: (lo, hi) | "is_null" | "is_not_null"}`` —
+        and the rule is the same (``snaplog.may_match``), so the two
+        planners differ only in where the stats come from: one footer
+        read per file here, manifests there."""
+        conj = snaplog.conjuncts(predicates)
+        cols = {c for c, _, _ in conj}
+        files = self._snapshot()["files"]
+        data = os.path.join(self.path, "data")
+        read = [
+            f
+            for f in files
+            if snaplog.survives(
+                snaplog.footer_stats(os.path.join(data, f), cols), conj
+            )
+        ]
         return {
-            "files_total": len(stats),
+            "files_total": len(files),
             "files_read": read,
-            "files_skipped": len(stats) - len(read),
-        }
-
-    def plan_scan_null(self, column: str, mode: str) -> dict:
-        """Footer-walking planner for NULL predicates (the pin target for
-        :meth:`plan_scan_manifests`'s null dimension): ``mode`` is
-        ``"is_null"`` (skip files whose stats prove ZERO nulls —
-        Iceberg's contains-null=false manifest flag) or ``"is_not_null"``
-        (skip files whose stats prove ALL rows are null — Iceberg's
-        contains-only-null). Unknown null counts are read conservatively."""
-        if mode not in ("is_null", "is_not_null"):
-            raise ValueError(f"mode must be is_null/is_not_null: {mode!r}")
-        stats = self.file_stats(column)
-
-        def _may_match(s) -> bool:
-            if s["null_count"] is None:
-                return True  # unknown: must read
-            if mode == "is_null":
-                return s["null_count"] > 0
-            return not (s["rows"] and s["null_count"] == s["rows"])
-
-        read = [s["file"] for s in stats if _may_match(s)]
-        return {
-            "files_total": len(stats),
-            "files_read": read,
-            "files_skipped": len(stats) - len(read),
+            "files_skipped": len(files) - len(read),
         }
 
     def read_files(self, spark_files: list[str]) -> DataFrame:
@@ -696,11 +596,6 @@ class SnapshotTable:
             return json.load(fh)
 
     # -- bloom file index (point-lookup pruning beyond min/max) ---------------
-    def _bloom_path(self, version: int, column: str) -> str:
-        return os.path.join(
-            self.path, "snapshots", f"bloom_v{version}_{column}.json"
-        )
-
     def build_bloom_index(self, column: str) -> dict:
         """Per-data-file Bloom filter over an integer ``column`` — the
         index min/max stats cannot replace: a point lookup on a
@@ -723,7 +618,7 @@ class SnapshotTable:
         a cluster deployment shards the sidecar like
         ``rewrite_manifests`` shards manifests). NULLs set no bits: a
         point predicate ``col = v`` never matches NULL rows (IS NULL
-        planning is :meth:`plan_scan_null`'s job)."""
+        planning is :meth:`plan_scan`'s job)."""
         version = self.current_version
         m = self._manifest(version)
         paths = [os.path.join(self.path, "data", f) for f in m["files"]]
@@ -750,7 +645,7 @@ class SnapshotTable:
         idx = {r["f"]: [int(v) for v in r["ps"]] for r in agg.collect()}
         for f in m["files"]:
             idx.setdefault(f, [])
-        out = self._bloom_path(version, column)
+        out = snaplog.bloom_path(self._snaps, version, column)
         tmp = out + f".{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as fh:
             json.dump(idx, fh)
@@ -764,14 +659,11 @@ class SnapshotTable:
         oracle checks via the row count; false positives only cost reads,
         and the report counts them)."""
         version = self.current_version
-        with open(self._bloom_path(version, column)) as fh:
-            idx = json.load(fh)
-        need = {
-            ((a * int(value) + b) % BLOOM_P) % BLOOM_M
-            for a, b in zip(BLOOM_A, BLOOM_B)
-        }
+        idx = snaplog.bloom_sidecar(self._snaps, version, column)
+        if idx is None:
+            raise ValueError(f"no Bloom index on {column!r} at v{version}")
         files = self._manifest(version)["files"]
-        read = [f for f in files if need <= set(idx.get(f, ()))]
+        read = [f for f in files if snaplog.bloom_may_contain(idx, f, int(value))]
         return {
             "files_total": len(files),
             "files_read": read,
@@ -790,31 +682,23 @@ class SnapshotTable:
         ``stats_cols`` column for one data file — ONE footer read covers
         all columns. JSON-ready (timestamps → tz-normalized ISO strings,
         which compare lexicographically exactly like the instants they
-        encode). Columns absent from the file's schema or lacking
-        row-group stats are simply omitted (conservative downstream).
-        An all-NULL column is NOT stat-less: it carries
-        ``[None, None, n, n]`` — Iceberg's contains-only-null shape,
-        which lets IS NOT NULL (and any range predicate) prune the file
-        exactly. Manifests written before r13 carry 3-element
-        ``[min, max, null_count]`` stats; every consumer length-guards."""
+        encode). A column whose stats the footer cannot vouch for is
+        omitted (conservative downstream), so every recorded stat has a
+        known null count and row count; an all-NULL column carries
+        ``[None, None, n, n]``, which prunes under IS NOT NULL and any
+        comparison."""
         import datetime as _dt
 
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(
-            os.path.join(self.path, "data", file)
-        ).metadata
+        st = snaplog.footer_stats(
+            os.path.join(self.path, "data", file), self.stats_cols
+        )
         out: dict = {}
-        for col in self.stats_cols:
-            if col not in md.schema.names:
+        for col, (lo, hi, nulls, rows) in st.items():
+            if nulls is None:
                 continue
-            st4 = _footer_col_stats(md, md.schema.names.index(col))
-            if st4 is None:  # stat-less or zero-row file
-                continue
-            lo, hi = st4[0], st4[1]
             if isinstance(lo, _dt.datetime):
                 lo, hi = lo.isoformat(), hi.isoformat()
-            out[col] = [lo, hi, st4[2], st4[3]]
+            out[col] = [lo, hi, nulls, rows]
         return out
 
     def _write_manifest_file(self, version: int, entries: list[str]) -> str:
@@ -823,19 +707,14 @@ class SnapshotTable:
         if self.stats_cols:
             # Iceberg writers carry per-file column stats into the
             # manifest at commit time — one footer read per NEW file
-            # here buys footer-free scan planning forever after.
-            # ``stats`` keeps the legacy primary-column [min,max] shape;
-            # ``col_stats`` is the full column-keyed {col: [min,max,
-            # null_count]} map (P:180-188's per-column stats).
-            stats, col_stats = {}, {}
+            # here buys footer-free scan planning forever after:
+            # ``col_stats`` is {entry: {col: [min, max, null_count,
+            # rows]}} (P:180-188's per-column stats).
+            col_stats = {}
             for e in entries:
                 es = self._entry_stats(e)
                 if es:
                     col_stats[e] = es
-                if self.stats_col in es:
-                    stats[e] = es[self.stats_col][:2]
-            doc["stats_col"] = self.stats_col
-            doc["stats"] = stats
             doc["stats_cols"] = list(self.stats_cols)
             doc["col_stats"] = col_stats
         with open(os.path.join(self._manifest_dir(), name), "w") as fh:
@@ -843,7 +722,7 @@ class SnapshotTable:
         return name
 
     def _manifest_summary(self, name: str):
-        """Per-column aggregate {col: [min, max, null_count]} of one
+        """Per-column aggregate {col: [min, max, null_count, rows]} of one
         manifest's entry stats — the Iceberg MANIFEST-LIST partition
         summary (manifest lists carry per-partition-field lower/upper
         bounds + contains-null; for a table whose files are clustered on
@@ -857,11 +736,8 @@ class SnapshotTable:
             doc = json.load(fh)
         ents = doc["entries"]
         cs = doc.get("col_stats", {})
-        cols = doc.get("stats_cols") or (
-            [doc["stats_col"]] if doc.get("stats_col") else []
-        )
         summary: dict = {}
-        for col in cols:
+        for col in doc.get("stats_cols", []):
             vals = [cs[e][col] for e in ents if e in cs and col in cs[e]]
             if len(vals) != len(ents) or not vals:
                 continue
@@ -953,7 +829,7 @@ class SnapshotTable:
         # are opened — the planner then skips whole manifests from the
         # snapshot read alone, zero manifest GETs
         summaries: dict = {}
-        if self.stats_col and manifests:
+        if self.stats_cols and manifests:
             prev_sum = head.get("manifest_summaries", {})
             for nm in manifests:
                 # the None verdict is cached too (stored as null): a
@@ -1007,77 +883,24 @@ class SnapshotTable:
         summaries carried in the snapshot skip whole manifests with NO
         manifest GET at all (the level that makes time-ordered ingest
         plan in ~2 GETs); (1) a surviving/unsummarized manifest's
-        per-column aggregate [min,max]; (2) per-entry stats. Entries
-        (and manifests) without stats for a predicate column are
+        per-column aggregate stats; (2) per-entry stats. Entries (and
+        manifests) without stats for a predicate column are
         conservatively read/opened on that column.
 
-        ``predicates`` is a conjunction over any subset of
-        ``stats_cols`` — a file survives only if EVERY predicate can
-        match its stats. Each value is either a closed range ``(lo,
-        hi)`` (range predicates never match NULL rows and parquet
-        min/max exclude nulls, so min/max pruning stays exact for
-        columns with nulls; a provably all-NULL file is skipped too) or
-        one of the NULL predicates ``"is_null"`` / ``"is_not_null"``
-        (also accepted as SQL-spelled ``"IS NULL"`` / ``"IS NOT
-        NULL"``): ``is_null`` skips stats that prove ZERO nulls
-        (Iceberg's contains-null=false manifest-list flag) and
-        ``is_not_null`` skips stats that prove ALL rows are null
-        (contains-only-null) — the latter needs the 4-element r13 stats
-        shape carrying row counts, so pre-r13 manifests degrade to
-        conservative reads, never wrong skips. ``lo``/``hi`` alone is
-        single-column sugar for {primary: (lo, hi)}. Bounds must be in
-        the stats' serialized form (ISO strings for timestamps)."""
-        raw = dict(predicates) if predicates else {self.stats_col: (lo, hi)}
-        preds: dict = {}
-        for c, r in raw.items():
-            if isinstance(r, str):
-                key = r.strip().lower().replace(" ", "_")
-                if key not in ("is_null", "is_not_null"):
-                    raise ValueError(
-                        f"unknown predicate {r!r} for {c!r}: expected a "
-                        "(lo, hi) range, 'is_null', or 'is_not_null'"
-                    )
-                preds[c] = key
-            elif r is None or r[0] is None or r[1] is None:
-                # a (None, None) "range" would TypeError inside _excludes
-                # on the first stats comparison — fail clearly at the API
-                # edge instead (half-open ranges are not supported either)
-                raise ValueError(
-                    "plan_scan_manifests needs closed bounds: pass lo/hi "
-                    f"or predicates with (lo, hi) per column; got {raw!r}"
-                )
-            else:
-                preds[c] = r
-
-        def _excludes(st, pred) -> bool:
-            # st: [min, max(, null_count(, rows))] — True when the stats
-            # PROVE no row can match ``pred`` (exact skip)
-            if st is None:
-                return False
-            if pred == "is_null":
-                return len(st) >= 3 and st[2] == 0
-            if pred == "is_not_null":
-                return (
-                    len(st) >= 4
-                    and st[3] is not None
-                    and st[3] > 0
-                    and st[2] == st[3]
-                )
-            if st[0] is None or st[1] is None:
-                # bounds-less stats: only the PROVABLY all-NULL shape
-                # ([None, None, n, n] with n > 0) can never match a range
-                # — exact skip, mirroring the is_not_null proof; any
-                # other bounds-less shape (e.g. [None, None, n] with
-                # unknown row count) reads conservatively (r13 advice:
-                # len(st) >= 3 alone wrongly pruned bounds-unknown stats)
-                return (
-                    len(st) >= 4
-                    and st[3] is not None
-                    and st[3] > 0
-                    and st[2] == st[3]
-                )
-            return st[1] < pred[0] or st[0] > pred[1]
-
+        ``predicates`` is :meth:`plan_scan`'s mapping over any subset of
+        ``stats_cols`` — ``{column: (lo, hi) | "is_null" |
+        "is_not_null"}`` — and a file survives only if EVERY predicate
+        may match its stats under the one rule ``snaplog.may_match``:
+        ranges skip disjoint bounds and provably all-NULL files,
+        ``is_null`` skips stats proving ZERO nulls (Iceberg's
+        contains-null=false) and ``is_not_null`` stats proving ALL rows
+        null (contains-only-null). ``lo``/``hi`` alone is single-column
+        sugar for {primary: (lo, hi)}. Bounds must be in the stats'
+        serialized form (ISO strings for timestamps)."""
+        conj = snaplog.conjuncts(
+            dict(predicates) if predicates else {self.stats_col: (lo, hi)}
+        )
+        cols = {c for c, _, _ in conj}
         m = self._snapshot(version)
         if m["files"] and "manifests" not in m:
             # a commit path without the manifest layer (the
@@ -1099,13 +922,8 @@ class SnapshotTable:
             # from the snapshot read alone, NO manifest GET at all
             # (Iceberg's partition summaries; a column summary exists
             # only when every entry carried its stats, so the skip is
-            # exact). Legacy [lo, hi] list summaries = primary column.
-            s = summaries.get(name)
-            if isinstance(s, list):
-                s = {self.stats_col: s}
-            if s is not None and any(
-                _excludes(s.get(c), r) for c, r in preds.items()
-            ):
+            # exact)
+            if not snaplog.survives(summaries.get(name) or {}, conj):
                 skipped_manifests += 1
                 skipped_by_summary += 1
                 continue
@@ -1115,32 +933,19 @@ class SnapshotTable:
             ent = [e for e in doc["entries"] if e in live]
             if not ent:
                 continue
-            cs = doc.get("col_stats")
-            if cs is None:  # legacy manifest: primary-column stats only,
-                # UNKNOWN null counts (None — never fabricate a zero,
-                # which would let is_null prune wrongly)
-                cs = {
-                    e: {doc.get("stats_col"): v + [None]}
-                    for e, v in doc.get("stats", {}).items()
-                }
+            cs = doc.get("col_stats", {})
             # level 1 — manifest aggregate per predicate column (only
             # exact when every live entry carries that column's stats)
-            skip = False
-            for c, r in preds.items():
+            agg = {}
+            for c in cols:
                 vals = [cs[e][c] for e in ent if e in cs and c in cs[e]]
-                if len(vals) == len(ent) and vals:
-                    if _excludes(_agg_col_stats(vals), r):
-                        skip = True
-                        break
-            if skip:
+                if len(vals) == len(ent):
+                    agg[c] = _agg_col_stats(vals)
+            if not snaplog.survives(agg, conj):
                 skipped_manifests += 1
                 continue
             # level 2 — per-entry stats, conjunction across columns
-            for e in ent:
-                es = cs.get(e, {})
-                if any(_excludes(es.get(c), r) for c, r in preds.items()):
-                    continue
-                read.append(e)
+            read += [e for e in ent if snaplog.survives(cs.get(e, {}), conj)]
         return {
             "files_total": len(m["files"]),
             "files_read": read,
@@ -1341,9 +1146,6 @@ class SnapshotTable:
         os.remove(self._staged_path(wap_id))
 
     # -- branches & tags (Iceberg refs) ---------------------------------------
-    def _tag_path(self, name: str) -> str:
-        return os.path.join(self.path, "snapshots", f"tag-{name}.json")
-
     def create_tag(self, name: str, version: int | None = None) -> int:
         """TAG: an immutable named pointer to a snapshot (Iceberg:
         ``ALTER TABLE t CREATE TAG name [AS OF VERSION v]``) — the
@@ -1355,15 +1157,14 @@ class SnapshotTable:
         # exclusive create: a tag is IMMUTABLE — re-tagging an existing
         # name must refuse (Iceberg: CREATE TAG fails on a live name)
         doc = {"name": name, "version": v, "timestamp": time.time()}
-        if not snaplog.create(self._tag_path(name), doc):
+        if not snaplog.create(snaplog.tag_path(self._snaps, name), doc):
             raise ValueError(f"tag {name!r} already exists")
         return v
 
     def read_tag(self, name: str) -> DataFrame:
         """Read the snapshot a tag pins (Iceberg: ``VERSION AS OF 'name'``).
         Tagged versions survive unrelated main commits by construction."""
-        with open(self._tag_path(name)) as fh:
-            return self.read(version=json.load(fh)["version"])
+        return self.read(version=self._snapshot(tag=name)["version"])
 
     def branch_version(self, name: str) -> int:
         v = snaplog.current(self._snaps, f"branch-{name}-v")
@@ -1692,12 +1493,7 @@ class SnapshotTable:
         read NULL over old files (T3, :func:`_read_parquet`); recorded
         column renames map old-name files at scan time (see
         :meth:`rename_column`)."""
-        if as_of is not None:
-            versions = [m["version"] for m in self.history() if m["timestamp"] <= as_of]
-            if not versions:
-                raise ValueError(f"no snapshot at or before {as_of}")
-            version = max(versions)
-        m = self._snapshot(version)
+        m = self._snapshot(version, as_of)
         if not m["files"]:
             raise ValueError("empty table")
         return self._apply_renames(self._read_scoped(m, m["files"]))
@@ -2109,17 +1905,15 @@ class SnapshotTable:
         named ref — main, tags, branches — with its kind and the
         snapshot/branch-version it points at. Metadata-only."""
         out = [{"name": "main", "kind": "branch", "version": self.current_version}]
-        snap_dir = os.path.join(self.path, "snapshots")
-        branches = set()
-        for f in sorted(os.listdir(snap_dir)):
-            if f.startswith("tag-") and f.endswith(".json"):
-                with open(os.path.join(snap_dir, f)) as fh:
-                    t = json.load(fh)
-                out.append(
-                    {"name": t["name"], "kind": "tag", "version": t["version"]}
-                )
-            elif f.startswith("branch-") and f.endswith(".json"):
-                branches.add(f[len("branch-") : f.rindex("-v")])
+        out += [
+            {"name": t["name"], "kind": "tag", "version": t["version"]}
+            for t in snaplog.tags(self._snaps)
+        ]
+        branches = {
+            f[len("branch-") : f.rindex("-v")]
+            for f in os.listdir(self._snaps)
+            if f.startswith("branch-") and f.endswith(".json")
+        }
         for b in sorted(branches):
             out.append(
                 {"name": b, "kind": "branch", "version": self.branch_version(b)}
@@ -2181,15 +1975,10 @@ class SnapshotTable:
         regardless of age — expiring them would break ``read_tag`` and
         orphan-GC the tagged data files (Iceberg's expiry honors refs
         the same way); drop the ref first to release the snapshot."""
-        protected: set[int] = set()
-        snap_dir = os.path.join(self.path, "snapshots")
+        protected = {t["version"] for t in snaplog.tags(self._snaps)}
+        snap_dir = self._snaps
         for f in os.listdir(snap_dir):
-            if not f.endswith(".json"):
-                continue
-            if f.startswith("tag-"):
-                with open(os.path.join(snap_dir, f)) as fh:
-                    protected.add(json.load(fh)["version"])
-            elif f.startswith("branch-") and f.endswith("-v1.json"):
+            if f.startswith("branch-") and f.endswith("-v1.json"):
                 with open(os.path.join(snap_dir, f)) as fh:
                     protected.add(json.load(fh)["base_main_version"])
         vs = snaplog.versions(snap_dir)
@@ -2470,7 +2259,7 @@ def file_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session TZ is pinned UTC so the literals align)
     lo = _dt.datetime.fromisoformat(_SKIP_LO).replace(tzinfo=_dt.timezone.utc)
     hi = _dt.datetime.fromisoformat(_SKIP_HI).replace(tzinfo=_dt.timezone.utc)
-    plan = tbl.plan_scan("ts", lo, hi)
+    plan = tbl.plan_scan({"ts": (lo, hi)})
     pruned_rows = (
         tbl.read_files(plan["files_read"])
         .filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
@@ -2572,7 +2361,7 @@ def bloom_point_lookup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = [0, mx // 3, (2 * mx) // 3, mx, mx + 7777]
     rows = []
     for p in probes:
-        mm = tbl.plan_scan("doc_id", p, p)
+        mm = tbl.plan_scan({"doc_id": (p, p)})
         bl = tbl.plan_scan_bloom("doc_id", p)
         n_rows, n_files_hit = 0, 0
         if bl["files_read"]:
@@ -2659,7 +2448,7 @@ def spec_evolution_skipping_report(spark: SparkSession, sf_dir: str) -> DataFram
 
     lo = _dt.datetime.fromisoformat(_PE_LO).replace(tzinfo=_dt.timezone.utc)
     hi = _dt.datetime.fromisoformat(_PE_HI).replace(tzinfo=_dt.timezone.utc)
-    plan = tbl.plan_scan("ts", lo, hi)
+    plan = tbl.plan_scan({"ts": (lo, hi)})
     rows = []
     for gen, spec in ((1, "user_bucket4"), (2, "day_bucket4")):
         gen_files = tbl.files_for_spec(spec)
@@ -3820,9 +3609,8 @@ def manifest_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c) the conjunctive plan after ``rewrite_manifests(1)`` — the LIST
     shrinks 10 → 1 (the 78 GB/yr metadata-size axis) while per-entry
     stats still hold the read at the same 2 files. Every phase's file
-    set is pinned equal to the footer-walking planner's (range phases:
-    per-column intersection of :meth:`plan_scan`; null phases:
-    :meth:`plan_scan_null`), and window_rows is the real COUNT
+    set is pinned equal to the footer-walking :meth:`plan_scan` under
+    the same predicates, and window_rows is the real COUNT
     cross-check on the pruned read. The user split point is exact
     integer arithmetic ((min+max+1) div 2) so both engines compute the
     identical bound."""
@@ -3890,32 +3678,25 @@ def manifest_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "manifest rewrite must not change the planned file set"
     )
     # every manifest-stats plan must equal the footer-walking planner's
-    # per-column intersection (zero-footer path == footer path, exactly)
+    # (zero-footer path == footer path, exactly); footer bounds are
+    # instants, manifest bounds their ISO strings
     import datetime as _dt
 
-    foot_ts = set(
-        tbl.plan_scan(
-            "ts", _dt.datetime.fromisoformat(lo), _dt.datetime.fromisoformat(hi)
-        )["files_read"]
-    )
-    foot_user = set(
-        tbl.plan_scan("user_id", umin, split - 1)["files_read"]
-    )
-    assert files_ts == foot_ts, (
+    ts_at = tuple(_dt.datetime.fromisoformat(b) for b in (lo, hi))
+
+    def _foot(preds):
+        return set(tbl.plan_scan(preds)["files_read"])
+
+    assert files_ts == _foot({"ts": ts_at}), (
         "manifest-stats planning must equal footer-stats planning (ts)"
     )
-    assert files_both == (foot_ts & foot_user), (
-        "conjunctive manifest planning must equal the footer intersection"
+    assert files_both == _foot({"ts": ts_at, "user_id": (umin, split - 1)}), (
+        "conjunctive manifest planning must equal footer planning"
     )
-    # null-predicate plans must equal the footer-walking null planner's
-    foot_nn = set(
-        tbl.plan_scan_null("promo_value", "is_not_null")["files_read"]
-    )
-    foot_nl = set(tbl.plan_scan_null("promo_value", "is_null")["files_read"])
-    assert files_nn == foot_nn, (
+    assert files_nn == _foot({"promo_value": "is_not_null"}), (
         "IS NOT NULL manifest planning must equal footer null planning"
     )
-    assert files_nl == foot_nl, (
+    assert files_nl == _foot({"promo_value": "is_null"}), (
         "IS NULL manifest planning must equal footer null planning"
     )
     return spark.createDataFrame(

@@ -2345,11 +2345,11 @@ QC_BUCKETS = 2048
 QC_BAND_CUTS = (-1472220, -549306, 0, 549306, 1472220)
 
 
-def _qc_features(docs: DataFrame) -> DataFrame:
-    """Hashed fastText feature matrix (doc_id, lang, lbl, bkt, cnt) for a
-    documents frame — word + boundary-padded char-trigram features, the
-    integer-rule label, and the map-side (doc, bucket) count reduction.
-    Shared by the batch classifier and the streaming ingest gate."""
+def _qc_feature_stream(docs: DataFrame) -> DataFrame:
+    """One row per fastText feature occurrence (doc_id, lang, lbl, t) of
+    a documents frame: each token and the trigrams of its boundary-padded
+    ``<tok>``, with the doc's integer-rule quality label. The one feature
+    map under the matrix (:func:`_qc_features`) and the fused scorer."""
     toks = _toks()
     n_tokens = F.size(toks)
     n_stop = F.size(F.filter(toks, _in_list(STOPWORDS_EN)))
@@ -2367,13 +2367,21 @@ def _qc_features(docs: DataFrame) -> DataFrame:
         F.sequence(F.lit(1), F.length(padded) - F.lit(2)),
         lambda i: padded.substr(i, F.lit(3)),
     )
+    return tok.select(
+        "doc_id",
+        "lang",
+        "lbl",
+        F.explode(F.concat(F.array(F.col("tok")), tris)).alias("t"),
+    )
+
+
+def _qc_features(docs: DataFrame) -> DataFrame:
+    """Hashed fastText feature matrix (doc_id, lang, lbl, bkt, cnt) for a
+    documents frame — the feature stream with the map-side (doc, bucket)
+    count reduction. Shared by the batch classifier and the streaming
+    ingest gate."""
     return (
-        tok.select(
-            "doc_id",
-            "lang",
-            "lbl",
-            F.explode(F.concat(F.array(F.col("tok")), tris)).alias("t"),
-        )
+        _qc_feature_stream(docs)
         .withColumn("bkt", F.expr(_SPARK_TH) % QC_BUCKETS)
         .groupBy("doc_id", "lang", "lbl", "bkt")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2545,32 +2553,8 @@ def _qc_scored_fused(
             w6[int(r["bkt"])] = int(r["w6"])
             present[int(r["bkt"])] = 1
     warr, parr = F.lit(w6), F.lit(present)
-
-    toks = _toks()
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, _in_list(STOPWORDS_EN)))
-    n_punct = F.length(F.regexp_replace("text", r"[^.!?,;:]", ""))
-    lbl = (
-        (n_tokens >= 10)
-        & (n_stop * 20 >= n_tokens)
-        & (n_punct * 5 <= F.length("text"))
-    ).cast("long")
-    tok = docs.select(
-        "doc_id", "lang", lbl.alias("lbl"), F.explode(toks).alias("tok")
-    )
-    padded = F.concat(F.lit("<"), F.col("tok"), F.lit(">"))
-    tris = F.transform(
-        F.sequence(F.lit(1), F.length(padded) - F.lit(2)),
-        lambda i: padded.substr(i, F.lit(3)),
-    )
-    feat = tok.select(
-        "doc_id",
-        "lang",
-        "lbl",
-        F.explode(F.concat(F.array(F.col("tok")), tris)).alias("t"),
-    )
     idx = (F.expr(_SPARK_TH) % QC_BUCKETS + 1).cast("int")
-    contrib = feat.select(
+    contrib = _qc_feature_stream(docs).select(
         "doc_id",
         "lang",
         "lbl",

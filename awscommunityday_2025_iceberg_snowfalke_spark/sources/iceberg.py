@@ -28,6 +28,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import snaplog
+
 CATALOG = "graft"
 JAR_ENV = "SPARK_GRAFT_ICEBERG_JAR"
 
@@ -196,11 +198,11 @@ class IcebergTable:
         ]
 
     def file_stats(self, column: str) -> list[dict]:
-        """Per-file min/max/nulls for ``column`` from Iceberg's own
+        """Per-file min/max/nulls/rows for ``column`` from Iceberg's own
         manifest metrics (``.files.readable_metrics``) — the real version
         of the footer walk the native layer does by hand."""
         rows = self.spark.sql(
-            f"SELECT file_path, "
+            f"SELECT file_path, record_count, "
             f"readable_metrics.`{column}`.lower_bound AS mn, "
             f"readable_metrics.`{column}`.upper_bound AS mx, "
             f"readable_metrics.`{column}`.null_value_count AS nulls "
@@ -212,17 +214,22 @@ class IcebergTable:
                 "min": r["mn"],
                 "max": r["mx"],
                 "null_count": None if r["nulls"] is None else int(r["nulls"]),
+                "rows": int(r["record_count"]),
             }
             for r in rows
         ]
 
-    def plan_scan(self, column: str, lo, hi) -> dict:
-        stats = self.file_stats(column)
-        read = [
-            s["file"]
-            for s in stats
-            if s["min"] is None or (s["max"] >= lo and s["min"] <= hi)
-        ]
+    def plan_scan(self, predicates: dict) -> dict:
+        """``SnapshotTable.plan_scan`` over the manifest metrics: the same
+        predicates mapping and the same rule (``snaplog.may_match``)."""
+        conj = snaplog.conjuncts(predicates)
+        stats: dict = {}
+        for col in dict.fromkeys(c for c, _, _ in conj):
+            for s in self.file_stats(col):
+                stats.setdefault(s["file"], {})[col] = [
+                    s["min"], s["max"], s["null_count"], s["rows"]
+                ]
+        read = [f for f, st in stats.items() if snaplog.survives(st, conj)]
         return {
             "files_total": len(stats),
             "files_read": read,

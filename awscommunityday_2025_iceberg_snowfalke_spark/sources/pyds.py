@@ -10,14 +10,17 @@ integration, through Spark's public Python DataSource API:
   ``INFER_SCHEMA`` external-table behavior, performance_comparison.sql:14-21);
 - **split planning** = one ``InputPartition`` per manifest data file —
   the scan parallelizes across files exactly as Iceberg plans splits;
-- **filter pushdown** (``pushFilters``): comparison predicates prune whole
-  files against footer min/max stats before any data read — Iceberg's
-  manifest-stats planning walk (aws-community-builders-presentation.md:
-  247-258) running *inside* the source. All filters are also returned as
-  unhandled so Spark re-applies them row-level (pruning is an
-  optimization, never a semantics change);
+- **filter pushdown** (``pushFilters``): comparison and NULL predicates
+  prune whole files against footer stats, and equality against a Bloom
+  sidecar, before any data read — Iceberg's manifest-stats planning walk
+  (aws-community-builders-presentation.md:247-258) running *inside* the
+  source, under the rule ``SnapshotTable``'s planners use
+  (``snaplog.may_match``). All filters are also returned as unhandled so
+  Spark re-applies them row-level (pruning is an optimization, never a
+  semantics change);
 - **time travel** via ``option("version", N)`` / ``option("asOf", ts)``
-  (T4 — ``VERSION AS OF`` / ``TIMESTAMP AS OF``);
+  / ``option("tag", name)`` (T4 — ``VERSION AS OF`` / ``TIMESTAMP AS
+  OF``), resolved by ``snaplog.resolve`` as ``SnapshotTable.read`` does;
 - **reads** stream Arrow record batches (the vectorized path, no
   row-by-row Python).
 
@@ -35,11 +38,11 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     EqualTo,
-    Filter,
     GreaterThan,
     GreaterThanOrEqual,
     InputPartition,
     IsNotNull,
+    IsNull,
     LessThan,
     LessThanOrEqual,
     WriterCommitMessage,
@@ -56,12 +59,13 @@ def register(spark) -> None:
     - Enables Python-datasource filter pushdown (runtime SQL conf,
       default-off in Spark 4.1) — without it Spark refuses a reader that
       implements ``pushFilters``.
-    - Registers THIS module and the ``snaplog`` commit protocol it uses
-      for cloudpickle by-value serialization: the DataSource class is
-      unpickled in Spark's plan-time Python runner and in executor
-      workers, which do not inherit the driver's sys.path — by-value
-      shipping makes the source work from any session (a vanilla one
-      included) with no PYTHONPATH arrangement.
+    - Registers THIS module and ``snaplog`` (the commit protocol, the
+      ref resolver, the footer-stats reader, the pruning rule and the
+      Bloom family it uses) for cloudpickle by-value serialization: the
+      DataSource class is unpickled in Spark's plan-time Python runner
+      and in executor workers, which do not inherit the driver's
+      sys.path — by-value shipping makes the source work from any
+      session (a vanilla one included) with no PYTHONPATH arrangement.
       Everything else the shipped code touches is stdlib/pyarrow/pyspark,
       importable everywhere.
     """
@@ -75,43 +79,21 @@ def register(spark) -> None:
     spark.dataSource.register(SnapshotDataSource)
 
 
-def _resolve_version(path: str, options) -> int:
-    """Snapshot-version resolution (``version``/``asof`` options, else
-    latest) — shared by the file walk and the bloom-sidecar lookup."""
-    import json
-
-    snap_dir = os.path.join(path, "snapshots")
-    versions = snaplog.versions(snap_dir)
-    if not versions:
-        raise ValueError(f"no snapshots under {path}")
-    if options.get("tag") is not None:
-        # named immutable ref (Iceberg: VERSION AS OF 'tagname' resolves
-        # through the refs table) — written by SnapshotTable.create_tag
-        tp = os.path.join(snap_dir, f"tag-{options['tag']}.json")
-        if not os.path.exists(tp):
-            raise ValueError(f"unknown tag {options['tag']!r}")
-        with open(tp) as fh:
-            return int(json.load(fh)["version"])
-    if options.get("version") is not None:
-        return int(options["version"])
-    if options.get("asof") is not None:
-        as_of = float(options["asof"])
-        at = [
-            v for v in versions if snaplog.read(snap_dir, v)["timestamp"] <= as_of
-        ]
-        if not at:
-            raise ValueError(f"no snapshot at or before {as_of}")
-        return max(at)
-    return versions[-1]
-
-
-def _resolve_files(path: str, options) -> list[str]:
-    """The data-file paths of the snapshot the ``version``/``asof``/``tag``
-    options pick. This source reads data files only, so a snapshot that
-    carries tombstones (merge-on-read deletes, deletion vectors) is
-    refused rather than read with its deleted rows resurrected."""
-    version = _resolve_version(path, options)
-    manifest = snaplog.read(os.path.join(path, "snapshots"), version)
+def _resolve(path: str, options) -> tuple[int, list[str]]:
+    """The version and data-file paths of the snapshot the ``version``/
+    ``asOf``/``tag`` options name (``snaplog.resolve``: an unknown one
+    raises a ValueError naming it). This source reads data files only,
+    so a snapshot that carries tombstones (merge-on-read deletes,
+    deletion vectors) is refused rather than read with its deleted rows
+    resurrected."""
+    as_of = options.get("asof")
+    manifest = snaplog.resolve(
+        os.path.join(path, "snapshots"),
+        options.get("version"),
+        None if as_of is None else float(as_of),
+        options.get("tag"),
+    )
+    version = manifest.get("version", 0)
     dels = [d["file"] for d in manifest.get("delete_files", [])]
     if dels:
         raise ValueError(
@@ -119,30 +101,19 @@ def _resolve_files(path: str, options) -> list[str]:
             'format("snapshot") reads data files only — read it with '
             "SnapshotTable.read, or compact() the table first"
         )
-    return [os.path.join(path, "data", f) for f in manifest["files"]]
+    return version, [os.path.join(path, "data", f) for f in manifest["files"]]
 
 
-# Bloom sidecar hash family — MUST equal operators.lifecycle's BLOOM_*
-# (test-pinned; duplicated here because the plan-time runner executes this
-# module serialized by value, without the package on its path)
-_BLOOM_M = 65536
-_BLOOM_P = 1_000_000_007
-_BLOOM_A = (2654435761, 2246822519, 3266489917, 668265263)
-_BLOOM_B = (1, 7, 31, 127)
-
-
-def _bloom_index(path: str, version: int, column: str) -> dict | None:
-    """The snapshot-pinned Bloom sidecar for ``column`` (written by
-    ``SnapshotTable.build_bloom_index``), as {basename: set(positions)} —
-    or None when the table carries no bloom for that column (planning
-    then stays footer-stats only)."""
-    import json
-
-    p = os.path.join(path, "snapshots", f"bloom_v{version}_{column}.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return {f: set(ps) for f, ps in json.load(fh).items()}
+# the pushed filters the pruning rule can evaluate, as snaplog.may_match ops
+_OPS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+    IsNull: "is_null",
+    IsNotNull: "not_null",
+}
 
 
 @dataclass
@@ -150,96 +121,42 @@ class _FileSplit(InputPartition):
     path: str
 
 
-def _footer_min_max(path: str, column: str):
-    """(min, max) for ``column`` from the file footer, or None if any row
-    group lacks stats (stat-less files must never be pruned)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    if column not in md.schema.names:
-        return None
-    idx = md.schema.names.index(column)
-    mins, maxs = [], []
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        mins.append(st.min)
-        maxs.append(st.max)
-    return min(mins), max(maxs)
-
-
-def _file_survives(path: str, flt: Filter) -> bool:
-    """Footer-stats pruning decision for one comparison filter. Returns
-    True (keep the file) whenever the filter shape, the column, or the
-    value types are not safely comparable — pruning must be sound."""
-    if isinstance(flt, IsNotNull):
-        return True  # null-count pruning would need per-file row counts
-    if not isinstance(
-        flt, (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
-    ):
-        return True
-    if len(flt.attribute) != 1:  # nested column
-        return True
-    bounds = _footer_min_max(path, flt.attribute[0])
-    if bounds is None:
-        return True
-    lo, hi = bounds
-    v = flt.value
-    try:
-        if isinstance(flt, EqualTo):
-            return lo <= v <= hi
-        if isinstance(flt, GreaterThan):
-            return hi > v
-        if isinstance(flt, GreaterThanOrEqual):
-            return hi >= v
-        if isinstance(flt, LessThan):
-            return lo < v
-        return lo <= v
-    except TypeError:  # incomparable types (e.g. tz-aware vs naive)
-        return True
-
-
 class SnapshotReader(DataSourceReader):
     def __init__(self, options):
         self._path = options["path"]
-        self._version = _resolve_version(self._path, options)
-        self._files = _resolve_files(self._path, options)
-
-    def _bloom_excludes(self, filters) -> set:
-        """Files a Bloom sidecar PROVES cannot satisfy some EqualTo filter
-        (all k probe positions must be set; integer values only — the
-        sidecar's domain). Min/max footer pruning cannot make this call on
-        an unclustered column; the sidecar can."""
-        out: set = set()
-        for flt in filters:
-            if not isinstance(flt, EqualTo) or len(flt.attribute) != 1:
-                continue
-            if not isinstance(flt.value, int) or isinstance(flt.value, bool):
-                continue
-            idx = _bloom_index(self._path, self._version, flt.attribute[0])
-            if idx is None:
-                continue
-            need = {
-                ((a * flt.value + b) % _BLOOM_P) % _BLOOM_M
-                for a, b in zip(_BLOOM_A, _BLOOM_B)
-            }
-            for path in self._files:
-                base = os.path.basename(path)
-                if base in idx and not need <= idx[base]:
-                    out.add(path)
-        return out
+        self._version, self._files = _resolve(self._path, options)
 
     def pushFilters(self, filters):
+        """Keep the files whose footer stats may match every pushed
+        filter on a top-level column and whose Bloom sidecar (where the
+        snapshot has one for the column of an integer EqualTo) may hold
+        the value. Min/max cannot prune an unclustered column; the
+        sidecar can."""
         filters = list(filters)
-        bloomed = self._bloom_excludes(filters)
-        kept = []
-        for path in self._files:
-            if path in bloomed:
-                continue
-            if all(_file_survives(path, f) for f in filters):
-                kept.append(path)
-        self._files = kept
+        conj = [
+            (f.attribute[0], _OPS[type(f)], getattr(f, "value", None))
+            for f in filters
+            if type(f) in _OPS and len(f.attribute) == 1
+        ]
+        if not conj:
+            return filters
+        snap_dir = os.path.join(self._path, "snapshots")
+        probes = []
+        for c, op, v in conj:
+            if op == "=" and isinstance(v, int) and not isinstance(v, bool):
+                sidecar = snaplog.bloom_sidecar(snap_dir, self._version, c)
+                if sidecar is not None:
+                    probes.append((sidecar, v))
+        cols = {c for c, _, _ in conj}
+        self._files = [
+            p
+            for p in self._files
+            if all(
+                snaplog.bloom_may_contain(sc, os.path.basename(p), v)
+                for sc, v in probes
+            )
+            and snaplog.survives(snaplog.footer_stats(p, cols), conj)
+        ]
         # every filter is re-applied by Spark row-level: file pruning is
         # a planning optimization, not filter ownership
         return filters
@@ -380,7 +297,7 @@ class SnapshotDataSource(DataSource):
 
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        files = _resolve_files(self.options["path"], self.options)
+        files = _resolve(self.options["path"], self.options)[1]
         if not files:
             raise ValueError("empty snapshot table")
         return from_arrow_schema(pq.read_schema(files[0]))

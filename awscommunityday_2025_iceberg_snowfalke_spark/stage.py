@@ -176,13 +176,16 @@ def stage(df: DataFrame, name: str | None = None) -> DataFrame:
     return a scan of it. Eager (the write is an action); the returned
     DataFrame's plan is a plain file scan — a barrier Catalyst cannot push
     consumer expressions through, with no executor-memory residency and
-    full fault tolerance (splits are re-readable on executor loss)."""
+    full fault tolerance (splits are re-readable on executor loss). The
+    scan reads under the schema just written, so the write is the only
+    Spark job (the file reader marks every field nullable, as inference
+    would)."""
     spark = df.sparkSession
     path = os.path.join(
         _session_root(spark), name or f"s{next(_COUNTER)}"
     )
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def staged_path(df: DataFrame) -> str | None:

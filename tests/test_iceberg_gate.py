@@ -71,5 +71,5 @@ def test_iceberg_roundtrip(spark):
     assert len(tbl.history()) == 2
     stats = tbl.file_stats("user_id")
     assert stats and all(s["min"] is not None for s in stats)
-    plan = tbl.plan_scan("user_id", 0, 1 << 60)
+    plan = tbl.plan_scan({"user_id": (0, 1 << 60)})
     assert plan["files_skipped"] == 0

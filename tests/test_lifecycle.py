@@ -1109,7 +1109,7 @@ def test_manifest_stats_pruning_exact_and_conservative(
     import datetime as dt
 
     foot = t.plan_scan(
-        "ts", dt.datetime.fromisoformat(lo), dt.datetime.fromisoformat(hi)
+        {"ts": (dt.datetime.fromisoformat(lo), dt.datetime.fromisoformat(hi))}
     )
     assert set(foot["files_read"]) == set(plan["files_read"])
 
@@ -1134,7 +1134,7 @@ def test_manifest_multicol_stats_and_persisted_config(
 ):
     """Multi-column manifest stats (r11 verdict task 2): a conjunctive
     {col: range} predicate prunes on BOTH dimensions with zero footer
-    opens and equals the footer planner's per-column intersection; and
+    opens and equals the footer planner under the same predicates; and
     the stats config is PERSISTED (r11 ADVICE) — a second handle opened
     without it adopts the table's stats_cols, so its commits carry full
     stats and level-0 summary pruning keeps working."""
@@ -1168,15 +1168,13 @@ def test_manifest_multicol_stats_and_persisted_config(
     assert len(plan["files_read"]) == 2
     import datetime as dt
 
-    foot_ts = set(
-        t.plan_scan(
-            "ts",
-            dt.datetime.fromisoformat(preds["ts"][0]),
-            dt.datetime.fromisoformat(preds["ts"][1]),
-        )["files_read"]
+    foot = t.plan_scan(
+        {
+            "ts": tuple(dt.datetime.fromisoformat(b) for b in preds["ts"]),
+            "user_id": preds["user_id"],
+        }
     )
-    foot_u = set(t.plan_scan("user_id", umin, split - 1)["files_read"])
-    assert set(plan["files_read"]) == (foot_ts & foot_u)
+    assert set(plan["files_read"]) == set(foot["files_read"])
     # the pruned read returns exactly the predicate's rows
     row_pred = (
         (F.col("ts") >= F.lit("2024-01-02 00:00:00").cast("timestamp"))
@@ -1283,13 +1281,9 @@ def test_manifest_null_pruning_exact_and_conservative(
 ):
     """NULL-driven manifest pruning (r12 verdict task 8): IS NULL skips
     stats proving zero nulls (contains-null=false), IS NOT NULL skips
-    stats proving all-null (contains-only-null, needs the r13 4-element
-    row-count shape), a RANGE predicate skips provably all-NULL files,
-    both planners agree file-for-file, and a legacy 3-element manifest
-    (no row counts) degrades IS NOT NULL to a conservative read — never
-    a wrong skip."""
-    import json as _json
-
+    stats proving all-null (contains-only-null, from the row count),
+    a RANGE predicate skips provably all-NULL files,
+    and both planners agree file-for-file."""
     t = SnapshotTable(spark, str(tmp_path / "t"), stats_cols=("ts", "nv"))
     day = F.dayofmonth("ts")
     nv = F.when(day <= 10, F.col("value")).alias("nv")
@@ -1303,7 +1297,7 @@ def test_manifest_null_pruning_exact_and_conservative(
     assert pn["skipped_by_summary"] == 1
     assert len(pn["files_read"]) == 4
     assert set(pn["files_read"]) == set(
-        t.plan_scan_null("nv", "is_null")["files_read"]
+        t.plan_scan({"nv": "is_null"})["files_read"]
     )
 
     pnn = t.plan_scan_manifests(predicates={"nv": "IS NOT NULL"})
@@ -1311,7 +1305,7 @@ def test_manifest_null_pruning_exact_and_conservative(
     assert pnn["skipped_by_summary"] == 2
     assert len(pnn["files_read"]) == 2
     assert set(pnn["files_read"]) == set(
-        t.plan_scan_null("nv", "is_not_null")["files_read"]
+        t.plan_scan({"nv": "is_not_null"})["files_read"]
     )
     # the pruned reads are exact: together they see every row once
     n_null = t.read_files(pn["files_read"]).filter(
@@ -1331,51 +1325,14 @@ def test_manifest_null_pruning_exact_and_conservative(
     with pytest.raises(ValueError, match="unknown predicate"):
         t.plan_scan_manifests(predicates={"nv": "is_weird"})
 
-    # legacy manifest surgery: strip col_stats/row counts from every
-    # manifest file → IS NULL may still prune via [lo, hi]+null_count?
-    # No — legacy docs carry NO null counts at all, so BOTH null
-    # predicates must degrade to reading everything (conservative)
-    mdir = os.path.join(str(tmp_path / "t"), "snapshots", "manifests")
-    for name in os.listdir(mdir):
-        p = os.path.join(mdir, name)
-        with open(p) as fh:
-            doc = _json.load(fh)
-        doc.pop("col_stats", None)
-        doc.pop("stats_cols", None)
-        doc["stats_col"] = "nv"
-        doc["stats"] = {
-            e: [-1e18, 1e18] for e in doc["entries"]
-        }  # bounds only, like a pre-r11 writer
-        with open(p, "w") as fh:
-            _json.dump(doc, fh)
-    # drop the now-stale snapshot summaries as a legacy list would
-    snapdir = os.path.join(str(tmp_path / "t"), "snapshots")
-    for name in os.listdir(snapdir):
-        p = os.path.join(snapdir, name)
-        if not name.endswith(".json") or name == "table.json":
-            continue
-        with open(p) as fh:
-            doc = _json.load(fh)
-        if "manifest_summaries" in doc:
-            doc["manifest_summaries"] = {}
-            with open(p, "w") as fh:
-                _json.dump(doc, fh)
-    legacy_null = t.plan_scan_manifests(predicates={"nv": "is_null"})
-    legacy_nn = t.plan_scan_manifests(predicates={"nv": "is_not_null"})
-    assert len(legacy_null["files_read"]) == 6  # no fabricated zero-null
-    assert len(legacy_nn["files_read"]) == 6
-
 
 def test_manifest_boundsless_unknown_stats_conservative(
     spark, events, tmp_path
 ):
     """A bounds-less stat is an exact range skip ONLY under the full
-    all-NULL proof ([None, None, n, n] with n > 0); a degraded 3-element
-    [None, None, n] (bounds unknown, row count unknown) must be READ —
-    the r13-advice hazard where any ``len(st) >= 3`` bounds-less shape
-    was treated as provably all-NULL."""
-    import json as _json
-
+    all-NULL proof ([None, None, n, n] with n > 0); with the null count
+    or the row count unknown it must be READ — the r13-advice hazard
+    where any bounds-less shape was treated as provably all-NULL."""
     t = SnapshotTable(spark, str(tmp_path / "t"), stats_cols=("ts", "nv"))
     day = F.dayofmonth("ts")
     nv = F.when(day <= 10, F.col("value")).alias("nv")
@@ -1388,44 +1345,16 @@ def test_manifest_boundsless_unknown_stats_conservative(
     pr = t.plan_scan_manifests(predicates={"nv": (-1e18, 1e18)})
     assert len(pr["files_read"]) == 2
 
-    # surgery: degrade ONE all-NULL manifest's nv stats to the 3-element
-    # bounds-unknown shape and drop the (now stale) list summaries
-    mdir = os.path.join(str(tmp_path / "t"), "snapshots", "manifests")
-    degraded = 0
-    for name in sorted(os.listdir(mdir)):
-        p = os.path.join(mdir, name)
-        with open(p) as fh:
-            doc = _json.load(fh)
-        cs = doc.get("col_stats", {})
-        all_null = cs and all(
-            v.get("nv") and v["nv"][0] is None for v in cs.values()
-        )
-        if all_null and not degraded:
-            for v in cs.values():
-                v["nv"] = v["nv"][:3]  # [None, None, null_count]
-            degraded = len(cs)
-            with open(p, "w") as fh:
-                _json.dump(doc, fh)
-    assert degraded == 2
-    snapdir = os.path.join(str(tmp_path / "t"), "snapshots")
-    for name in os.listdir(snapdir):
-        p = os.path.join(snapdir, name)
-        if not name.endswith(".json") or name == "table.json":
-            continue
-        with open(p) as fh:
-            doc = _json.load(fh)
-        if doc.get("manifest_summaries"):
-            doc["manifest_summaries"] = {}
-            with open(p, "w") as fh:
-                _json.dump(doc, fh)
+    # the pruning rule: bounds-less stats prove a skip only with a known
+    # null count equal to a known, nonzero row count
+    from awscommunityday_2025_iceberg_snowfalke_spark import snaplog
 
-    # the degraded files are no longer provably all-NULL → read them;
-    # the intact all-NULL append still prunes exactly
-    pr2 = t.plan_scan_manifests(predicates={"nv": (-1e18, 1e18)})
-    assert len(pr2["files_read"]) == 4
-    # IS NOT NULL degrades the same way (needs the 4-element proof)
-    pnn = t.plan_scan_manifests(predicates={"nv": "is_not_null"})
-    assert len(pnn["files_read"]) == 4
+    assert not snaplog.may_match([None, None, 4, 4], ">=", 0)
+    assert not snaplog.may_match([None, None, 4, 4], "not_null")
+    for unknown in ([None, None, None, 4], [None, None, 4, None], [None] * 4):
+        assert snaplog.may_match(unknown, ">=", 0)
+        assert snaplog.may_match(unknown, "not_null")
+    assert snaplog.may_match([None, None, 0, 0], "not_null")  # zero rows
 
 
 def test_rename_back_and_collision_guard(spark, events, tmp_path):
@@ -1634,7 +1563,7 @@ def test_bloom_index_no_false_negatives_and_prunes(spark, events, tmp_path):
         assert got == want, (u, got, want)
         # min/max never beats bloom on this layout (equal only at the
         # domain edges, where a chunk's min/max happens to bound the probe)
-        mm = t.plan_scan("user_id", u, u)
+        mm = t.plan_scan({"user_id": (u, u)})
         assert len(mm["files_read"]) >= len(plan["files_read"])
         if len(mm["files_read"]) == plan["files_total"]:
             pruned_any = True  # interior probe: footer stats read it all

@@ -420,12 +420,35 @@ def test_connected_components_fast_path_stages_pairs_once(spark, monkeypatch):
     out = []
     barrier = jobs_of(spark, lambda: out.append(stage(pairs)))
     probe = jobs_of(
-        spark, lambda: out[0].limit(dedup._CC_DRIVER_MAX_PAIRS + 1).collect()
+        spark,
+        lambda: out[0].coalesce(1).limit(dedup._CC_DRIVER_MAX_PAIRS + 1).collect(),
     )
     monkeypatch.setattr(dedup, "stage", counting_stage)
     jobs = jobs_of(spark, lambda: dedup.connected_components(nodes, pairs))
     assert staged == [["doc_a", "doc_b"]]
     assert jobs == barrier + probe
+
+
+def test_connected_components_probe_is_one_job(spark):
+    """The fast path's bounded probe collect is ONE Spark job however many
+    files the staged pairs span (a take over many partitions scans one,
+    then more, one job each), so over 4+ staged files the whole fast path
+    is the barrier's job and the probe's."""
+    from conftest import jobs_of
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
+
+    nodes = spark.createDataFrame([(v,) for v in range(40)], "id long")
+    pairs = spark.createDataFrame(
+        [(v, v + 1) for v in range(0, 38, 2)], "doc_a long, doc_b long"
+    ).repartition(6)
+    out = []
+    barrier = jobs_of(spark, lambda: out.append(dedup.stage(pairs)))
+    assert len(out[0].inputFiles()) >= 4
+    jobs = jobs_of(spark, lambda: out.append(dedup.connected_components(nodes, pairs)))
+    assert jobs == barrier + 1
+    got = {r["id"]: r["label"] for r in out[1].collect()}
+    assert got == {v: v - v % 2 if v < 39 else v for v in range(40)}
 
 
 @settings(

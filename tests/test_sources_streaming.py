@@ -399,30 +399,18 @@ def test_pyds_bloom_pushdown_plan_level(spark, tmp_path):
     """Bloom-sidecar pruning inside pushFilters: on a scrambled layout
     where footer min/max keeps every file, an EqualTo on the indexed
     column plans ~1 split, an absent key plans 0, a column without a
-    sidecar (or a pre-sidecar table) falls back to footer behavior, and
-    the hash constants are pinned to the lifecycle layer's."""
+    sidecar (or a pre-sidecar table) falls back to footer behavior."""
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import EqualTo
 
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
-        lifecycle as L,
-    )
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
         SnapshotTable,
         _write_chunked,
     )
-    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
     from awscommunityday_2025_iceberg_snowfalke_spark.sources.pyds import (
         SnapshotReader,
     )
     from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import load
-
-    assert (pyds._BLOOM_M, pyds._BLOOM_P, pyds._BLOOM_A, pyds._BLOOM_B) == (
-        L.BLOOM_M,
-        L.BLOOM_P,
-        L.BLOOM_A,
-        L.BLOOM_B,
-    )
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "n_chars")
     t = SnapshotTable(spark, str(tmp_path / "b"))
@@ -497,6 +485,140 @@ def test_pyds_tag_read(spark, tmp_path):
             .load()
             .count()
         )
+
+
+def _user_chunked_table(spark, path, stats_cols=None):
+    """Events in 4 files by user_id quarter, with ``nv`` null-free in the
+    lower half, mixed in the third quarter and all-NULL in the fourth."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
+        SnapshotTable,
+    )
+
+    ev = load(spark, SF_DIR, "events").select("event_id", "user_id", "value")
+    r = ev.agg(F.min("user_id"), F.max("user_id")).collect()[0]
+    umin, umax = int(r[0]), int(r[1])
+    q = [umin + (umax - umin + 1) * k // 4 for k in range(5)]
+    t = SnapshotTable(spark, path, stats_cols=stats_cols)
+    for k in range(4):
+        part = ev.filter(F.col("user_id").between(q[k], q[k + 1] - 1))
+        nv = F.col("value") if k < 2 else F.lit(None).cast("double")
+        if k == 2:
+            nv = F.when(F.col("event_id") % 2 == 0, F.col("value"))
+        t.append(part.withColumn("nv", nv), n_files=1)
+    return t, umin, umax, q
+
+
+def test_pyds_and_table_planners_keep_the_same_files(spark, tmp_path):
+    """One pruning rule: on one table, the source's ``pushFilters``, the
+    footer planner ``plan_scan`` and the manifest planner
+    ``plan_scan_manifests`` keep the same files for =, >=, <=, IS NULL and
+    IS NOT NULL; and the source's strict > and < prune a file whose max
+    (min) equals the value."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        IsNotNull,
+        IsNull,
+        LessThan,
+        LessThanOrEqual,
+    )
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources.pyds import (
+        SnapshotReader,
+    )
+
+    t, umin, umax, q = _user_chunked_table(
+        spark, str(tmp_path / "t"), stats_cols=("user_id", "nv")
+    )
+    st = {s["file"]: s for s in t.file_stats("user_id")}
+    mid = min(s["min"] for s in st.values() if s["min"] >= q[2])
+
+    def source(*filters):
+        r = SnapshotReader({"path": t.path})
+        r.pushFilters(list(filters))
+        return {os.path.basename(p.path) for p in r.partitions()}
+
+    cases = [
+        (EqualTo(("user_id",), mid), {"user_id": (mid, mid)}),
+        (GreaterThanOrEqual(("user_id",), mid), {"user_id": (mid, umax)}),
+        (LessThanOrEqual(("user_id",), mid), {"user_id": (umin, mid)}),
+        (IsNull(("nv",)), {"nv": "is_null"}),
+        (IsNotNull(("nv",)), {"nv": "is_not_null"}),
+    ]
+    for flt, preds in cases:
+        foot = set(t.plan_scan(preds)["files_read"])
+        mani = set(t.plan_scan_manifests(predicates=preds)["files_read"])
+        assert source(flt) == foot == mani, (flt, preds)
+        assert 0 < len(foot) < 4, (flt, foot)
+
+    for f, s in st.items():
+        assert f not in source(GreaterThan(("user_id",), s["max"]))
+        assert f not in source(LessThan(("user_id",), s["min"]))
+        assert f in source(GreaterThanOrEqual(("user_id",), s["max"]))
+        assert f in source(LessThanOrEqual(("user_id",), s["min"]))
+
+
+def test_pyds_unknown_version_names_it(spark, tmp_path):
+    """An unknown ``version`` fails as a ValueError naming it (not a raw
+    FileNotFoundError from the manifest open)."""
+    import pytest
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    t, *_ = _user_chunked_table(spark, str(tmp_path / "t"))
+    with pytest.raises(ValueError, match="no snapshot v99 in"):
+        pyds.SnapshotReader({"path": t.path, "version": "99"})
+    pyds.register(spark)
+    with pytest.raises(Exception, match="ValueError: no snapshot v99 in") as e:
+        (
+            spark.read.format(pyds.FORMAT_NAME)
+            .option("path", t.path)
+            .option("version", 99)
+            .load()
+            .count()
+        )
+    assert "FileNotFoundError" not in str(e.value)
+
+
+def test_snapshot_reader_ships_by_value(spark, tmp_path):
+    """Spark's plan-time Python runner and its workers do not inherit the
+    driver's sys.path: a pickled ``SnapshotReader`` must plan and prune
+    in an interpreter that cannot import the package, so everything its
+    code paths call has to ship by value (``pyds.register``)."""
+    import json
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    t, _, _, q = _user_chunked_table(spark, str(tmp_path / "t"))
+    pyds.register(spark)
+    want = pyds.SnapshotReader({"path": t.path})
+    want.pushFilters([pyds.GreaterThanOrEqual(("user_id",), q[3])])
+    code = (
+        "import json, pickle, sys\n"
+        "from pyspark.sql.datasource import GreaterThanOrEqual\n"
+        "r = pickle.loads(sys.stdin.buffer.read())\n"
+        f"r.pushFilters([GreaterThanOrEqual(('user_id',), {q[3]})])\n"
+        "print(json.dumps([p.path for p in r.partitions()]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(pyds.SnapshotReader({"path": t.path})),
+        cwd=cwd,
+        env=env,
+        capture_output=True,
+        check=False,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    got = json.loads(out.stdout)
+    assert got == [p.path for p in want.partitions()] and len(got) == 1
 
 
 def test_merge_full_accounting_and_state(spark, tmp_path):

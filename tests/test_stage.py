@@ -73,6 +73,19 @@ def test_stage_default_falls_back_to_tempdir(spark):
     _forget_session_root(spark)
 
 
+def test_stage_is_one_job_and_keeps_the_schema(spark):
+    """The barrier write is the only Spark job: the scan reads under the
+    schema just written (no schema-inference job), which is the schema
+    inference would give — every field nullable."""
+    df = spark.range(1000).selectExpr("id", "id * 2 AS x", "CAST(id AS STRING) AS s")
+    out = []
+    assert jobs_of(spark, lambda: out.append(stage(df))) == 1
+    inferred = spark.read.parquet(*out[0].inputFiles()).schema
+    assert out[0].schema == inferred
+    assert all(f.nullable for f in out[0].schema.fields)
+    assert out[0].count() == 1000
+
+
 # every memoized builder, called as fn(session, sf_dir)
 MEMOIZED_BUILDERS = {
     "load(documents)": lambda s, d: load(s, d, "documents"),
