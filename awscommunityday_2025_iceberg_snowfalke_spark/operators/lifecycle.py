@@ -9,7 +9,7 @@ files, exactly Iceberg's metadata→manifest→data layering in miniature:
 
 - append/overwrite  → new snapshot (atomic manifest write)  [T1/T2]
 - read(version=… / as_of=…)  → time travel                  [T4]
-- schema evolution: footer-merged read schemas              [T3]
+- schema evolution: the log-recorded table schema           [T3]
 - compact()  → rewrite_data_files equivalent                 [T5]
 - expire_snapshots / remove_orphan_files (ref-aware)         [T6/T7]
 - files()/history()/refs()  → metadata tables                [T9/T10]
@@ -38,7 +38,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DataType, StructType
 
 from .. import snaplog
 from ..snaplog import BLOOM_A, BLOOM_B, BLOOM_M, BLOOM_P
@@ -76,70 +76,6 @@ class DeletionVectorLayoutError(RuntimeError):
 # schema-inference job.
 _POSITIONAL = ("pos", "dv")
 _POS_SCHEMA = "file string, pos bigint"
-
-# The footer key under which Spark's parquet writer records the file's
-# exact Spark schema; Spark's own schema inference prefers it over the
-# parquet schema (``ParquetFileFormat.readSchemaFromFooter``).
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(md) -> StructType | None:
-    """The Spark schema recorded in a parquet footer (pyarrow
-    ``FileMetaData``), or None when the file was not written by Spark
-    (pyarrow, DuckDB) or the recorded value does not parse."""
-    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if raw is None:
-        return None
-    try:
-        return StructType.fromJson(json.loads(raw))
-    except (ValueError, KeyError):
-        return None
-
-
-def _merged_schema(schemas) -> StructType | None:
-    """``schemas`` merged as Spark's schema inference merges files: fields
-    in order of first appearance. None when one is None (no recorded
-    schema), two disagree on a field's type or metadata, or two names
-    differ only in case (one field to a case-insensitive merge)."""
-    merged: dict[str, StructField] = {}
-    for schema in schemas:
-        if schema is None:
-            return None
-        for f in schema.fields:
-            seen = merged.setdefault(f.name, f)
-            if (seen.dataType, seen.metadata) != (f.dataType, f.metadata):
-                return None
-    if len({n.lower() for n in merged}) < len(merged):
-        return None
-    return StructType(list(merged.values()))
-
-
-def _read_parquet(
-    spark: SparkSession, paths: list[str], footers: list | None = None
-) -> DataFrame:
-    """Read the parquet files ``paths`` under the schema a ``mergeSchema``
-    read would infer, merged on the driver from their footers
-    (``footers``: their pyarrow ``FileMetaData``, when the caller already
-    opened them): no schema-inference Spark job. Spark's inference merges
-    the files in path order; its reader marks every field nullable
-    either way.
-
-    Falls back to the ``mergeSchema`` read (one Spark job) when a footer
-    lacks the Spark schema (files written by pyarrow or DuckDB and adopted
-    through ``ingest_files``, or by the ``format("snapshot")`` writer) —
-    only Spark's inference reads those — or when the files disagree on a
-    field: Spark then merges what it can and raises
-    ``CANNOT_MERGE_SCHEMAS`` on the rest."""
-    import pyarrow.parquet as pq
-
-    if footers is None:
-        footers = [pq.read_metadata(p) for p in paths]
-    order = sorted(range(len(paths)), key=paths.__getitem__)
-    schema = _merged_schema(_footer_schema(footers[i]) for i in order)
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
-    return spark.read.schema(schema).parquet(*paths)
-
 
 def make_table(
     spark: SparkSession,
@@ -336,21 +272,12 @@ class SnapshotTable:
         }
 
     def read_files(self, spark_files: list[str]) -> DataFrame:
-        """Read an explicit subset of data files (the pruned scan)."""
-        paths = [os.path.join(self.path, "data", f) for f in spark_files]
-        return self.spark.read.parquet(*paths)
+        """Read an explicit subset of the head's data files (the pruned
+        scan) under the table schema, with no schema-inference job."""
+        return self._read_paths(self._snapshot(), spark_files)
 
     # -- type widening (Iceberg v3 ALTER COLUMN TYPE promotion) ---------------
-    _WIDEN_TARGETS = ("bigint", "double")
-
-    def _types_path(self) -> str:
-        return os.path.join(self.path, "snapshots", "types.json")
-
-    def _type_widenings(self) -> dict:
-        if not os.path.exists(self._types_path()):
-            return {}
-        with open(self._types_path()) as fh:
-            return json.load(fh)
+    _WIDEN_TARGETS = {"bigint": "long", "double": "double"}  # DDL -> Spark JSON
 
     def widen_column_type(self, column: str, to_type: str) -> None:
         """Iceberg v3 type promotion (``ALTER TABLE ... ALTER COLUMN ...
@@ -359,32 +286,31 @@ class SnapshotTable:
         table type. Only lossless promotions are legal (int→bigint,
         int/bigint→double, float→double — Iceberg's promotion lattice);
         the target set here is the lattice's sinks. The mapping persists
-        next to the manifests (the ``metadata.json`` role), so any handle
-        — and the Python DataSource — sees the widened table type."""
+        next to the manifests (``snaplog.TYPES``, the ``metadata.json``
+        role) and ``snaplog.table_schema`` applies it, so any handle — and
+        the Python DataSource — reads the widened table type, and a later
+        write of the wide type commits."""
         if to_type not in self._WIDEN_TARGETS:
             raise ValueError(
                 f"illegal promotion target {to_type!r}"
-                f" (allowed: {self._WIDEN_TARGETS})"
+                f" (allowed: {tuple(self._WIDEN_TARGETS)})"
             )
-        cur = self._type_widenings()
+        cur = snaplog.declared(self._snaps, snaplog.TYPES)
         if cur.get(column) == "double" and to_type == "bigint":
             raise ValueError(f"cannot narrow {column} double -> bigint")
-        cur[column] = to_type
-        tmp = self._types_path() + f".{uuid.uuid4().hex[:8]}.tmp"
+        cur[column] = self._WIDEN_TARGETS[to_type]
+        self._declare(snaplog.TYPES, cur)
+
+    def _declare(self, name: str, doc: dict) -> None:
+        """Replace the declared-schema-change file ``name`` (tmp +
+        ``os.replace``: a reader never sees half a JSON)."""
+        out = os.path.join(self._snaps, name)
+        tmp = out + f".{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as fh:
-            json.dump(cur, fh)
-        os.replace(tmp, self._types_path())
+            json.dump(doc, fh)
+        os.replace(tmp, out)
 
     # -- column defaults (Iceberg v3 initial-default on ADD COLUMN) -----------
-    def _defaults_path(self) -> str:
-        return os.path.join(self.path, "snapshots", "defaults.json")
-
-    def _column_defaults(self) -> dict:
-        if not os.path.exists(self._defaults_path()):
-            return {}
-        with open(self._defaults_path()) as fh:
-            return json.load(fh)
-
     def add_column_default(self, column: str, dtype: str, default) -> None:
         """Iceberg v3 INITIAL DEFAULT (``ALTER TABLE ... ADD COLUMN ...
         DEFAULT ...``): METADATA-ONLY — files written BEFORE the add read
@@ -394,78 +320,72 @@ class SnapshotTable:
         distinction ``coalesce`` over a merged scan cannot make, and the
         grouped read funnel can: only file groups physically LACKING the
         column get the literal)."""
-        cur = self._column_defaults()
-        cur[column] = {"type": dtype, "default": default}
-        tmp = self._defaults_path() + f".{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(cur, fh)
-        os.replace(tmp, self._defaults_path())
+        cur = snaplog.declared(self._snaps, snaplog.DEFAULTS)
+        cur[column] = {"type": DataType.fromDDL(dtype).jsonValue(), "default": default}
+        self._declare(snaplog.DEFAULTS, cur)
 
-    @staticmethod
-    def _with_meta_cols(df: DataFrame) -> DataFrame:
-        """Provenance columns from the parquet scan metadata: file
-        basename + row index (position deletes / changelog pre-images)."""
-        return df.select(
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("_df_file"),
-            F.col("_metadata.row_index").alias("_df_pos"),
-            "*",
-        )
+    def _read_paths(
+        self, m: dict, files: list[str], with_meta: bool = False
+    ) -> DataFrame:
+        """The one parquet-read funnel under all table reads: data files
+        ``files`` of snapshot ``m`` under the table schema the log records
+        (``snaplog.table_schema``; added columns read NULL over old files
+        — T3). No footer is opened and no schema-inference job runs.
+        Files are GROUPED by how the schema each was written under
+        differs from the table's: the type of each column it wrote
+        narrower than the table type (a widened column's old generations
+        — Spark's scan cannot read every narrower physical type as the
+        wider one, INT64 as double for one) and the absence of each
+        defaulted column. A table whose files all match its schema is one
+        group. Each group is scanned under the table schema with its own
+        narrower types, cast up to the table types and given the initial
+        default where a defaulted column is physically absent, and the
+        groups union back. ``_metadata`` provenance must be captured per
+        group (scan columns do not survive a union), so the meta
+        projection happens here, not on the merged result.
 
-    def _read_paths(self, paths: list[str], with_meta: bool = False) -> DataFrame:
-        """The one parquet-read funnel under all table reads: one driver
-        footer walk, then one scan per file group under the schema merged
-        from the group's footers (:func:`_read_parquet`; added columns
-        read NULL over old files — T3). Files are GROUPED by the physical
-        type/presence of each widened or defaulted column (Spark's schema
-        merge refuses int32-vs-int64 conflicts — correctly: that is
-        table-format territory); a table with neither is one group. Each
-        group is cast up to the table type and filled with the initial
-        default where the column is physically absent, and the groups
-        union back. ``_metadata`` provenance must be captured per-group
-        (scan columns do not survive a union), so the meta projection
-        happens here, not on the merged result.
-
-        Scale: the walk reads each footer once on the driver, the same
-        footers a ``mergeSchema`` read reads in a Spark job; groups are
+        Scale: planning reads the snapshot manifest only; groups are
         bounded by the number of schema changes the table has seen (a
-        handful over its life), and each group stays one ordinary
-        vectorized scan."""
-        import pyarrow.parquet as pq
-
-        wid = self._type_widenings()
-        dfl = self._column_defaults()
-        cols = sorted(set(wid) | set(dfl))
-        groups: dict[tuple, tuple[list, list]] = {}
-        for p in paths:
-            with pq.ParquetFile(p) as pf:
-                md, sch = pf.metadata, pf.schema_arrow
+        handful over its life), and each stays one ordinary vectorized
+        scan."""
+        table = snaplog.table_schema(self._snaps, m)
+        types = {f["name"]: f["type"] for f in table["fields"]}
+        dfl = snaplog.declared(self._snaps, snaplog.DEFAULTS)
+        groups: dict[tuple, list[str]] = {}
+        for f in files:
+            rec = m["schemas"][m["file_schemas"][f]]
+            have = {x["name"]: x["type"] for x in rec["fields"]}
             sig = tuple(
-                str(sch.field(c).type) if c in sch.names else None
-                for c in cols
+                (c, have.get(c))
+                for c, t in types.items()
+                if have.get(c, t) != t or (c in dfl and c not in have)
             )
-            fs, mds = groups.setdefault(sig, ([], []))
-            fs.append(p)
-            mds.append(md)
+            groups.setdefault(sig, []).append(os.path.join(self.path, "data", f))
+        target = StructType.fromJson(table)
         out = None
-        for fs, mds in groups.values():
-            df = _read_parquet(self.spark, fs, mds)
-            if with_meta:
-                df = self._with_meta_cols(df)
-            for c, t in wid.items():
-                if c in df.columns:
-                    df = df.withColumn(c, F.col(c).cast(t))
-            for c, spec in dfl.items():
-                if c not in df.columns:  # pre-add generation: initial default
-                    df = df.withColumn(
-                        c, F.lit(spec["default"]).cast(spec["type"])
-                    )
-            out = (
-                df
-                if out is None
-                else out.unionByName(df, allowMissingColumns=True)
-            )
+        for sig, paths in groups.items():
+            # the table schema with the group's narrower types; an absent
+            # defaulted column reads NULL until its literal replaces it
+            narrow = dict(sig)
+            read = [
+                dict(x, type=narrow.get(x["name"]) or x["type"])
+                for x in table["fields"]
+            ]
+            df = self.spark.read.schema(
+                StructType.fromJson({"type": "struct", "fields": read})
+            ).parquet(*paths)
+            if with_meta:  # provenance: file basename + row index
+                df = df.select(
+                    F.element_at(F.split("_metadata.file_path", "/"), -1).alias(
+                        "_df_file"
+                    ),
+                    F.col("_metadata.row_index").alias("_df_pos"),
+                    "*",
+                )
+            for c, t in sig:
+                col = F.col(c) if t else F.lit(dfl[c]["default"])
+                df = df.withColumn(c, col.cast(target[c].dataType))
+            out = df if out is None else out.unionByName(df)
         return out
 
     # -- row lineage (Iceberg v3 _row_id) --------------------------------------
@@ -621,15 +541,11 @@ class SnapshotTable:
         planning is :meth:`plan_scan`'s job)."""
         version = self.current_version
         m = self._manifest(version)
-        paths = [os.path.join(self.path, "data", f) for f in m["files"]]
         src = (
-            self.spark.read.parquet(*paths)
+            self._read_paths(m, m["files"], with_meta=True)
             .where(F.col(column).isNotNull())
             .select(
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("f"),
-                F.col(column).cast("long").alias("x"),
+                F.col("_df_file").alias("f"), F.col(column).cast("long").alias("x")
             )
         )
         pos = [
@@ -805,19 +721,25 @@ class SnapshotTable:
         files: list[str],
         operation: str,
         head: dict,
+        schema: dict | None = None,
         delete_files: list[dict] | None = None,
-        prev_seqs: dict[str, int] | None = None,
+        prev: dict | None = None,
         manifests: list[str] | None = None,
     ) -> bool:
         """One compare-and-swap attempt: exclusively create
         ``v<version>.json`` over ``head``, the manifest of ``version - 1``
         (``snaplog.create``; the loop around it is ``snaplog.commit``).
-        ``delete_files`` and ``prev_seqs`` default to the head's (see
-        ``snaplog.snapshot``). ``manifests`` overrides the derived
-        manifest-file refs (the ``rewrite_manifests`` path); a losing
-        attempt's freshly written manifest file is unlinked immediately
-        (Iceberg leaves such orphans to GC; we know the attempt lost, so
-        clean up inline)."""
+        ``schema`` is the Spark JSON schema the files new to ``head`` were
+        written under; ``delete_files`` and ``prev`` default to the
+        head's (see ``snaplog.snapshot``, which refuses a schema the table
+        cannot read before any manifest file is written). ``manifests``
+        overrides the derived manifest-file refs (the
+        ``rewrite_manifests`` path); a losing attempt's freshly written
+        manifest file is unlinked immediately (Iceberg leaves such
+        orphans to GC; we know the attempt lost, so clean up inline)."""
+        manifest = snaplog.snapshot(
+            version, operation, files, head, self._snaps, schema, delete_files, prev
+        )
         own_manifest: str | None = None
         if manifests is None:
             manifests = self._carry_manifests(version, head, files)
@@ -846,9 +768,6 @@ class SnapshotTable:
         # TABLE ... ADD PARTITION FIELD; the planner evaluates each file
         # against its own spec (here: uniformly via its stats/bounds)
         prev_specs = head.get("file_specs", {})
-        manifest = snaplog.snapshot(
-            version, operation, files, head, delete_files, prev_seqs
-        )
         manifest.update(
             spec=self.partition_spec,
             file_specs={
@@ -1005,8 +924,11 @@ class SnapshotTable:
                 "resolved files); re-read and retry"
             )
 
-    def _commit_rewrite(self, base: int, files: list[str], operation: str) -> int:
-        """Commit a rewrite of snapshot ``base`` (compact / merge):
+    def _commit_rewrite(
+        self, base: int, written: tuple[list[str], dict], operation: str
+    ) -> int:
+        """Commit a rewrite of snapshot ``base`` (compact / merge) whose
+        new files and their schema are ``written`` (:meth:`_write_files`):
 
         - files APPENDED concurrently since ``base`` are carried forward
           un-rewritten, so append-vs-rewrite is lost-update-free — the
@@ -1024,6 +946,7 @@ class SnapshotTable:
           concurrently deleted keys. Real Iceberg's rewrite validation
           fails on new delete files the same way.
         """
+        files, schema = written
         base_m = self._manifest(base)
         base_files = set(base_m["files"])
         base_dels = {d["file"] for d in base_m.get("delete_files", [])}
@@ -1040,12 +963,22 @@ class SnapshotTable:
                 )
             delta = [f for f in head["files"] if f not in base_files]
             return self._try_commit(
-                cur + 1, files + delta, operation, head=head, delete_files=[]
+                cur + 1,
+                files + delta,
+                operation,
+                head=head,
+                schema=schema,
+                delete_files=[],
             )
 
         return snaplog.commit(self._snaps, operation, attempt)
 
-    def _write_files(self, df: DataFrame, n_files: int | None) -> list[str]:
+    def _write_files(
+        self, df: DataFrame, n_files: int | None
+    ) -> tuple[list[str], dict]:
+        """Write ``df`` as new data files; returns their names and the
+        Spark JSON schema they were written under (what the commit
+        records for them)."""
         staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:8]}")
         if n_files:
             df = df.repartition(n_files)
@@ -1059,30 +992,53 @@ class SnapshotTable:
                 )
                 added.append(new)
         shutil.rmtree(staging)
-        return added
+        return added, df.schema.jsonValue()
 
-    def ingest_files(self, local_paths: list[str], operation: str = "append") -> int:
-        """Adopt pre-written parquet files into the table in ONE commit
-        (Iceberg: ``add_files`` / import procedure). Same CAS loop as
-        ``append``; the files must already be finished parquet on local
-        disk — they are moved, not copied."""
+    def ingest_files(
+        self,
+        local_paths: list[str],
+        operation: str = "append",
+        schema: StructType | None = None,
+    ) -> int:
+        """Adopt pre-written parquet files of one schema into the table in
+        ONE commit (Iceberg: ``add_files`` / import procedure). Same CAS
+        loop as ``append``; the files must already be finished parquet on
+        local disk — they are moved, not copied. ``schema`` is the Spark
+        schema they were written under; without it the call infers it
+        (one Spark job, whoever wrote the files) and raises a ValueError
+        when their parquet schemas differ."""
+        if schema is None and local_paths:
+            import pyarrow.parquet as pq
+
+            first = pq.read_schema(local_paths[0]).remove_metadata()
+            for p in local_paths[1:]:
+                if not pq.read_schema(p).remove_metadata().equals(first):
+                    raise ValueError(
+                        f"ingest_files: {p} and {local_paths[0]} differ in "
+                        "schema; adopt each schema in its own call"
+                    )
+            schema = self.spark.read.parquet(*local_paths).schema
         added = []
         for p in local_paths:
             new = f"{uuid.uuid4().hex[:12]}.parquet"
             shutil.move(p, os.path.join(self.path, "data", new))
             added.append(new)
-        return self._append_files(added, operation)
+        return self._append_files(
+            (added, schema.jsonValue() if schema else None), operation
+        )
 
-    def _append_files(self, added: list[str], operation: str) -> int:
-        """Commit ``added`` (finished files under ``data/``) on top of
-        the head, whatever it is by then: the CAS loop re-bases on every
-        lost race, so no concurrently committed file or tombstone is ever
-        dropped (the lost-update hazard of a plain read-modify-write)."""
+    def _append_files(self, written: tuple[list[str], dict], operation: str) -> int:
+        """Commit ``written`` (finished files under ``data/`` and their
+        Spark JSON schema) on top of the head, whatever it is by then:
+        the CAS loop re-bases on every lost race, so no concurrently
+        committed file or tombstone is ever dropped (the lost-update
+        hazard of a plain read-modify-write)."""
+        added, schema = written
         return snaplog.commit(
             self._snaps,
             operation,
             lambda base, head: self._try_commit(
-                base + 1, head["files"] + added, operation, head=head
+                base + 1, head["files"] + added, operation, head=head, schema=schema
             ),
         )
 
@@ -1099,12 +1055,13 @@ class SnapshotTable:
         ``spark.wap.id`` staged commits). Idempotent-per-wap_id: a
         restaged id replaces its manifest; the superseded files await
         orphan GC."""
-        added = self._write_files(df, n_files)
+        added, schema = self._write_files(df, n_files)
         m = {
             "wap_id": wap_id,
             "operation": "wap.append",
             "base_version": self.current_version,
             "files": added,
+            "schema": schema,
             "timestamp": time.time(),
         }
         tmp = self._staged_path(wap_id) + ".tmp"
@@ -1124,7 +1081,12 @@ class SnapshotTable:
         cur = self.current_version
         head = self._manifest(cur)
         m = snaplog.snapshot(
-            cur + 1, "wap.audit", head["files"] + staged["files"], head
+            cur + 1,
+            "wap.audit",
+            head["files"] + staged["files"],
+            head,
+            self._snaps,
+            staged["schema"],
         )
         return self._apply_renames(self._read_scoped(m, m["files"]))
 
@@ -1134,7 +1096,9 @@ class SnapshotTable:
         ``cherrypick_snapshot``); the staged manifest is retired."""
         with open(self._staged_path(wap_id)) as fh:
             staged = json.load(fh)
-        version = self._append_files(staged["files"], "wap.publish")
+        version = self._append_files(
+            (staged["files"], staged["schema"]), "wap.publish"
+        )
         os.remove(self._staged_path(wap_id))
         return version
 
@@ -1185,15 +1149,8 @@ class SnapshotTable:
         branch's v1 manifest references the seed snapshot's files)."""
         v = version if version is not None else self.current_version
         m = self._manifest(v)
-        bm = {
-            "version": 1,
-            "operation": "branch.create",
-            "base_main_version": v,
-            "timestamp": time.time(),
-            "files": m.get("files", []),
-            "file_seqs": m.get("file_seqs", {}),
-            "delete_files": m.get("delete_files", []),
-        }
+        bm = snaplog.snapshot(1, "branch.create", m["files"], m, self._snaps)
+        bm["base_main_version"] = v
         if not snaplog.create(
             os.path.join(self._snaps, f"branch-{name}-v1.json"), bm
         ):
@@ -1206,29 +1163,21 @@ class SnapshotTable:
         session's write branch set): same CAS re-base loop as ``append``,
         against the branch's own manifest chain — main is untouched."""
         self.branch_version(name)  # the branch must exist
-        added = self._write_files(df, n_files)
+        added, schema = self._write_files(df, n_files)
         prefix = f"branch-{name}-v"
 
         def attempt(base: int, m: dict) -> bool:
+            bm = snaplog.snapshot(
+                base + 1, "branch.append", m["files"] + added, m, self._snaps, schema
+            )
+            bm["base_main_version"] = m["base_main_version"]
             # branch-appended files take sequence number base_main + k for
             # the branch's k-th append — strictly ABOVE every tombstone
             # inherited from the seed snapshot (seq <= base_main), so a
             # key re-inserted on the branch after a main-side delete
             # survives branch reads (Iceberg v2 semantics), and the seqs
-            # ride through fast_forward's prev_seqs untouched
-            new_seq = m["base_main_version"] + base
-            bm = {
-                "version": base + 1,
-                "operation": "branch.append",
-                "base_main_version": m["base_main_version"],
-                "timestamp": time.time(),
-                "files": m["files"] + added,
-                "file_seqs": {
-                    **m.get("file_seqs", {}),
-                    **{f: new_seq for f in added},
-                },
-                "delete_files": m.get("delete_files", []),
-            }
+            # ride through fast_forward untouched
+            bm["file_seqs"].update(dict.fromkeys(added, m["base_main_version"] + base))
             return snaplog.create(
                 os.path.join(self._snaps, f"{prefix}{base + 1}.json"), bm
             )
@@ -1268,7 +1217,7 @@ class SnapshotTable:
             f"fast_forward.{name}",
             head=self._manifest(cur),
             delete_files=tip.get("delete_files", []),
-            prev_seqs=tip.get("file_seqs", {}),
+            prev=tip,
         ):
             return cur + 1
         raise CommitConflict(
@@ -1292,12 +1241,17 @@ class SnapshotTable:
         tombstones. A lost version race retries at the next version —
         last writer wins, the correct semantic for a full replace (real
         Iceberg's overwrite would conflict-fail instead)."""
-        files = self._write_files(df, n_files)
+        files, schema = self._write_files(df, n_files)
         return snaplog.commit(
             self._snaps,
             "overwrite",
             lambda base, head: self._try_commit(
-                base + 1, files, "overwrite", head=head, delete_files=[]
+                base + 1,
+                files,
+                "overwrite",
+                head=head,
+                schema=schema,
+                delete_files=[],
             ),
         )
 
@@ -1389,8 +1343,8 @@ class SnapshotTable:
                 F.broadcast(source.select(*keys).distinct()), keys, "left_semi"
             )
         )
-        tomb = self._write_files(doomed, 1)
-        added = self._write_files(source, n_files)
+        tomb, _ = self._write_files(doomed, 1)
+        added, schema = self._write_files(source, n_files)
 
         def attempt(cur: int, head: dict) -> bool:
             self._check_live("merge_mor", base, m["files"], head)
@@ -1402,6 +1356,7 @@ class SnapshotTable:
                 head["files"] + added,
                 "merge.mor",
                 head=head,
+                schema=schema,
                 delete_files=dels,
             )
 
@@ -1488,11 +1443,11 @@ class SnapshotTable:
         self, version: int | None = None, as_of: float | None = None
     ) -> DataFrame:
         """T4 time travel (Iceberg: ``VERSION AS OF`` / ``TIMESTAMP AS OF``).
-        The scan schema is merged from the data files' footers on the
-        driver, so building the read runs no Spark job and added columns
-        read NULL over old files (T3, :func:`_read_parquet`); recorded
-        column renames map old-name files at scan time (see
-        :meth:`rename_column`)."""
+        The scan schema is the table schema the snapshot records
+        (:meth:`_read_paths`), so building the read opens no data-file
+        footer and runs no Spark job, and added columns read NULL over
+        old files (T3); recorded column renames map old-name files at
+        scan time (see :meth:`rename_column`)."""
         m = self._snapshot(version, as_of)
         if not m["files"]:
             raise ValueError("empty table")
@@ -1543,24 +1498,23 @@ class SnapshotTable:
             groups.setdefault(sig, []).append(f)
         out = None
         for sig, fs in groups.items():
-            part = self._read_paths(
-                [os.path.join(self.path, "data", f) for f in fs],
-                with_meta=with_meta,
-            )
+            part = self._read_paths(m, fs, with_meta=with_meta)
             for i in sig:
-                keys = _read_parquet(
-                    self.spark,
-                    [os.path.join(self.path, "data", equality[i]["file"])],
-                )
+                keys = self._delete_keys(equality[i])
                 part = part.join(keys, equality[i]["key_cols"], "left_anti")
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
+            out = part if out is None else out.unionByName(part)
         if positional:
             out = self._join_positions(out, positional, "left_anti")
             if not keep_meta:
                 out = out.drop("_df_file", "_df_pos")
         return out
+
+    def _delete_keys(self, d: dict) -> DataFrame:
+        """The keys of equality-delete file ``d`` (a ``delete_files``
+        entry), read under the schema the entry records."""
+        return self.spark.read.schema(StructType.fromJson(d["schema"])).parquet(
+            os.path.join(self.path, "data", d["file"])
+        )
 
     def _join_positions(
         self, df: DataFrame, tomb_paths: list[str], how: str
@@ -1586,11 +1540,11 @@ class SnapshotTable:
         own, so later re-inserts of the same key survive (Iceberg v2
         semantics, test-pinned); the next ``compact()`` materializes the
         deletes and clears them."""
-        added = self._write_files(keys.select(*key_cols).distinct(), 1)
+        added, schema = self._write_files(keys.select(*key_cols).distinct(), 1)
 
         def attempt(base: int, head: dict) -> bool:
             dels = head.get("delete_files", []) + [
-                {"file": f, "key_cols": key_cols, "seq": base + 1}
+                {"file": f, "key_cols": key_cols, "seq": base + 1, "schema": schema}
                 for f in added
             ]
             return self._try_commit(
@@ -1614,7 +1568,7 @@ class SnapshotTable:
         exactly like equality deletes. Cost: O(|matches|) tombstone I/O,
         zero data rewrite."""
         base, m, positions = self._positions(lambda live: live.filter(predicate))
-        added = self._write_files(positions, 1)
+        added, _ = self._write_files(positions, 1)
 
         def attempt(cur: int, head: dict) -> bool:
             # a concurrent compact()/merge that rewrote a resolved file
@@ -1847,12 +1801,9 @@ class SnapshotTable:
                 f for f in kept if to_seqs.get(f, 0) <= d.get("seq", 1 << 62)
             ]
             if src:
-                kdf = _read_parquet(
-                    self.spark, [os.path.join(self.path, "data", d["file"])]
-                )
                 hits.append(
                     self._read_scoped(mf, src).join(
-                        kdf, d["key_cols"], "left_semi"
+                        self._delete_keys(d), d["key_cols"], "left_semi"
                     )
                 )
         for hit in hits:
@@ -1938,7 +1889,7 @@ class SnapshotTable:
                 f"rollback.v{version}",
                 head=head,
                 delete_files=m.get("delete_files", []),
-                prev_seqs=m.get("file_seqs", {}),
+                prev=m,
             ),
         )
 
@@ -2121,9 +2072,9 @@ def merge_upsert_mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALTER TABLE ADD COLUMN parity (P:124-128): write cold events with
     the original schema, hot events with an added ``user_agent`` column,
-    read both generations through one merged-schema scan (Iceberg
-    field-id evolution ≈ Parquet mergeSchema here), aggregate with the
-    evolved column NULL for pre-evolution rows."""
+    read both generations through one scan under the table schema the
+    snapshot log records (Iceberg's field-id evolution by name here),
+    aggregate with the evolved column NULL for pre-evolution rows."""
     ev = load(spark, sf_dir, "events")
     cut = F.to_timestamp(F.lit(CUTOFF_7D))
     tbl = make_table(spark, "evolve_")
@@ -2192,7 +2143,8 @@ def _write_chunked(tbl, df: DataFrame, chunk_col: str = "_c") -> list:
     One Spark job: hash-repartitioning on the chunk key routes ALL rows of
     a chunk to a single task, and ``partitionBy`` then emits exactly one
     file per chunk directory; the files enter the table through a single
-    ``ingest_files`` commit. Replaces the per-chunk filter+append loop
+    ``ingest_files`` commit under the schema written (no inference job).
+    Replaces the per-chunk filter+append loop
     (N full source scans, N write jobs, N commits → 1/1/1). Backends
     without ``ingest_files`` (the real-Iceberg adapter) keep the loop."""
     chunks = sorted(r[0] for r in df.select(chunk_col).distinct().collect())
@@ -2215,7 +2167,7 @@ def _write_chunked(tbl, df: DataFrame, chunk_col: str = "_c") -> list:
         fs = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(fs) == 1, (c, fs)  # one task owns each chunk value
         paths.append(os.path.join(d, fs[0]))
-    tbl.ingest_files(paths)
+    tbl.ingest_files(paths, schema=df.drop(chunk_col).schema)
     shutil.rmtree(staging, ignore_errors=True)
     return chunks
 
@@ -2476,9 +2428,10 @@ def type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     values beyond int32 range (2.2e9 + user_id > 2^31, SF-independent); a second promotion to double and
     generation 3 appends fractional values. One ``read()`` then returns
     every generation under the table type (double): the read funnel
-    groups files by their physical type — Spark's own schema merge
-    correctly refuses int32-vs-int64 parquet conflicts, which is exactly
-    why the table format owns this — casts each group up, and unions.
+    groups files by the type the snapshot log records for them — Spark's
+    own schema merge correctly refuses int32-vs-int64 parquet conflicts,
+    which is exactly why the table format owns this — casts each group
+    up, and unions.
     The report aggregates per generation, so a missing or double-cast
     generation breaks counts and exact decimal sums against the oracle.
 

@@ -2668,6 +2668,19 @@ UNIGRAM_UNK_WT = UNIGRAM_UNK_COST * 256 + 1
 UNIGRAM_VOCAB_SIZE = 48  # multi-char pieces kept by the trainer
 
 
+def _by_value(fn):
+    """A copy of module function ``fn`` that cloudpickle ships BY VALUE,
+    with the module constants it reads. Cloudpickle sends a function it
+    finds under its own name in an importable module by reference, and
+    Spark's Python workers cannot import this package in a vanilla
+    session, so an Arrow closure calls the copy instead."""
+    import types
+
+    return types.FunctionType(
+        fn.__code__, fn.__globals__, fn.__name__, fn.__defaults__
+    )
+
+
 def _unigram_viterbi_weight(w: str, costs: dict) -> int:
     """Shared DP kernel: minimum total weight over all segmentations of
     ``w`` into vocab pieces (≤ UNIGRAM_MAX_PIECE chars), unknown single
@@ -2745,13 +2758,14 @@ def _unigram_segmented(spark: SparkSession, words: DataFrame, vocab) -> DataFram
     closure (a 32k-piece production vocab would move to an explicit
     broadcast — same plan either way: map-only, zero exchanges)."""
     costs = dict(vocab)
+    weight = _by_value(_unigram_viterbi_weight)
 
     def gen(batches):
         import pandas as pd
 
         for pdf in batches:
             ws = pdf["w"].tolist()
-            tot = [_unigram_viterbi_weight(w, costs) for w in ws]
+            tot = [weight(w, costs) for w in ws]
             yield pd.DataFrame(
                 {
                     "w": ws,
@@ -2823,6 +2837,7 @@ def unigram_train(
         }
 
     costs, history = _costs(freqs), []
+    pieces = _by_value(_unigram_viterbi_pieces)
     for r in range(1, rounds + 1):
         bcosts = dict(costs)
 
@@ -2833,7 +2848,7 @@ def unigram_train(
                 ps, ns = [], []
                 for w, cnt in zip(pdf["w"], pdf["cnt"]):
                     wt = 0
-                    for piece in _unigram_viterbi_pieces(w, bcosts):
+                    for piece in pieces(w, bcosts):
                         ps.append(piece)
                         ns.append(int(cnt))
                         wt += bcosts.get(piece, UNIGRAM_UNK_COST)
@@ -2966,6 +2981,8 @@ def unigram_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in multi:
         variants[p] = {q: c for q, c in UNIGRAM_VOCAB if q != p}
 
+    weight = _by_value(_unigram_viterbi_weight)
+
     def gen(batches):
         import pandas as pd
 
@@ -2973,7 +2990,7 @@ def unigram_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             names, costs = [], []
             for w, cnt in zip(pdf["w"], pdf["cnt"]):
                 for name, vocab in variants.items():
-                    t = _unigram_viterbi_weight(w, vocab)
+                    t = weight(w, vocab)
                     names.append(name)
                     costs.append(int(cnt) * (t // 256))
             yield pd.DataFrame({"piece_removed": names, "wcost": costs})

@@ -9,15 +9,17 @@ writers racing for one version exactly one wins. The filesystem is the
 arbiter, the role of Iceberg's atomic metadata-pointer swap (P:205-224).
 The loser re-reads the new head, re-bases its proposal and retries.
 
-It also holds the read side every planner shares: which snapshot a read
-names (:func:`resolve`, with the ``tag-<name>.json`` ref layout), the
-per-file column stats a parquet footer proves (:func:`footer_stats`),
-the one pruning rule over those stats (:func:`may_match`) and the Bloom
-sidecar family (:func:`bloom_may_contain`).
+It also holds the one schema rule (a commit records what it writes,
+:func:`merge_schema`; both table faces read :func:`table_schema`) and
+the read side every planner shares: which snapshot a read names
+(:func:`resolve`, with the ``tag-<name>.json`` ref layout), the per-file
+column stats a parquet footer proves (:func:`footer_stats`), the one
+pruning rule over those stats (:func:`may_match`) and the Bloom sidecar
+family (:func:`bloom_may_contain`).
 
-Stdlib only at module level (pyarrow is imported inside
-:func:`footer_stats`): the Python DataSource (``sources.pyds``) ships
-this module by value to workers that cannot import the package.
+Stdlib only (pyarrow is imported inside :func:`footer_stats`): the
+Python DataSource (``sources.pyds``) ships this module by value to
+workers that cannot import the package.
 """
 
 from __future__ import annotations
@@ -77,17 +79,34 @@ def snapshot(
     operation: str,
     files: list[str],
     head: dict,
+    snap_dir: str,
+    schema: dict | None = None,
     delete_files: list[dict] | None = None,
-    prev_seqs: dict[str, int] | None = None,
+    prev: dict | None = None,
 ) -> dict:
     """The manifest core of commit ``version`` proposed over ``head``.
 
-    Data SEQUENCE numbers (Iceberg v2): a file keeps the seq of the
-    commit that introduced it (looked up in ``prev_seqs``, by default the
-    head's), a new file takes ``version``; equality deletes apply only to
-    files with seq <= the delete's seq. ``delete_files`` defaults to the
-    head's tombstones, so an append carries them."""
-    seqs = head.get("file_seqs", {}) if prev_seqs is None else prev_seqs
+    A file keeps what ``prev`` (default the head; a rollback or branch
+    publish passes the manifest its files come from) records for it:
+    its data SEQUENCE number (Iceberg v2: equality deletes apply only to
+    files with seq <= theirs) and its schema id (``file_schemas`` into
+    ``schemas``, with ``schema_id`` naming the table's: Iceberg's schema
+    list). A file new to the commit takes ``version`` and the id of
+    ``schema``, the Spark JSON schema it was written under, which
+    :func:`merge_schema` merges into ``prev``'s :func:`table_schema` —
+    a write the table cannot read raises here, before any manifest is
+    written. ``delete_files`` defaults to the head's tombstones, so an
+    append carries them."""
+    prev = head if prev is None else prev
+    seqs = prev.get("file_seqs", {})
+    ids = prev.get("file_schemas", {})
+    schemas = list(prev.get("schemas", []))
+    table = table_schema(snap_dir, prev)
+    new = [f for f in files if f not in ids]
+    if new:
+        schema = _nullable(schema)
+        table = merge_schema(table, schema)
+        ids = {**ids, **dict.fromkeys(new, _schema_id(schemas, schema))}
     return {
         "version": version,
         "operation": operation,
@@ -97,6 +116,9 @@ def snapshot(
         "delete_files": (
             head.get("delete_files", []) if delete_files is None else delete_files
         ),
+        "schema_id": _schema_id(schemas, table),
+        "schemas": schemas,
+        "file_schemas": {f: ids[f] for f in files},
     }
 
 
@@ -110,6 +132,98 @@ def commit(snap_dir: str, name: str, attempt, prefix: str = "v") -> int:
         if attempt(base, read(snap_dir, base, prefix)):
             return base + 1
     raise RuntimeError(f"{name}: commit retries exhausted")
+
+
+# -- the table schema ---------------------------------------------------------
+# Declared schema changes beside the manifests (the metadata.json role):
+# widenings {column: type} and initial defaults {column: {"type": type,
+# "default": value}}, types in Spark JSON spelling.
+TYPES = "types.json"
+DEFAULTS = "defaults.json"
+# Iceberg's lossless promotions: a narrower file column reads cast up.
+_WIDER = {"integer": ("long", "double"), "long": ("double",), "float": ("double",)}
+
+
+def declared(snap_dir: str, name: str) -> dict:
+    """The declared widenings (``TYPES``) or defaults (``DEFAULTS``) of
+    the table logged in ``snap_dir``; {} when none was declared."""
+    try:
+        with open(os.path.join(snap_dir, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
+
+
+def _nullable(t):
+    """Spark JSON type ``t`` with every field, element and map value
+    nullable, as Spark's parquet scan reads it."""
+    kind = t["type"] if isinstance(t, dict) else None
+    if kind == "struct":
+        fs = [dict(f, nullable=True, type=_nullable(f["type"])) for f in t["fields"]]
+        return dict(t, fields=fs)
+    if kind == "array":
+        return dict(t, containsNull=True, elementType=_nullable(t["elementType"]))
+    if kind == "map":
+        return dict(t, valueContainsNull=True, valueType=_nullable(t["valueType"]))
+    return t
+
+
+def _schema_id(schemas: list, schema: dict) -> int:
+    """The id (list index) of ``schema`` in ``schemas``, appended if new."""
+    if schema not in schemas:
+        schemas.append(schema)
+    return schemas.index(schema)
+
+
+def merge_schema(table: dict, schema: dict) -> dict:
+    """Schema ``schema`` of the files a commit writes merged into the
+    ``table`` schema (both Spark JSON, nullable): a new column appends; a
+    column passes when its type is the table's or narrower along
+    ``_WIDER``. Anything else — a wider type (``widen_column_type``
+    declares one), an unrelated type, a name differing from a table
+    column only in case — raises a ValueError naming the column and both
+    types."""
+    fields = list(table["fields"])
+    have = {f["name"].lower(): f for f in fields}
+    for f in schema["fields"]:
+        t = have.get(f["name"].lower())
+        if t is None:
+            have[f["name"].lower()] = f
+            fields.append(f)
+        elif t["name"] != f["name"] or not (
+            f["type"] == t["type"]
+            or isinstance(f["type"], str) and t["type"] in _WIDER.get(f["type"], ())
+        ):
+            raise ValueError(
+                f"column {f['name']!r} is written as {json.dumps(f['type'])}, "
+                f"but the table's {t['name']!r} is {json.dumps(t['type'])}"
+            )
+    return dict(table, fields=fields)
+
+
+def table_schema(snap_dir: str, manifest: dict) -> dict:
+    """The Spark JSON schema a read of snapshot ``manifest`` returns: the
+    recorded table schema with each declared widening applied and each
+    declared default column it lacks appended. A manifest with files but
+    no schema record raises a ValueError naming it."""
+    if "schemas" in manifest:
+        rec = manifest["schemas"][manifest["schema_id"]]
+    elif manifest["files"]:
+        raise ValueError(
+            f"snapshot v{manifest.get('version')} of {os.path.dirname(snap_dir)}"
+            " has no schema record"
+        )
+    else:  # the empty table
+        rec = {"type": "struct", "fields": []}
+    widen = declared(snap_dir, TYPES)
+    fields = [dict(f, type=widen.get(f["name"], f["type"])) for f in rec["fields"]]
+    names = {f["name"] for f in fields}
+    fields += [
+        {"name": c, "type": d["type"], "nullable": True, "metadata": {}}
+        for c, d in declared(snap_dir, DEFAULTS).items()
+        if c not in names
+    ]
+    return {"type": "struct", "fields": fields}
 
 
 # -- refs: which snapshot a read names ----------------------------------------

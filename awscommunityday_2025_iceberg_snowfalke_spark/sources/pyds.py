@@ -6,8 +6,10 @@ the reference reads its Iceberg tables through an engine-integrated table
 format (SURVEY §2.1 S5); this source gives our snapshot layer the same
 integration, through Spark's public Python DataSource API:
 
-- **schema** inferred from the current snapshot's Parquet footer (the
-  ``INFER_SCHEMA`` external-table behavior, performance_comparison.sql:14-21);
+- **schema** = the table schema the snapshot log records, widenings and
+  initial defaults applied (``snaplog.table_schema``, the rule
+  ``SnapshotTable.read`` reads under): no data-file footer is opened to
+  plan, and every Arrow batch is conformed to it;
 - **split planning** = one ``InputPartition`` per manifest data file —
   the scan parallelizes across files exactly as Iceberg plans splits;
 - **filter pushdown** (``pushFilters``): comparison and NULL predicates
@@ -60,12 +62,13 @@ def register(spark) -> None:
       default-off in Spark 4.1) — without it Spark refuses a reader that
       implements ``pushFilters``.
     - Registers THIS module and ``snaplog`` (the commit protocol, the
-      ref resolver, the footer-stats reader, the pruning rule and the
-      Bloom family it uses) for cloudpickle by-value serialization: the
-      DataSource class is unpickled in Spark's plan-time Python runner
-      and in executor workers, which do not inherit the driver's
-      sys.path — by-value shipping makes the source work from any
-      session (a vanilla one included) with no PYTHONPATH arrangement.
+      schema rule, the ref resolver, the footer-stats reader, the
+      pruning rule and the Bloom family it uses) for cloudpickle
+      by-value serialization: the DataSource class is unpickled in
+      Spark's plan-time Python runner and in executor workers, which do
+      not inherit the driver's sys.path — by-value shipping makes the
+      source work from any session (a vanilla one included) with no
+      PYTHONPATH arrangement.
       Everything else the shipped code touches is stdlib/pyarrow/pyspark,
       importable everywhere.
     """
@@ -79,13 +82,12 @@ def register(spark) -> None:
     spark.dataSource.register(SnapshotDataSource)
 
 
-def _resolve(path: str, options) -> tuple[int, list[str]]:
-    """The version and data-file paths of the snapshot the ``version``/
-    ``asOf``/``tag`` options name (``snaplog.resolve``: an unknown one
-    raises a ValueError naming it). This source reads data files only,
-    so a snapshot that carries tombstones (merge-on-read deletes,
-    deletion vectors) is refused rather than read with its deleted rows
-    resurrected."""
+def _resolve(path: str, options) -> dict:
+    """The manifest of the snapshot the ``version``/``asOf``/``tag``
+    options name (``snaplog.resolve``: an unknown one raises a ValueError
+    naming it). This source reads data files only, so a snapshot that
+    carries tombstones (merge-on-read deletes, deletion vectors) is
+    refused rather than read with its deleted rows resurrected."""
     as_of = options.get("asof")
     manifest = snaplog.resolve(
         os.path.join(path, "snapshots"),
@@ -101,7 +103,13 @@ def _resolve(path: str, options) -> tuple[int, list[str]]:
             'format("snapshot") reads data files only — read it with '
             "SnapshotTable.read, or compact() the table first"
         )
-    return version, [os.path.join(path, "data", f) for f in manifest["files"]]
+    return manifest
+
+
+def _defaults(path: str) -> dict:
+    """``{column: initial default}`` of the table at ``path``."""
+    declared = snaplog.declared(os.path.join(path, "snapshots"), snaplog.DEFAULTS)
+    return {c: d["default"] for c, d in declared.items()}
 
 
 # the pushed filters the pruning rule can evaluate, as snaplog.may_match ops
@@ -121,10 +129,39 @@ class _FileSplit(InputPartition):
     path: str
 
 
+def _read_split(reader, partition: _FileSplit):
+    """Both readers' ``read``: one data file's record batches conformed to
+    the schema the reader serves, as ``SnapshotTable`` reads it. A column
+    the file lacks reads its initial default (``reader._fill``) or NULL,
+    a narrower type is cast up, and a column the schema lacks (a later
+    commit's, under a stream's start schema) is dropped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(reader._schema)
+    with pq.ParquetFile(partition.path) as f:
+        for b in f.iter_batches():
+            have = set(b.schema.names)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(t.name).cast(t.type)
+                    if t.name in have
+                    else pa.array([reader._fill.get(t.name)] * b.num_rows).cast(t.type)
+                    for t in target
+                ],
+                schema=target,
+            )
+
+
 class SnapshotReader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, schema=None):
         self._path = options["path"]
-        self._version, self._files = _resolve(self._path, options)
+        m = _resolve(self._path, options)
+        self._version = m.get("version", 0)
+        self._files = [os.path.join(self._path, "data", f) for f in m["files"]]
+        self._schema = schema
+        self._fill = _defaults(self._path)
 
     def pushFilters(self, filters):
         """Keep the files whose footer stats may match every pushed
@@ -164,11 +201,7 @@ class SnapshotReader(DataSourceReader):
     def partitions(self):
         return [_FileSplit(p) for p in self._files]
 
-    def read(self, partition: _FileSplit):
-        import pyarrow.parquet as pq
-
-        with pq.ParquetFile(partition.path) as f:
-            yield from f.iter_batches()
+    read = _read_split
 
 
 def _all_commits(path: str) -> list[dict]:
@@ -182,10 +215,13 @@ class SnapshotStreamReader(DataSourceStreamReader):
     each batch reads exactly the data files added by append commits in
     (start, end] — the Iceberg incremental append scan, so a downstream
     streaming query processes every ingested row exactly once across
-    restarts (offsets live in the sink's checkpoint)."""
+    restarts (offsets live in the sink's checkpoint). Every batch reads
+    under the schema the stream started with."""
 
-    def __init__(self, options):
+    def __init__(self, options, schema):
         self._path = options["path"]
+        self._schema = schema
+        self._fill = _defaults(self._path)
 
     def initialOffset(self) -> dict:
         return {"version": 0}
@@ -214,11 +250,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 )
         return splits
 
-    def read(self, partition: _FileSplit):
-        import pyarrow.parquet as pq
-
-        with pq.ParquetFile(partition.path) as f:
-            yield from f.iter_batches()
+    read = _read_split
 
     def commit(self, end: dict) -> None:
         pass  # offsets are tracked by the engine's checkpoint
@@ -236,11 +268,15 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
     exclusively (tmp + ``os.link``, ``snaplog``). Exactly the two-phase
     Iceberg commit protocol (P:205-224): data files first, metadata
     pointer swap last, so a failed job leaves only unreferenced files for
-    orphan GC. ``abort()`` deletes the task outputs eagerly."""
+    orphan GC. ``abort()`` deletes the task outputs eagerly. The commit
+    records the schema Spark hands the writer (``schema``, Spark JSON)
+    for its files, under the rule ``SnapshotTable`` commits by
+    (``snaplog.snapshot``)."""
 
-    def __init__(self, path: str, overwrite: bool):
+    def __init__(self, path: str, overwrite: bool, schema: dict):
         self._path = path
         self._overwrite = overwrite
+        self._schema = schema
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
 
@@ -268,10 +304,11 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
         op = "overwrite" if self._overwrite else "append"
 
         def attempt(base: int, head: dict) -> bool:
-            if self._overwrite:
-                doc = snaplog.snapshot(base + 1, op, added, head, delete_files=[])
-            else:
-                doc = snaplog.snapshot(base + 1, op, head["files"] + added, head)
+            files = added if self._overwrite else head["files"] + added
+            dels = [] if self._overwrite else None
+            doc = snaplog.snapshot(
+                base + 1, op, files, head, snap_dir, self._schema, dels
+            )
             return snaplog.create(os.path.join(snap_dir, f"v{base + 1}.json"), doc)
 
         snaplog.commit(snap_dir, op, attempt)
@@ -293,23 +330,25 @@ class SnapshotDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self):
-        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
 
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        files = _resolve(self.options["path"], self.options)[1]
-        if not files:
+        path = self.options["path"]
+        m = _resolve(path, self.options)
+        if not m["files"]:
             raise ValueError("empty snapshot table")
-        return from_arrow_schema(pq.read_schema(files[0]))
+        snap_dir = os.path.join(path, "snapshots")
+        return StructType.fromJson(snaplog.table_schema(snap_dir, m))
 
     def reader(self, schema) -> SnapshotReader:
-        return SnapshotReader(self.options)
+        return SnapshotReader(self.options, schema)
 
     def streamReader(self, schema) -> SnapshotStreamReader:
-        return SnapshotStreamReader(self.options)
+        return SnapshotStreamReader(self.options, schema)
 
     def writer(self, schema, overwrite: bool) -> SnapshotArrowWriter:
-        return SnapshotArrowWriter(self.options["path"], overwrite)
+        return SnapshotArrowWriter(
+            self.options["path"], overwrite, schema.jsonValue()
+        )
 
 
 # --- driver-contract gate -----------------------------------------------------

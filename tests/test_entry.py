@@ -56,6 +56,45 @@ def test_all_queries_emit_canonicalizable_schemas(spark):
     assert not offenders, offenders
 
 
+# One entry per module that ships Python to Spark's workers: the unigram
+# DP (textstats), the IVF kernels (similarity), a multimodal Arrow map, a
+# stateful streaming operator and the snapshot DataSource.
+_WORKER_ENTRIES = (
+    "unigram_viterbi_segment",
+    "ann_ivf_cosine",
+    "multimodal_resize",
+    "streaming_user_sessions",
+    "pyds_snapshot_scan",
+)
+
+
+def test_worker_side_python_runs_outside_the_repo(tmp_path):
+    """Spark's Python workers do not inherit the driver's sys.path, and
+    pytest puts the repo on every worker's path, hiding a closure that
+    calls package code by reference. ``tools/drive_one.py`` runs each
+    module's worker-side entry against its oracle in a fresh vanilla
+    session, from a directory outside the repo with no PYTHONPATH."""
+    import subprocess
+
+    from conftest import SF_DIR
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_SF_DIR"] = SF_DIR
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "drive_one.py"), *_WORKER_ENTRIES],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+        check=False,
+    )
+    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
+    for name in _WORKER_ENTRIES:
+        assert f"{name}: OK" in out.stdout
+
+
 def test_bench_settle_start_branches():
     """The bench's quiet-host gate (r16-verdict item 2): an idle start
     with stable calibration returns with no contended record; a

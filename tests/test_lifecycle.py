@@ -2036,42 +2036,71 @@ def _build_shape(spark, t, shape):
         t.delete_where_mor(spark.range(5).withColumnRenamed("id", "k"), ["k"])
 
 
-@pytest.mark.parametrize(
-    "shape",
-    ["plain", "added", "widened", "defaulted", "renamed", "dv", "equality"],
-)
+def _footer_opens(monkeypatch) -> list:
+    """Count every pyarrow data-file footer open from here on."""
+    import pyarrow.parquet as pq
+
+    opened = []
+    for name in ("ParquetFile", "read_metadata", "read_schema"):
+        real = getattr(pq, name)
+
+        def counted(*a, _real=real, _name=name, **kw):
+            opened.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(pq, name, counted)
+    return opened
+
+
+_SHAPES = ["plain", "added", "widened", "defaulted", "renamed", "dv", "equality"]
+
+
+@pytest.mark.parametrize("shape", _SHAPES)
 def test_table_reads_take_the_footer_schema_without_a_job(
     spark, tmp_path, monkeypatch, shape
 ):
-    """Building a read of a Spark-written table runs no Spark job: the
-    scan schema, and that of every equality-delete key file, is merged
-    from the footers on the driver. Forcing every footer lookup to
-    "missing" takes the mergeSchema fallback (at least one inference
-    job), which must give the identical schema and rows — of the table
-    read and of the provenance-carrying scan under it."""
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators import lifecycle
-
+    """Building a read runs no Spark job and opens no data-file footer:
+    the scan schema, and that of every equality-delete key file, comes
+    from the snapshot log. The table's file scan under it equals an
+    explicit ``mergeSchema`` read of the same files wherever Spark can
+    merge them (the widened table's int and bigint generations it
+    refuses); the defaulted table's pre-add rows read the initial
+    default where the merged read has NULL."""
     t = SnapshotTable(spark, str(tmp_path / shape))
     _build_shape(spark, t, shape)
     m = t._manifest(t.current_version)
+    opened = _footer_opens(monkeypatch)
 
     def reads():
         return [t.read(), t._read_scoped(m, m["files"], keep_meta=True)]
 
     assert jobs_of(spark, reads) == 0
-    footer = reads()
-    monkeypatch.setattr(lifecycle, "_footer_schema", lambda md: None)
-    assert jobs_of(spark, reads) > 0
-    for a, b in zip(footer, reads()):
-        assert a.schema == b.schema
-        assert sorted(a.collect()) == sorted(b.collect())
+    assert opened == []
+    monkeypatch.undo()
+
+    scan = t._read_paths(m, m["files"])
+    paths = [os.path.join(t.path, "data", f) for f in m["files"]]
+    if shape == "widened":
+        with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+            spark.read.option("mergeSchema", "true").parquet(*paths)
+        return
+    merged = spark.read.option("mergeSchema", "true").parquet(*paths)
+    merged = merged.select(*scan.columns)
+    if shape == "defaulted":
+        merged = merged.withColumn(
+            "tier", F.when(F.col("k") < 40, "std").otherwise(F.col("tier"))
+        )
+    assert scan.schema == merged.schema
+    assert sorted(scan.collect()) == sorted(merged.collect())
 
 
 def test_reads_fall_back_to_inference_without_a_spark_schema(spark, tmp_path):
-    """A file written by pyarrow carries no Spark schema in its footer:
-    the read infers it with mergeSchema (one job) and still returns every
-    row. Two Spark-written generations that disagree on a column's type
-    take the same fallback, and Spark refuses the merge."""
+    """A file written by pyarrow is adopted under the schema one inference
+    at ``ingest_files`` gives it (at most one job), and the read costs
+    none. A generation narrower along the widening lattice (int into a
+    bigint table) commits and reads as the table type; a wider one
+    (bigint into an int table) is refused at commit, naming the column
+    and both types, and commits nothing."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2082,18 +2111,112 @@ def test_reads_fall_back_to_inference_without_a_spark_schema(spark, tmp_path):
         pa.table({"k": pa.array(range(10, 15), pa.int64()), "note": ["x"] * 5}),
         src,
     )
-    t.ingest_files([src])
-    assert jobs_of(spark, t.read) == 1
+    assert jobs_of(spark, lambda: t.ingest_files([src])) <= 1
+    assert jobs_of(spark, t.read) == 0
     df = t.read()
     assert df.columns == ["k", "note"]
     assert sorted(r["k"] for r in df.collect()) == list(range(15))
     assert df.filter(F.col("note") == "x").count() == 5
 
+    w = SnapshotTable(spark, str(tmp_path / "w"))
+    w.append(spark.range(3).withColumnRenamed("id", "k"), n_files=1)
+    w.append(spark.range(3, 6).select(F.col("id").cast("int").alias("k")), n_files=1)
+    assert dict(w.read().dtypes)["k"] == "bigint"
+    assert sorted(r["k"] for r in w.read().collect()) == list(range(6))
+
     c = SnapshotTable(spark, str(tmp_path / "c"))
-    c.append(spark.range(3).withColumnRenamed("id", "k"), n_files=1)
     c.append(spark.range(3).select(F.col("id").cast("int").alias("k")), n_files=1)
-    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
-        c.read()
+    with pytest.raises(ValueError, match="'k' is written as \"long\".*\"integer\""):
+        c.append(spark.range(3).withColumnRenamed("id", "k"), n_files=1)
+    assert c.current_version == 1
+    assert os.listdir(os.path.join(c.path, "snapshots", "manifests")) == [
+        n for n in c._manifest(1)["manifests"]
+    ]
+
+
+def test_a_manifest_without_a_schema_record_is_refused(spark, tmp_path):
+    """A snapshot whose manifest holds files but no schema record is
+    refused by name on both faces; no reader falls back to the footers."""
+    import json
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(5).withColumnRenamed("id", "k"), n_files=1)
+    path = os.path.join(t.path, "snapshots", "v1.json")
+    with open(path) as fh:
+        doc = json.load(fh)
+    for key in ("schemas", "schema_id", "file_schemas"):
+        del doc[key]
+    with open(path, "w") as fh:
+        json.dump(doc, fh)
+    with pytest.raises(ValueError, match="snapshot v1 of .* has no schema record"):
+        t.read()
+    pyds.register(spark)
+    with pytest.raises(Exception, match="has no schema record"):
+        spark.read.format("snapshot").option("path", t.path).load()
+
+
+def test_read_files_and_bloom_index_read_under_the_log_schema(spark, tmp_path):
+    """The pruned scan and the Bloom index build read the table's files
+    under the recorded schema, the widened type and the added column
+    included: building ``read_files`` runs no job."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(20).select(F.col("id").cast("int").alias("k")), n_files=2)
+    t.widen_column_type("k", "bigint")
+    t.append(
+        spark.range(20, 40).select(
+            F.col("id").alias("k"), F.col("id").cast("string").alias("s")
+        ),
+        n_files=2,
+    )
+    files = [f["file"] for f in t.files()]
+    assert jobs_of(spark, lambda: t.read_files(files)) == 0
+    df = t.read_files(files)
+    assert df.dtypes == [("k", "bigint"), ("s", "string")]
+    assert sorted(r["k"] for r in df.collect()) == list(range(40))
+    t.build_bloom_index("k")
+    hit = t.plan_scan_bloom("k", 25)["files_read"]
+    assert t.read_files(hit).filter(F.col("k") == 25).count() == 1
+
+
+@pytest.mark.parametrize("shape", ["ntz_added", "widened", "defaulted"])
+def test_both_table_faces_read_the_same_schema(spark, tmp_path, shape):
+    """``format("snapshot")`` and ``SnapshotTable.read`` read one table
+    under one schema: a TIMESTAMP_NTZ table with an added column, a
+    column widened int -> bigint (``widen_column_type`` reaches the
+    source too) and a column added with an initial default give the same
+    dtypes and rows on both faces."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    t = SnapshotTable(spark, str(tmp_path / shape))
+
+    def rows(lo, hi):
+        ts = F.expr("to_timestamp_ntz('2024-01-01') + make_interval(0, 0, 0, 0, id)")
+        return spark.range(lo, hi).select(
+            "id", ts.alias("ts"), F.col("id").cast("int").alias("v")
+        )
+
+    t.append(rows(0, 10), n_files=2)
+    later = rows(10, 20)
+    if shape == "ntz_added":
+        later = later.withColumn("extra", F.col("id").cast("string"))
+    elif shape == "widened":
+        t.widen_column_type("v", "bigint")
+        later = later.withColumn("v", F.col("v") + F.lit(3_000_000_000))
+    else:
+        t.add_column_default("tier", "string", "std")
+        later = later.withColumn("tier", F.when(F.col("id") % 2 == 0, "x"))
+    t.append(later, n_files=2)
+
+    pyds.register(spark)
+    table = t.read()
+    source = spark.read.format("snapshot").option("path", t.path).load()
+    assert source.dtypes == table.dtypes
+    assert dict(source.dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(source.collect()) == sorted(table.collect())
+    if shape == "widened":
+        assert dict(source.dtypes)["v"] == "bigint"
 
 
 def test_read_staged_reads_what_publish_commits(spark, tmp_path):

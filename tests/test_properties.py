@@ -742,6 +742,52 @@ def test_ivf_kernels_ship_by_value(tmp_path):
     assert json.loads(out.stdout) == [[1, 1], [[0] * S.PQ_M] * 2]
 
 
+def test_unigram_kernel_ships_by_value(tmp_path):
+    """The Arrow closure ``_unigram_segmented`` hands ``mapInPandas`` runs
+    the Viterbi DP in an interpreter that cannot import the package, and
+    returns the weights the driver-side kernel computes."""
+    import io
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import (
+        textstats as T,
+    )
+
+    class Words:  # captures the closure instead of planning a Spark job
+        def mapInPandas(self, fn, schema):
+            self.fn = fn
+
+    words, vocab = Words(), [("ab", 5), ("a", 9), ("b", 7), ("abc", 2)]
+    T._unigram_segmented(None, words, vocab)
+    batch = pd.DataFrame({"w": ["abc", "abcd", "xyz"], "cnt": [1, 2, 3]})
+    code = (
+        "import io, pickle, sys\n"
+        "import pandas as pd\n"
+        "fn = pickle.loads(sys.stdin.buffer.read())\n"
+        "batch = pd.read_json(io.StringIO(sys.argv[1]))\n"
+        "print(pd.concat(fn(iter([batch]))).to_json())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, batch.to_json()],
+        input=cloudpickle.dumps(words.fn),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        check=False,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    got = pd.read_json(io.StringIO(out.stdout.decode()))
+    want = [T._unigram_viterbi_weight(w, dict(vocab)) for w in batch["w"]]
+    assert got["cost"].tolist() == [t // 256 for t in want]
+    assert got["n_pieces"].tolist() == [t % 256 for t in want]
+
+
 @settings(
     max_examples=8,
     deadline=None,

@@ -259,6 +259,49 @@ def test_pyds_stream_reads_commits_incrementally(spark, tmp_path):
     assert drain().count() == ev.count()
 
 
+def test_pyds_stream_reads_every_commit_under_its_start_schema(spark, tmp_path):
+    """A stream reads under the table schema it started with: the
+    generation written before a column was added reads NULL in it, and a
+    commit that adds another column mid-stream still streams its rows,
+    without that column."""
+    from pyspark.sql import functions as F
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.lifecycle import (
+        SnapshotTable,
+    )
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources import pyds
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    k = F.col("id").alias("k")
+    t.append(spark.range(0, 10).select(k), n_files=1)
+    t.append(spark.range(10, 20).select(k, F.lit("s").alias("s")), n_files=1)
+
+    pyds.register(spark)
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    stream = spark.readStream.format("snapshot").option("path", t.path).load()
+
+    def drain():
+        q = (
+            stream.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return spark.read.parquet(out)
+
+    first = drain()
+    assert first.columns == ["k", "s"]
+    assert sorted(first.collect()) == [(i, None) for i in range(10)] + [
+        (i, "s") for i in range(10, 20)
+    ]
+    t.append(spark.range(20, 25).select(k, F.lit("s").alias("s"), k.alias("z")))
+    got = drain()
+    assert got.columns == ["k", "s"]
+    assert sorted(r["k"] for r in got.collect()) == list(range(25))
+
+
 def test_pyds_write_append_roundtrip(spark, tmp_path):
     """df.write.format("snapshot"): two appends commit as two snapshot
     versions readable by both the format reader and SnapshotTable, with
