@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load
+from ..sources.registry import load, local_frame
 from ..stage import stage
 
 _DEC = "decimal(28,8)"
@@ -607,7 +607,8 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(n_days),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "quantile double, target_rank long, n_rows long, sketch_lo double,"
         " sketch_hi double, exact_value double, n_days_merged int",
@@ -653,7 +654,8 @@ def approx_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         found = u in approx
         ok = found and abs(approx[u] - c) * 20 <= c
         rows.append((rank, u, c, int(found), int(ok)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "rank int, user_id long, n_events long,"
         " approx_found int, approx_count_ok int",

@@ -14,10 +14,14 @@ The dedup families, each shuffle-aware for 100 TB:
   shingle-sharing candidates (inverted-index join), never a cartesian
   product; containment (shared/min) is the asymmetric short-inside-long
   signal on the identical plan.
-- MinHash + LSH banding — the sublinear candidate generator: signature =
-  16 portable hashes, 4 bands × 4 rows; only band-collision pairs are
-  verified. Hashing is md5-prefix→int64 so the duckdb oracle reproduces it
-  bit-for-bit (engine-neutral, unlike xxhash64).
+- MinHash + LSH banding — the sublinear candidate generator over the
+  staged per-document shingle-hash sets: signature = 16 portable
+  min-hashes (one explode of the staged hashes, one MIN pass), 4 bands
+  × 4 rows; only band-collision pairs are verified, by intersecting the
+  two docs' hash sets in-row; the candidates are staged once per corpus
+  together with their verify counts. Hashing is md5-prefix→int64 so the
+  duckdb oracle reproduces it bit-for-bit (engine-neutral, unlike
+  xxhash64).
 - SimHash (32- and 64-bit) — near-dup fingerprints with pigeonhole-banded
   Hamming pairing (4 bands of 8 or 16 bits).
 - duplicate clustering — driver union-find, or large/small-star
@@ -31,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load, table_path
+from ..sources.registry import load, local_frame, table_path
 from ..stage import discard, memo, stage
 
 JACCARD_THRESHOLD = 0.10
@@ -65,84 +69,91 @@ HOT_SHINGLE_DF_CAP: int | None = 1000
 from .hashing import _DUCK_H, _SPARK_H  # canonical 60-bit hash device
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-3-shingles per doc (docs with ≥3 tokens), each shingle
-    reduced to its portable 60-bit hash at the source: every downstream
-    consumer (Jaccard self-join, minhash, sizes) keys on an 8-byte int
-    instead of a ~30-byte string — smaller checkpoint, cheaper shuffles,
-    codegen-friendly comparisons. The duckdb oracle applies the identical
-    md5-prefix hash, so results remain bit-for-bit reproducible.
-
-    The shared intermediate of the whole dedup family (Jaccard and
-    MinHash/LSH both consume it), memoized per (session, sf_dir);
-    :func:`_shingles_of` is the un-memoized core over any (doc_id, text)
-    relation (the fused curation pipeline shingles paragraph-rebuilt text
-    through it)."""
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged per-document shingle sets ``(doc_id, n, hs)`` of the
+    corpus (see :func:`_shingles_of`), memoized per (session, sf_dir):
+    the shared intermediate of the whole dedup family. MinHash reads the
+    arrays in-row; Jaccard, containment and PPJoin read the exploded
+    rows of :func:`_shingles`."""
     return memo(
         spark,
-        ("shingles", sf_dir),
+        ("shingle_sets", sf_dir),
         [table_path(sf_dir, "documents")],
         lambda: _shingles_of(spark, load(spark, sf_dir, "documents")),
     )
 
 
+def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus shingle index, one ``(doc_id, n, sh_h)`` row per
+    distinct shingle of a doc: :func:`_shingle_rows` over the memoized
+    :func:`_shingle_sets`."""
+    return _shingle_rows(_shingle_sets(spark, sf_dir))
+
+
+def _shingle_rows(sets: DataFrame) -> DataFrame:
+    """One ``(doc_id, n, sh_h)`` row per element of each staged shingle
+    set: a plain explode over the staged files. The per-doc set size
+    ``n`` rides along with every row, so Jaccard needs no separate sizes
+    aggregation and no join-back."""
+    return sets.select("doc_id", "n", F.explode("hs").alias("sh_h"))
+
+
 def _shingles_of(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Core of :func:`_shingles` over an arbitrary (doc_id, text)
-    relation — same plan, no memoization."""
+    """Staged per-document shingle sets ``(doc_id, n, hs array<bigint>)``
+    over any (doc_id, text) relation: ``hs`` holds the portable 60-bit
+    hash of each distinct word-3-shingle, ``n = size(hs)``, for docs with
+    ≥3 tokens (so every set is non-empty). The md5-prefix hash runs once
+    per distinct shingle, inside the row and before the barrier, so no
+    consumer re-hashes shingle strings; every consumer keys on an 8-byte
+    int. The duckdb oracle applies the identical hash, so results stay
+    bit-for-bit reproducible. Not memoized (see :func:`_shingle_sets`);
+    the fused curation pipeline shingles paragraph-rebuilt text through
+    it."""
     # single-file inputs arrive as one partition; spread docs across cores
-    # before the shingle explosion (at scale, many files make this a no-op
+    # before the shingle compute (at scale, many files make this a no-op
     # but the explicit spread keeps the plan robust to skewed file sizes)
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     toks = F.split(F.lower(F.col("text")), r"\s+")
+    # array_distinct over the shingle STRINGS, then hash: per-doc set
+    # semantics computed locally inside the row (no cross-partition
+    # DISTINCT shuffle), and `n` counts distinct shingles as the oracle's
+    # DISTINCT does
+    shset = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.size("toks") - 2),
+            lambda i: F.concat_ws(
+                " ",
+                F.element_at(F.col("toks"), i),
+                F.element_at(F.col("toks"), i + 1),
+                F.element_at(F.col("toks"), i + 2),
+            ),
+        )
+    )
     sets = (
         docs.select("doc_id", toks.alias("toks"))
         .filter(F.size("toks") >= 3)
+        .select("doc_id", shset.alias("shset"))
         .select(
             "doc_id",
-            # array_distinct BEFORE explode: per-doc set semantics computed
-            # locally inside the row — no cross-partition DISTINCT shuffle
-            # of the exploded shingle strings (at 100 TB that shuffle is the
-            # whole corpus re-keyed by shingle text; this is free)
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - 2),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at(F.col("toks"), i),
-                        F.element_at(F.col("toks"), i + 1),
-                        F.element_at(F.col("toks"), i + 2),
-                    ),
-                )
-            ).alias("shset"),
+            F.size("shset").alias("n"),
+            F.expr(f"transform(shset, s -> {_SPARK_H.format(expr='s')})").alias(
+                "hs"
+            ),
         )
     )
     # eager disk staging of the per-doc ARRAY form, before any explode.
-    # Ordering is load-bearing: exploding a column triggers Catalyst's
-    # InferFiltersFromGenerate, whose inferred `size(shset)>0` filter
-    # substitutes the whole shingle expression and gets pushed below
-    # the repartition exchange — i.e. the heavy compute lands on the
-    # narrow scan stage and runs 3x (filter, size, generator). Measured
-    # 8-10x regression at sf0.1. A fresh parquet scan is a hard barrier
-    # that stops the push; size/explode below operate on materialized
-    # arrays (trivial). Staging also feeds 3+ consumers (both join sides,
-    # minhash) without racing, holds no executor memory for the session,
-    # and keeps fault tolerance (splits re-readable) — unlike the
-    # localCheckpoint it replaces (see stage.py).
-    sets = stage(sets)
-    sh = (
-        # `n` rides along with every shingle row, so Jaccard needs no
-        # separate sizes aggregation and no join-back later (two joins +
-        # one groupBy saved vs the sizes-CTE formulation)
-        sets.select(
-            "doc_id",
-            F.size("shset").alias("n"),
-            F.explode("shset").alias("shingle"),
-        )
-        .select(
-            "doc_id", "n", F.expr(_SPARK_H.format(expr="shingle")).alias("sh_h")
-        )
-    )
-    return sh
+    # Ordering is load-bearing: exploding a computed column triggers
+    # Catalyst's InferFiltersFromGenerate, whose inferred `size(hs)>0`
+    # filter substitutes the whole shingle expression and gets pushed
+    # below the repartition exchange — i.e. the heavy compute lands on
+    # the narrow scan stage and runs 3x (filter, size, generator).
+    # Measured 8-10x regression at sf0.1. A fresh parquet scan is a hard
+    # barrier that stops the push; explode and the in-row MinHash read
+    # materialized arrays. Staging also feeds every consumer without
+    # racing, holds no executor memory for the session, and keeps fault
+    # tolerance (splits re-readable) — unlike the localCheckpoint it
+    # replaces (see stage.py).
+    return stage(sets)
 
 
 def _duck_shingles_of(
@@ -1244,7 +1255,8 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             nb, b = pairs[j]
             common = a.join(b, ["doc_a", "doc_b"]).count()
             rows.append((na, nb, sizes[na], sizes[nb], common))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method_a string, method_b string, pairs_a long, pairs_b long,"
         " common_pairs long",
@@ -1274,9 +1286,10 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- MinHash + LSH banding --------------------------------------------------
 # Universal-hash family over one base hash: h_i(x) = (a_i·md5_60(x) + b_i)
 # mod p. One md5 per shingle instead of N_HASHES md5s — at 100 TB the
-# hashing pass drops from 16 digest computations per shingle to 1 digest +
-# 16 multiply-adds, all in codegen. p = 2^31-1 (Mersenne); a_i·base < 2^62
-# so the arithmetic never overflows int64 in either engine.
+# hashing pass drops from 16 digest computations per shingle to 1 digest
+# (paid once, at the shingle-set stage) + 16 multiply-adds. p = 2^31-1
+# (Mersenne); a_i·base < 2^62 so the arithmetic never overflows int64 in
+# either engine.
 _MH_P = (1 << 31) - 1
 
 
@@ -1291,45 +1304,66 @@ def _mh_params() -> list[tuple[int, int]]:
     return params
 
 
-def _minhash_signatures(sh: DataFrame) -> DataFrame:
-    """16 portable min-hashes per doc: the precomputed 60-bit base hash per
-    shingle row, 16 universal-hash columns, one map-side-combinable MIN
-    pass."""
-    base = sh.withColumn("hb", F.col("sh_h") % F.lit(_MH_P))
+def _minhash_signatures(sets: DataFrame) -> DataFrame:
+    """16 portable min-hashes per doc, ``(doc_id, m0..m15)``, over the
+    staged shingle sets: one explode of the precomputed 60-bit hashes, 16
+    universal-hash columns, one map-side-combinable MIN pass, all in
+    codegen. (16 in-row ``array_min(transform(hs, …))`` columns skip the
+    shuffle, but their lambdas are interpreted: 4× slower at 200 K docs,
+    SCALE.md.) Every set is non-empty (see :func:`_shingles_of`), so
+    every doc has a signature."""
+    base = sets.select("doc_id", F.explode("hs").alias("sh_h")).select(
+        "doc_id", (F.col("sh_h") % F.lit(_MH_P)).alias("hb")
+    )
     hash_cols = [
         ((F.lit(a) * F.col("hb") + F.lit(b)) % F.lit(_MH_P)).alias(f"h{s}")
         for s, (a, b) in enumerate(_mh_params())
     ]
-    per_shingle = base.select("doc_id", *hash_cols)
-    return per_shingle.groupBy("doc_id").agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(N_HASHES)]
+    return (
+        base.select("doc_id", *hash_cols)
+        .groupBy("doc_id")
+        .agg(*[F.min(f"h{s}").alias(f"m{s}") for s in range(N_HASHES)])
     )
 
 
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged MinHash/LSH candidate pairs (doc_a < doc_b sharing ≥1 band),
+    """Staged MinHash/LSH candidate pairs (doc_a < doc_b sharing ≥1 band)
+    with their exact verify counts ``(doc_a, doc_b, na, nb, shared)``,
     memoized per (session, corpus) — the shared blocking front for every
-    verify layer (exact Jaccard in :func:`minhash_lsh_pairs`, edit
-    distance in :func:`dedup_editdist_verify`). At scale the band join
-    shuffles only (band_idx, 32-byte hash, doc_id) tuples."""
+    verify layer (exact Jaccard in :func:`minhash_lsh_pairs` and the
+    threshold sweep, edit distance in :func:`dedup_editdist_verify`, the
+    banding calibration), read by about ten entries of one session. At
+    scale the band join shuffles only (band_idx, 32-byte hash, doc_id)
+    tuples. ``shared`` may be 0 (a band collision without a common
+    shingle); :func:`_candidate_shared` drops those pairs."""
     return memo(
         spark,
         ("lsh_candidates", sf_dir),
         [table_path(sf_dir, "documents")],
-        # staged: consumed repeatedly by the pruning + verify joins
-        lambda: stage(_lsh_candidates_of(_shingles(spark, sf_dir))),
+        lambda: _lsh_verified_of(_shingle_sets(spark, sf_dir)),
     )
 
 
-def _lsh_candidates_of(sh: DataFrame) -> DataFrame:
-    """Core of :func:`_lsh_candidates` over any shingle relation
-    (doc_id, n, sh_h) — same banding, no memoization, no staging (the
-    caller decides; the fused curation pipeline stages it alongside its
-    other stage boundaries). Shapes: one map-side-combinable MIN agg to
-    the 16-column signature, an in-row band-hash stack, and an equi-join
-    on (band_idx, band_hash) — only (int, 32-byte hash, id) tuples ever
-    shuffle, never shingles."""
-    sig = _minhash_signatures(sh)
+def _lsh_verified_of(sets: DataFrame) -> DataFrame:
+    """Staged band candidates of ``sets`` with their verify counts:
+    :func:`_candidate_shared_of` over :func:`_lsh_candidates_of`, the
+    one staging policy of the corpus path and the fused curation
+    pipeline. The stage also keeps ``shared`` to one intersection per
+    pair: a predicate over an unstaged ``shared`` is pushed into the
+    verify join's condition with the intersection substituted once per
+    reference, and a projection of ``shared`` computes it again."""
+    return stage(_candidate_shared_of(sets, _lsh_candidates_of(sets)))
+
+
+def _lsh_candidates_of(sets: DataFrame) -> DataFrame:
+    """Band candidate pairs (doc_a, doc_b) of any staged shingle-set
+    relation (doc_id, n, hs) — no memoization, no staging
+    (:func:`_lsh_verified_of` stages them with their verify counts).
+    Shapes: the signature of :func:`_minhash_signatures` (one MIN agg),
+    an in-row band-hash stack, and an equi-join on (band_idx,
+    band_hash) — only (int, 32-byte hash, id) tuples ever shuffle,
+    never shingles."""
+    sig = _minhash_signatures(sets)
     rows_per_band = N_HASHES // N_BANDS
     band_cols = [
         F.md5(
@@ -1360,38 +1394,35 @@ def _lsh_candidates_of(sh: DataFrame) -> DataFrame:
 
 def _candidate_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shared-shingle counts (doc_a, doc_b, na, nb, shared) for every
-    LSH candidate pair — the verify core shared by the thresholded pair
-    entry and the threshold-sweep diagnostic. The shingle join runs only
-    over docs that appear in some candidate pair (semi-join pruning): at
-    scale the verify cost tracks |candidates|, not |corpus|²."""
-    return _candidate_shared_of(
-        _shingles(spark, sf_dir), _lsh_candidates(spark, sf_dir)
-    )
+    LSH candidate pair that shares a shingle — the verify core shared by
+    the thresholded pair entry and the threshold-sweep diagnostic. It
+    reads the staged counts of :func:`_lsh_candidates`; no consumer
+    recomputes an intersection."""
+    return _lsh_candidates(spark, sf_dir).filter(F.col("shared") > 0)
 
 
-def _candidate_shared_of(sh: DataFrame, cand: DataFrame) -> DataFrame:
-    """Core of :func:`_candidate_shared` over any shingle relation and
-    any candidate-pair relation — the exact-verify kernel every blocking
-    front (corpus LSH, the fused pipeline's rebuilt-text LSH) feeds."""
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+def _candidate_shared_of(sets: DataFrame, cand: DataFrame) -> DataFrame:
+    """The exact-verify kernel over any staged shingle-set relation and
+    any candidate-pair relation, which every blocking front (corpus LSH,
+    the fused pipeline's rebuilt-text LSH) feeds: each candidate pair
+    joins the two docs' sets by id and counts ``shared =
+    size(array_intersect(ha, hb))`` in-row, so the verify cost follows
+    |candidates|·n, not the Σdf² of a shingle-keyed self-join over the
+    candidate docs. Every candidate pair is kept (``shared`` ≥ 0) and no
+    predicate reads ``shared`` here; :func:`_lsh_verified_of` stages
+    the result before anyone filters on it."""
+    sa = sets.select(
+        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), F.col("hs").alias("ha")
     )
-    sh_cand = sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    sa = sh_cand.alias("sa")
-    sb = sh_cand.alias("sb")
-    shared = (
-        sa.join(sb, (F.col("sa.sh_h") == F.col("sb.sh_h")) & (F.col("sa.doc_id") < F.col("sb.doc_id")))
-        .groupBy(
-            F.col("sa.doc_id").alias("doc_a"),
-            F.col("sb.doc_id").alias("doc_b"),
-            F.col("sa.n").alias("na"),
-            F.col("sb.n").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
+    sb = sets.select(
+        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), F.col("hs").alias("hb")
     )
-    return cand.join(shared, ["doc_a", "doc_b"])
+    shared = F.size(F.array_intersect("ha", "hb")).cast("long")
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", "na", "nb", shared.alias("shared"))
+    )
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1585,7 +1616,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signatures and pairs are the memoized artifacts every other
     MinHash entry shares."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
-    sig = _minhash_signatures(_shingles(spark, sf_dir))
+    sig = _minhash_signatures(_shingle_sets(spark, sf_dir))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"m{i}").alias(f"a{i}") for i in range(N_HASHES)],
@@ -1626,7 +1657,7 @@ def minhash_b_bit_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     same two signature joins over the verified pair set as the 16-hash
     accuracy entry — signatures and pairs are memoized artifacts."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
-    sig = _minhash_signatures(_shingles(spark, sf_dir))
+    sig = _minhash_signatures(_shingle_sets(spark, sf_dir))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[(F.col(f"m{i}") % 2).alias(f"a{i}") for i in range(N_HASHES)],
@@ -1697,7 +1728,9 @@ def minhash_banding_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import _ratio6
 
     ground = dedup_ngram_jaccard(spark, sf_dir)
-    band = _lsh_candidates(spark, sf_dir).withColumn("caught", F.lit(1))
+    band = _lsh_candidates(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("caught")
+    )
     flagged = ground.join(band, ["doc_a", "doc_b"], "left")
     bucket = F.floor(F.col("jaccard") * 10).cast("int")
     theo_map = F.create_map(
@@ -1740,7 +1773,7 @@ def dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is the INTEGER cross-product ``lev·5 ≤ greatest(len_a,
     len_b)`` (⇔ normalized similarity ≥ 0.8) — no doubles anywhere, so
     the output is bit-portable by construction."""
-    cand = _lsh_candidates(spark, sf_dir)
+    cand = _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.substring(F.lower(F.col("text")), 1, EDITDIST_PREFIX).alias("t"),
@@ -1819,7 +1852,7 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             lo, hi = (a, b) if a < b else (b, a)
             parent[hi] = lo
     mapping = [(int(v), int(find(v))) for v in parent if v != find(v)]
-    mdf = nodes.sparkSession.createDataFrame(mapping, "id long, label long")
+    mdf = local_frame(nodes.sparkSession, mapping, "id long, label long")
     return nodes.select("id").join(F.broadcast(mdf), "id", "left").select(
         "id", F.coalesce(F.col("label"), F.col("id")).alias("label")
     )

@@ -43,7 +43,7 @@ from pyspark.sql.types import DataType, StructType
 from .. import snaplog
 from ..snaplog import BLOOM_A, BLOOM_B, BLOOM_M, BLOOM_P
 from ..functions import det_sum, det_sum_sql
-from ..sources.registry import CUTOFF_7D, load
+from ..sources.registry import CUTOFF_7D, load, local_frame
 
 
 def _agg_col_stats(vals: list) -> list:
@@ -1175,8 +1175,8 @@ class SnapshotTable:
             # the branch's k-th append — strictly ABOVE every tombstone
             # inherited from the seed snapshot (seq <= base_main), so a
             # key re-inserted on the branch after a main-side delete
-            # survives branch reads (Iceberg v2 semantics), and the seqs
-            # ride through fast_forward untouched
+            # survives branch reads (Iceberg v2 semantics); fast_forward
+            # restamps them with the main version that publishes them
             bm["file_seqs"].update(dict.fromkeys(added, m["base_main_version"] + base))
             return snaplog.create(
                 os.path.join(self._snaps, f"{prefix}{base + 1}.json"), bm
@@ -1211,13 +1211,16 @@ class SnapshotTable:
                 "the branch was created; main is not an ancestor of the "
                 "branch head — rebase the branch and retry"
             )
+        head = self._manifest(cur)
         if self._try_commit(
             cur + 1,
             tip["files"],
             f"fast_forward.{name}",
-            head=self._manifest(cur),
+            head=head,
             delete_files=tip.get("delete_files", []),
-            prev=tip,
+            # schema ids from the tip; seqs from main, so a file carried
+            # from main keeps its seq and a branch file takes cur + 1
+            prev={**tip, "file_seqs": head.get("file_seqs", {})},
         ):
             return cur + 1
         raise CommitConflict(
@@ -1996,7 +1999,8 @@ def lifecycle_snapshot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops = {m["version"]: m["operation"] for m in tbl.history()}
     for v in (1, 2, 3):
         rows.append((v, ops[v], tbl.read(version=v).count(), len(tbl.files(v))))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, operation string, row_count long, n_files int"
     )
 
@@ -2217,7 +2221,8 @@ def file_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
         .count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(plan["files_total"], len(plan["files_read"]), plan["files_skipped"], pruned_rows)],
         "files_total int, files_read int, files_skipped int, rows_selected long",
     )
@@ -2265,7 +2270,8 @@ def clustering_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count()
         )
         rows.append((label, len(stats), len(read), len(stats) - len(read), n_rows))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "layout string, files_total int, files_read int, files_skipped int,"
         " rows_selected long",
@@ -2338,7 +2344,8 @@ def bloom_point_lookup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_rows,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "probe_id long, files_total int, minmax_files_read int,"
         " bloom_files_read int, files_with_row int, bloom_fp_files int,"
@@ -2413,7 +2420,8 @@ def spec_evolution_skipping_report(spark: SparkSession, sf_dir: str) -> DataFram
             else 0
         )
         rows.append((gen, spec, len(gen_files), len(sel), len(gen_files) - len(sel), n))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "generation int, spec string, files_total int, files_read int,"
         " files_skipped int, rows_selected long",
@@ -2648,7 +2656,8 @@ def table_ndv_stats_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 st["rows"] == int(exact["_rows"]),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, n_rows long, exact_ndv long, ndv_est_ok boolean,"
         " rows_match boolean",
@@ -2682,7 +2691,8 @@ def merge_full_sync_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_days = tbl.read().select(
         F.countDistinct(F.to_date("ts")).alias("d")
     ).collect()[0]["d"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 acct["updated"],
@@ -2750,7 +2760,8 @@ def partitions_metadata_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         a[3] = v["max"] if a[3] is None else max(a[3], v["max"])
         a[4] += v["null_count"]
     rows = [(d.isoformat(), *a) for d, a in sorted(agg.items())]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "partition_day string, n_files int, row_count long,"
         " value_min double, value_max double, null_values long",
@@ -2813,7 +2824,8 @@ def snapshots_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         prev = cur
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, operation string, added_files int,"
         " removed_files int, n_files int, added_rows long,"
@@ -2852,7 +2864,7 @@ def snapshot_expiry_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("snapshots_before", n_before),
         ("tag_rows", tbl.read_tag("audit_q2").count()),
     ]
-    return spark.createDataFrame(rows, "metric string, value long").orderBy(
+    return local_frame(spark, rows, "metric string, value long").orderBy(
         "metric"
     )
 
@@ -2974,7 +2986,8 @@ def zorder_clustering_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                     got.get(pred, 0),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "layout string, predicate string, files_total int, files_read int,"
         " files_skipped int, rows_selected long",
@@ -3171,7 +3184,8 @@ def hilbert_clustering_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                     int(bbox),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "layout string, predicate string, files_total int, files_read int,"
         " files_skipped int, rows_selected long, bbox_area long",
@@ -3253,7 +3267,7 @@ def wap_publish_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("published_version", version),
         ("main_rows_after_publish", main_after),
     ]
-    return spark.createDataFrame(rows, "metric string, value long")
+    return local_frame(spark, rows, "metric string, value long")
 
 
 def mor_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3290,7 +3304,8 @@ def mor_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 len(m.get("delete_files", [])),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, operation string, row_count long, n_delete_files int"
     )
 
@@ -3375,7 +3390,8 @@ def mor_position_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 len(m.get("delete_files", [])),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, operation string, row_count long, n_delete_files int"
     )
 
@@ -3427,7 +3443,8 @@ def dv_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (v, m["operation"], tbl.read(version=v).count(), bool(dv_ok))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, operation string, row_count long, dv_ok boolean"
     )
 
@@ -3460,9 +3477,7 @@ def snapshot_rollback_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 df.filter(F.col("value") < 0).count(),
             )
         )
-    return spark.createDataFrame(
-        rows, "version int, row_count long, corrupted_rows long"
-    )
+    return local_frame(spark, rows, "version int, row_count long, corrupted_rows long")
 
 
 def manifest_lifecycle_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3523,7 +3538,8 @@ def manifest_lifecycle_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(agg["s"]),
         ),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase string, n_commits int, n_data_files int, n_manifests int, "
         "planning_gets int, row_count long, sum_value double",
@@ -3652,7 +3668,8 @@ def manifest_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert files_nl == _foot({"promo_value": "is_null"}), (
         "IS NULL manifest planning must equal footer null planning"
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [ts_only, both, promo_nn, promo_nl, after],
         "phase string, files_total int, files_read int, manifests_total int,"
         " manifests_skipped int, skipped_by_summary int, planning_gets int,"

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.registry import local_frame
+
 # Imported from the canonical module (not a copy): the probes must
 # exercise the exact expression the operators use, so a device change
 # propagates here by construction.
@@ -76,9 +78,7 @@ _ROUND_CASES = (
 
 
 def parity_probe_round_half(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(
-        list(_ROUND_CASES), "id long, num long, den long"
-    )
+    df = local_frame(spark, list(_ROUND_CASES), "id long, num long, den long")
     x = F.col("num").cast("double") / F.col("den").cast("double")
     return df.select(
         "id",

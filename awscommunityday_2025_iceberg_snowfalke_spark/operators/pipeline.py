@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load, spread
+from ..sources.registry import load, local_frame, spread
 from ..stage import stage
 
 SAMPLE_MOD = 5  # keep doc_id hash buckets ≡ 0 (deterministic ~20%)
@@ -681,7 +681,7 @@ def hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("hour")
     )
-    types = spark.createDataFrame([(t,) for t in EVENT_TYPES], ["event_type"])
+    types = local_frame(spark, [(t,) for t in EVENT_TYPES], "event_type string")
     spine = hours.crossJoin(types)
     counts = (
         ev.filter(
@@ -836,8 +836,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         INCREMENTAL_SPLIT_FRAC,
         PPJOIN_X,
         _bloom_flags,
-        _candidate_shared_of,
-        _lsh_candidates_of,
+        _lsh_verified_of,
         _shingles_of,
         dedup_paragraphs_removed_text,
     )
@@ -920,10 +919,10 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle states the SAME banded+verified semantics, so the report
     # stays full-value exact at every scale.
     num, den = PPJOIN_X
-    sh3 = _shingles_of(
+    sets3 = _shingles_of(
         spark, s2.select("doc_id", F.col("text_clean").alias("text"))
     )
-    verified = _candidate_shared_of(sh3, stage(_lsh_candidates_of(sh3)))
+    verified = _lsh_verified_of(sets3)
     union_sz = F.col("na") + F.col("nb") - F.col("shared")
     pairs = stage(
         verified.filter(F.col("shared") * den >= num * union_sz).select(

@@ -23,7 +23,7 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load, table_path
+from ..sources.registry import load, local_frame, table_path
 from ..stage import _session_root, fingerprint, memo, stage
 
 # The Arrow closures here call this module's shared IVF/PQ kernels on
@@ -892,9 +892,7 @@ def semantic_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     mc = assigned.groupBy("cell").applyInPandas(
         maxcos, "vec_id long, max_cos double"
     )
-    eps_df = spark.createDataFrame(
-        [(float(e),) for e in SEMDEDUP_SWEEP], "eps double"
-    )
+    eps_df = local_frame(spark, [(float(e),) for e in SEMDEDUP_SWEEP], "eps double")
     # r16 (guide §1.2): n_total was an eager count() that re-ran the
     # full Arrow cell-assignment pass before the sweep job could start
     # (the assignment is unstaged — one pass per consumer). The
@@ -1087,7 +1085,8 @@ def _probe_batch(
     probed cells BEFORE touching any data file."""
     q_ids, Q, Qn = _query_batch(emb)
     by_cell = _probe_cells(_quantizer(cent_rows), Q, Qn, n_probe)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(q_ids[qi]), c, [float(x) for x in Q[qi]])
             for c, pairs in by_cell.items()
@@ -2001,7 +2000,8 @@ def ann_ivf_sq8_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cent_rows = _centroids(emb).orderBy("label").collect()
     vmin_arr, span_arr = _sq8_ranges(emb)
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(int(r["label"]), r["centroid"]) for r in cent_rows],
         "cell int, centroid array<double>",
     ).withColumn("nc", _norm(F.col("centroid")))
@@ -2398,7 +2398,8 @@ def ann_ivf_opq_rot_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     total, n_rows = counts["total"], counts["n_rows"]
     hits_rot, hits_alloc = counts["hits_rot"], counts["hits_alloc"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 d,
@@ -2663,7 +2664,8 @@ def ann_ivf_opq_np_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     total, n_rows = counts["total"], counts["n_rows"]
     hits_np, hits_rot = counts["hits_np"], counts["hits_rot"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 d,
@@ -2825,10 +2827,11 @@ def _incremental_assign_report(
     # per-table relations were joined on label immediately below — the
     # join is performed driver-side over the collected rows instead
     # (frozen labels ⊆ full labels, inner semantics preserved), so ONE
-    # local relation replaces two createDataFrame round-trips plus a
+    # local relation replaces two driver-built tables plus a
     # 16-row join subtree. Same doubles, same in-engine zip_with.
     _full_by_label = {int(r["label"]): list(r["centroid"]) for r in full_rows}
-    cent_pair = spark.createDataFrame(
+    cent_pair = local_frame(
+        spark,
         [
             (int(r["label"]), list(r["centroid"]), _full_by_label[int(r["label"])])
             for r in frozen_rows

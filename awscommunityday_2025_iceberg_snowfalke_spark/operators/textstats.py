@@ -17,7 +17,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load, spread
+from ..sources.registry import load, local_frame, spread
 from ..stage import stage
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -1972,9 +1972,7 @@ def _ccnet_cutpoints_df(
         (lang, ns[lang], cps[(lang, 0)], cps[(lang, 1)])
         for lang in sorted(ns)
     ]
-    return spark.createDataFrame(
-        rows, "lang string, n_docs long, c1 double, c2 double"
-    )
+    return local_frame(spark, rows, "lang string, n_docs long, c1 double, c2 double")
 
 
 def ccnet_tercile_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2184,7 +2182,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     on run-heavy text like 'soooo'. Output: the bounded N-row merge
     table (rank, a, b, pair_count) — integers and strings only."""
     merges = _bpe_train(spark, sf_dir, BPE_TRAIN_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "merge_rank int, a string, b string, pair_count bigint"
     )
 
@@ -2198,7 +2197,8 @@ def bpe_train_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen as ``BPE_MERGES_64``, the artifact the deep encoder applies;
     the DuckDB oracle unrolls the same 64 rounds."""
     merges = _bpe_train(spark, sf_dir, BPE_TRAIN_ROUNDS_DEEP)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "merge_rank int, a string, b string, pair_count bigint"
     )
 
@@ -2496,7 +2496,8 @@ def _qc_weights_relation(spark: SparkSession, w6: list, present: list):
     into a scan that a join would otherwise force through an exchange
     (the curation stage-4 shape); on an already-built matrix the join
     form wins and is kept."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(b, w6[b]) for b in range(len(w6)) if present[b]],
         "bkt long, w6 long",
     )
@@ -3172,7 +3173,8 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trained at sf0.01 this equals ``WORDPIECE_MERGES`` exactly
     (test-pinned, the ``BPE_MERGES`` convention)."""
     merges = _wp_train(spark, sf_dir, WP_TRAIN_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank int, a string, b string, merged string, "
         "pair_count bigint, freq_a bigint, freq_b bigint, score18 bigint",
@@ -3189,7 +3191,8 @@ def wordpiece_train_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode-roundtrip / fertility entries consume. The DuckDB oracle
     unrolls the same 32 rounds."""
     merges = _wp_train(spark, sf_dir, WP_TRAIN_ROUNDS_DEEP)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank int, a string, b string, merged string, "
         "pair_count bigint, freq_a bigint, freq_b bigint, score18 bigint",

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..sources.registry import local_frame
+
 __all__ = [
     "formatted_plan",
     "has_pushed_filters",
@@ -175,7 +177,8 @@ class QueryLog:
         return n
 
     def history(self, spark) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             self._rows,
             "query_name string, row_count long, elapsed_sec double,"
             " bytes_scanned long, shuffle_bytes long, est_credits double,"

@@ -19,6 +19,8 @@ and keeps Catalyst free to push filters/projections into the scan.
 
 from __future__ import annotations
 
+from datetime import timezone
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -131,6 +133,37 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     n = df.rdd.getNumPartitions()
     p = spark.sparkContext.defaultParallelism
     return df.repartition(p) if n < p else df
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A driver-built table: ``rows`` (tuples in ``ddl`` column order)
+    under the DDL schema, as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(list, ddl)`` pickles the rows into a Python
+    RDD, so the first action forks a Python daemon and workers only to
+    hand a few rows back to the JVM. Here the rows go to the JVM as one
+    Arrow batch, and the plan is a ``LocalRelation``: no Python process,
+    and Catalyst sees the rows as literals. Rows and dtypes equal the
+    list path's. As there, a naive datetime in a TIMESTAMP column is
+    local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, TimestampType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in arrow]
+    for c, f in zip(cols, schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            c[:] = [v if v is None else v.astimezone(timezone.utc) for v in c]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=t) for c, t in zip(cols, arrow.types)],
+            schema=arrow,
+        ),
+        schema,
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -255,11 +255,12 @@ def jsonl_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     file (why releases shard to many files)."""
     import tempfile
 
-    from .registry import load
+    from .registry import load, local_frame
 
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     docs = load(spark, sf_dir, "documents").select(*cols)
-    adv = spark.createDataFrame(
+    adv = local_frame(
+        spark,
         [(i, t, l, s, len(t)) for i, t, l, s in JSONL_ADVERSARIAL],
         "doc_id long, text string, lang string, source string, n_chars long",
     )

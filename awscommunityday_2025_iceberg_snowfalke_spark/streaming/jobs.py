@@ -11,7 +11,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.registry import load
+from ..sources.registry import load, local_frame
 from ..stage import stage as _stage
 
 
@@ -303,7 +303,8 @@ def small_file_lifecycle_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(compacted)
     comp = spark.read.parquet(compacted)
     rows_after, files_after = comp.count(), count_files(compacted)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("ingested", rows_before, files_before > n_days),
             ("compacted", rows_after, files_after > n_days),
@@ -684,16 +685,16 @@ def _interval_join_feed(
     _land(purchases, p_dir, "b0", 1_700_000_000.0)
     _land(signups, s_dir, "b0", 1_700_000_000.0)
     if sentinels:
-        sent_p = spark.createDataFrame(
-            [(-1, -1)], "purchase_event_id long, p_user long"
+        sent_p = local_frame(
+            spark, [(-1, -1)], "purchase_event_id long, p_user long"
         ).select(
             "purchase_event_id",
             "p_user",
             F.to_timestamp(F.lit("2030-01-01 00:00:00")).alias("p_ts"),
         )
         # a different far-future instant so the two sentinels never join
-        sent_s = spark.createDataFrame(
-            [(-1, -1)], "s_user long, signup_event_id long"
+        sent_s = local_frame(
+            spark, [(-1, -1)], "s_user long, signup_event_id long"
         ).select(
             "s_user",
             F.to_timestamp(F.lit("2031-01-01 00:00:00")).alias("s_ts"),
@@ -976,7 +977,8 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (lang, v[0], v[1]) for lang, v in sorted(acc.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "lang string, admitted_docs long, rejected_docs long"
     )
 
@@ -1093,7 +1095,8 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             if cum >= k:
                 rows.append((qv, k, n, float(bv), float(bv + 1), n_batches))
                 break
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "quantile double, target_rank long, n_rows long, sketch_lo double,"
         " sketch_hi double, n_batches_merged int",

@@ -1706,9 +1706,9 @@ def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
 
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
         PPJOIN_X,
-        _candidate_shared_of,
-        _lsh_candidates_of,
+        _lsh_verified_of,
         _ppjoin_verified_of,
+        _shingle_rows,
         _shingles_of,
         dedup_paragraphs_removed_text,
     )
@@ -1740,12 +1740,135 @@ def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
             >= num * (F.col("na") + F.col("nb") - F.col("shared"))
         ).select("doc_a", "doc_b")
     )
-    banded = set(
-        map(tuple, tau(_candidate_shared_of(sh, _lsh_candidates_of(sh))).collect())
+    banded = set(map(tuple, tau(_lsh_verified_of(sh)).collect()))
+    lossless = set(
+        map(tuple, tau(_ppjoin_verified_of(_shingle_rows(sh))).collect())
     )
-    lossless = set(map(tuple, tau(_ppjoin_verified_of(sh)).collect()))
     assert banded == lossless
     assert banded  # non-degenerate: the corpus plants near-dup pairs
+
+
+def test_minhash_lsh_pairs_cost_constant_jobs(spark):
+    """MinHash/LSH in a fresh session, with the documents table already
+    loaded as earlier ops of a pass leave it: the shingle sets are staged
+    with their hashes, the signature is one MIN agg over them, and the
+    verify is two id joins staged with the band candidates, so the whole
+    entry — shingle-set stage, signature, band join, verify stage, the
+    threshold read — runs at most 7 Spark jobs (11 with the per-read
+    shingle hashing, a separate candidate stage and the shingle-keyed
+    verify self-join)."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import (
+        load,
+    )
+
+    fresh = spark.newSession()
+    load(fresh, SF_DIR, "documents")
+    rows = []
+    jobs = jobs_of(fresh, lambda: rows.extend(minhash_lsh_pairs(fresh, SF_DIR).collect()))
+    assert rows, "the fixture corpus plants near-dup pairs"
+    assert jobs <= 7, jobs
+
+
+def test_lsh_verify_intersects_each_candidate_pair_once(spark):
+    """The verify kernel computes ``size(array_intersect(ha, hb))`` once
+    per candidate pair, and its consumers read the staged count: a keep
+    predicate over an unstaged ``shared`` would be pushed into the join
+    condition with the intersection substituted once per reference, and
+    the projection would compute it again."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
+        _candidate_shared_of,
+        _lsh_candidates_of,
+        _shingle_sets,
+    )
+
+    def intersections(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "array_intersect"
+        )
+
+    fresh = spark.newSession()
+    sets = _shingle_sets(fresh, SF_DIR)
+    assert intersections(_candidate_shared_of(sets, _lsh_candidates_of(sets))) == 1
+    for name in ("minhash_lsh_pairs", "jaccard_threshold_sweep"):
+        assert intersections(_QUERIES[name](fresh, SF_DIR)) == 0, name
+
+
+MINHASH_EDGE_DOCS = [
+    (1, ""),
+    (2, "two tokens"),
+    (3, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (4, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (5, "the quick brown fox jumps over the lazy cat near the river bank"),
+    (6, "naïve café über straße déjà vu naïve café über straße déjà vu"),
+    (7, "naïve café über straße déjà vu naïve café über straße déjà"),
+    (8, "東京 大阪 京都 札幌 福岡 東京 大阪 京都"),
+    (9, "   leading   spaces and   tabs\tand more words here"),
+    (10, "unrelated words entirely different from every other document"),
+]
+
+
+@pytest.mark.parametrize(
+    "docs", [MINHASH_EDGE_DOCS, MINHASH_EDGE_DOCS[2:3]], ids=["edge", "single"]
+)
+def test_minhash_family_matches_oracle_on_edge_inputs(spark, tmp_path, docs):
+    """MinHash entries on a corpus of edge inputs — an empty text, a
+    2-token doc, byte-identical docs, non-ASCII text, runs of whitespace —
+    and on a single document, against the oracle. A doc with fewer than
+    3 tokens has no shingle set, so it never reaches the band join: an
+    empty set would give NULL minhashes, and NULL band keys all collide
+    on md5('')."""
+    import re
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
+        _minhash_signatures,
+        _shingle_sets,
+    )
+
+    out = str(tmp_path)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [d for d, _ in docs],
+                "text": [t for _, t in docs],
+                "lang": ["xx"] * len(docs),
+                "source": ["edge"] * len(docs),
+                "n_chars": [len(t) for _, t in docs],
+            }
+        ),
+        f"{out}/documents.parquet",
+    )
+    session = spark.newSession()
+    sets = _shingle_sets(session, out)
+    assert sets.filter("n < 1 OR size(hs) != n").count() == 0
+    assert {r["doc_id"] for r in sets.collect()} == {
+        d for d, t in docs if len(re.split(r"\s+", t)) >= 3
+    }
+    sig = _minhash_signatures(sets)
+    assert sig.filter(" OR ".join(f"m{i} IS NULL" for i in range(16))).count() == 0
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}/documents.parquet')"
+        )
+        pairs = _QUERIES["minhash_lsh_pairs"](session, out).count()
+        assert pairs > 0 if len(docs) > 1 else pairs == 0
+        for name in (
+            "minhash_lsh_pairs",
+            "jaccard_threshold_sweep",
+            "dedup_editdist_verify",
+        ):
+            assert_matches_oracle(
+                _QUERIES[name](session, out), con, _ORACLE[name], name
+            )
+    finally:
+        con.close()
 
 
 @pytest.mark.parametrize(

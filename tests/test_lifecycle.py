@@ -915,6 +915,32 @@ def test_branch_reinsert_after_main_delete_and_ref_protection(
     assert t2.read_tag("baseline").count() == 50
 
 
+def test_fast_forward_restamps_branch_files_with_the_publishing_version(
+    spark, tmp_path
+):
+    """fast_forward gives every net-new branch file the new main version
+    as its data sequence number and leaves main's files alone, so an
+    equality delete committed on main afterwards reaches every row the
+    branch published. Before, a branch of three appends published a file
+    with seq base + 3 = 4 into main v2, and a delete at v3 (seq 3) missed
+    its rows."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    keys = lambda *ks: spark.createDataFrame([(k,) for k in ks], "k long")  # noqa: E731
+    t.append(keys(0, 1, 2, 3, 4), n_files=1)        # v1
+    main_files = t._manifest(1)["files"]
+    t.create_branch("b")
+    for pair in ((10, 11), (20, 21), (30, 31)):
+        t.append_to_branch("b", keys(*pair), n_files=1)
+    assert t.fast_forward("b") == 2
+    seqs = t._manifest(2)["file_seqs"]
+    assert {seqs[f] for f in main_files} == {1}
+    assert {s for f, s in seqs.items() if f not in main_files} == {2}
+    t.delete_where_mor(keys(20, 30, 31), ["k"])     # v3, seq 3
+    assert sorted(r["k"] for r in t.read().collect()) == [
+        0, 1, 2, 3, 4, 10, 11, 21
+    ]
+
+
 def test_positional_delete_vs_concurrent_rewrite_conflict(
     spark, events, tmp_path
 ):

@@ -728,3 +728,85 @@ def test_avro_roundtrip_matches_orc(spark):
     got = {tuple(r) for r in avro_roundtrip_events(spark, SF_DIR).collect()}
     want = {tuple(r) for r in orc_roundtrip_events(spark, SF_DIR).collect()}
     assert got == want
+
+
+LOCAL_FRAME_DDL = (
+    "i int, l bigint, d double, s string, b boolean, dt date,"
+    " ts timestamp, ntz timestamp_ntz, arr array<double>"
+)
+
+
+def test_local_frame_equals_the_list_path_over_a_type_matrix(spark):
+    """``local_frame`` returns the rows and dtypes that
+    ``createDataFrame(list, ddl)`` returns, for every column type the
+    package builds on the driver, NULLs and zero rows included."""
+    import datetime as dt
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import (
+        local_frame,
+    )
+
+    utc = dt.timezone.utc
+    rows = [
+        (
+            1, 2**40, 0.1, "ä ü 日本", True, dt.date(2024, 1, 31),
+            dt.datetime(2024, 1, 2, 3, 4, 5, 678901, tzinfo=utc),
+            dt.datetime(2024, 1, 2, 3, 4, 5, 678901), [1.5, -0.0, 2.25],
+        ),
+        (
+            -(2**31), -(2**63), -1e300, "", False, dt.date(1970, 1, 1),
+            dt.datetime(1969, 12, 31, 23, 59, 59, tzinfo=utc),
+            dt.datetime(1900, 1, 1), [],
+        ),
+        (None,) * 9,
+    ]
+    for data in (rows, []):
+        got = local_frame(spark, data, LOCAL_FRAME_DDL)
+        want = spark.createDataFrame(data, LOCAL_FRAME_DDL)
+        assert got.dtypes == want.dtypes
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+
+
+def test_local_frame_is_a_local_relation_and_starts_no_python_worker(tmp_path):
+    """A driver-built table is a ``LocalRelation``: in a fresh JVM,
+    ``local_frame`` and ``bpe_train_merges`` (whose merge table is one)
+    run without the JVM starting any Python process. The list path of
+    ``createDataFrame`` forks the PySpark daemon for the same rows."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import subprocess, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry"
+        " import local_frame\n"
+        "from awscommunityday_2025_iceberg_snowfalke_spark.operators.textstats"
+        " import bpe_train_merges\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "    .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "jvm = spark.sparkContext._jvm.ProcessHandle.current().pid()\n"
+        "kids = lambda: subprocess.run(['ps', '-o', 'pid=', '--ppid', str(jvm)],\n"
+        "    capture_output=True, text=True).stdout.split()\n"
+        "df = local_frame(spark, [(1, 'a')], 'k bigint, v string')\n"
+        "plan = df._jdf.queryExecution().analyzed().toString()\n"
+        "assert plan.startswith('LocalRelation'), plan\n"
+        "assert df.collect()[0]['v'] == 'a'\n"
+        f"assert bpe_train_merges(spark, {SF_DIR!r}).count() > 0\n"
+        "print('arrow', len(kids()))\n"
+        "spark.createDataFrame([(1, 'a')], 'k bigint, v string').collect()\n"
+        "print('list', len(kids()))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        check=False,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    counts = dict(line.split() for line in out.stdout.splitlines())
+    assert counts == {"arrow": "0", "list": "1"}, counts

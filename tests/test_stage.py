@@ -90,7 +90,7 @@ def test_stage_is_one_job_and_keeps_the_schema(spark):
 MEMOIZED_BUILDERS = {
     "load(documents)": lambda s, d: load(s, d, "documents"),
     "load(embeddings)": lambda s, d: load(s, d, "embeddings"),
-    "_shingles": dedup._shingles,
+    "_shingle_sets": dedup._shingle_sets,
     "_lsh_candidates": dedup._lsh_candidates,
     "_cluster_labels": dedup._cluster_labels,
     "_staged_simhash(32)": lambda s, d: dedup._staged_simhash(s, d, 32),

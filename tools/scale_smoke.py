@@ -84,7 +84,7 @@ QUERIES = [
 DOC_QUERIES = [
     "dedup_exact_hash",      # hash-then-group: shuffles 32-B digests
     "dedup_ngram_jaccard",   # shingle inverted index + DF-capped self-join
-    "minhash_lsh_pairs",     # banded LSH equi-join + semi-join verify
+    "minhash_lsh_pairs",     # banded LSH equi-join + id-keyed array verify
     "simhash32",             # per-doc fingerprint, map-side
     "doc_bm25_search",       # tf agg + broadcast idf, top-k
     "token_stats",           # pure map-side text scan
@@ -432,17 +432,18 @@ def main() -> None:
     for n in sorted(sizes, reverse=True):
         d = os.path.join(root, f"{args.family}_n{n}")
         if args.family == "docs":
-            # the shared shingle index (memoized staging, dedup._shingles)
-            # is consumed by every fuzzy-dedup query; build it ONCE per
-            # size as its own timed row so jaccard/minhash times are
-            # comparable across sizes instead of the first consumer at
-            # each size silently paying the staging cost
+            # the staged per-document shingle sets (memoized,
+            # dedup._shingle_sets) are consumed by every fuzzy-dedup
+            # query; build them ONCE per size as their own timed row so
+            # jaccard/minhash times are comparable across sizes instead
+            # of the first consumer at each size silently paying the
+            # staging cost
             from awscommunityday_2025_iceberg_snowfalke_spark.operators import (  # noqa: E501
                 dedup as _dedup,
             )
 
             t0 = time.perf_counter()
-            _dedup._shingles(spark, d).count()
+            _dedup._shingle_sets(spark, d).count()
             report.setdefault("shingle_index_build", {})[str(n)] = round(
                 time.perf_counter() - t0, 3
             )
