@@ -10,10 +10,12 @@ The dedup families, each shuffle-aware for 100 TB:
   a ~tens-of-GB shuffle.
 - incremental (new crawl vs standing corpus) — digest LEFT-ANTI join, the
   production ingest shape: a batch never re-deduplicates the corpus.
-- n-gram Jaccard / containment — all-pairs similarity restricted to
-  shingle-sharing candidates (inverted-index join), never a cartesian
-  product; containment (shared/min) is the asymmetric short-inside-long
-  signal on the identical plan.
+- n-gram Jaccard / containment — exact all-pairs similarity restricted
+  to shingle-sharing pairs (one inverted-index join and one pair
+  aggregation, :func:`_shingle_overlaps`), never a cartesian product;
+  containment (shared/min) is the asymmetric short-inside-long signal
+  on the identical plan. PPJoin prefix-filters the τ = 0.8 regime and
+  verifies its candidates through the MinHash verify kernel.
 - MinHash + LSH banding — the sublinear candidate generator over the
   staged per-document shingle-hash sets: signature = 16 portable
   min-hashes (one explode of the staged hashes, one MIN pass), 4 bands
@@ -48,22 +50,6 @@ assert JACCARD_X[0] / JACCARD_X[1] == JACCARD_THRESHOLD
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 
-# Hot-shingle document-frequency cap (CCNet-style skew mitigation): shingles
-# present in more than this many documents are dropped from the inverted
-# index before the Jaccard self-join. The candidate join is quadratic in
-# each shingle's document frequency (measured at sf0.1: sum(df²) = 2.79 M
-# pair-rows for 27 k shingles; the df>10 head is 37% of shingles but 63% of
-# join work — and a real Zipfian corpus has stopword shingles with df ~ 10⁶,
-# i.e. 10¹² pairs from ONE shingle). Dropping a df>cap shingle removes at
-# most that shingle from each pair's `shared` count, so reported jaccard is
-# a conservative lower bound for pairs that share capped shingles — the
-# standard CCNet/SlimPajama trade. The default (1000) exceeds every local
-# corpus's max df (25 at sf0.1), so results are exactly equal to the
-# uncapped join at test scale (pinned by the oracle gate and an explicit
-# equivalence test); at 100 TB it bounds any single shingle's join
-# contribution to cap² pairs. None disables the cap.
-HOT_SHINGLE_DF_CAP: int | None = 1000
-
 # Portable 60-bit hash: md5 hex prefix → int64. Same value in Spark and
 # duckdb (verified), so LSH pipelines are exactly reproducible cross-engine.
 from .hashing import _DUCK_H, _SPARK_H  # canonical 60-bit hash device
@@ -72,9 +58,10 @@ from .hashing import _DUCK_H, _SPARK_H  # canonical 60-bit hash device
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staged per-document shingle sets ``(doc_id, n, hs)`` of the
     corpus (see :func:`_shingles_of`), memoized per (session, sf_dir):
-    the shared intermediate of the whole dedup family. MinHash reads the
-    arrays in-row; Jaccard, containment and PPJoin read the exploded
-    rows of :func:`_shingles`."""
+    the shared intermediate of the whole dedup family. MinHash and the
+    verify kernel (:func:`_verified_of`) read the arrays in-row;
+    Jaccard, containment and the PPJoin prefix index read exploded rows
+    (:func:`_shingle_rows`)."""
     return memo(
         spark,
         ("shingle_sets", sf_dir),
@@ -212,37 +199,25 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- n-gram Jaccard similarity join -----------------------------------------
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs share ≥1 shingle (inverted-index equi-join on the
-    shingle — a hash shuffle keyed on shingle, never O(n²)); Jaccard
-    computed from shared/set sizes. Hot shingles (stopword runs) are the
-    skew hazard at scale: mitigated by the HOT_SHINGLE_DF_CAP
-    document-frequency cap (see constant above) with AQE skew-join as the
-    second line of defense for the sub-cap distribution."""
-    sh = _shingles(spark, sf_dir)
-    # (Measured non-win locally: pre-pruning single-doc shingles via a
-    # count-over-shingle window is exact but the window's sort cost exceeds
-    # the join savings at this scale — 5s → 12s at sf0.1. At 100 TB with a
-    # long unique-shingle tail the pruning flips to a win; keep the plain
-    # hash join here and revisit with real corpus statistics.)
-    if HOT_SHINGLE_DF_CAP is not None:
-        # The hot set is tiny by construction (≤ total_shingle_rows / cap
-        # distinct keys, and in a Zipfian corpus it's the stopword head —
-        # hundreds of entries), so it broadcasts; the anti-join stays
-        # map-side on the big index. Per-doc set size `n` keeps the FULL
-        # (uncapped) set semantics — only candidate generation and the
-        # `shared` numerator see the filtered index. Staged to disk because
-        # the self-join aliases duplicate this subtree — unstaged, the
-        # DF-count shuffle over the whole shingle index would run twice.
-        df_counts = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df"))
-        hot = stage(df_counts.filter(F.col("df") > HOT_SHINGLE_DF_CAP).select("sh_h"))
-        sh = sh.join(F.broadcast(hot), "sh_h", "left_anti")
-    a = sh.alias("a")
-    b = sh.alias("b")
-    # set sizes ride along as grouping keys (constant per doc), so jaccard
-    # falls straight out of the ONE pair aggregation — no sizes join-back
-    pairs = (
-        a.join(b, (F.col("a.sh_h") == F.col("b.sh_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+def _shingle_overlaps(sh: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, na, nb, shared)`` for every pair of docs
+    (doc_a < doc_b) sharing at least one shingle, over any shingle
+    relation ``(doc_id, n, sh_h)``: the inverted-index self-join (a
+    hash shuffle keyed on the shingle, never O(n²)) and ONE pair
+    aggregation. Set sizes ride along as grouping keys (constant per
+    doc), so every ratio falls straight out of the aggregate, with no
+    sizes join-back. The exact pair kernel of the Jaccard and
+    containment entries; each keeps only its own integer keep predicate.
+    Every shingle joins, hot ones included, so the join work is Σdf²
+    over the shingles: AQE's skew join spreads a hot shingle's partition
+    across tasks but does not shrink it (SCALE.md)."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.sh_h") == F.col("b.sh_h"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -251,6 +226,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("shared"))
     )
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard ≥ 0.1 over every pair of docs sharing a
+    shingle (:func:`_shingle_overlaps` over the memoized shingle index);
+    the keep predicate is the integer cross-product
+    ``shared·10 ≥ union``, the rounded Jaccard a display column."""
+    pairs = _shingle_overlaps(_shingles(spark, sf_dir))
     union = F.col("na") + F.col("nb") - F.col("shared")
     return (
         pairs.filter(F.col("shared") * JACCARD_X[1] >= JACCARD_X[0] * union)
@@ -387,18 +370,18 @@ PPJOIN_X = (4, 5)
 
 def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPJoin set-similarity self-join (Xiao, Wang, Lin, Yu 2011; prefix
-    filter from Chaudhuri, Ganti, Kaushik 2006) at τ = 0.8 — the EXACT
-    lossless alternative to the DF-cap for the high-threshold regime,
-    and the algorithm that makes set-similarity joins feasible at 100 TB
-    without giving up recall:
+    filter from Chaudhuri, Ganti, Kaushik 2006) at τ = 0.8 — the exact
+    candidate generator for the high-threshold regime, and the algorithm
+    that makes set-similarity joins feasible at 100 TB without giving up
+    recall:
 
     - **prefix filter**: under a global canonical token order (df ASC,
       hash ASC — rarest first), any pair with J ≥ τ must share a token
       inside each side's first |d| − ⌈τ·|d|⌉ + 1 tokens, so ONLY those
       prefixes are indexed. At τ = 0.8 that is ~20% of each set — and
-      because prefixes are the RAREST tokens, the stopword-head skew the
-      DF cap lossily truncates never enters the join at all (the hot
-      shingles sit at the suffix end of every sorted set).
+      because prefixes are the RAREST tokens, the stopword-head skew
+      never enters the join at all (the hot shingles sit at the suffix
+      end of every sorted set).
     - **size filter**: J ≥ τ forces max(|a|,|b|)·4 ≤ min(|a|,|b|)·5 —
       applied inside the join condition, pure int64.
     - **positional filter** (PPJoin's tightening): with ia/jb the
@@ -406,16 +389,16 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       can't exceed 1 + min(|a|−ia, |b|−jb); keep only pairs where that
       bound still allows shared·(4+5) ≥ 4·(|a|+|b|).
 
-    Surviving candidates are verified EXACTLY (full-set join, integer
-    cross-product keep predicate), so the result equals the brute
-    inverted-index join at τ = 0.8 verbatim — pinned by a unit test
-    that also measures the candidate-volume reduction (the entire
-    point). Shapes: one df-count agg over the memoized shingle index, a
-    per-doc sort of its OWN shingles (in-row, array_sort), the prefix
-    equi-join, one pair agg, and the candidate-bounded verify join —
-    never O(n²), no lossy cap anywhere."""
+    Surviving candidates are verified EXACTLY by the LSH front's verify
+    kernel (:func:`_verified_of`: each pair intersects the two staged
+    shingle sets in-row), so the result equals the brute inverted-index
+    join at τ = 0.8 verbatim — pinned by a unit test that also measures
+    the candidate-volume reduction (the entire point). At lower τ the
+    prefix grows toward the whole set and the filter stops paying
+    (SCALE.md), which is why the τ = 0.1 entries join every shingle."""
     num, den = PPJOIN_X
-    shared = _ppjoin_verified_of(_shingles(spark, sf_dir))
+    sets = _shingle_sets(spark, sf_dir)
+    shared = _verified_of(sets, _ppjoin_candidates_of(sets))
     union = F.col("na") + F.col("nb") - F.col("shared")
     return shared.filter(
         F.col("shared") * den >= num * union
@@ -426,36 +409,20 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ppjoin_verified_of(sh: DataFrame) -> DataFrame:
-    """Candidates + exact verify over any shingle relation (doc_id, n,
-    sh_h): (doc_a, doc_b, na, nb, shared) for every candidate pair —
-    the τ filter itself stays with the caller so both the J-display
-    entry and the fused pipeline's drop-later-doc stage share it."""
-    cand = _ppjoin_candidates_of(sh)
-    sa, sb = sh.alias("sa"), sh.alias("sb")
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sb,
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.sh_h") == F.col("sb.sh_h")),
-        )
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-
-
 def _ppjoin_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PPJoin candidate stage over the memoized corpus shingles —
+    """The PPJoin candidate stage over the memoized corpus shingle sets —
     split out so the losslessness/volume test can measure exactly what
     the verify stage pays."""
-    return _ppjoin_candidates_of(_shingles(spark, sf_dir))
+    return _ppjoin_candidates_of(_shingle_sets(spark, sf_dir))
 
 
-def _ppjoin_candidates_of(sh: DataFrame) -> DataFrame:
-    """The PPJoin candidate stage (prefix + size + positional filters)
-    over any shingle relation."""
+def _ppjoin_candidates_of(sets: DataFrame) -> DataFrame:
+    """PPJoin candidate pairs ``(doc_a, doc_b)`` (prefix + size +
+    positional filters) of any staged shingle-set relation (doc_id, n,
+    hs) — the same shape as :func:`_lsh_candidates_of`, verified by the
+    same kernel."""
     num, den = PPJOIN_X
+    sh = _shingle_rows(sets)
     df_counts = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(df_counts, "sh_h")
     # per-doc canonical order + prefix slice, computed IN-ROW
@@ -484,7 +451,7 @@ def _ppjoin_candidates_of(sh: DataFrame) -> DataFrame:
     )
     pre = stage(pre)  # both sides of the prefix self-join
     a, b = pre.alias("a"), pre.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.sh_h") == F.col("b.sh_h"))
@@ -529,9 +496,8 @@ def _ppjoin_candidates_of(sh: DataFrame) -> DataFrame:
             * (num + den)
             >= num * (F.col("na") + F.col("nb"))
         )
-        .select("doc_a", "doc_b", "na", "nb")
+        .select("doc_a", "doc_b")
     )
-    return cand
 
 
 # --- n-gram containment (asymmetric near-dup / subset detection) -------------
@@ -545,34 +511,11 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully embedded in a long one (quote farms, boilerplate wrappers,
     article + comment-thread mirrors) scores shared/min = 1.0 while its
     Jaccard shrinks with the length gap (Broder's resemblance-vs-
-    containment distinction). Plan is byte-for-byte the Jaccard one —
-    same DF-capped inverted-index equi-join, same single pair
-    aggregation with set sizes riding as group keys; only the final
-    ratio differs, so the scale analysis in SCALE.md carries over
-    unchanged."""
-    sh = _shingles(spark, sf_dir)
-    if HOT_SHINGLE_DF_CAP is not None:
-        df_counts = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df"))
-        hot = stage(
-            df_counts.filter(F.col("df") > HOT_SHINGLE_DF_CAP).select("sh_h")
-        )
-        sh = sh.join(F.broadcast(hot), "sh_h", "left_anti")
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.sh_h") == F.col("b.sh_h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    containment distinction). The plan is the Jaccard one: the same
+    exact pair kernel (:func:`_shingle_overlaps`), only the keep
+    predicate and the ratio differ, so the scale analysis in SCALE.md
+    carries over unchanged."""
+    pairs = _shingle_overlaps(_shingles(spark, sf_dir))
     return (
         pairs.filter(
             F.col("shared") * CONTAINMENT_X[1]
@@ -652,9 +595,9 @@ def doc_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional 10-grams, hash them portably, mark grams whose document
     frequency > 1 via one groupBy over (gram → distinct docs bounded
     accounting), and roll up per doc. Shuffles 8-byte gram hashes, and
-    the df computation is map-side-combinable; the Zipf-head hazard is
-    the same class the shingle DF cap handles (a hot boilerplate gram is
-    exactly what this op exists to FIND, so it is counted, not capped).
+    the df computation is map-side-combinable, and a hot boilerplate
+    gram is exactly what this op exists to FIND, so it is counted like
+    any other.
     Output per doc: total spans, duplicated spans, dup fraction — the
     span-removal planning report."""
     docs = load(spark, sf_dir, "documents").repartition(
@@ -1336,29 +1279,32 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the band join shuffles only (band_idx, 32-byte hash, doc_id)
     tuples. ``shared`` may be 0 (a band collision without a common
     shingle); :func:`_candidate_shared` drops those pairs."""
+
+    def build() -> DataFrame:
+        sets = _shingle_sets(spark, sf_dir)
+        return _verified_of(sets, _lsh_candidates_of(sets))
+
     return memo(
-        spark,
-        ("lsh_candidates", sf_dir),
-        [table_path(sf_dir, "documents")],
-        lambda: _lsh_verified_of(_shingle_sets(spark, sf_dir)),
+        spark, ("lsh_candidates", sf_dir), [table_path(sf_dir, "documents")], build
     )
 
 
-def _lsh_verified_of(sets: DataFrame) -> DataFrame:
-    """Staged band candidates of ``sets`` with their verify counts:
-    :func:`_candidate_shared_of` over :func:`_lsh_candidates_of`, the
-    one staging policy of the corpus path and the fused curation
-    pipeline. The stage also keeps ``shared`` to one intersection per
+def _verified_of(sets: DataFrame, cand: DataFrame) -> DataFrame:
+    """Staged candidate pairs ``cand`` (doc_a, doc_b) of ``sets`` with
+    their exact verify counts: :func:`_candidate_shared_of`, staged. The
+    one verify kernel and staging policy of every candidate front — the
+    corpus LSH memo, the fused curation pipeline's band screen and
+    PPJoin. The stage also keeps ``shared`` to one intersection per
     pair: a predicate over an unstaged ``shared`` is pushed into the
     verify join's condition with the intersection substituted once per
     reference, and a projection of ``shared`` computes it again."""
-    return stage(_candidate_shared_of(sets, _lsh_candidates_of(sets)))
+    return stage(_candidate_shared_of(sets, cand))
 
 
 def _lsh_candidates_of(sets: DataFrame) -> DataFrame:
     """Band candidate pairs (doc_a, doc_b) of any staged shingle-set
     relation (doc_id, n, hs) — no memoization, no staging
-    (:func:`_lsh_verified_of` stages them with their verify counts).
+    (:func:`_verified_of` stages them with their verify counts).
     Shapes: the signature of :func:`_minhash_signatures` (one MIN agg),
     an in-row band-hash stack, and an equi-join on (band_idx,
     band_hash) — only (int, 32-byte hash, id) tuples ever shuffle,
@@ -1404,12 +1350,12 @@ def _candidate_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _candidate_shared_of(sets: DataFrame, cand: DataFrame) -> DataFrame:
     """The exact-verify kernel over any staged shingle-set relation and
     any candidate-pair relation, which every blocking front (corpus LSH,
-    the fused pipeline's rebuilt-text LSH) feeds: each candidate pair
-    joins the two docs' sets by id and counts ``shared =
+    the fused pipeline's rebuilt-text LSH, PPJoin) feeds: each candidate
+    pair joins the two docs' sets by id and counts ``shared =
     size(array_intersect(ha, hb))`` in-row, so the verify cost follows
     |candidates|·n, not the Σdf² of a shingle-keyed self-join over the
     candidate docs. Every candidate pair is kept (``shared`` ≥ 0) and no
-    predicate reads ``shared`` here; :func:`_lsh_verified_of` stages
+    predicate reads ``shared`` here; :func:`_verified_of` stages
     the result before anyone filters on it."""
     sa = sets.select(
         F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), F.col("hs").alias("ha")
@@ -1711,16 +1657,16 @@ def minhash_banding_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind this round's pipeline decision (the fused chain's band screen
     misses an exactly-j=0.8 pair at sf0.1; this entry quantifies that
     recall per similarity band instead of leaving it anecdotal). For
-    every exact near-dup pair at J ≥ 0.1 (the capped inverted-index
-    universe `dedup_ngram_jaccard` certifies — same DF cap, exact at
-    test scale), the pair is bucketed by Jaccard decile and scored
-    caught/missed against the MinHash band candidates; the theoretical
-    1 − (1 − j⁴)⁴ midpoint curve rides alongside as a literal column, so
+    every exact near-dup pair at J ≥ 0.1 (the pair universe of
+    `dedup_ngram_jaccard`), the pair is bucketed by Jaccard decile and
+    scored caught/missed against the MinHash band candidates; the
+    theoretical 1 − (1 − j⁴)⁴ midpoint curve rides alongside as a
+    literal column, so
     the report reads measured-vs-theory directly. catch_rate is the
     `_ratio6` exact-integer division; the bucket key is floor(10·j) on
     the already bit-portable rounded Jaccard.
 
-    Scale: ground truth reuses the capped pair join (at 100 TB the
+    Scale: ground truth reuses the exact pair join (at 100 TB the
     calibration runs on a corpus SAMPLE — the curve is a property of
     the hash family and the similarity distribution, not of corpus
     size); the band side is the memoized staged candidate set; the
@@ -2942,9 +2888,8 @@ ORACLE["dedup_exact_substrings"] = rf"""
 """
 
 def _duck_banding_calibration() -> str:
-    """Oracle for the banding S-curve: the uncapped brute pair universe
-    at J ≥ 0.1 (the `dedup_ngram_jaccard` twin — cap-free form is exact
-    at test scale, same note as that entry), LEFT-joined against the
+    """Oracle for the banding S-curve: the brute pair universe at
+    J ≥ 0.1 (the `dedup_ngram_jaccard` twin), LEFT-joined against the
     banding candidates, bucketed by Jaccard decile; the theoretical
     midpoint curve is the SAME Python-computed literals the Spark side
     attaches."""

@@ -77,6 +77,43 @@ class DeletionVectorLayoutError(RuntimeError):
 _POSITIONAL = ("pos", "dv")
 _POS_SCHEMA = "file string, pos bigint"
 
+
+def _file_name():
+    """The basename of the file each scanned row was read from."""
+    return F.element_at(F.split("_metadata.file_path", "/"), -1)
+
+
+def _seq_of(name, seqs: dict[str, int]):
+    """The sequence number of the file whose basename is the column
+    ``name``, looked up in the literal map ``seqs`` (file → seq);
+    constant folding turns the map into one literal."""
+    return F.element_at(
+        F.create_map(*[F.lit(x) for f, q in seqs.items() for x in (f, q)]), name
+    ).cast("long")
+
+
+def _with_seq(df: DataFrame, m: dict, files: list[str]) -> DataFrame:
+    """``df`` (with provenance) plus ``_df_seq``, the data sequence
+    number snapshot ``m`` records for each row's file."""
+    seqs = m.get("file_seqs", {})
+    return df.withColumn(
+        "_df_seq", _seq_of(F.col("_df_file"), {f: seqs.get(f, 0) for f in files})
+    )
+
+
+def _equality_sets(dels: list[dict]) -> list[list[dict]]:
+    """The equality deletes among ``delete_files`` entries ``dels``,
+    grouped by key columns and the key schema they were written under:
+    one group per key-column set unless a later delete wrote its keys
+    under another type."""
+    groups: dict[tuple, list[dict]] = {}
+    for d in dels:
+        if d.get("kind") not in _POSITIONAL:
+            sig = (tuple(d["key_cols"]), json.dumps(d["schema"], sort_keys=True))
+            groups.setdefault(sig, []).append(d)
+    return list(groups.values())
+
+
 def make_table(
     spark: SparkSession,
     prefix: str,
@@ -376,9 +413,7 @@ class SnapshotTable:
             ).parquet(*paths)
             if with_meta:  # provenance: file basename + row index
                 df = df.select(
-                    F.element_at(F.split("_metadata.file_path", "/"), -1).alias(
-                        "_df_file"
-                    ),
+                    _file_name().alias("_df_file"),
                     F.col("_metadata.row_index").alias("_df_pos"),
                     "*",
                 )
@@ -1465,9 +1500,11 @@ class SnapshotTable:
 
         - EQUALITY deletes are SEQUENCE-scoped (Iceberg v2): one applies
           only to data files whose seq <= its own, so a key re-inserted
-          after the delete survives. Files are grouped by the set of
-          equality deletes that apply to them; each group anti-joins its
-          deletes by key, and the groups union back together.
+          after the delete survives. Each row is tagged with its data
+          file's seq, and the deletes of one key-column set apply in ONE
+          anti-join on ``keys ∧ data_seq <= delete_seq``
+          (:meth:`_join_equality`), however many delete files the
+          snapshot carries.
         - POSITIONAL tombstones (v2 position deletes, v3 deletion
           vectors) are FILE-scoped: a ``(file, pos)`` pair names one row
           of one data file by its unique name, and that file was live
@@ -1488,36 +1525,40 @@ class SnapshotTable:
             for d in dels
             if d.get("kind") in _POSITIONAL
         ]
-        equality = [d for d in dels if d.get("kind") not in _POSITIONAL]
-        with_meta = keep_meta or bool(positional)
-        seqs = m.get("file_seqs", {})
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            sig = tuple(
-                i
-                for i, d in enumerate(equality)
-                if seqs.get(f, 0) <= d.get("seq", 1 << 62)
-            )
-            groups.setdefault(sig, []).append(f)
-        out = None
-        for sig, fs in groups.items():
-            part = self._read_paths(m, fs, with_meta=with_meta)
-            for i in sig:
-                keys = self._delete_keys(equality[i])
-                part = part.join(keys, equality[i]["key_cols"], "left_anti")
-            out = part if out is None else out.unionByName(part)
+        equality = _equality_sets(dels)
+        with_meta = keep_meta or bool(positional) or bool(equality)
+        out = self._read_paths(m, files, with_meta=with_meta)
+        if equality:
+            out = _with_seq(out, m, files)
+            for ds in equality:
+                out = self._join_equality(out, ds, "left_anti")
+            out = out.drop("_df_seq")
         if positional:
             out = self._join_positions(out, positional, "left_anti")
-            if not keep_meta:
-                out = out.drop("_df_file", "_df_pos")
+        if with_meta and not keep_meta:
+            out = out.drop("_df_file", "_df_pos")
         return out
 
-    def _delete_keys(self, d: dict) -> DataFrame:
-        """The keys of equality-delete file ``d`` (a ``delete_files``
-        entry), read under the schema the entry records."""
-        return self.spark.read.schema(StructType.fromJson(d["schema"])).parquet(
-            os.path.join(self.path, "data", d["file"])
+    def _join_equality(self, df: DataFrame, ds: list[dict], how: str) -> DataFrame:
+        """``df`` (with provenance and ``_df_seq``, its data file's seq)
+        joined to the equality-delete files ``ds`` of one key-column set
+        (one entry of :func:`_equality_sets`) on ``keys ∧ _df_seq <=
+        delete seq``. The delete files are read in one scan under the
+        schema their entries record, each key tagged with its file's
+        seq."""
+        key_cols = ds[0]["key_cols"]
+        keys = self.spark.read.schema(StructType.fromJson(ds[0]["schema"])).parquet(
+            *[os.path.join(self.path, "data", d["file"]) for d in ds]
         )
+        seqs = {d["file"]: d.get("seq", 1 << 62) for d in ds}
+        keys = keys.select(
+            *[F.col(c).alias(f"_eq{i}") for i, c in enumerate(key_cols)],
+            _seq_of(_file_name(), seqs).alias("_del_seq"),
+        )
+        cond = F.col("_df_seq") <= F.col("_del_seq")
+        for i, c in enumerate(key_cols):
+            cond = cond & (F.col(c) == F.col(f"_eq{i}"))
+        return df.join(keys, cond, how)
 
     def _join_positions(
         self, df: DataFrame, tomb_paths: list[str], how: str
@@ -1784,34 +1825,34 @@ class SnapshotTable:
             for d in new_dels
             if d.get("kind") in _POSITIONAL
         ]
-        if new_pos and kept:
+        new_eq = _equality_sets(new_dels)
+        if kept and (new_pos or new_eq):
+            live = self._read_scoped(mf, kept, keep_meta=True)
             # positional tombstones are file-scoped (see _read_scoped):
             # all of them apply in ONE semi-join. For a REPLACED deletion
             # vector the carried-over old positions are already dead in
             # v_from's live view, so the join yields rows for the NET-NEW
             # positions only — the diff falls out for free
-            live = self._read_scoped(mf, kept, keep_meta=True)
-            hits.append(
-                self._join_positions(live, new_pos, "left_semi").drop(
-                    "_df_file", "_df_pos"
-                )
-            )
-        to_seqs = mt.get("file_seqs", {})
-        for d in new_dels:
-            if d.get("kind") in _POSITIONAL:
-                continue
-            src = [
-                f for f in kept if to_seqs.get(f, 0) <= d.get("seq", 1 << 62)
-            ]
-            if src:
-                hits.append(
-                    self._read_scoped(mf, src).join(
-                        self._delete_keys(d), d["key_cols"], "left_semi"
-                    )
-                )
+            if new_pos:
+                hits.append(self._join_positions(live, new_pos, "left_semi"))
+            # equality deletes are sequence-scoped by v_to's seqs: one
+            # semi-join per key-column set
+            if new_eq:
+                live = _with_seq(live, mt, kept)
+                hits += [
+                    self._join_equality(live, ds, "left_semi").drop("_df_seq")
+                    for ds in new_eq
+                ]
         for hit in hits:
-            hit = hit.select(ct("delete").alias("change_type"), "*")
             mor_rows = hit if mor_rows is None else mor_rows.unionByName(hit)
+        if mor_rows is not None:
+            if len(hits) > 1:
+                # a row hit by more than one of them is deleted once; its
+                # (file, row index) provenance names it exactly
+                mor_rows = mor_rows.dropDuplicates(["_df_file", "_df_pos"])
+            mor_rows = mor_rows.drop("_df_file", "_df_pos").select(
+                ct("delete").alias("change_type"), "*"
+            )
 
         def _with_mor(df: DataFrame) -> DataFrame:
             if mor_rows is None:

@@ -836,8 +836,9 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         INCREMENTAL_SPLIT_FRAC,
         PPJOIN_X,
         _bloom_flags,
-        _lsh_verified_of,
+        _lsh_candidates_of,
         _shingles_of,
+        _verified_of,
         dedup_paragraphs_removed_text,
     )
     from .textstats import (
@@ -922,7 +923,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets3 = _shingles_of(
         spark, s2.select("doc_id", F.col("text_clean").alias("text"))
     )
-    verified = _lsh_verified_of(sets3)
+    verified = _verified_of(sets3, _lsh_candidates_of(sets3))
     union_sz = F.col("na") + F.col("nb") - F.col("shared")
     pairs = stage(
         verified.filter(F.col("shared") * den >= num * union_sz).select(

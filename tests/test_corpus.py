@@ -225,59 +225,64 @@ def test_simhash_banding_loses_no_pairs(spark, oracle, entry, width):
     assert set(map(tuple, banded)) == set(map(tuple, brute.values.tolist()))
 
 
-def test_hot_shingle_cap_noop_below_threshold(spark, oracle):
-    """Equivalence below the cap: the default HOT_SHINGLE_DF_CAP exceeds
-    every local corpus's max shingle document frequency (25 at sf0.1), so
-    the capped join must return exactly the uncapped result."""
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
+def _write_documents(out: str, docs) -> None:
+    """A driver-schema ``documents.parquet`` of ``(doc_id, text)`` pairs
+    under ``out``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    capped = dedup.dedup_ngram_jaccard(spark, SF_DIR).toPandas()
-    orig = dedup.HOT_SHINGLE_DF_CAP
-    try:
-        dedup.HOT_SHINGLE_DF_CAP = None
-        uncapped = dedup.dedup_ngram_jaccard(spark, SF_DIR).toPandas()
-    finally:
-        dedup.HOT_SHINGLE_DF_CAP = orig
-    key = ["doc_a", "doc_b"]
-    capped = capped.sort_values(key).reset_index(drop=True)
-    uncapped = uncapped.sort_values(key).reset_index(drop=True)
-    assert capped.equals(uncapped)
-
-
-def test_hot_shingle_cap_active_matches_capped_oracle(spark, oracle):
-    """Mechanism check with the cap engaged: force a cap below the local
-    max df and compare against a DuckDB twin applying the identical
-    document-frequency filter to the inverted index (per-doc set sizes
-    keep uncapped semantics on both sides)."""
-    from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
-
-    cap = 5  # sf0.001 max df is 9 — this drops real shingles
-    sql = rf"""
-        WITH {dedup._DUCK_SHINGLES},
-        shc AS (
-            SELECT * FROM sh WHERE sh_h IN (
-                SELECT sh_h FROM sh GROUP BY sh_h HAVING COUNT(*) <= {cap}
-            )
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [d for d, _ in docs],
+                "text": [t for _, t in docs],
+                "lang": ["xx"] * len(docs),
+                "source": ["edge"] * len(docs),
+                "n_chars": [len(t) for _, t in docs],
+            }
         ),
-        pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n AS na, b.n AS nb, COUNT(*) AS shared
-            FROM shc a JOIN shc b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        )
-        SELECT doc_a, doc_b,
-               ROUND(CAST(shared AS DOUBLE) / (na + nb - shared), 6) AS jaccard
-        FROM pairs
-        WHERE shared * {dedup.JACCARD_X[1]}
-              >= {dedup.JACCARD_X[0]} * (na + nb - shared)
-    """
-    orig = dedup.HOT_SHINGLE_DF_CAP
+        f"{out}/documents.parquet",
+    )
+
+
+def test_shingle_overlap_entries_exact_past_a_hot_shingle(spark, tmp_path):
+    """Jaccard and containment stay exact when one shingle is in every
+    document: 1,050 docs of 15 unique tokens each open with the same
+    3-token boilerplate, so its shingle has df = 1,050, and 10 planted
+    pairs differ only in their last token. Both entries must equal
+    their oracle, which joins every shingle: dropping the hot one (a
+    df cap) would lower each planted pair's ``shared`` by one."""
+    import duckdb
+
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators import dedup
+
+    n_docs, n_pairs = 1050, 10
+    docs = []
+    for d in range(n_docs):
+        words = [f"w{d}x{k}" for k in range(15)]
+        if d % 2 == 1 and d < 2 * n_pairs:  # planted near-dup of doc d - 1
+            words = [f"w{d - 1}x{k}" for k in range(14)] + [f"w{d}x14"]
+        docs.append((d, "lorem ipsum dolor " + " ".join(words)))
+    out = str(tmp_path)
+    _write_documents(out, docs)
+    session = spark.newSession()
+    con = duckdb.connect()
     try:
-        dedup.HOT_SHINGLE_DF_CAP = cap
-        df = dedup.dedup_ngram_jaccard(spark, SF_DIR)
-        assert_matches_oracle(df, oracle, sql, "jaccard_capped")
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}/documents.parquet')"
+        )
+        hot = con.execute(
+            f"WITH {dedup._DUCK_SHINGLES} SELECT MAX(c) FROM"
+            " (SELECT COUNT(*) AS c FROM sh GROUP BY sh_h)"
+        ).fetchone()[0]
+        assert hot == n_docs
+        for name in ("dedup_ngram_jaccard", "dedup_ngram_containment"):
+            df = _QUERIES[name](session, out)
+            assert_matches_oracle(df, con, _ORACLE[name], name)
+            planted = {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+            assert planted == {(d, d + 1) for d in range(0, 2 * n_pairs, 2)}, name
     finally:
-        dedup.HOT_SHINGLE_DF_CAP = orig
+        con.close()
 
 
 def test_embedding_dim_stats_dead_dimension_clamp(spark, tmp_path):
@@ -1706,10 +1711,10 @@ def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
 
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
         PPJOIN_X,
-        _lsh_verified_of,
-        _ppjoin_verified_of,
-        _shingle_rows,
+        _lsh_candidates_of,
+        _ppjoin_candidates_of,
         _shingles_of,
+        _verified_of,
         dedup_paragraphs_removed_text,
     )
     from awscommunityday_2025_iceberg_snowfalke_spark.sources.registry import (
@@ -1740,9 +1745,11 @@ def test_curation_v2_lsh_screen_matches_lossless_ppjoin(spark):
             >= num * (F.col("na") + F.col("nb") - F.col("shared"))
         ).select("doc_a", "doc_b")
     )
-    banded = set(map(tuple, tau(_lsh_verified_of(sh)).collect()))
+    banded = set(
+        map(tuple, tau(_verified_of(sh, _lsh_candidates_of(sh))).collect())
+    )
     lossless = set(
-        map(tuple, tau(_ppjoin_verified_of(_shingle_rows(sh))).collect())
+        map(tuple, tau(_verified_of(sh, _ppjoin_candidates_of(sh))).collect())
     )
     assert banded == lossless
     assert banded  # non-degenerate: the corpus plants near-dup pairs
@@ -1770,6 +1777,24 @@ def test_minhash_lsh_pairs_cost_constant_jobs(spark):
     jobs = jobs_of(fresh, lambda: rows.extend(minhash_lsh_pairs(fresh, SF_DIR).collect()))
     assert rows, "the fixture corpus plants near-dup pairs"
     assert jobs <= 7, jobs
+
+
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "dedup_ngram_containment"])
+def test_shingle_overlap_entries_cost_at_most_3_jobs(spark, name):
+    """With the shingle sets memoized, Jaccard and containment are one
+    inverted-index self-join and one pair aggregation: at most 3 Spark
+    jobs (6 with a document-frequency cap, which staged its hot set and
+    anti-joined it before the self-join)."""
+    from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
+        _shingle_sets,
+    )
+
+    fresh = spark.newSession()
+    _shingle_sets(fresh, SF_DIR)
+    rows = []
+    jobs = jobs_of(fresh, lambda: rows.extend(_QUERIES[name](fresh, SF_DIR).collect()))
+    assert rows, "the fixture corpus plants near-dup pairs"
+    assert jobs <= 3, jobs
 
 
 def test_lsh_verify_intersects_each_candidate_pair_once(spark):
@@ -1814,17 +1839,16 @@ MINHASH_EDGE_DOCS = [
     "docs", [MINHASH_EDGE_DOCS, MINHASH_EDGE_DOCS[2:3]], ids=["edge", "single"]
 )
 def test_minhash_family_matches_oracle_on_edge_inputs(spark, tmp_path, docs):
-    """MinHash entries on a corpus of edge inputs — an empty text, a
-    2-token doc, byte-identical docs, non-ASCII text, runs of whitespace —
-    and on a single document, against the oracle. A doc with fewer than
+    """MinHash and exact shingle-overlap entries on a corpus of edge
+    inputs — an empty text, a 2-token doc, byte-identical docs, non-ASCII
+    text, runs of whitespace — and on a single document, against the
+    oracle. A doc with fewer than
     3 tokens has no shingle set, so it never reaches the band join: an
     empty set would give NULL minhashes, and NULL band keys all collide
     on md5('')."""
     import re
 
     import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from awscommunityday_2025_iceberg_snowfalke_spark.operators.dedup import (
         _minhash_signatures,
@@ -1832,18 +1856,7 @@ def test_minhash_family_matches_oracle_on_edge_inputs(spark, tmp_path, docs):
     )
 
     out = str(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [d for d, _ in docs],
-                "text": [t for _, t in docs],
-                "lang": ["xx"] * len(docs),
-                "source": ["edge"] * len(docs),
-                "n_chars": [len(t) for _, t in docs],
-            }
-        ),
-        f"{out}/documents.parquet",
-    )
+    _write_documents(out, docs)
     session = spark.newSession()
     sets = _shingle_sets(session, out)
     assert sets.filter("n < 1 OR size(hs) != n").count() == 0
@@ -1863,6 +1876,9 @@ def test_minhash_family_matches_oracle_on_edge_inputs(spark, tmp_path, docs):
             "minhash_lsh_pairs",
             "jaccard_threshold_sweep",
             "dedup_editdist_verify",
+            "dedup_ngram_jaccard",
+            "dedup_ngram_containment",
+            "dedup_jaccard_prefix_filter",
         ):
             assert_matches_oracle(
                 _QUERIES[name](session, out), con, _ORACLE[name], name

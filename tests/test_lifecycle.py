@@ -1510,6 +1510,49 @@ def test_positional_tombstones_cost_constant_jobs(spark, events, tmp_path):
     assert jobs_narrow == jobs_wide, (jobs_narrow, jobs_wide)
 
 
+def test_equality_deletes_cost_constant_jobs(spark, events, tmp_path):
+    """Equality deletes of one key-column set apply in one sequence-
+    scoped anti-join: a snapshot carrying 5 equality-delete files reads
+    with the same jobs as one carrying 1, and a key re-appended after
+    its delete survives it while an older copy stays deleted."""
+    ids = sorted(r["event_id"] for r in events.select("event_id").collect())
+    keys = lambda ks: spark.createDataFrame([(k,) for k in ks], "event_id long")  # noqa: E731
+    one = SnapshotTable(spark, str(tmp_path / "one"))
+    one.append(events, n_files=4)
+    one.delete_where_mor(keys(ids[:5]), ["event_id"])
+    many = SnapshotTable(spark, str(tmp_path / "many"))
+    many.append(events, n_files=4)
+    for k in ids[:5]:
+        many.append(events.filter(F.col("event_id") == k), n_files=1)
+        many.delete_where_mor(keys([k]), ["event_id"])
+    many.append(events.filter(F.col("event_id") == ids[0]), n_files=1)
+    eq = many._manifest(many.current_version)["delete_files"]
+    assert len(eq) == 5 and len({d["seq"] for d in eq}) == 5
+    jobs_one = jobs_of(spark, lambda: one.read().collect())
+    jobs_many = jobs_of(spark, lambda: many.read().collect())
+    assert jobs_one == jobs_many, (jobs_one, jobs_many)
+    assert one.read().count() == events.count() - 5
+    got = many.read().filter(F.col("event_id").isin(ids[:5])).collect()
+    assert [r["event_id"] for r in got] == [ids[0]]
+
+
+@pytest.mark.parametrize("first", ["equality", "positional"])
+def test_changelog_emits_one_delete_per_row_deleted_twice(spark, tmp_path, first):
+    """A row deleted twice inside one changelog interval — by two
+    equality deletes, or by a positional delete and then an equality
+    delete of its key — is deleted once, so the changelog emits one
+    ``delete`` row for it, not one per tombstone set that hit it."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(5).selectExpr("id AS k", "id * 10 AS v"), n_files=1)
+    if first == "equality":
+        t.delete_where_mor(spark.range(1).selectExpr("id AS k"), ["k"])
+    else:
+        t.delete_where_positional(F.col("k") == 0)
+    t.delete_where_mor(spark.range(2).selectExpr("id AS k"), ["k"])
+    rows = sorted(tuple(r) for r in t.changelog(1, 3, ["k"]).collect())
+    assert rows == [("delete", 0, 0), ("delete", 1, 10)]
+
+
 def test_delete_vectors_counts_in_constant_jobs(spark, events, tmp_path):
     """delete_vectors() counts every vector in one scan: the same jobs at
     one vector as at one per data file, with the right cardinalities."""

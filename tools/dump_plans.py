@@ -36,8 +36,8 @@ PICK = [
     ("dedup_exact_hash", "dedup shuffles 32-byte digests, not documents"),
     (
         "dedup_ngram_jaccard",
-        "hot-shingle DF cap: broadcast anti-join prunes the skew head "
-        "before the inverted-index pair join",
+        "exact inverted-index pair join: one shingle-keyed self-join and "
+        "one pair aggregation over the staged shingle sets, no cap",
     ),
     ("minhash_lsh_pairs", "banded LSH: band-hash equi-join, no all-pairs"),
     ("ann_ivf_cosine", "single map-only Arrow pass + per-query top-k window"),
